@@ -32,21 +32,25 @@ object SidecarFs {
 
   /** Hadoop conf: the active session's (so `spark.hadoop.*` settings
     * apply to sidecars exactly as to the parquet payloads), else a
-    * plain default. Cached per session — `newHadoopConf()` clones the
-    * full conf and meta reads happen per query plan. */
-  @volatile private var cached: (AnyRef, Configuration) = null
-  def hadoopConf: Configuration = {
-    val key: AnyRef = SparkSession.getActiveSession.orNull
-    val c = cached
-    if (c != null && (c._1 eq key)) c._2
-    else {
-      val conf = key match {
-        case s: SparkSession => s.sessionState.newHadoopConf()
-        case _ => new Configuration()
+    * plain default. A session's conf is cached per session —
+    * `newHadoopConf()` clones the full conf and meta reads happen per
+    * query plan. Threads without a session (Spark task threads) share
+    * ONE default conf built once per JVM: a fresh `Configuration`
+    * parses the default XML resources on first read (milliseconds per
+    * task), and the two kinds of thread keep separate slots so they
+    * never evict each other. */
+  @volatile private var cached: (SparkSession, Configuration) = null
+  private lazy val defaultConf: Configuration = new Configuration()
+  def hadoopConf: Configuration = SparkSession.getActiveSession match {
+    case Some(s) =>
+      val c = cached
+      if (c != null && (c._1 eq s)) c._2
+      else {
+        val conf = s.sessionState.newHadoopConf()
+        cached = (s, conf)
+        conf
       }
-      cached = (key, conf)
-      conf
-    }
+    case None => defaultConf
   }
 
   /** Owning FileSystem, with the LOCAL scheme unwrapped to the RAW
@@ -93,9 +97,15 @@ object SidecarFs {
     fs.exists(p) && fs.getFileStatus(p).isDirectory
   }
 
+  /** Local paths go through `java.nio`: without Hadoop's native
+    * library the raw local filesystem forks a `chmod` process per
+    * created directory or file. */
   def mkdirs(path: String): Unit = {
     val p = new Path(path)
-    fsOf(p).mkdirs(p): Unit
+    val fs = fsOf(p)
+    val qp = fs.makeQualified(p)
+    if (isLocal(qp)) java.nio.file.Files.createDirectories(localPath(qp)): Unit
+    else fs.mkdirs(qp): Unit
   }
 
   def readString(path: String): String = {
@@ -248,10 +258,18 @@ object SidecarFs {
 
   /** Create (overwrite) a file for sequential writing; parents are
     * created as needed (Hadoop semantics — the store always writes
-    * into an existing table dir anyway). */
+    * into an existing table dir anyway). Unbuffered: callers wrap it.
+    * Local files are written through `java.nio` (no `.crc` shadow, no
+    * forked `chmod`), like [[writeStringAtomic]]. */
   def create(path: String): java.io.OutputStream = {
     val p = new Path(path)
-    fsOf(p).create(p, true)
+    val fs = fsOf(p)
+    val qp = fs.makeQualified(p)
+    if (isLocal(qp)) {
+      val lp = localPath(qp)
+      java.nio.file.Files.createDirectories(lp.getParent)
+      java.nio.file.Files.newOutputStream(lp)
+    } else fs.create(qp, true)
   }
 
   def size(path: String): Long = {
@@ -276,13 +294,13 @@ object SidecarFs {
     fsOf(p).setTimes(p, millis, -1)
   }
 
-  /** Child NAMES of a directory; empty when absent or not a directory
-    * (the `java.io.File.list` null convention, already flattened). */
-  /** Directory-listing call counter (test instrumentation): a listing
-    * stats every child, so cold planning paths are pinned on NOT
-    * listing (SegmentFile's durable version hint). */
   private[graft] val listCalls = new java.util.concurrent.atomic.AtomicLong()
 
+  /** Child NAMES of a directory; empty when absent or not a directory
+    * (the `java.io.File.list` null convention, already flattened).
+    * Every call bumps `listCalls`: a listing stats every child, so
+    * tests and the benchmark pin cold planning paths on NOT listing
+    * (SegmentFile's durable version hint). */
   def list(dir: String): Seq[String] = {
     listCalls.incrementAndGet()
     val p = new Path(dir)

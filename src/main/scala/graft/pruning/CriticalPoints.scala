@@ -104,8 +104,9 @@ object CriticalPoints {
 
     /** v is past every range (sorted reader may stop). */
     def pastAll(v: Any): Boolean =
-      ranges.isEmpty || ranges.last.hi.exists { h =>
-        val c = cmp(v, h); c > 0 || (c == 0 && !ranges.last.hiInc)
+      arr.isEmpty || {
+        val last = arr(arr.length - 1)
+        last.hi.exists { h => val c = cmp(v, h); c > 0 || (c == 0 && !last.hiInc) }
       }
 
     /** Does the inclusive interval [lo, hi] intersect any qualified

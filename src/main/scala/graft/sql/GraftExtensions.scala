@@ -38,6 +38,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(s => KvNdvRule(s))
     // whole-table approx_percentile from V11 quantile-summary metadata
     e.injectOptimizerRule(s => KvPercentileRule(s))
+    // one-partition kv reads collect on the driver, without a job
+    e.injectColumnar(_ => new org.apache.spark.sql.execution.ColumnarRule {
+      override def postColumnarTransitions = KvDriverCollect
+    })
   }
 }
 

@@ -53,6 +53,42 @@ class SidecarFsSpec extends AnyFunSuite {
     assert(!SidecarFs.exists(dir))
   }
 
+  test("create and mkdirs on the local scheme: parents made, no .crc shadows") {
+    val dir = schemeTmp("fscreate")
+    val f = SidecarFs.child(dir, "a/b/c.bin")
+    val out = SidecarFs.create(f)
+    try out.write(Array[Byte](1, 2, 3)) finally out.close()
+    val again = SidecarFs.create(f) // overwrite truncates
+    try again.write(Array[Byte](9)) finally again.close()
+    assert(SidecarFs.size(f) == 1L)
+    SidecarFs.mkdirs(SidecarFs.child(dir, "x/y"))
+    SidecarFs.mkdirs(SidecarFs.child(dir, "x/y")) // idempotent
+    assert(SidecarFs.isDirectory(SidecarFs.child(dir, "x/y")))
+    val crcs = java.nio.file.Files.walk(java.nio.file.Paths.get(new java.net.URI(dir)))
+      .filter(_.getFileName.toString.endsWith(".crc")).count()
+    assert(crcs == 0L)
+    SidecarFs.deleteRecursively(dir)
+  }
+
+  test("hadoopConf: session and sessionless threads each keep one stable conf") {
+    import org.apache.spark.sql.SparkSession
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    def sessionless(): org.apache.hadoop.conf.Configuration =
+      pool.submit(new java.util.concurrent.Callable[org.apache.hadoop.conf.Configuration] {
+        def call() = { SparkSession.clearActiveSession(); SidecarFs.hadoopConf }
+      }).get()
+    try {
+      SparkSession.setActiveSession(spark)
+      val s0 = SidecarFs.hadoopConf
+      val t0 = sessionless()
+      assert(!(s0 eq t0))
+      for (_ <- 1 to 5) {
+        assert(SidecarFs.hadoopConf eq s0, "session conf evicted by a task thread")
+        assert(sessionless() eq t0, "sessionless conf rebuilt")
+      }
+    } finally pool.shutdown()
+  }
+
   test("ANN index lifecycle on a file: URI — build, probe, tombstone " +
       "crash-swap healing, rebuild") {
     val emb = graft.Tables.table(spark, TestSpark.sf, "embeddings")

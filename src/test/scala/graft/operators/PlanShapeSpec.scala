@@ -212,9 +212,11 @@ class PlanShapeSpec extends AnyFunSuite {
     // A/B so only the hint itself decides: a hint that were still
     // unconditional would broadcast in the "forced large" leg too.
     val prevAuto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val aqeAutoKey = "spark.sql.adaptive.autoBroadcastJoinThreshold"
+    val prevAqeAuto = spark.conf.getOption(aqeAutoKey)
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+      spark.conf.set(aqeAutoKey, "-1")
       def semiPlan(): String = {
         val df = SparkEntry.queries("a19_tpch_q18")(spark, sf)
         df.collect()
@@ -232,7 +234,10 @@ class PlanShapeSpec extends AnyFunSuite {
         hinted.contains("LeftSemi"), hinted.take(3000))
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
-      spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+      prevAqeAuto match {
+        case Some(v) => spark.conf.set(aqeAutoKey, v)
+        case None => spark.conf.unset(aqeAutoKey)
+      }
       spark.conf.unset(TpcH.Q18MaxBroadcastFactBytesKey)
     }
   }
