@@ -138,9 +138,14 @@ object SidecarFs {
   def writeString(path: String, content: String): Unit =
     writeStringAtomic(path, content)
 
-  private def writeStringRaw(path: String, content: String): Unit = {
+  private def writeStringRaw(path: String, content: String,
+      createParent: Boolean): Unit = {
     val p = new Path(path)
-    val out = fsOf(p).create(p, true)
+    val fs = fsOf(p)
+    val out =
+      if (createParent) fs.create(p, true)
+      else fs.createNonRecursive(p, true, 4096, fs.getDefaultReplication(p),
+        fs.getDefaultBlockSize(p), null)
     try out.write(content.getBytes(StandardCharsets.UTF_8))
     finally out.close()
   }
@@ -162,8 +167,13 @@ object SidecarFs {
     * POSIX rename(2) guarantee — with the temp ALSO written via nio so
     * no checksum shadow is ever created for these files (a stale crc
     * paired with new content would poison later checksummed reads;
-    * absent crc files are simply not verified). */
-  def writeStringAtomic(path: String, content: String): Unit = {
+    * absent crc files are simply not verified).
+    *
+    * `createParent = false` writes only into an EXISTING directory and
+    * throws when it is gone — for writes a reader makes, which must
+    * never recreate a table directory a racing DROP just deleted. */
+  def writeStringAtomic(path: String, content: String,
+      createParent: Boolean = true): Unit = {
     val p = new Path(path)
     val fs = fsOf(p)
     val qp = fs.makeQualified(p)
@@ -171,7 +181,8 @@ object SidecarFs {
       val dst = java.nio.file.Paths.get(qp.toUri.getPath)
       // parent auto-creation matches the Hadoop create() behavior the
       // raw overwrite had (callers never pre-make sidecar dirs)
-      java.nio.file.Files.createDirectories(dst.getParent): Unit
+      if (createParent)
+        java.nio.file.Files.createDirectories(dst.getParent): Unit
       val tmp = dst.resolveSibling(
         s".${qp.getName}.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
       java.nio.file.Files.write(tmp,
@@ -187,7 +198,7 @@ object SidecarFs {
     } else {
       val tmp = new Path(qp.getParent,
         s".${qp.getName}.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-      writeStringRaw(tmp.toString, content)
+      writeStringRaw(tmp.toString, content, createParent)
       val fc = FileContext.getFileContext(qp.toUri, hadoopConf)
       fc.rename(tmp, qp, Options.Rename.OVERWRITE)
     }

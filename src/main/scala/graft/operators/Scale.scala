@@ -59,6 +59,11 @@ object Scale {
     * core before the guard even looks at partition counts, so tiny
     * corpora keep their one-task scan and the shuffle fires only where
     * the recovered map parallelism provably dominates its cost. The
+    * floor is compared against `optimizedPlan.stats.sizeInBytes`, which
+    * for file sources is the COMPRESSED on-disk size, not the decoded
+    * volume the map work sees: a high-ratio input (gzip'd or
+    * zstd-parquet text decoding to 5-10× its file bytes) clears the
+    * floor late, so lower the floor for such inputs. The
     * partition-count probe (`df.rdd`, one physical-planning pass) is
     * therefore only ever paid on inputs big enough to amortize it.
     * Scale-adaptive by construction: at real scale inputs arrive in

@@ -14,8 +14,10 @@ import scala.collection.mutable.ArrayBuffer
   */
 object SegmentFile {
 
-  /** Optional block compression of the segment DATA file (the sidecar
-    * stays uncompressed — planning reads it with tiny point reads).
+  /** Optional block compression of the segment DATA file (the sidecar's
+    * planning fields stay uncompressed — planning reads them with tiny
+    * point reads; only its sketch tail is one zstd frame, see
+    * [[writeSketchFrame]]).
     * At warehouse scale the scan cost of a text-heavy table is IO; the
     * parquet side of every pipeline is compressed and the kv side
     * should not give that back. Design constraints, in order:
@@ -340,10 +342,20 @@ object SegmentFile {
   // pre-decimal reader hitting an unknown tag would die mid-parse with
   // a NoSuchElementException instead of skipping — so the sidecar
   // header advances and such a reader rejects the file CLEANLY at
-  // open. Current readers accept V9–V13 (round-9 files carry narrow
+  // open. Current readers accept V9–V14 headers (round-9 files carry narrow
   // decimal tags under the -11 header; that ship has sailed and this
   // reader handles them).
   private val FormatV13 = -13
+  // V14 writes the NDV and quantile-summary sections as ONE
+  // length-prefixed zstd frame (see writeSketchFrame) — same per-sketch
+  // wire formats inside. At ε = 1e-4 a GK summary keeps every value of
+  // a segment under ~5k rows, so the uncompressed V11 section stored
+  // 24 B per row per numeric column and dominated the table's bytes;
+  // the frame compresses it ~15-28×. Index loads skip the frame in
+  // O(1). Pre-V14 sketch sections are not decoded: such a segment
+  // reports no sketches (metadata answers fall back to the scan) and
+  // reads without the sparse index.
+  private val FormatV14 = -14
 
   /** One value-column zone entry: (column, type, min, max[, sum]) over
     * the segment's non-null values. Types are the fixed-width numerics
@@ -695,7 +707,7 @@ object SegmentFile {
       val mo = new DataOutputStream(new BufferedOutputStream(
         SidecarFs.create(metaPath(dir, name)), 1 << 16))
       def writeSidecar(): Unit = {
-      mo.writeInt(FormatV13)
+      mo.writeInt(FormatV14)
       mo.writeLong(m.gen)
       mo.writeLong(m.tombstones)
       m.schemaJson match {
@@ -733,14 +745,12 @@ object SegmentFile {
         mo.writeInt(nb.length); mo.write(nb)
         mo.writeLong(c)
       }
-      // NDV sketches (V9) sit after: planning reads stop before them;
-      // only the NDV read path and the index load step over them
-      mo.writeInt(ndvSketches.length)
-      ndvSketches.foreach(writeNdvSketch(mo, _))
-      // quantile summaries (V11) after the NDV registers: same
-      // step-over discipline as the NDV section
-      mo.writeInt(qsSketches.length)
-      qsSketches.foreach(writeQsSketch(mo, _))
+      // the sketch tail (V14): NDV registers, then quantile summaries,
+      // in one zstd frame. Planning reads stop before it, the index load
+      // skips it whole, and only the sketch read paths decompress it
+      writeSketchFrame(mo) { f =>
+        writeNdvSection(f, ndvSketches); writeQsSection(f, qsSketches)
+      }
       mo.writeInt(m.index.length)
       m.index.foreach { case (k, off) =>
         mo.writeInt(k.length); mo.write(k); mo.writeLong(off)
@@ -774,7 +784,8 @@ object SegmentFile {
       SidecarFs.open(metaPath(dir, name)), 1 << 16))
     try {
       val first = in.readInt()
-      val v13 = first == FormatV13
+      val v14 = first == FormatV14
+      val v13 = v14 || first == FormatV13
       val v11 = v13 || first == FormatV11
       val v10 = v11 || first == FormatV10
       val v9 = v10 || first == FormatV9
@@ -826,25 +837,10 @@ object SegmentFile {
           (new String(nb, java.nio.charset.StandardCharsets.UTF_8),
             in.readLong())
         }
-      // sparse index (absent in pre-index sidecars → seekless reads)
-      val idx = if (!withIndex) IndexedSeq.empty else try {
-        if (v9) { // step over the NDV sketch section
-          var s = in.readInt()
-          while (s > 0) {
-            in.skipNBytes(in.readInt().toLong) // column name
-            in.skipNBytes(in.readInt().toLong * 8L) // register words
-            s -= 1
-          }
-        }
-        if (v11) { // step over the quantile-summary section
-          var s = in.readInt()
-          while (s > 0) {
-            in.skipNBytes(in.readInt().toLong) // column name
-            in.skipNBytes(16) // relativeError + count
-            in.skipNBytes(in.readInt().toLong * 24L) // (value, g, delta)
-            s -= 1
-          }
-        }
+      // sparse index, behind the sketch frame (pre-V14 sidecars are
+      // not stepped through → seekless reads)
+      val idx = if (!withIndex || !v14) IndexedSeq.empty else try {
+        skipSketchFrame(in)
         val n = in.readInt()
         (0 until n).map { _ =>
           val k = new Array[Byte](in.readInt()); in.readFully(k)
@@ -1262,6 +1258,14 @@ object SegmentFile {
     try SidecarFs.writeStringAtomic(versionHintPath(dir), v.toString)
     catch { case scala.util.control.NonFatal(_) => () }
 
+  /** The read path's hint write: only into a table directory that still
+    * exists, so a reader racing DROP TABLE cannot recreate the dropped
+    * directory (the commit path's writeVersionHint may create it). */
+  private[store] def backfillVersionHint(dir: String, v: Long): Unit =
+    try SidecarFs.writeStringAtomic(versionHintPath(dir), v.toString,
+      createParent = false)
+    catch { case scala.util.control.NonFatal(_) => () }
+
   /** Current max manifest version WITHOUT a directory listing in the
     * steady state: versions are contiguous upward and the max is never
     * pruned, so probing existence from the last observed version finds
@@ -1285,7 +1289,7 @@ object SegmentFile {
           val listed = manifestVersions(dir).lastOption.getOrElse {
             versionHints.remove(key); return None
           }
-          writeVersionHint(dir, listed)
+          backfillVersionHint(dir, listed)
           listed
         }
     while (SidecarFs.exists(versionedManifestPath(dir, v + 1))) v += 1
@@ -1338,7 +1342,7 @@ object SegmentFile {
     } catch { case _: Exception => () }
 
   // ── NDV sketch pack ────────────────────────────────────────────────────
-  // Per-segment HLL++ sketches (V9 sidecars) answer whole-table
+  // Per-segment HLL++ sketches (sidecar sketch frames) answer whole-table
   // approx_count_distinct from metadata (KvNdvRule). They are NOT part
   // of the planning pack — every plan reads that, and ~400 B × columns ×
   // segments of registers would bloat it for queries that never ask for
@@ -1348,28 +1352,25 @@ object SegmentFile {
   // O(commit delta), and only the first build on a legacy/pack-less
   // table sweeps sidecars), cached exactly like the planning stats.
 
-  private val NdvPackV1 = -201
+  // V2 (-203; -202 is the V1 quantile pack): payloads framed like the
+  // sidecar's sketch tail
+  private val NdvPackV2 = -203
 
   private def ndvPath(dir: String, v: Long): String =
     SidecarFs.child(dir, s"_graft_ndv.v$v")
   private def qsPath(dir: String, v: Long): String =
     SidecarFs.child(dir, s"_graft_qs.v$v")
 
-  /** Extract just the V9 NDV section from one sidecar (empty for pre-V9
-    * segments — the caller's all-segments gate then refuses). A
-    * dedicated parser rather than a readMeta flag so the planning-path
-    * instrumentation (metaOpens) stays a pure planning signal. */
   /** Sidecar opens on the NDV path (test instrumentation, mirrors
     * metaOpens): the legacy-sweep cache and the pack's incremental build
     * are pinned on this never growing in the steady state. */
   private[graft] val ndvSidecarOpens = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Skip from just after the format int to the start of the NDV
-    * section (shared by the NDV and quantile sidecar parsers). Returns
-    * false when the format has no NDV section at all. */
-  private def skipToNdvSection(in: DataInputStream, ver: Int): Boolean = {
-    if (ver != FormatV9 && ver != FormatV10 && ver != FormatV11 &&
-      ver != FormatV13) return false
+  /** Skip from just after the format int to the start of the sketch
+    * frame (shared by the NDV and quantile sidecar parsers). Returns
+    * false for pre-V14 sidecars, whose sketch sections are not decoded. */
+  private def skipToSketchFrame(in: DataInputStream, ver: Int): Boolean = {
+    if (ver != FormatV14) return false
     in.skipNBytes(16) // gen + tombstones
     val sj = in.readInt(); if (sj > 0) in.skipNBytes(sj.toLong)
     in.skipNBytes(in.readInt().toLong) // minKey
@@ -1386,21 +1387,51 @@ object SegmentFile {
       if (in.readBoolean()) in.readLong()
       nz -= 1
     }
-    if (ver == FormatV10 || ver == FormatV11 || ver == FormatV13) { // null-count section
-      var nn = in.readInt()
-      while (nn > 0) {
-        in.skipNBytes(in.readInt().toLong)
-        in.skipNBytes(8)
-        nn -= 1
-      }
+    var nn = in.readInt() // null counts
+    while (nn > 0) {
+      in.skipNBytes(in.readInt().toLong)
+      in.skipNBytes(8)
+      nn -= 1
     }
     true
   }
 
-  /** The ONE wire format per sketch, shared by the sidecar section and
-    * the versioned pack payloads — previously hand-duplicated at six
-    * sites, where a field added to one copy would silently corrupt the
-    * others with no compiler help. */
+  /** The sketch frame: `[4B rawLen][4B compLen][compLen bytes]`, the
+    * body one zstd frame at level 3 (the `segment.compress` codec).
+    * Sketches are highly redundant — small segments' GK summaries are
+    * one (value, 1, 0) triple per row, mostly integral values — and
+    * compress ~15-28× where lz4 reached ~10×. One frame, no option and
+    * no level knob: the compression is lossless, so every sketch reads
+    * back as the same arrays and metadata answers stay bit-identical.
+    * Shared by the sidecar's sketch tail and every pack payload. */
+  private def writeSketchFrame(out: DataOutputStream)(
+      body: DataOutputStream => Unit): Unit = {
+    val buf = new ByteArrayOutputStream()
+    val d = new DataOutputStream(buf)
+    body(d); d.flush()
+    val raw = buf.toByteArray
+    val comp = Compression.compress(SketchCodec, raw, raw.length)
+    out.writeInt(raw.length); out.writeInt(comp.length); out.write(comp)
+  }
+
+  private def readSketchFrame(in: DataInputStream): DataInputStream = {
+    val rawLen = in.readInt()
+    val comp = new Array[Byte](in.readInt()); in.readFully(comp)
+    new DataInputStream(new ByteArrayInputStream(
+      Compression.decompress(SketchCodec, comp, rawLen)))
+  }
+
+  private def skipSketchFrame(in: DataInputStream): Unit = {
+    in.skipNBytes(4) // rawLen
+    in.skipNBytes(in.readInt().toLong)
+  }
+
+  private val SketchCodec: Byte = Compression.codecId(Compression.Zstd)
+
+  /** The ONE wire format per sketch, shared by the sidecar's sketch
+    * frame and the versioned pack payloads — previously hand-duplicated
+    * at six sites, where a field added to one copy would silently
+    * corrupt the others with no compiler help. */
   private def writeNdvSketch(out: DataOutputStream, s: NdvSketch): Unit = {
     val cb = s.name.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     out.writeInt(cb.length); out.write(cb)
@@ -1448,35 +1479,48 @@ object SegmentFile {
       relErr, count, values, gs, deltas)
   }
 
-  private def readNdvSidecar(dir: String, name: String): Seq[NdvSketch] = {
-    ndvSidecarOpens.incrementAndGet()
+  /** A count-prefixed list of sketches: one section of the sidecar's
+    * sketch frame, and the whole payload of a pack entry. */
+  private def writeNdvSection(out: DataOutputStream, ss: Seq[NdvSketch]): Unit = {
+    out.writeInt(ss.length); ss.foreach(writeNdvSketch(out, _))
+  }
+  private def readNdvSection(in: DataInputStream): Seq[NdvSketch] =
+    (0 until in.readInt()).map(_ => readNdvSketch(in))
+  private def writeQsSection(out: DataOutputStream,
+      ss: Seq[QuantileSketch]): Unit = {
+    out.writeInt(ss.length); ss.foreach(writeQsSketch(out, _))
+  }
+  private def readQsSection(in: DataInputStream): Seq[QuantileSketch] =
+    (0 until in.readInt()).map(_ => readQsSketch(in))
+
+  /** One sidecar's decompressed sketch frame, positioned at its NDV
+    * section; None for pre-V14 sidecars (the callers' all-segments gates
+    * then refuse). */
+  private def readSketchTail(dir: String, name: String): Option[DataInputStream] = {
     val in = new DataInputStream(new BufferedInputStream(
       SidecarFs.open(metaPath(dir, name)), 1 << 16))
     try {
       val ver = in.readInt()
-      if (!skipToNdvSection(in, ver)) return Seq.empty
-      (0 until in.readInt()).map(_ => readNdvSketch(in))
+      if (skipToSketchFrame(in, ver)) Some(readSketchFrame(in)) else None
     } finally in.close()
   }
 
-  /** Extract the V11 quantile-summary section from one sidecar (empty
-    * for pre-V11 segments — the caller's all-segments gate refuses). */
+  /** Extract just the NDV section from one sidecar (empty for pre-V14
+    * segments — the caller's all-segments gate then refuses). A
+    * dedicated parser rather than a readMeta flag so the planning-path
+    * instrumentation (metaOpens) stays a pure planning signal. */
+  private def readNdvSidecar(dir: String, name: String): Seq[NdvSketch] = {
+    ndvSidecarOpens.incrementAndGet()
+    readSketchTail(dir, name).map(readNdvSection).getOrElse(Seq.empty)
+  }
+
+  /** Extract the quantile summaries from one sidecar's sketch frame. */
   private def readQsSidecar(dir: String, name: String): Seq[QuantileSketch] = {
     qsSidecarOpens.incrementAndGet()
-    val in = new DataInputStream(new BufferedInputStream(
-      SidecarFs.open(metaPath(dir, name)), 1 << 16))
-    try {
-      val ver = in.readInt()
-      if (ver != FormatV11 && ver != FormatV13) return Seq.empty
-      if (!skipToNdvSection(in, ver)) return Seq.empty
-      var s = in.readInt() // step over the NDV registers
-      while (s > 0) {
-        in.skipNBytes(in.readInt().toLong)
-        in.skipNBytes(in.readInt().toLong * 8L)
-        s -= 1
-      }
-      (0 until in.readInt()).map(_ => readQsSketch(in))
-    } finally in.close()
+    readSketchTail(dir, name).map { f =>
+      readNdvSection(f) // step over the NDV registers
+      readQsSection(f)
+    }.getOrElse(Seq.empty)
   }
 
   private[graft] val qsSidecarOpens = new java.util.concurrent.atomic.AtomicLong()
@@ -1531,7 +1575,7 @@ object SegmentFile {
         entries.foreach { case (file, payload) =>
           val fb = file.getBytes(java.nio.charset.StandardCharsets.UTF_8)
           out.writeInt(fb.length); out.write(fb)
-          writePayload(out, payload)
+          writeSketchFrame(out)(writePayload(_, payload))
         }
       } finally out.close()
       try SidecarFs.moveReplace(tmp, packPath(dir, v))
@@ -1549,7 +1593,7 @@ object SegmentFile {
           Some((0 until in.readInt()).map { _ =>
             val fb = new Array[Byte](in.readInt()); in.readFully(fb)
             val file = new String(fb, java.nio.charset.StandardCharsets.UTF_8)
-            file -> readPayload(in)
+            file -> readPayload(readSketchFrame(in))
           })
         } finally in.close()
       } catch { case _: Exception => None }
@@ -1610,24 +1654,14 @@ object SegmentFile {
   }
 
   private val ndvPacks = new ArtifactPacks[Seq[NdvSketch]](
-    "_graft_ndv", NdvPackV1,
-    readNdvSidecar,
-    (out, sketches) => {
-      out.writeInt(sketches.length)
-      sketches.foreach(writeNdvSketch(out, _))
-    },
-    in => (0 until in.readInt()).map(_ => readNdvSketch(in)))
+    "_graft_ndv", NdvPackV2, readNdvSidecar, writeNdvSection, readNdvSection)
 
-  private val QsPackV1 = -202
+  // V2 packs frame each entry's payload like the sidecar's sketch tail
+  // (writeSketchFrame); a V1 pack misses and is rebuilt from sidecars
+  private val QsPackV2 = -204
 
   private val qsPacks = new ArtifactPacks[Seq[QuantileSketch]](
-    "_graft_qs", QsPackV1,
-    readQsSidecar,
-    (out, sketches) => {
-      out.writeInt(sketches.length)
-      sketches.foreach(writeQsSketch(out, _))
-    },
-    in => (0 until in.readInt()).map(_ => readQsSketch(in)))
+    "_graft_qs", QsPackV2, readQsSidecar, writeQsSection, readQsSection)
 
   /** The metadata-aggregate soundness gate, shared by every consumer
     * that turns per-segment physical metadata (counts, sums, extremes,
@@ -1663,7 +1697,7 @@ object SegmentFile {
 
   /** Merge one column's per-segment HLL++ registers and query the
     * estimate — None when any live segment lacks a correctly-sized
-    * sketch (pre-V9 writer). The caller guards soundness with
+    * sketch (pre-V14 sidecar). The caller guards soundness with
     * [[disjointTombstoneFree]]. */
   def mergedNdvEstimate(segs: Seq[Meta],
       sketches: Map[String, Seq[NdvSketch]], col: String): Option[Long] = {
@@ -1694,7 +1728,7 @@ object SegmentFile {
 
   /** Merge one column's per-segment quantile summaries — None when any
     * live segment lacks a summary at the writer's relative error
-    * (pre-V11 segment). GK merge keeps the ε-rank bound, so the merged
+    * (pre-V14 sidecar). GK merge keeps the ε-rank bound, so the merged
     * summary answers approx_percentile within the same contract the
     * scan-side aggregate promises. The caller guards soundness with
     * [[disjointTombstoneFree]] (a superseded generation's values must
@@ -1798,6 +1832,68 @@ object SegmentFile {
     best
   }
 
+  /** Buffered stream for the segment reader. Unlike
+    * `java.io.BufferedInputStream`, whose `read()` is synchronized, it
+    * takes no lock: `DataInputStream.readInt` calls `read()` four times,
+    * twice per record, and a reader is only ever used by one thread.
+    * `skip` drains the buffer, then seeks the underlying stream. */
+  private final class PlainInput(raw: InputStream) extends InputStream {
+    private val buf = new Array[Byte](1 << 16)
+    private var pos = 0
+    private var limit = 0
+
+    /** Refill an exhausted buffer; false at end of stream. */
+    private def fill(): Boolean = {
+      pos = 0
+      limit = math.max(raw.read(buf, 0, buf.length), 0)
+      limit > 0
+    }
+
+    /** The first 4 bytes as a big-endian int without consuming them —
+      * 0 (never the magic) when the stream holds fewer. Called on a
+      * fresh stream only. */
+    def peekInt(): Int = {
+      while (limit < 4) {
+        val r = raw.read(buf, limit, buf.length - limit)
+        if (r < 0) return 0
+        limit += r
+      }
+      ((buf(0) & 0xff) << 24) | ((buf(1) & 0xff) << 16) |
+        ((buf(2) & 0xff) << 8) | (buf(3) & 0xff)
+    }
+
+    override def read(): Int =
+      if (pos < limit || fill()) { val b = buf(pos) & 0xff; pos += 1; b }
+      else -1
+
+    override def read(b: Array[Byte], off: Int, len: Int): Int =
+      if (len == 0) 0
+      else if (pos >= limit && !fill()) -1
+      else {
+        val n = math.min(len, limit - pos)
+        System.arraycopy(buf, pos, b, off, n)
+        pos += n
+        n
+      }
+
+    override def skip(n: Long): Long =
+      if (n <= 0) 0L
+      else if (pos < limit) {
+        val s = math.min(n, (limit - pos).toLong).toInt
+        pos += s
+        s.toLong
+      } else {
+        // seek to the LAST skipped byte and buffer from there: a local
+        // file seeks past its end silently, and a target beyond the end
+        // (a truncated segment) must surface as EOF, not as a clean end
+        val s = raw.skip(n - 1)
+        if (s < n - 1 || !fill()) s
+        else { pos = 1; n }
+      }
+
+    override def close(): Unit = raw.close()
+  }
+
   /** Iterate a segment's records in key order, optionally starting at a
     * byte offset taken from the sparse index. Supports forward re-seeks
     * (`skipForwardTo`) so a multi-range scan can jump over disqualified
@@ -1811,20 +1907,13 @@ object SegmentFile {
     // stream. All positions below — startOffset, pos, skipForwardTo —
     // are LOGICAL (uncompressed-stream) offsets in both modes.
     private val in: DataInputStream = {
-      val base = new BufferedInputStream(
-        SidecarFs.open(SidecarFs.child(dir, file)), 1 << 16)
-      base.mark(8)
-      val hdr = base.readNBytes(4)
-      if (hdr.length == 4 &&
-        (((hdr(0) & 0xff) << 24) | ((hdr(1) & 0xff) << 16) |
-          ((hdr(2) & 0xff) << 8) | (hdr(3) & 0xff)) == Compression.Magic) {
+      val base = new PlainInput(SidecarFs.open(SidecarFs.child(dir, file)))
+      if (base.peekInt() == Compression.Magic) {
+        base.skipNBytes(4)
         val id = base.read()
         if (id < 0) throw new EOFException(s"$file: truncated codec byte")
         new DataInputStream(new Compression.BlockInput(base, id.toByte))
-      } else {
-        base.reset()
-        new DataInputStream(base)
-      }
+      } else new DataInputStream(base)
     }
     if (startOffset > 0) in.skipNBytes(startOffset)
     // absolute offset of the next unread byte (the pre-read record ends here)

@@ -89,6 +89,25 @@ class PlanningStatsSpec extends AnyFunSuite {
     assert(SegmentFile.currentVersion(path) == head)
   }
 
+  test("a hint backfill aimed at a deleted table directory leaves no directory behind") {
+    // a reader racing DROP TABLE: its listing saw the table, the drop
+    // then removed the directory, and only then does the backfill run
+    val path = tmpTable()
+    mkTable(path)
+    val head = SegmentFile.currentVersion(path).get
+    graft.io.SidecarFs.deleteRecursively(path)
+    SegmentFile.backfillVersionHint(path, head)
+    assert(!Files.exists(Paths.get(path)),
+      "a read-path hint write recreated the dropped table directory")
+    SegmentFile.clearPlanningCache()
+    assert(SegmentFile.currentVersion(path).isEmpty)
+    assert(!Files.exists(Paths.get(path)))
+    // into a directory that exists, the backfill still lands
+    Files.createDirectories(Paths.get(path))
+    SegmentFile.backfillVersionHint(path, head)
+    assert(Files.readString(Paths.get(path, "_graft_vhead")) == head.toString)
+  }
+
   test("a fresh process reads the pack, not one sidecar per segment") {
     val path = tmpTable()
     mkTable(path)

@@ -82,6 +82,11 @@ class SegmentFileSpec extends AnyFunSuite {
       while (r.hasNext) { r.next(); n += 1 }
     }
     assert(e.getMessage.contains("truncated"), e.getMessage)
+    // a seek (sparse-index offset) past the cut fails too
+    intercept[java.io.IOException] {
+      val r1 = new SegmentFile.Reader(dir, "s1.kv", full.length - 8L)
+      while (r1.hasNext) r1.next()
+    }
     // a CLEAN boundary cut (exactly at a record edge) still ends quietly
     // — that is the legitimate end-of-stream shape
     Files.write(seg, full)
