@@ -200,7 +200,8 @@ object GraftKvTable {
 
 class GraftKvTable(path: String, tableSchema: StructType, keys: Seq[String],
     encoding: String = graft.store.RowCodec.Binary,
-    snapshot: Option[Long] = None)
+    snapshot: Option[Long] = None,
+    pushAggregates: Boolean = true)
     extends Table with SupportsRead with SupportsWrite with SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations
     with org.apache.spark.sql.connector.catalog.index.SupportsIndex {
@@ -210,6 +211,13 @@ class GraftKvTable(path: String, tableSchema: StructType, keys: Seq[String],
   private[graft] def kvKeys: Seq[String] = keys
   private[graft] def kvEncoding: String = encoding
   private[graft] def isSnapshotView: Boolean = snapshot.isDefined
+
+  /** This table read with aggregate pushdown declined
+    * (graft.sql.KvTryAggGuard). */
+  private[graft] def pushesAggregates: Boolean = pushAggregates
+  private[graft] def withoutAggregatePushdown: GraftKvTable =
+    new GraftKvTable(path, tableSchema, keys, encoding, snapshot,
+      pushAggregates = false)
 
   // ── SupportsIndex: stock `CREATE INDEX i ON TABLE t (c)` / `DROP
   // INDEX` route here through CreateIndexExec; semantics in KvIndex ──
@@ -325,7 +333,8 @@ class GraftKvTable(path: String, tableSchema: StructType, keys: Seq[String],
       // DPP that degenerates to dynamicpruningexpression(true) — a junk
       // subquery plus a "Can't translate true" warning per execution
       Option(options.get(GraftKvTable.RuntimeFilteringOption))
-        .forall(_.toBoolean))
+        .forall(_.toBoolean),
+      pushAggregates)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     snapshot.foreach(v => throw new IllegalArgumentException(
@@ -372,7 +381,8 @@ class GraftKvScanBuilder(path: String, schema: StructType, keys: Seq[String],
     restrictFiles: Option[Set[String]] = None,
     maxFilesPerTrigger: Option[Int] = None,
     snapshotVersion: Option[Long] = None,
-    runtimeFiltering: Boolean = true)
+    runtimeFiltering: Boolean = true,
+    pushAggregates: Boolean = true)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownLimit
     with SupportsPushDownTopN
@@ -384,12 +394,8 @@ class GraftKvScanBuilder(path: String, schema: StructType, keys: Seq[String],
   private var limit: Int = -1
   private var topN: Option[(Int, Boolean)] = None // (k, descending)
   private var sample: Option[(Double, Long)] = None // (fraction, seed)
-  private var aggPushed: Option[Seq[KvAgg]] = None
-  // the EXACT listing pushAggregation validated (disjoint, tombstone-free):
-  // the agg scan must plan over this set, not a fresh listing — a commit
-  // landing between validation and planning would otherwise slip
-  // overlapping/tombstoned segments past the safety gate
-  private var aggSegs: Seq[SegmentFile.Meta] = Nil
+  // set by pushAggregation: the complete aggregate scan it validated
+  private var aggScan: Option[GraftKvAggScan] = None
 
   /** Record every filter for planning-time pruning (the critical-point
     * module evaluates whole trees three-valued). Filters that are pure
@@ -474,111 +480,171 @@ class GraftKvScanBuilder(path: String, schema: StructType, keys: Seq[String],
   }
   override def isPartiallyPushed(): Boolean = true
 
-  /** Metadata-only aggregation (the reference's coprocessor-parity path,
-    * AddCoprocessor.scala → SupportsPushDownAggregates per SURVEY R11):
-    * COUNT(*) and MIN/MAX of the leading key column are answered from
-    * segment sidecar metadata — zero data bytes read at any table size.
-    * Spark only calls this when every filter was fully consumed by the
-    * source, which for this connector means "all filters are lead-only
-    * comparison trees": segments fully covered by the qualified ranges
-    * answer from metadata, boundary segments scan just their own
-    * records. */
-  override def pushAggregation(agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
+  /** Complete aggregate pushdown (the reference's coprocessor-parity
+    * path, AddCoprocessor.scala → SupportsPushDownAggregates per SURVEY
+    * R11): COUNT, SUM, MIN and MAX finish inside the connector, so Spark
+    * plans a renaming Project over a ONE-partition scan instead of a
+    * partial aggregate, an exchange and a final aggregate. AVG is
+    * refused here, and Spark then asks again with it decomposed into
+    * SUM and COUNT. */
+  override def supportCompletePushDown(
+      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
     import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min, Sum}
+    agg.groupByExpressions().isEmpty && agg.aggregateExpressions().forall {
+      case _: CountStar | _: Min | _: Max => true
+      case c: Count => !c.isDistinct
+      case s: Sum => !s.isDistinct
+      case _ => false
+    }
+  }
+
+  /** Accepts a complete aggregate over the lead-key ranges of the pushed
+    * filters. Spark only calls this when every filter was fully consumed
+    * by the source, which for this connector means "all filters are
+    * lead-only comparison trees". Each surviving segment is either
+    * COVERED (every lead value it holds qualifies) and answers from its
+    * sidecar metadata, or a BOUNDARY segment (covered only partly, so at
+    * most two per lead range) whose matching records are read. An
+    * aggregate that metadata cannot answer (a SUM of an expression or of
+    * a double, a MIN of a column with nulls) is accepted only when no
+    * covered segment needs it; otherwise the push is refused and Spark
+    * scans as usual. */
+  override def pushAggregation(
+      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, Literal, V2ExpressionUtils}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{DeclarativeAggregate, Count => CCount, Max => CMax, Min => CMin, Sum => CSum}
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Count, CountStar, Max, Min, Sum}
     import org.apache.spark.sql.connector.expressions.NamedReference
     // a file-restricted read (compaction's group scan) must not answer
     // aggregates from whole-table metadata; a snapshot read's metadata
     // checks would run against the LIVE listing — stay conservative
-    if (restrictFiles.nonEmpty || snapshotVersion.nonEmpty) return false
-    if (!pushed.forall(GraftKvScanBuilder.leadOnlyExact(_, keys.head)) ||
-      limit >= 0 || sample.isDefined ||
-      agg.groupByExpressions().nonEmpty) return false
+    if (!pushAggregates || restrictFiles.nonEmpty || snapshotVersion.nonEmpty)
+      return false
+    if (!supportCompletePushDown(agg) ||
+      !pushed.forall(GraftKvScanBuilder.leadOnlyExact(_, keys.head)) ||
+      limit >= 0 || sample.isDefined) return false
     // Overlapping segments can hold several GENERATIONS of the same key
     // (Put-upsert appends): sidecar counts include superseded versions
     // the merge-on-read path suppresses, and tombstones are records the
-    // sidecar counts but the table does not contain — so metadata-only
-    // aggregation is only sound over a fully key-disjoint (bulk-loaded
-    // or compacted), tombstone-free table (the shared gate every
+    // sidecar counts but the table does not contain — so metadata
+    // answers are only sound over a fully key-disjoint (bulk-loaded or
+    // compacted), tombstone-free table (the shared gate every
     // metadata-claim consumer applies). Compaction restores pushdown.
-    val cmp = graft.store.RowCodec(schema, keys, encoding).compareKeys _
+    // The agg scan plans over exactly this validated listing: a commit
+    // landing in between must not slip past the gate.
+    val codec = RowCodec(schema, keys, encoding)
     val segs = SegmentFile.listSegments(path)
-      .sortWith((a, b) => cmp(a.minKey, b.minKey) < 0)
-    if (!SegmentFile.disjointTombstoneFree(segs, cmp)) return false
-    def leadName(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
+      .sortWith((a, b) => codec.compareKeys(a.minKey, b.minKey) < 0)
+    if (!SegmentFile.disjointTombstoneFree(segs, codec.compareKeys)) return false
+    val leadDt = codec.keyFields.head.dataType
+    val ranges = graft.pruning.CriticalPoints.MultiRange(
+      graft.pruning.CriticalPoints.qualifiedRanges(pushed.toSeq, keys.head, leadDt),
+      leadDt)
+    def leadSpan(m: SegmentFile.Meta) =
+      (codec.leadingKeyValue(m.minKey), codec.leadingKeyValue(m.maxKey))
+    val (covered, boundary) =
+      if (pushed.isEmpty) (segs, Seq.empty[SegmentFile.Meta])
+      else segs.filter { m => val (lo, hi) = leadSpan(m); ranges.intersects(lo, hi) }
+        .partition { m => val (lo, hi) = leadSpan(m); ranges.coversInterval(lo, hi) }
+
+    def colName(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
       e match {
         case n: NamedReference if n.fieldNames().length == 1 => Some(n.fieldNames()(0))
         case _ => None
       }
-    // SUM pushes only when EVERY live segment carries the exact V7 sum
-    // claim for the column at its CURRENT schema type (a null in any
-    // segment, an overflow, a pre-V7 sidecar, or a type change all
-    // suppress the claim and the whole aggregate falls back to a scan).
-    // Narrow decimals (V13 zones) claim their UNSCALED sum — exact at
-    // the column's fixed scale.
+    // SUM answers from metadata only when every covered segment carries
+    // the exact V7 sum claim for the column at its CURRENT schema type
+    // (a null in the segment, an overflow, a pre-V7 sidecar or a type
+    // change suppress the claim). Narrow decimals (V13 zones) claim
+    // their UNSCALED sum — exact at the column's fixed scale.
     def summable(name: String): Boolean = {
       import org.apache.spark.sql.types._
       schema.fields.exists(f => f.name == name && (f.dataType match {
         case LongType | IntegerType | ShortType | ByteType => true
         case d: DecimalType => d.precision <= 18
         case _ => false
-      })) && segs.nonEmpty && segs.forall(_.zoneStats.exists(z =>
+      })) && covered.forall(_.zoneStats.exists(z =>
         z.name == name && z.dataType == schema(name).dataType && z.sum.isDefined))
     }
     // MIN/MAX of a value column answers from the zone maps only when
-    // every live segment marks them EXACT (V8 winners-only fold) and
+    // every covered segment marks them EXACT (V8 winners-only fold) and
     // publishes the entry at the current schema type. Entry presence
     // also implies the segment saw no null in the column, so the zone
-    // extremes are over all of its rows — matching SQL MIN/MAX, which
-    // ignore nulls, via the conservative route: any null anywhere
-    // suppresses the claim and the aggregate falls back to a scan.
+    // extremes are over all of its rows.
     def minMaxable(name: String): Boolean =
       schema.fields.exists(f => f.name == name &&
         SegmentFile.zoneMappable(f.dataType)) &&
-        segs.nonEmpty && segs.forall(m => m.exactZones &&
-        m.zoneStats.exists(z =>
+        covered.forall(m => m.exactZones && m.zoneStats.exists(z =>
           z.name == name && z.dataType == schema(name).dataType &&
             // a truncated string claim covers the values but may BE no
             // value — sound for pruning, never for a MIN/MAX answer
             z.exact))
-    // COUNT(col) = rows - nulls from the V10 exact null counts; pushes
-    // only when EVERY live segment carries the column's claim (a
-    // pre-V10 sidecar suppresses it and the aggregate scans)
+    // COUNT(col) = rows - nulls from the V10 exact null counts
     def countable(name: String): Boolean =
       schema.fieldNames.contains(name) &&
-        SegmentFile.mergedNullCount(segs, name).isDefined
-    val specs: Seq[Option[KvAgg]] = agg.aggregateExpressions().toSeq.map {
-      case _: CountStar => Some(KvAgg.Count)
+        covered.forall(_.nullCounts.exists(_._1 == name))
+    def claim(f: AggregateFunc): Option[KvAgg] = f match {
+      case _: CountStar => Some(KvAgg.Rows)
       // key columns are never null (codec contract): COUNT(key) = COUNT(*)
-      case c: Count if !c.isDistinct &&
-        leadName(c.column()).exists(keys.contains) => Some(KvAgg.Count)
-      case c: Count if !c.isDistinct &&
-        leadName(c.column()).exists(countable) =>
-        Some(KvAgg.CountCol(leadName(c.column()).get))
-      case m: Min if leadName(m.column()).contains(keys.head) => Some(KvAgg.MinLead)
-      case m: Max if leadName(m.column()).contains(keys.head) => Some(KvAgg.MaxLead)
-      case m: Min if leadName(m.column()).exists(minMaxable) =>
-        Some(KvAgg.MinCol(leadName(m.column()).get))
-      case m: Max if leadName(m.column()).exists(minMaxable) =>
-        Some(KvAgg.MaxCol(leadName(m.column()).get))
-      case s: Sum if !s.isDistinct &&
-        leadName(s.column()).exists(summable) =>
-        Some(KvAgg.SumCol(leadName(s.column()).get))
+      case c: Count => colName(c.column()).collect {
+        case n if keys.contains(n) => KvAgg.Rows
+        case n if countable(n) => KvAgg.NonNull(n)
+      }
+      case m: Min => colName(m.column()).collect {
+        case n if n == keys.head => KvAgg.MinLead
+        case n if minMaxable(n) => KvAgg.ZoneMin(n)
+      }
+      case m: Max => colName(m.column()).collect {
+        case n if n == keys.head => KvAgg.MaxLead
+        case n if minMaxable(n) => KvAgg.ZoneMax(n)
+      }
+      case s: Sum => colName(s.column()).filter(summable).map(KvAgg.ZoneSum)
       case _ => None
     }
-    if (specs.nonEmpty && specs.forall(_.isDefined)) {
-      aggPushed = Some(specs.flatten); aggSegs = segs; true
-    } else false
+
+    // the pushed functions back as Spark's own Catalyst aggregates,
+    // their columns bound to the table schema: the scan evaluates them
+    // with Spark's update/merge/evaluate expressions, so types, ANSI
+    // overflow and null semantics are Spark's by construction
+    val refs = scala.collection.mutable.LinkedHashMap.empty[String, AttributeReference]
+    def catalyst(e: org.apache.spark.sql.connector.expressions.Expression): Option[Expression] =
+      V2ExpressionUtils.toCatalyst(e).flatMap { c =>
+        val names = c.collect { case u: UnresolvedAttribute => u.nameParts }
+        if (!names.forall(n => n.length == 1 && schema.fieldNames.contains(n.head))) None
+        else Some(c.transform { case u: UnresolvedAttribute =>
+          val f = schema(u.nameParts.head)
+          refs.getOrElseUpdate(f.name,
+            AttributeReference(f.name, f.dataType, f.nullable)())
+        })
+      }
+    val fns: Seq[Option[DeclarativeAggregate]] = agg.aggregateExpressions().toSeq.map {
+      case _: CountStar => Some(CCount(Literal(1)))
+      case c: Count => catalyst(c.column()).map(e => CCount(e))
+      case s: Sum => catalyst(s.column()).map(CSum(_))
+      case m: Min => catalyst(m.column()).map(CMin(_))
+      case m: Max => catalyst(m.column()).map(CMax(_))
+      case _ => None
+    }
+    val claims = agg.aggregateExpressions().toSeq.map(claim)
+    val ok = fns.forall(_.exists(f => f.resolved && f.checkInputDataTypes().isSuccess)) &&
+      // fully covered segments must answer from metadata
+      (covered.isEmpty || claims.forall(_.isDefined))
+    if (ok) {
+      // every column an aggregate reads, in schema order (boundary reads
+      // project exactly these)
+      val input = schema.fieldNames.toSeq.flatMap(refs.get)
+      aggScan = Some(new GraftKvAggScan(path, schema, keys, encoding,
+        pushed.toSeq, fns.flatten, claims, input, segs.length, covered,
+        boundary, ranges))
+    }
+    ok
   }
 
-  override def build(): Scan = aggPushed match {
-    case Some(aggs) =>
-      new GraftKvAggScan(path, schema, keys, aggs, encoding, pushed.toSeq,
-        aggSegs)
-    case None =>
-      new GraftKvScan(path, schema, keys, required, pushed, limit, encoding,
-        restrictFiles, maxFilesPerTrigger, snapshotVersion, topN, sample,
-        runtimeFiltering)
-  }
+  override def build(): Scan = aggScan.getOrElse(
+    new GraftKvScan(path, schema, keys, required, pushed, limit, encoding,
+      restrictFiles, maxFilesPerTrigger, snapshotVersion, topN, sample,
+      runtimeFiltering))
 }
 
 object GraftKvScanBuilder {
@@ -607,233 +673,212 @@ object GraftKvScanBuilder {
   }
 }
 
-/** Pushed-aggregate kinds the segment metadata can answer. */
+/** How segment metadata answers one pushed aggregate over a COVERED
+  * segment (every lead value it holds qualifies). */
 sealed trait KvAgg
 object KvAgg {
-  case object Count extends KvAgg
+  /** COUNT(*) / COUNT(key): the segment's record count. */
+  case object Rows extends KvAgg
+  /** COUNT(col): rows minus the V10 exact null count. */
+  final case class NonNull(name: String) extends KvAgg
+  /** MIN/MAX of the leading key: the segment's key bounds. */
   case object MinLead extends KvAgg
   case object MaxLead extends KvAgg
-  /** Exact Long SUM of an integral column from the V7 zone-stat sums
-    * (the reference coprocessor's partial-sum analog). */
-  final case class SumCol(name: String) extends KvAgg
-  /** MIN/MAX of a VALUE column from the V8 exact zone maps. Pushed only
-    * when every live segment's sidecar marks its zone claims exact
-    * (winners-only fold) — pre-V8 bounds may be widened by superseded
-    * Put-duplicates and would answer with a value the table does not
-    * contain. */
-  final case class MinCol(name: String) extends KvAgg
-  final case class MaxCol(name: String) extends KvAgg
-  /** COUNT(col) — non-null rows of a value column, from the V10 exact
-    * per-segment null counts (rows minus nulls). */
-  final case class CountCol(name: String) extends KvAgg
+  /** MIN/MAX of a value column from the V8 exact zone maps (winners-only
+    * fold — pre-V8 bounds may be widened by superseded Put-duplicates). */
+  final case class ZoneMin(name: String) extends KvAgg
+  final case class ZoneMax(name: String) extends KvAgg
+  /** SUM of an integral or narrow-decimal column from the V7 exact sum
+    * claim (the reference coprocessor's partial-sum analog). */
+  final case class ZoneSum(name: String) extends KvAgg
 }
 
-/** Scan that answers pushed aggregates from segment sidecars: one
-  * partial row per segment, no data file opened — except boundary
-  * segments of a pushed leading-key range filter, which are only
-  * PARTIALLY covered by the qualified ranges and scan just their own
-  * records (count/min/max over matching leads). Fully-covered and
-  * pruned-away segments never open their data file at any table size. */
+/** Spark's own evaluation of pushed aggregates: the update, merge and
+  * evaluate expressions of Catalyst's `Count`/`Sum`/`Min`/`Max`, run
+  * interpreted over buffers laid out like Spark's aggregate buffers. Read
+  * rows feed `update`, per-segment partial buffers feed `merge`, so the
+  * answer is what Spark's partial + final aggregates would produce, with
+  * the same types, ANSI overflow errors and null semantics. */
+final class KvAggFold(
+    fns: Seq[org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate],
+    input: Seq[org.apache.spark.sql.catalyst.expressions.Attribute])
+    extends Serializable {
+  import org.apache.spark.sql.catalyst.expressions._
+
+  private val buffer = fns.flatMap(_.aggBufferAttributes)
+  @transient private lazy val initialValues = fns.flatMap(_.initialValues)
+  @transient private lazy val updateExprs = BindReferences.bindReferences(
+    fns.flatMap(_.updateExpressions), buffer ++ input).toArray
+  @transient private lazy val mergeExprs = BindReferences.bindReferences(
+    fns.flatMap(_.mergeExpressions),
+    buffer ++ fns.flatMap(_.inputAggBufferAttributes)).toArray
+  @transient private lazy val resultExprs = BindReferences.bindReferences(
+    fns.map(_.evaluateExpression), buffer).toArray
+
+  private def eval(exprs: Array[Expression], row: InternalRow): InternalRow =
+    new GenericInternalRow(exprs.map(_.eval(row)))
+
+  def initial: InternalRow =
+    new GenericInternalRow(initialValues.map(_.eval()).toArray)
+  def update(buf: InternalRow, row: InternalRow): InternalRow =
+    eval(updateExprs, new JoinedRow(buf, row))
+  def merge(buf: InternalRow, other: InternalRow): InternalRow =
+    eval(mergeExprs, new JoinedRow(buf, other))
+  def result(buf: InternalRow): InternalRow = eval(resultExprs, buf)
+
+  /** A partial buffer holding one segment's metadata answers (one value
+    * per aggregate): the value fills the aggregate's buffer slot, and a
+    * SUM's `isEmpty` flag is false — a claim exists only for a segment
+    * whose rows are all non-null. */
+  def partial(values: Seq[Any]): InternalRow =
+    new GenericInternalRow(fns.zip(values).flatMap { case (f, v) =>
+      f.aggBufferAttributes.map(a => if (a.name == "isEmpty") false else v)
+    }.toArray)
+}
+
+/** Scan that finishes pushed aggregates inside the connector as ONE
+  * partition: the metadata answers of the covered segments, folded at
+  * planning time, plus the boundary segments whose matching records the
+  * reader folds in. Covered and pruned-away segments never open their
+  * data file at any table size, and a one-partition scan is read on the
+  * driver (graft.sql.KvDriverCollect), so such an aggregate runs no Spark
+  * job. */
 class GraftKvAggScan(path: String, schema: StructType, keys: Seq[String],
-    aggs: Seq[KvAgg], encoding: String = graft.store.RowCodec.Binary,
-    pushed: Seq[Filter] = Nil, segs: Seq[SegmentFile.Meta] = Nil)
+    encoding: String, pushed: Seq[Filter],
+    fns: Seq[org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate],
+    claims: Seq[Option[KvAgg]],
+    input: Seq[org.apache.spark.sql.catalyst.expressions.AttributeReference],
+    segmentsTotal: Int, covered: Seq[SegmentFile.Meta],
+    boundary: Seq[SegmentFile.Meta],
+    leadRanges: graft.pruning.CriticalPoints.MultiRange)
     extends Scan with Batch {
 
-  private def leadField = schema(keys.head)
-
-  override def readSchema(): StructType = StructType(aggs.zipWithIndex.map {
-    case (KvAgg.Count, i) => org.apache.spark.sql.types.StructField(s"agg_$i", org.apache.spark.sql.types.LongType, nullable = false)
-    case (KvAgg.CountCol(_), i) => org.apache.spark.sql.types.StructField(s"agg_$i", org.apache.spark.sql.types.LongType, nullable = false)
-    case (KvAgg.SumCol(n), i) => org.apache.spark.sql.types.StructField(s"agg_$i",
-      GraftKvAggScan.sumType(schema(n).dataType), nullable = true)
-    case (KvAgg.MinCol(n), i) => org.apache.spark.sql.types.StructField(s"agg_$i", schema(n).dataType, nullable = true)
-    case (KvAgg.MaxCol(n), i) => org.apache.spark.sql.types.StructField(s"agg_$i", schema(n).dataType, nullable = true)
-    case (_, i) => org.apache.spark.sql.types.StructField(s"agg_$i", leadField.dataType, nullable = true)
+  override def readSchema(): StructType = StructType(fns.zipWithIndex.map {
+    case (f, i) =>
+      org.apache.spark.sql.types.StructField(s"agg_$i", f.dataType, f.nullable)
   })
 
   override def toBatch: Batch = this
   override def description(): String =
-    s"GraftKvAggScan(path=$path, aggs=$aggs, pushed=${pushed.mkString(",")})"
+    s"GraftKvAggScan(path=$path, aggs=${fns.map(_.sql).mkString("[", ", ", "]")}, " +
+      s"pushed=${pushed.mkString(",")}, covered=${covered.length}, " +
+      s"boundary=${boundary.length})"
 
   private lazy val codec = RowCodec(schema, keys, encoding)
-
-  private lazy val leadRanges = graft.pruning.CriticalPoints.MultiRange(
-    graft.pruning.CriticalPoints.qualifiedRanges(
-      pushed, keys.head, codec.keyFields.head.dataType),
-    codec.keyFields.head.dataType)
+  private lazy val fold = new KvAggFold(fns, input)
 
   /** Zone values store externally-typed (java String for V12 string
-    * zones, for the byte-order comparator); agg rows are InternalRows. */
+    * zones, for the byte-order comparator); buffers hold internal values. */
   private def toInternal(v: Any): Any = v match {
     case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
     case other => other
   }
 
-  /** The agg row a fully-covered segment answers from pure metadata. */
-  private def metadataValues(m: SegmentFile.Meta): Array[Any] =
-    aggs.map {
-      case KvAgg.Count => m.count
-      case KvAgg.MinLead => codec.decodeKey(m.minKey)(0)
-      case KvAgg.MaxLead => codec.decodeKey(m.maxKey)(0)
-      case KvAgg.SumCol(n) =>
-        // presence was validated at push time over this exact listing
-        m.zoneStats.find(_.name == n).flatMap(_.sum)
-          .map(s => GraftKvAggScan.sumValue(schema(n).dataType, s)).orNull
-      case KvAgg.MinCol(n) =>
-        m.zoneStats.find(_.name == n).map(z => toInternal(z.min)).orNull
-      case KvAgg.MaxCol(n) =>
-        m.zoneStats.find(_.name == n).map(z => toInternal(z.max)).orNull
-      case KvAgg.CountCol(n) =>
-        // presence validated at push time over this exact listing
-        m.count - m.nullCounts.find(_._1 == n).get._2
-    }.toArray[Any]
+  /** A claimed sum at Sum's buffer type: decimal claims carry the
+    * UNSCALED sum (the column's scale is fixed, so this is exact). */
+  private def sumValue(dt: org.apache.spark.sql.types.DataType, unscaledOrLong: Long): Any =
+    dt match {
+      case d: org.apache.spark.sql.types.DecimalType =>
+        org.apache.spark.sql.types.Decimal(
+          java.math.BigDecimal.valueOf(unscaledOrLong, d.scale),
+          math.min(38, d.precision + 10), d.scale)
+      case _ => Long.box(unscaledOrLong)
+    }
 
-  override def planInputPartitions(): Array[InputPartition] =
-    segs.flatMap { m =>
-      val minLead = codec.leadingKeyValue(m.minKey)
-      val maxLead = codec.leadingKeyValue(m.maxKey)
-      if (pushed.isEmpty)
-        Some(KvAggPartition(metadataValues(m)))
-      else if (!leadRanges.intersects(minLead, maxLead)) None // pruned
-      else if (leadRanges.coversInterval(minLead, maxLead))
-        Some(KvAggPartition(metadataValues(m)))
-      else Some(KvAggBoundaryPartition(path, m.file))
-    }.toArray[InputPartition]
+  /** One covered segment's metadata answers (claims were validated at
+    * push time over this exact listing). */
+  private def metadataValues(m: SegmentFile.Meta): Seq[Any] = claims.map(_.get match {
+    case KvAgg.Rows => m.count
+    case KvAgg.NonNull(n) => m.count - m.nullCounts.find(_._1 == n).get._2
+    case KvAgg.MinLead => codec.decodeKey(m.minKey)(0)
+    case KvAgg.MaxLead => codec.decodeKey(m.maxKey)(0)
+    case KvAgg.ZoneMin(n) => toInternal(m.zoneStats.find(_.name == n).get.min)
+    case KvAgg.ZoneMax(n) => toInternal(m.zoneStats.find(_.name == n).get.max)
+    case KvAgg.ZoneSum(n) => sumValue(schema(n).dataType,
+      m.zoneStats.find(_.name == n).get.sum.get)
+  })
+
+  private lazy val partition: KvAggPartition = KvAggPartition(
+    covered.foldLeft(fold.initial)((b, m) =>
+      fold.merge(b, fold.partial(metadataValues(m)))),
+    // each boundary segment ships only the qualified ranges intersecting
+    // its key span, as the plain scan's partitions do
+    boundary.map { m =>
+      val lo = codec.leadingKeyValue(m.minKey)
+      val hi = codec.leadingKeyValue(m.maxKey)
+      GraftKvInputPartition(path, m.file, m.count, partitionRanges = Some(
+        graft.pruning.CriticalPoints.MultiRange(
+          leadRanges.intersecting(lo, hi), leadRanges.dt)))
+    })
+
+  override def planInputPartitions(): Array[InputPartition] = Array(partition)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new KvAggReaderFactory(schema, keys, aggs, leadRanges, encoding)
+    new KvAggReaderFactory(schema, keys, fold, input.map(_.name), leadRanges,
+      encoding)
+
+  override def supportedCustomMetrics()
+      : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    GraftKvMetrics.all
+
+  /** Segments never opened — pruned by the pushed filters or answered
+    * from metadata — count as pruned, so `segmentsTotal - segmentsPruned`
+    * is the segments read, as on the plain scan. */
+  override def reportDriverMetrics()
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    Array(GraftKvMetrics.task("segmentsTotal", segmentsTotal),
+      GraftKvMetrics.task("segmentsPruned", segmentsTotal - boundary.length))
 }
 
-object GraftKvAggScan {
-  import org.apache.spark.sql.types._
-
-  /** Spark's partial-sum type for a pushed SUM: Long for integrals,
-    * the widened decimal (Sum's own result type) for decimal columns. */
-  def sumType(dt: DataType): DataType = dt match {
-    case d: DecimalType => DecimalType(math.min(38, d.precision + 10), d.scale)
-    case _ => LongType
-  }
-
-  /** Internal value for a claimed sum: decimal claims carry the
-    * UNSCALED sum (the column's scale is fixed, so this is exact). */
-  def sumValue(dt: DataType, unscaledOrLong: Long): Any = dt match {
-    case d: DecimalType =>
-      Decimal(java.math.BigDecimal.valueOf(unscaledOrLong, d.scale),
-        math.min(38, d.precision + 10), d.scale)
-    case _ => Long.box(unscaledOrLong)
-  }
-
-  /** Overflow-promoted accumulator result: decimal widens into its
-    * 38-digit output type; an integral sum that truly exceeds Long
-    * range throws the same overflow the non-pushed ANSI aggregate
-    * would (longValueExact), never a silently wrapped value. */
-  def sumValueWide(dt: DataType, acc: java.math.BigInteger): Any = dt match {
-    case d: DecimalType =>
-      Decimal(new java.math.BigDecimal(acc, d.scale),
-        math.min(38, d.precision + 10), d.scale)
-    case _ => Long.box(acc.longValueExact())
-  }
-}
+/** The agg scan's one partition: the folded metadata buffer of its
+  * covered segments and the boundary segments still to read. */
+final case class KvAggPartition(folded: InternalRow,
+    boundary: Seq[GraftKvInputPartition]) extends InputPartition
 
 class KvAggReaderFactory(schema: StructType, keys: Seq[String],
-    aggs: Seq[KvAgg], ranges: graft.pruning.CriticalPoints.MultiRange,
-    encoding: String) extends PartitionReaderFactory {
+    fold: KvAggFold, projection: Seq[String],
+    ranges: graft.pruning.CriticalPoints.MultiRange, encoding: String)
+    extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
-      private var done = false
-      override def next(): Boolean = if (done) false else { done = true; true }
+      private val p = partition.asInstanceOf[KvAggPartition]
+      private var row: InternalRow = _
+      private val metrics = scala.collection.mutable.LinkedHashMap(
+        "recordsDecoded" -> 0L, "gapSeeks" -> 0L)
 
-      override def get(): InternalRow = {
-        val values = partition match {
-          case p: KvAggPartition => p.values
-          case p: KvAggBoundaryPartition =>
-            // scan only this segment's matching records (seek + early
-            // stop via the regular partition reader, projected to the
-            // lead column + any aggregated value columns); sorted order
-            // makes lead min = first, lead max = last
-            import org.apache.spark.sql.types._
-            val valCols = aggs.collect {
-              case KvAgg.SumCol(n) => n
-              case KvAgg.MinCol(n) => n
-              case KvAgg.MaxCol(n) => n
-              case KvAgg.CountCol(n) => n
-            }.distinct
-            val inner = new GraftKvPartitionReader(
-              GraftKvInputPartition(p.dir, p.file, 0L),
-              schema, keys, keys.head +: valCols, ranges, -1, encoding)
-            val dt = schema(keys.head).dataType
-            var cnt = 0L
-            var minLead: Any = null
-            var maxLead: Any = null
-            val sums = new Array[Long](valCols.length)
-            // overflow promotion: a range-restricted scan over
-            // mixed-sign data can overflow the long accumulator even
-            // when the TRUE sum fits the widened output type (segment
-            // claims only bound full-segment sums, never subsets) —
-            // promote to BigInteger instead of failing a query the
-            // non-pushed plan would answer
-            val sumsBig = new Array[java.math.BigInteger](valCols.length)
-            val sumSeen = new Array[Boolean](valCols.length)
-            val mins = new Array[Any](valCols.length)
-            val maxs = new Array[Any](valCols.length)
-            val nonNull = new Array[Long](valCols.length)
-            val cmps: Array[(Any, Any) => Int] = valCols.map(c =>
-              graft.pruning.TriEval.comparator(schema(c).dataType)).toArray
-            try {
-              while (inner.next()) {
-                val row = inner.get()
-                val v = row.get(0, dt)
-                if (minLead == null) minLead = v
-                maxLead = v
-                cnt += 1
-                var j = 0
-                while (j < valCols.length) {
-                  if (!row.isNullAt(1 + j)) {
-                    nonNull(j) += 1
-                    val cdt = schema(valCols(j)).dataType
-                    val x = row.get(1 + j, cdt)
-                    if (mins(j) == null || cmps(j)(x, mins(j)) < 0) mins(j) = x
-                    if (maxs(j) == null || cmps(j)(x, maxs(j)) > 0) maxs(j) = x
-                    def add(v: Long): Unit = {
-                      if (sumsBig(j) != null)
-                        sumsBig(j) = sumsBig(j).add(java.math.BigInteger.valueOf(v))
-                      else try sums(j) = Math.addExact(sums(j), v)
-                        catch { case _: ArithmeticException =>
-                          sumsBig(j) = java.math.BigInteger.valueOf(sums(j))
-                            .add(java.math.BigInteger.valueOf(v)) }
-                      sumSeen(j) = true
-                    }
-                    cdt match {
-                      case LongType | IntegerType | ShortType | ByteType =>
-                        add(x.asInstanceOf[Number].longValue)
-                      case d: DecimalType if d.precision <= 18 =>
-                        add(x.asInstanceOf[org.apache.spark.sql.types.Decimal]
-                          .toUnscaledLong)
-                      case _ => ()
-                    }
-                  }
-                  j += 1
-                }
-              }
-            } finally inner.close()
-            aggs.map {
-              case KvAgg.Count => cnt
-              case KvAgg.MinLead => minLead
-              case KvAgg.MaxLead => maxLead
-              case KvAgg.SumCol(n) =>
-                val j = valCols.indexOf(n)
-                if (!sumSeen(j)) null
-                else if (sumsBig(j) != null)
-                  GraftKvAggScan.sumValueWide(schema(n).dataType, sumsBig(j))
-                else GraftKvAggScan.sumValue(schema(n).dataType, sums(j))
-              case KvAgg.MinCol(n) => mins(valCols.indexOf(n))
-              case KvAgg.MaxCol(n) => maxs(valCols.indexOf(n))
-              case KvAgg.CountCol(n) => nonNull(valCols.indexOf(n))
-            }.toArray[Any]
-        }
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(values)
+      // each boundary segment folds into its own partial buffer, merged
+      // like a partial aggregate's output — Spark's own order of
+      // operations for one partition per segment. The columnar reader
+      // decodes only the aggregated columns; its vectors are reused per
+      // batch, so the buffer copies its values (a MIN/MAX string) after
+      // each one.
+      override def next(): Boolean = row == null && {
+        row = fold.result(p.boundary.foldLeft(p.folded) { (acc, bp) =>
+          val r = new GraftKvColumnarReader(bp, schema, keys, projection,
+            ranges, -1, encoding)
+          val part = try {
+            var b = fold.initial
+            while (r.next()) {
+              val it = r.get().rowIterator()
+              while (it.hasNext) b = fold.update(b, it.next())
+              b = b.copy()
+            }
+            b
+          } finally {
+            r.currentMetricsValues().foreach(m => metrics(m.name()) += m.value())
+            r.close()
+          }
+          fold.merge(acc, part)
+        })
+        true
       }
+
+      override def get(): InternalRow = row
+
+      override def currentMetricsValues()
+          : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+        metrics.map { case (n, v) => GraftKvMetrics.task(n, v) }.toArray
 
       override def close(): Unit = ()
     }
@@ -879,15 +924,6 @@ object GraftKvMetrics {
   val all: Array[org.apache.spark.sql.connector.metric.CustomMetric] = Array(
     new SegmentsTotal, new SegmentsPruned, new RecordsDecoded, new GapSeeks)
 }
-
-final case class KvAggPartition(values: Array[Any])
-    extends InputPartition
-
-/** Boundary segment of a filtered pushed aggregate: partially covered by
-  * the qualified ranges, so its records must be scanned (just this one
-  * segment — the covered rest of the table stays metadata-only). */
-final case class KvAggBoundaryPartition(dir: String, file: String)
-    extends InputPartition
 
 class GraftKvScan(path: String, schema: StructType, keys: Seq[String],
     required: StructType, pushed: Array[Filter], limit: Int,

@@ -213,7 +213,9 @@ object KvMatView {
   /** The stored `__sum_c` type for a base column (Sum's result type). */
   private[connector] def sumTypeOf(
       dt: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.DataType =
-    GraftKvAggScan.sumType(dt)
+    org.apache.spark.sql.catalyst.expressions.aggregate.Sum(
+      org.apache.spark.sql.catalyst.expressions.BoundReference(0, dt, nullable = true))
+      .dataType
 
   /** MIN/MAX-maintainable: any totally-ordered atomic type. Unlike
     * SUM, min/max never synthesize a value — they select one the base

@@ -268,19 +268,22 @@ object SidecarFs {
   }
 
   /** Create (overwrite) a file for sequential writing; parents are
-    * created as needed (Hadoop semantics — the store always writes
-    * into an existing table dir anyway). Unbuffered: callers wrap it.
+    * created as needed (Hadoop semantics) unless `createParent` is false,
+    * which writes only into an EXISTING directory and throws when it is
+    * gone, like [[writeStringAtomic]]. Unbuffered: callers wrap it.
     * Local files are written through `java.nio` (no `.crc` shadow, no
     * forked `chmod`), like [[writeStringAtomic]]. */
-  def create(path: String): java.io.OutputStream = {
+  def create(path: String, createParent: Boolean = true): java.io.OutputStream = {
     val p = new Path(path)
     val fs = fsOf(p)
     val qp = fs.makeQualified(p)
     if (isLocal(qp)) {
       val lp = localPath(qp)
-      java.nio.file.Files.createDirectories(lp.getParent)
+      if (createParent) java.nio.file.Files.createDirectories(lp.getParent)
       java.nio.file.Files.newOutputStream(lp)
-    } else fs.create(qp, true)
+    } else if (createParent) fs.create(qp, true)
+    else fs.createNonRecursive(qp, true, 4096, fs.getDefaultReplication(qp),
+      fs.getDefaultBlockSize(qp), null)
   }
 
   def size(path: String): Long = {

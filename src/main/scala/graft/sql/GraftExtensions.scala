@@ -38,6 +38,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(s => KvNdvRule(s))
     // whole-table approx_percentile from V11 quantile-summary metadata
     e.injectOptimizerRule(s => KvPercentileRule(s))
+    // try_sum / try_avg must not push: V2 translation drops the TRY mode
+    e.injectOptimizerRule(_ => KvTryAggGuard)
     // one-partition kv reads collect on the driver, without a job
     e.injectColumnar(_ => new org.apache.spark.sql.execution.ColumnarRule {
       override def postColumnarTransitions = KvDriverCollect

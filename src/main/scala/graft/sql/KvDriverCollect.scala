@@ -1,9 +1,9 @@
 package graft.sql
 
-import graft.connector.GraftKvScan
+import graft.connector.{GraftKvAggScan, GraftKvScan}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, BoundReference, InterpretedUnsafeProjection, SortOrder}
 import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
@@ -21,7 +21,10 @@ import org.apache.spark.sql.execution.metric.SQLMetrics
   * graftkv scan (with its ColumnarToRow, unsafe-row Project and codegen
   * wrappers only, no runtime filters) in [[KvDriverCollectExec]], which
   * reads such a scan on the driver when it planned at most one
-  * partition.
+  * partition. A pushed aggregate's scan ([[GraftKvAggScan]]) always
+  * plans one partition; the Project Spark puts over a complete
+  * aggregate pushdown (renaming the scan's columns, or finishing an AVG
+  * from its SUM and COUNT) is evaluated on the driver too.
   *
   * No option gates it: a one-partition job runs a single task anyway,
   * and `collect` brings every row to the driver anyway, so reading the
@@ -37,12 +40,16 @@ object KvDriverCollect extends Rule[SparkPlan] {
 
   /** The graftkv scan a bare-scan plan reads, looking through the
     * row-transition and codegen wrappers (a row-based scan gets an
-    * identity Project that converts its rows to UnsafeRow); None for any
-    * other shape. */
+    * identity Project that converts its rows to UnsafeRow) and, over an
+    * aggregate scan, a deterministic Project; None for any other shape. */
   def scanOf(plan: SparkPlan): Option[BatchScanExec] = plan match {
-    case b: BatchScanExec if b.scan.isInstanceOf[GraftKvScan] && b.runtimeFilters.isEmpty =>
-      Some(b)
+    case b: BatchScanExec if b.runtimeFilters.isEmpty && (b.scan match {
+        case _: GraftKvScan | _: GraftKvAggScan => true
+        case _ => false
+      }) => Some(b)
     case p: ProjectExec if p.projectList == p.child.output => scanOf(p.child)
+    case p: ProjectExec if p.projectList.forall(_.deterministic) =>
+      scanOf(p.child).filter(_.scan.isInstanceOf[GraftKvAggScan])
     case _: ColumnarToRowExec | _: WholeStageCodegenExec | _: InputAdapter =>
       scanOf(plan.children.head)
     case _ => None
@@ -78,7 +85,10 @@ case class KvDriverCollectExec(child: SparkPlan) extends UnaryExecNode {
 
   private def drain(scan: BatchScanExec, parts: Seq[InputPartition]): Array[InternalRow] = {
     val factory = scan.readerFactory
-    val toUnsafe = UnsafeProjection.create(scan.schema)
+    // interpreted projections: one partition's rows cost less to project
+    // than generating code for them would
+    val toUnsafe = InterpretedUnsafeProjection.createProjection(
+      scan.output.zipWithIndex.map { case (a, i) => BoundReference(i, a.dataType, nullable = true) })
     val rows = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
     val readerMetrics = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
     def read[T](r: PartitionReader[T])(emit: T => Unit): Unit =
@@ -94,6 +104,15 @@ case class KvDriverCollectExec(child: SparkPlan) extends UnaryExecNode {
         }
       else read(factory.createReader(p))(row => rows += toUnsafe(row).copy())
     }
+    // the Projects between the root and the scan, innermost first
+    // (identity Projects only convert to UnsafeRow, which toUnsafe did)
+    val projected = child.collect {
+      case p: ProjectExec if p.projectList != p.child.output => p
+    }.reverse.foldLeft(rows.toArray) { (in, p) =>
+      val project = InterpretedUnsafeProjection.createProjection(
+        BindReferences.bindReferences(p.projectList, p.child.output))
+      in.map(r => project(r).copy())
+    }
     // what the task would have reported: the row count of every node in
     // the chain that keeps one, and the readers' custom metrics
     val rowCounts = child.flatMap(_.metrics.get("numOutputRows"))
@@ -103,7 +122,7 @@ case class KvDriverCollectExec(child: SparkPlan) extends UnaryExecNode {
     }
     SQLMetrics.postDriverMetricUpdates(sparkContext,
       sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), rowCounts ++ custom)
-    rows.toArray
+    projected
   }
 
   override protected def withNewChildInternal(newChild: SparkPlan): KvDriverCollectExec =

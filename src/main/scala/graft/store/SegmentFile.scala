@@ -1166,12 +1166,14 @@ object SegmentFile {
   /** Write the packed planning stats for snapshot `v`. Only the CAS
     * winner for `v` (or a read-path backfill deriving identical content
     * from the same immutable inputs) writes it, so a plain atomic move
-    * suffices — no second CAS. */
-  private def writePackedStats(dir: String, v: Long, metas: Seq[Meta]): Unit = {
+    * suffices — no second CAS. Writes only into an existing table
+    * directory: a read-path backfill racing DROP TABLE must not recreate
+    * the dropped directory. */
+  private[store] def writePackedStats(dir: String, v: Long, metas: Seq[Meta]): Unit = {
     val tmp = SidecarFs.child(dir,
       s"._graft_stats.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
     val out = new DataOutputStream(new BufferedOutputStream(
-      SidecarFs.create(tmp), 1 << 16))
+      SidecarFs.create(tmp, createParent = false), 1 << 16))
     try {
       out.writeInt(PackedStatsV5)
       out.writeInt(metas.length)
@@ -1534,7 +1536,7 @@ object SegmentFile {
     * (segments are immutable, so the sorted live file set fully
     * determines every payload). Either way the steady-state cost per
     * plan is a map lookup — never O(segments) sidecar opens. */
-  private final class ArtifactPacks[T](prefix: String, marker: Int,
+  private[store] final class ArtifactPacks[T](prefix: String, marker: Int,
       readSidecar: (String, String) => T,
       writePayload: (DataOutputStream, T) => Unit,
       readPayload: DataInputStream => T) {
@@ -1563,12 +1565,14 @@ object SegmentFile {
       legacyLock.synchronized(legacyCache.clear())
     }
 
-    private def writePack(dir: String, v: Long,
+    /** Read-path backfill: only into an existing table directory, like
+      * [[writePackedStats]]. */
+    private[store] def writePack(dir: String, v: Long,
         entries: Seq[(String, T)]): Unit = {
       val tmp = SidecarFs.child(dir,
         s".$prefix.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
       val out = new DataOutputStream(new BufferedOutputStream(
-        SidecarFs.create(tmp), 1 << 16))
+        SidecarFs.create(tmp, createParent = false), 1 << 16))
       try {
         out.writeInt(marker)
         out.writeInt(entries.length)
@@ -1653,14 +1657,14 @@ object SegmentFile {
       }
   }
 
-  private val ndvPacks = new ArtifactPacks[Seq[NdvSketch]](
+  private[store] val ndvPacks = new ArtifactPacks[Seq[NdvSketch]](
     "_graft_ndv", NdvPackV2, readNdvSidecar, writeNdvSection, readNdvSection)
 
   // V2 packs frame each entry's payload like the sidecar's sketch tail
   // (writeSketchFrame); a V1 pack misses and is rebuilt from sidecars
   private val QsPackV2 = -204
 
-  private val qsPacks = new ArtifactPacks[Seq[QuantileSketch]](
+  private[store] val qsPacks = new ArtifactPacks[Seq[QuantileSketch]](
     "_graft_qs", QsPackV2, readQsSidecar, writeQsSection, readQsSection)
 
   /** The metadata-aggregate soundness gate, shared by every consumer

@@ -108,6 +108,30 @@ class PlanningStatsSpec extends AnyFunSuite {
     assert(Files.readString(Paths.get(path, "_graft_vhead")) == head.toString)
   }
 
+  test("pack backfills aimed at a deleted table directory leave no directory behind") {
+    // the planning-stats, NDV and quantile packs a reader backfills
+    // after the table directory was dropped under it
+    val path = tmpTable()
+    mkTable(path)
+    val head = SegmentFile.currentVersion(path).get
+    val metas = SegmentFile.listSegments(path)
+    def backfill(): Unit = {
+      // the read path swallows a failed backfill the same way
+      scala.util.Try(SegmentFile.writePackedStats(path, head, metas))
+      scala.util.Try(SegmentFile.ndvPacks.writePack(path, head, Nil))
+      scala.util.Try(SegmentFile.qsPacks.writePack(path, head, Nil))
+    }
+    graft.io.SidecarFs.deleteRecursively(path)
+    backfill()
+    assert(!Files.exists(Paths.get(path)),
+      "a read-path pack write recreated the dropped table directory")
+    // into a directory that exists, the backfills still land
+    Files.createDirectories(Paths.get(path))
+    backfill()
+    for (p <- Seq("_graft_stats", "_graft_ndv", "_graft_qs"))
+      assert(Files.isRegularFile(Paths.get(path, s"$p.v$head")), p)
+  }
+
   test("a fresh process reads the pack, not one sidecar per segment") {
     val path = tmpTable()
     mkTable(path)
