@@ -694,9 +694,9 @@ object KvAgg {
 }
 
 /** Spark's own evaluation of pushed aggregates: the update, merge and
-  * evaluate expressions of Catalyst's `Count`/`Sum`/`Min`/`Max`, run
-  * interpreted over buffers laid out like Spark's aggregate buffers. Read
-  * rows feed `update`, per-segment partial buffers feed `merge`, so the
+  * evaluate expressions of Catalyst's `Count`/`Sum`/`Min`/`Max` over
+  * buffers laid out like Spark's aggregate buffers. Read rows feed a
+  * [[KvAggFold#Partial]], per-segment partial buffers feed `merge`, so the
   * answer is what Spark's partial + final aggregates would produce, with
   * the same types, ANSI overflow errors and null semantics. */
 final class KvAggFold(
@@ -707,8 +707,6 @@ final class KvAggFold(
 
   private val buffer = fns.flatMap(_.aggBufferAttributes)
   @transient private lazy val initialValues = fns.flatMap(_.initialValues)
-  @transient private lazy val updateExprs = BindReferences.bindReferences(
-    fns.flatMap(_.updateExpressions), buffer ++ input).toArray
   @transient private lazy val mergeExprs = BindReferences.bindReferences(
     fns.flatMap(_.mergeExpressions),
     buffer ++ fns.flatMap(_.inputAggBufferAttributes)).toArray
@@ -720,8 +718,30 @@ final class KvAggFold(
 
   def initial: InternalRow =
     new GenericInternalRow(initialValues.map(_.eval()).toArray)
-  def update(buf: InternalRow, row: InternalRow): InternalRow =
-    eval(updateExprs, new JoinedRow(buf, row))
+
+  /** One segment's rows folded as Spark's aggregation iterators fold a
+    * partition: generated update code writing into one reused buffer.
+    * Build it on the thread that plans the read (code generation reads
+    * the session conf); it may then be fed from any one thread. */
+  final class Partial {
+    val buf = new SpecificInternalRow(buffer.map(_.dataType))
+    initialValues.zipWithIndex.foreach { case (e, i) => buf.update(i, e.eval()) }
+    private val project = MutableProjection.create(
+      fns.flatMap(_.updateExpressions), buffer ++ input).target(buf)
+    private val joined = new JoinedRow
+    // slots whose values may point into the input's reused memory
+    private val detachable = buffer.indices.filterNot(i =>
+      UnsafeRow.isFixedLength(buffer(i).dataType))
+
+    def update(row: InternalRow): Unit = project(joined(buf, row))
+
+    /** Copies the values that still reference the last input rows (a
+      * MIN/MAX string read from a reused column vector). */
+    def detach(): Unit = detachable.foreach { i =>
+      buf.update(i, InternalRow.copyValue(buf.get(i, buffer(i).dataType)))
+    }
+  }
+
   def merge(buf: InternalRow, other: InternalRow): InternalRow =
     eval(mergeExprs, new JoinedRow(buf, other))
   def result(buf: InternalRow): InternalRow = eval(resultExprs, buf)
@@ -847,31 +867,35 @@ class KvAggReaderFactory(schema: StructType, keys: Seq[String],
       private val metrics = scala.collection.mutable.LinkedHashMap(
         "recordsDecoded" -> 0L, "gapSeeks" -> 0L)
 
-      // each boundary segment folds into its own partial buffer, merged
-      // like a partial aggregate's output — Spark's own order of
-      // operations for one partition per segment. The columnar reader
-      // decodes only the aggregated columns; its vectors are reused per
-      // batch, so the buffer copies its values (a MIN/MAX string) after
-      // each one.
+      // each boundary segment folds into its own partial buffer, merged in
+      // segment order like partial aggregates' outputs — Spark's own order
+      // of operations for one partition per segment. Several boundary
+      // segments are read concurrently, as their tasks would run.
       override def next(): Boolean = row == null && {
-        row = fold.result(p.boundary.foldLeft(p.folded) { (acc, bp) =>
-          val r = new GraftKvColumnarReader(bp, schema, keys, projection,
-            ranges, -1, encoding)
-          val part = try {
-            var b = fold.initial
-            while (r.next()) {
-              val it = r.get().rowIterator()
-              while (it.hasNext) b = fold.update(b, it.next())
-              b = b.copy()
-            }
-            b
-          } finally {
-            r.currentMetricsValues().foreach(m => metrics(m.name()) += m.value())
-            r.close()
-          }
-          fold.merge(acc, part)
-        })
+        val parts = KvAggReaderFactory.inParallel(
+          p.boundary.map(bp => (bp, new fold.Partial))) { case (bp, part) =>
+          read(bp, part); part.buf
+        }
+        row = fold.result(parts.foldLeft(p.folded)(fold.merge))
         true
+      }
+
+      // the columnar reader decodes only the aggregated columns; its
+      // vectors are reused per batch, so the buffer detaches after each
+      private def read(bp: GraftKvInputPartition, part: KvAggFold#Partial): Unit = {
+        val r = new GraftKvColumnarReader(bp, schema, keys, projection,
+          ranges, -1, encoding)
+        try {
+          while (r.next()) {
+            val it = r.get().rowIterator()
+            while (it.hasNext) part.update(it.next())
+            part.detach()
+          }
+        } finally {
+          val values = r.currentMetricsValues()
+          metrics.synchronized(values.foreach(m => metrics(m.name()) += m.value()))
+          r.close()
+        }
       }
 
       override def get(): InternalRow = row
@@ -881,6 +905,35 @@ class KvAggReaderFactory(schema: StructType, keys: Seq[String],
         metrics.map { case (n, v) => GraftKvMetrics.task(n, v) }.toArray
 
       override def close(): Unit = ()
+    }
+}
+
+object KvAggReaderFactory {
+  import java.util.concurrent.{Callable, ExecutionException, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+
+  /** Reads an agg scan's boundary segments: one thread per core, idle
+    * threads exit. */
+  private lazy val pool: ThreadPoolExecutor = {
+    val n = Runtime.getRuntime.availableProcessors()
+    val p = new ThreadPoolExecutor(n, n, 30, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, "graftkv-agg-boundary")
+        t.setDaemon(true)
+        t
+      })
+    p.allowCoreThreadTimeOut(true)
+    p
+  }
+
+  /** `xs.map(f)`, concurrently when there are several; a failure is
+    * rethrown as `f` threw it (an ANSI overflow keeps its error class). */
+  def inParallel[A, B](xs: Seq[A])(f: A => B): Seq[B] =
+    if (xs.length <= 1) xs.map(f)
+    else {
+      val futures = xs.map(x => pool.submit(new Callable[B] { def call(): B = f(x) }))
+      try futures.map(_.get())
+      catch { case e: ExecutionException => throw e.getCause }
+      finally futures.foreach(_.cancel(true))
     }
 }
 

@@ -3,7 +3,7 @@ package graft.sql
 import graft.connector.{GraftKvAggScan, GraftKvScan}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, BoundReference, InterpretedUnsafeProjection, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, BoundReference, InterpretedUnsafeProjection, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
@@ -85,10 +85,12 @@ case class KvDriverCollectExec(child: SparkPlan) extends UnaryExecNode {
 
   private def drain(scan: BatchScanExec, parts: Seq[InputPartition]): Array[InternalRow] = {
     val factory = scan.readerFactory
-    // interpreted projections: one partition's rows cost less to project
-    // than generating code for them would
-    val toUnsafe = InterpretedUnsafeProjection.createProjection(
-      scan.output.zipWithIndex.map { case (a, i) => BoundReference(i, a.dataType, nullable = true) })
+    // an aggregate scan answers one row: projecting it interpreted costs
+    // less than generating code for it would
+    val toUnsafe =
+      if (scan.scan.isInstanceOf[GraftKvAggScan]) InterpretedUnsafeProjection.createProjection(
+        scan.output.zipWithIndex.map { case (a, i) => BoundReference(i, a.dataType, nullable = true) })
+      else UnsafeProjection.create(scan.schema)
     val rows = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
     val readerMetrics = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
     def read[T](r: PartitionReader[T])(emit: T => Unit): Unit =
@@ -104,8 +106,9 @@ case class KvDriverCollectExec(child: SparkPlan) extends UnaryExecNode {
         }
       else read(factory.createReader(p))(row => rows += toUnsafe(row).copy())
     }
-    // the Projects between the root and the scan, innermost first
-    // (identity Projects only convert to UnsafeRow, which toUnsafe did)
+    // the Projects between the root and an aggregate scan, innermost
+    // first (identity Projects only convert to UnsafeRow, which toUnsafe
+    // did)
     val projected = child.collect {
       case p: ProjectExec if p.projectList != p.child.output => p
     }.reverse.foldLeft(rows.toArray) { (in, p) =>

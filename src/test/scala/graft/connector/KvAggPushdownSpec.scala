@@ -46,14 +46,16 @@ class KvAggPushdownSpec extends AnyFunSuite {
 
   private lazy val segs: Seq[SegmentFile.Meta] = SegmentFile.listSegments(base)
 
-  private def bounds(m: SegmentFile.Meta): (Long, Long) = {
-    val meta = GraftKvMeta.read(base).get
+  /** The lead-key bounds of a table's segments, in key order. */
+  private def boundsOf(path: String): Seq[(Long, Long)] = {
+    val meta = GraftKvMeta.read(path).get
     val codec = graft.store.RowCodec(meta.schema, meta.keys, meta.encoding)
-    (codec.leadingKeyValue(m.minKey).asInstanceOf[Long],
-      codec.leadingKeyValue(m.maxKey).asInstanceOf[Long])
+    SegmentFile.listSegments(path).map { m =>
+      (codec.leadingKeyValue(m.minKey).asInstanceOf[Long],
+        codec.leadingKeyValue(m.maxKey).asInstanceOf[Long])
+    }.sortBy(_._1)
   }
-  private def segBounds: Seq[(Long, Long)] =
-    SegmentFile.listSegments(base).map(bounds).sortBy(_._1)
+  private def segBounds: Seq[(Long, Long)] = boundsOf(base)
 
   private def kv(path: String = base): Unit =
     KvCommands.table(spark, path).createOrReplaceTempView("kvt")
@@ -171,6 +173,22 @@ class KvAggPushdownSpec extends AnyFunSuite {
       path, rows))
   }
 
+  test("large boundary segments fold like Spark across many reader batches") {
+    val path = tmpTable()
+    val rows = source(400000L)
+    KvCommands.createTable(rows, path, Seq("k"), maxSegBytes = Some(16L << 20))
+    val segments = boundsOf(path)
+    assert(segments.length >= 2)
+    val (lo0, hi0) = segments(0)
+    val (lo1, hi1) = segments(1)
+    assert(hi0 - lo0 > 50000 && hi1 - lo1 > 50000, segments)
+    val df = same("SELECT count(*), sum(l), sum(i), sum(d * (1 - e)), " +
+      "sum(x * (1 - y)), min(n), max(n), count(n) FROM {T} " +
+      where((lo0 + hi0) / 2, (lo1 + hi1) / 2), path, rows)
+    assertFolded(df)
+    assert(pushed(df).get.scan.description().contains("boundary=2"))
+  }
+
   test("pushed outputs carry Spark's own types: no cast over the scan") {
     val (lo, hi) = segBounds(40)
     for (aggs <- Seq("count(*)", "sum(i)", "sum(l)", "sum(d)", "sum(d * (1 - e))",
@@ -205,6 +223,12 @@ class KvAggPushdownSpec extends AnyFunSuite {
     val want = errorClass(q.replace("{T}", "srct"))
     assert(want.contains("ARITHMETIC_OVERFLOW"), want)
     assert(errorClass(q.replace("{T}", "kvt")) == want)
+    // the same over two boundary segments, which are read concurrently
+    val (lo1, _) = boundsOf(path)(1)
+    val q2 = s"SELECT sum(b) FROM {T} WHERE k BETWEEN 3 AND ${lo1 + 3}"
+    assert(pushed(spark.sql(q2.replace("{T}", "kvt"))).get.scan.description()
+      .contains("boundary=2"))
+    assert(errorClass(q2.replace("{T}", "kvt")) == want)
     // try_sum: NULL on overflow, the sum otherwise. Spark's aggregate
     // translation drops the TRY mode, so it stays unpushed
     // (graft.sql.KvTryAggGuard)
