@@ -26,9 +26,9 @@ object Bench {
   /** Build (once — subsequent runs reuse the dir) a synthetic
     * `nSegs`-segment kv table for the driver-planning benches: 3 rows
     * per segment (segment i holds keys i*10 .. i*10+2, v = i), one
-    * manifest commit, V9 NDV and V11 quantile sidecars on every
-    * segment so the metadata-agg probes work at the same scale. A
-    * pre-V9/pre-V11 leftover fixture is rebuilt. */
+    * manifest commit, NDV and quantile sketches on every segment so the
+    * metadata-agg probes work at the same scale. A leftover fixture
+    * without them, or in an older sidecar format, is rebuilt. */
   private def buildPlanFixture(dir: String, nSegs: Int): Unit = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val schema = StructType(Seq(StructField("k", LongType, nullable = false),
@@ -499,13 +499,15 @@ object Bench {
       val dir = s"$repoRoot/tmp/plan10k"
       val schema = StructType(Seq(StructField("k", LongType, nullable = false),
         StructField("v", LongType, nullable = false)))
-      // rebuild a fixture from a pre-V9/pre-V11 round: the NDV and
-      // percentile probes need every segment to carry sketches
+      // rebuild a leftover fixture the NDV and percentile probes cannot
+      // use: segments without sketches, or sidecars in an older format
+      // (which fail to open)
       if (new java.io.File(dir, "_graft_meta.json").exists() &&
-        (!graft.store.SegmentFile.ndvSketches(dir).values.headOption
-          .exists(_.exists(_.name == "v")) ||
-          !graft.store.SegmentFile.qsSketches(dir).values.headOption
-            .exists(_.exists(_.name == "v")))) {
+        !scala.util.Try(
+          graft.store.SegmentFile.ndvSketches(dir).values.headOption
+            .exists(_.exists(_.name == "v")) &&
+          graft.store.SegmentFile.qsSketches(dir).values.headOption
+            .exists(_.exists(_.name == "v"))).getOrElse(false)) {
         graft.connector.KvCommands.dropTable(dir)
       }
       buildPlanFixture(dir, nSegs)

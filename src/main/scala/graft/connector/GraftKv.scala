@@ -567,15 +567,15 @@ class GraftKvScanBuilder(path: String, schema: StructType, keys: Seq[String],
       })) && covered.forall(_.zoneStats.exists(z =>
         z.name == name && z.dataType == schema(name).dataType && z.sum.isDefined))
     }
-    // MIN/MAX of a value column answers from the zone maps only when
-    // every covered segment marks them EXACT (V8 winners-only fold) and
+    // MIN/MAX of a value column answers from the zone maps (exact: the
+    // writer folds dup-group winners only) when every covered segment
     // publishes the entry at the current schema type. Entry presence
     // also implies the segment saw no null in the column, so the zone
     // extremes are over all of its rows.
     def minMaxable(name: String): Boolean =
       schema.fields.exists(f => f.name == name &&
         SegmentFile.zoneMappable(f.dataType)) &&
-        covered.forall(m => m.exactZones && m.zoneStats.exists(z =>
+        covered.forall(m => m.zoneStats.exists(z =>
           z.name == name && z.dataType == schema(name).dataType &&
             // a truncated string claim covers the values but may BE no
             // value — sound for pruning, never for a MIN/MAX answer
@@ -2858,21 +2858,13 @@ final case class GraftKvCommit(files: Seq[String]) extends WriterCommitMessage
   * non-nullable, and tightened nullability makes codegen read genuinely
   * null columns as 0). */
 private[connector] object GraftKvCommitProtocol {
-  /** `exclude`: files that must NOT ride into the manifest via the
-    * legacy directory-listing fallback — a streaming epoch REPLAY
-    * commits the FIRST attempt's files while its own duplicates are
-    * still on disk awaiting the sweep. */
   def commitAppend(path: String, committed: Set[String],
-      writeSchema: StructType, keys: Seq[String], encoding: String,
-      exclude: Set[String] = Set.empty): Unit = {
+      writeSchema: StructType, keys: Seq[String], encoding: String): Unit = {
     // optimistic CAS (SegmentFile.commitManifest): concurrent appenders
     // each publish prevLive ++ own files at a fresh version — a lost
     // race re-reads, so no committer drops another's segments. A replay
     // whose files are already live publishes nothing (no-op detection).
-    graft.store.SegmentFile.commitManifest(path)(
-      base => Some(base -- exclude ++ committed),
-      fallbackBase = SidecarFs.list(path)
-        .filter(_.endsWith(".kv")).toSet -- exclude)
+    graft.store.SegmentFile.commitManifest(path)(base => Some(base ++ committed))
     val prev = GraftKvMeta.read(path)
     val declared = prev.map(_.schema).getOrElse(writeSchema)
     // appends preserve the table's z-clustering declaration + properties

@@ -149,11 +149,9 @@ class GraftKvCatalog extends TableCatalog with SupportsNamespaces {
         s"a positive byte count, got '$v'"))
     GraftKvMeta.write(tableDir(ident), schema, keys, encoding,
       props = persistedProps)
-    // seed an EMPTY manifest version: the table is manifest-governed
-    // from birth, so even its very first commits CAS against a real
-    // base — the directory-listing fallback (which could surface a
-    // concurrent writer's uncommitted files) never applies to
-    // catalog-created tables
+    // the table is born with manifest v1, the EMPTY set: its history
+    // starts at the empty table, and every later commit CASes against a
+    // published base
     graft.store.SegmentFile.writeManifest(tableDir(ident), Nil)
     new GraftKvTable(tableDir(ident), schema, keys, encoding)
   }

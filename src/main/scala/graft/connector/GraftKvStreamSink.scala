@@ -81,8 +81,7 @@ class GraftKvStreamingWrite(path: String, schema: StructType,
       val prior = SidecarFs.readString(intent(epochId))
         .split("\n").filter(_.nonEmpty).toSet
       if (prior.forall(f => SidecarFs.exists(SidecarFs.child(path, f)))) {
-        GraftKvCommitProtocol.commitAppend(path, prior, schema, keys,
-          encoding, exclude = fresh)
+        GraftKvCommitProtocol.commitAppend(path, prior, schema, keys, encoding)
         markDone(epochId)
         GraftKvCommitProtocol.abortFiles(path, messages)
       } else {

@@ -152,13 +152,7 @@ object KvCommands {
       throw new IllegalStateException(
         s"another maintenance operation holds the lease on $path"))
     try {
-      // a legacy table's reader authority is the directory listing, and
-      // the replacement segments move in below BEFORE the commit point —
-      // pin the live set into a manifest first (compactMinor's pattern)
-      if (SegmentFile.readManifest(path).isEmpty)
-        SegmentFile.writeManifest(path,
-          SidecarFs.list(path).filter(_.endsWith(".kv")).toSet)
-      val oldSet = SegmentFile.readManifest(path).get
+      val oldSet = SegmentFile.readManifest(path).getOrElse(Set.empty[String])
       val src = table(spark, path)
       val data = if (src.columns.contains("_z")) src.drop("_z") else src
       // hidden scratch SUBdirectory: invisible to segment listing,
@@ -322,7 +316,7 @@ object KvCommands {
   def dropTable(path: String): Unit = {
     SidecarFs.list(path)
       .filter(n => n.endsWith(".kv") || n.endsWith(".kvmeta") ||
-        n == "_graft_meta.json" || n == "_graft_segments" ||
+        n == "_graft_meta.json" ||
         n == "_graft_vhead" || // durable head-version hint dies too
         n.startsWith("_graft_segments.v") || // snapshot manifests: a
         // recreated table must not inherit the dead table's history
@@ -457,14 +451,6 @@ object KvCommands {
       }
     }
     val toRewrite = groups.filter(_.size >= math.max(minGroup, 2)).toSeq
-    // A legacy (pre-manifest) table's reader authority is the directory
-    // listing, so replacement files moved in below would surface as
-    // duplicates mid-compaction. Pin the current live set into a manifest
-    // FIRST — the table becomes manifest-governed, and from here on the
-    // move → swap → delete sequence is atomic for readers.
-    if (toRewrite.nonEmpty && SegmentFile.readManifest(path).isEmpty)
-      SegmentFile.writeManifest(path,
-        SidecarFs.list(path).filter(_.endsWith(".kv")).toSet)
     var rewritten = 0
     toRewrite.foreach { g =>
       val files = g.map(_.file).toSet
@@ -538,9 +524,17 @@ object KvCommands {
     * reader planned after the swap, and the age guard keeps files alive
     * for scans planned before it. Returns the number of segment files
     * reclaimed (the SQL VACUUM statement's report). */
-  def sweepUnmanifested(path: String, olderThanMs: Long): Int =
+  def sweepUnmanifested(path: String, olderThanMs: Long): Int = {
+    // ONE listing serves every step below: expired versions (including
+    // one stranded below a gap, which the head-down probe cannot see),
+    // unmanifested segments, epoch markers and temp artifacts. It is
+    // taken BEFORE the manifest is read, so a listed segment whose commit
+    // has published by then counts as live; a commit still in flight is
+    // shielded only by the age cutoff.
+    val names = SidecarFs.list(path)
     SegmentFile.readManifest(path).map { current =>
       val cutoff = System.currentTimeMillis() - olderThanMs
+      def aged(n: String) = SidecarFs.mtime(SidecarFs.child(path, n)) <= cutoff
       // Expired snapshot manifests go FIRST: past the window a VERSION
       // AS OF read fails with "no snapshot" instead of "missing segment
       // files". Then everything a RETAINED snapshot still lists is live
@@ -550,15 +544,11 @@ object KvCommands {
       // ones), so liveness is manifest-driven and the mtime cutoff only
       // shields files from readers that hold NO manifest reference
       // (in-flight scans planned before a swap).
-      SegmentFile.pruneManifestVersions(path, cutoff)
-      val live: Set[String] = current ++
-        SegmentFile.manifestVersions(path)
-          .flatMap(v => SegmentFile.readManifestVersion(path, v)
-            .getOrElse(Set.empty))
-      val swept = SidecarFs.list(path)
-        .filter(n => n.endsWith(".kv") &&
-          !live.contains(n) &&
-          SidecarFs.mtime(SidecarFs.child(path, n)) <= cutoff)
+      val retained = SegmentFile.pruneManifestVersions(path, cutoff,
+        SegmentFile.versionsIn(names))
+      val live: Set[String] = current ++ retained.flatMap(v =>
+        SegmentFile.readManifestVersion(path, v).getOrElse(Set.empty[String]))
+      val swept = names.filter(n => n.endsWith(".kv") && !live.contains(n) && aged(n))
       swept.foreach { n =>
         SidecarFs.deleteIfExists(SidecarFs.child(path, n))
         SidecarFs.deleteIfExists(
@@ -570,8 +560,7 @@ object KvCommands {
       // the live query. Sweep aged ones, but KEEP each query's newest
       // non-tmp marker regardless of age: an idle-then-restarted stream
       // still needs it to recognize its last epoch as committed.
-      val markers = SidecarFs.list(path)
-        .filter(_.startsWith("._graft_epoch-"))
+      val markers = names.filter(_.startsWith("._graft_epoch-"))
       // name = ._graft_epoch-<queryId>-<epochId>.<intent|done>; queryId
       // is a UUID (contains dashes) — epochId is the LAST dash token
       def parse(n: String): Option[(String, Long)] = {
@@ -584,8 +573,7 @@ object KvCommands {
       val keep: Set[String] = markers.filterNot(_.endsWith(".tmp"))
         .flatMap(n => parse(n).map { case (q, e) => (q, e, n) })
         .groupBy(_._1).values.flatMap(_.maxByOption(_._2).map(_._3)).toSet
-      markers.filterNot(keep.contains)
-        .filter(n => SidecarFs.mtime(SidecarFs.child(path, n)) <= cutoff)
+      markers.filterNot(keep.contains).filter(aged)
         .foreach(n => SidecarFs.deleteIfExists(SidecarFs.child(path, n)))
       // temp files stranded by a crash between write and the
       // finally-delete in any SidecarFs atomic primitive (manifest CAS,
@@ -595,12 +583,11 @@ object KvCommands {
       // missed `_graft_segments.v<N>` CAS temps and the double-dotted
       // temps of already-dotted marker names. The age cutoff protects
       // in-flight temps of live concurrent writers.
-      SidecarFs.list(path)
-        .filter(n => SidecarFs.isTempArtifact(n) &&
-          SidecarFs.mtime(SidecarFs.child(path, n)) <= cutoff)
+      names.filter(n => SidecarFs.isTempArtifact(n) && aged(n))
         .foreach(n => SidecarFs.deleteIfExists(SidecarFs.child(path, n)))
       swept.length
     }.getOrElse(0)
+  }
 
   /** Retained snapshot versions (newest = the current table state). */
   def snapshots(path: String): Seq[Long] = SegmentFile.manifestVersions(path)
@@ -645,8 +632,7 @@ object KvCommands {
         throw new IllegalArgumentException(
           s"no snapshot version $v at $src " +
             s"(retained: ${SegmentFile.manifestVersions(src).mkString(", ")})"))
-      case None => SegmentFile.readManifest(src).getOrElse(
-        SidecarFs.list(src).filter(_.endsWith(".kv")).toSet)
+      case None => SegmentFile.readManifest(src).getOrElse(Set.empty[String])
     }
     SidecarFs.mkdirs(dst)
     def share(name: String): Unit =

@@ -275,8 +275,7 @@ object KvMaintenance {
   // the create is the linearization point (same discipline as
   // SegmentFile.commitManifest), so a publisher holding a stale view
   // loses the race deterministically instead of replace-renaming over a
-  // successor. A plain `<name>` file is the pre-round-7 legacy form,
-  // read as version 0 and retired on the first CAS publish.
+  // successor.
 
   private def versionedMetaFile(dir: String, name: String, v: Long): String =
     SidecarFs.child(dir, f"$name%s.v$v%020d")
@@ -287,23 +286,15 @@ object KvMaintenance {
       .flatMap(f => f.substring(name.length + 2).toLongOption)
       .sorted
 
-  /** Current meta content: the newest readable version, else the legacy
-    * single file, else None. Readers never block publishers. */
-  def readVersionedMeta(dir: String, name: String): Option[String] = {
-    val fromVersions = metaVersions(dir, name).reverseIterator
+  /** Current meta content: the newest readable version, else None.
+    * Readers never block publishers. */
+  def readVersionedMeta(dir: String, name: String): Option[String] =
+    metaVersions(dir, name).reverseIterator
       .map { v =>
         try Some(SidecarFs.readString(versionedMetaFile(dir, name, v)))
         catch { case _: Exception => None } // pruned mid-read — try older
       }
       .collectFirst { case Some(c) => c }
-    fromVersions.orElse {
-      try {
-        val legacy = SidecarFs.child(dir, name)
-        if (SidecarFs.exists(legacy)) Some(SidecarFs.readString(legacy))
-        else None
-      } catch { case _: Exception => None }
-    }
-  }
 
   /** Publish `content` as the next meta version IFF `expect` accepts
     * the CURRENT content (None = no meta yet). Retries version-number
@@ -320,12 +311,10 @@ object KvMaintenance {
       if (!expect(readVersionedMeta(dir, name))) return false
       val next = versions.lastOption.getOrElse(0L) + 1L
       if (createExclusive(versionedMetaFile(dir, name, next), content)) {
-        // keep a couple of predecessors for slow readers; retire legacy
+        // keep a couple of predecessors for slow readers
         versions.dropRight(2).foreach(v =>
           try SidecarFs.deleteIfExists(versionedMetaFile(dir, name, v))
           catch { case _: Exception => () })
-        try SidecarFs.deleteIfExists(SidecarFs.child(dir, name))
-        catch { case _: Exception => () }
         return true
       }
       attempts += 1 // lost the create — re-read, re-check, re-try

@@ -201,9 +201,8 @@ object SegmentFile {
       zoneStats: Seq[ZoneStat] = Seq.empty,
       gen: Long = 0L,
       tombstones: Long = 0L,
-      exactZones: Boolean = false,
-      // exact per-value-column null counts (V10; empty = pre-V10 writer,
-      // no claim). Keys are never null by the codec contract.
+      // exact per-value-column null counts (a missing column makes no
+      // claim). Keys are never null by the codec contract.
       nullCounts: Seq[(String, Long)] = Seq.empty)
 
   /** Tiny blocked Bloom filter: 4096 bits, two probes per value, keyed
@@ -260,106 +259,51 @@ object SegmentFile {
           b.length, 911L)
   }
 
-  /** Sidecar format markers (legacy files start with a positive min-key
-    * length). V3 adds the writer's schema json — segments are
-    * self-describing, so ALTER TABLE on a populated table is
-    * metadata-only: old segments decode with their own layout. V4 adds
-    * VALUE-column zone maps (per-segment min/max of numeric non-key
-    * columns, the parquet row-group-stats analog): residual filters can
-    * prune whole segments when values correlate with key order, and the
-    * prune is conservative — a segment is dropped only when the whole
-    * predicate is provably false over the recorded ranges. */
-  private val FormatV2 = -2
-  private val FormatV3 = -3
-  private val FormatV4 = -4
-  // V5 adds the segment's commit GENERATION — a per-table monotonically
-  // increasing write counter (the HBase cell-timestamp analog). When two
-  // live segments contain the same composite key, the record from the
-  // higher generation is the row's current version (last-write-wins /
-  // Put-upsert semantics); pre-V5 segments read as generation 0.
-  private val FormatV5 = -5
-  // V6 adds the segment's TOMBSTONE count. A tombstone record (value
-  // length -1 in the data file, the HBase Delete-marker analog) deletes
-  // its key: readers skip it, the generation merge suppresses older
-  // versions beneath it, and compaction drops both. The count lets
-  // planning refuse metadata-only aggregates over tombstoned tables
-  // without opening data files.
-  private val FormatV6 = -6
-  // V7 adds an optional per-zone-entry COLUMN SUM (integral types only,
-  // exact Long arithmetic — the writer drops the claim on overflow), so
-  // SUM aggregates join COUNT/MIN/MAX on the metadata-only path (the
-  // reference coprocessor's partial-sum analog). Pre-V7 entries read
-  // with no sum claim.
-  private val FormatV7 = -7
-  // V8 marks the zone min/max/null claims as EXACT over the segment's
-  // physical rows: the writer folds only dup-group WINNERS (which are
-  // what it physically writes), where pre-V8 writers folded superseded
-  // buffer rows too and could publish widened bounds. Same byte layout
-  // as V7 — the version is the semantic marker (Meta.exactZones) that
-  // lets MIN/MAX of value columns join COUNT/SUM on the metadata-only
-  // aggregate path; pre-V8 sidecars stay pruning-sound but never
-  // answer a MIN/MAX from metadata.
-  private val FormatV8 = -8
-  // V9 appends per-column NDV SKETCHES (HyperLogLog++ register words,
-  // built with Spark's own HyperLogLogPlusPlusHelper at the default
-  // rsd) after the zone maps: register merge is an elementwise max —
-  // associative and commutative — so the union of per-segment sketches
-  // over a key-disjoint table is REGISTER-IDENTICAL to the single-pass
-  // sketch a scan would build, and approx_count_distinct can answer
-  // from metadata with the exact same estimate (KvNdvRule). Winners-
-  // only folding (like V8 zones) keeps each sketch exact over the
-  // segment's physical rows. planning readMeta skips the section.
-  private val FormatV9 = -9
-  // V10 adds exact per-VALUE-column NULL COUNTS (winners-only, all
-  // atomic columns — strings included, beyond the numeric zone maps)
-  // between the zones and the NDV section: COUNT(col) joins the
-  // metadata-only aggregate path as rows - nulls, and the CBO column
-  // statistics gain nullCount. Unlike the zone maps (whose ENTRY
-  // ABSENCE signals "saw a null"), the count is present for every
-  // eligible column, zero or not.
-  private val FormatV10 = -10
-  // V11 appends per-column QUANTILE SKETCHES (the compressed
-  // Greenwald-Khanna summaries of Spark's own QuantileSummaries, at
-  // approx_percentile's default accuracy) after the NDV section:
-  // GK summaries merge associatively within the same relative-error
-  // bound, so the union of per-segment summaries over a key-disjoint
-  // table answers whole-table approx_percentile from metadata
-  // (KvPercentileRule) within the SAME ε-rank contract the scan-side
-  // aggregate promises — and seeds CBO equi-height histograms for
-  // range-selectivity estimation. Winners-only staging like V8-V10.
-  // Planning readMeta stops before the section; the QS read path and
-  // the index load step over it.
-  //
-  // "V12" (string zone maps) is TAG-versioned, not format-int-versioned:
-  // zone entries carry a type tag, and the string tag (10) gates its own
-  // layout (len-prefixed bytes + exactness flag), so files still open
-  // with the V11 marker — older files simply never contain the tag.
-  private val FormatV11 = -11
-  // V13 (format int -13; -12 is skipped so the int never collides with
-  // the tag-versioned "V12" string zones above): DECIMAL zone claims.
-  // The decimal zone tags (11 narrow since round 9, 12 wide since
-  // round 10) are self-describing for a CURRENT reader, but a
-  // pre-decimal reader hitting an unknown tag would die mid-parse with
-  // a NoSuchElementException instead of skipping — so the sidecar
-  // header advances and such a reader rejects the file CLEANLY at
-  // open. Current readers accept V9–V14 headers (round-9 files carry narrow
-  // decimal tags under the -11 header; that ship has sailed and this
-  // reader handles them).
-  private val FormatV13 = -13
-  // V14 writes the NDV and quantile-summary sections as ONE
-  // length-prefixed zstd frame (see writeSketchFrame) — same per-sketch
-  // wire formats inside. At ε = 1e-4 a GK summary keeps every value of
-  // a segment under ~5k rows, so the uncompressed V11 section stored
-  // 24 B per row per numeric column and dominated the table's bytes;
-  // the frame compresses it ~15-28×. Index loads skip the frame in
-  // O(1). Pre-V14 sketch sections are not decoded: such a segment
-  // reports no sketches (metadata answers fall back to the scan) and
-  // reads without the sparse index.
+  /** The sidecar header: one format, V14, opening with this negative
+    * int. The fields follow in this order, each for a reason:
+    *
+    *  - the segment's commit GENERATION, a per-table monotonically
+    *    increasing write counter (the HBase cell-timestamp analog): when
+    *    two live segments hold the same composite key, the record from
+    *    the higher generation is the row's current version;
+    *  - the TOMBSTONE count: a tombstone record (value length -1 in the
+    *    data file, the HBase Delete-marker analog) deletes its key, and
+    *    the count lets planning refuse metadata-only aggregates over
+    *    tombstoned tables without opening data files;
+    *  - the writer's schema json: segments are self-describing, so ALTER
+    *    TABLE on a populated table is metadata-only — old segments
+    *    decode with their own layout;
+    *  - key range, row count, data-file size and the per-dimension
+    *    Blooms;
+    *  - VALUE-column zone maps (the parquet row-group-stats analog), each
+    *    entry typed by a tag (see [[zoneTags]]) with an optional exact
+    *    Long sum for integral columns. Pruning is conservative — a
+    *    segment is dropped only when the whole predicate is provably
+    *    false over the recorded ranges — and an absent entry means the
+    *    segment saw a null in the column. The writer folds only dup-group
+    *    WINNERS (what it physically writes), so the claims are exact
+    *    over the segment's rows and answer MIN/MAX/SUM from metadata;
+    *  - exact per-value-column NULL counts (COUNT(col) = rows - nulls),
+    *    present for every eligible column, zero or not;
+    *  - the sketch frame ([[writeSketchFrame]]): per-column HLL++
+    *    registers (their merge is an elementwise max, so the union over a
+    *    key-disjoint table is register-identical to the sketch a scan
+    *    would build), then per-column GK quantile summaries, in ONE
+    *    length-prefixed zstd frame. Uncompressed, a small segment's
+    *    summaries kept every value (~24 B per row per numeric column)
+    *    and dominated the table's bytes; the frame compresses them
+    *    ~15-28×;
+    *  - the sparse index.
+    *
+    * Zone maps and null counts come BEFORE the sketch frame and the
+    * index: planning reads them with `withIndex = false` and stops
+    * there, and the index load steps over the frame in O(1). A sidecar
+    * with any other header fails to open. */
   private val FormatV14 = -14
 
   /** One value-column zone entry: (column, type, min, max[, sum]) over
     * the segment's non-null values. Types are the fixed-width numerics
-    * the 3-valued pruner can compare, plus (since V12) STRINGS in
+    * the 3-valued pruner can compare, plus STRINGS in
     * UTF-8 byte order; `sum` is present only for integral columns
     * whose exact Long sum the writer tracked. `exact` is false when a
     * long string bound was TRUNCATED to its claim form (prefix lower
@@ -414,7 +358,7 @@ object SegmentFile {
   }
 
   /** One column's HLL++ register words over a segment's physical rows
-    * (V9 sidecar). `words` is the aggregate buffer of Spark's
+    * (the sidecar's sketch frame). `words` is the aggregate buffer of Spark's
     * HyperLogLogPlusPlusHelper at [[NdvRsd]] — mergeable by elementwise
     * max, queryable for the same estimate a scan-side
     * approx_count_distinct would produce. */
@@ -425,7 +369,7 @@ object SegmentFile {
   val NdvRsd: Double = 0.05
 
   /** One column's compressed Greenwald-Khanna quantile summary over a
-    * segment's physical non-null rows (V11 sidecar) — the serialized
+    * segment's physical non-null rows (the sidecar's sketch frame) — the serialized
     * state of Spark's [[org.apache.spark.sql.catalyst.util.QuantileSummaries]]
     * at [[QsRelativeError]]. Values are stored as doubles exactly the
     * way ApproximatePercentile converts its input (integral → toDouble,
@@ -468,23 +412,20 @@ object SegmentFile {
       3.toByte -> ShortType, 4.toByte -> ByteType, 5.toByte -> DoubleType,
       6.toByte -> FloatType, 7.toByte -> TimestampType,
       8.toByte -> TimestampNTZType, 9.toByte -> DateType,
-      // V12: string zones in UTF-8 byte order (len-prefixed bytes +
-      // a per-entry exactness flag for truncated claims). Pre-V12
-      // sidecars simply lack the tag — nothing to version-gate.
+      // strings in UTF-8 byte order (len-prefixed bytes + a per-entry
+      // exactness flag for truncated claims)
       10.toByte -> StringType)
   }
   private val tagOf = zoneTags.map(_.swap).toMap
   private val typeOf = zoneTags.toMap
-  // V13: NARROW DECIMAL zones (precision ≤ 18 — unscaled value fits a
-  // long, 8-byte entries). V14 (round 10): WIDE DECIMAL zones (p > 18,
-  // 16-byte sign-extended two's-complement unscaled entries) — min/max
-  // claims only; SUM stays refused for wide columns (the writer's
+  // NARROW DECIMAL zones (precision ≤ 18 — unscaled value fits a long,
+  // 8-byte entries) and WIDE DECIMAL zones (p > 18, 16-byte
+  // sign-extended two's-complement unscaled entries) — min/max claims
+  // only for wide columns; SUM stays refused there (the writer's
   // exact-Long accumulator can't carry them, and a silently wrapped
   // 128-bit sum would be a WRONG claim, not a missing one). Both tags
   // are parameterized: the entry writes (precision, scale) after the
-  // tag byte, so the layout is self-describing to current readers; the
-  // sidecar header advance to FormatV13 makes pre-decimal readers
-  // reject cleanly instead of dying on the unknown tag.
+  // tag byte, so the layout is self-describing.
   private val DecimalTag: Byte = 11
   private val WideDecimalTag: Byte = 12
 
@@ -512,8 +453,8 @@ object SegmentFile {
     else typeOf(tag)
   }
 
-  /** Can this value column carry a zone map? Every decimal width since
-    * V14 — wide columns get min/max (pruning + metadata MIN/MAX), just
+  /** Can this value column carry a zone map? Every decimal width —
+    * wide columns get min/max (pruning + metadata MIN/MAX), just
     * never SUM. */
   def zoneMappable(dt: org.apache.spark.sql.types.DataType): Boolean =
     dt match {
@@ -521,11 +462,11 @@ object SegmentFile {
       case other => tagOf.contains(other)
     }
 
-  /** Can this column carry a V11 quantile summary? The zone-mappable
-    * NUMERICS (summaries ingest doubles) — strings zone-map since V12
-    * but have no quantile form. NARROW decimals (p ≤ 18) sketch since
-    * round 10 by ingesting the UNSCALED long, which is exact in the
-    * value domain wherever it fits a double's 53-bit mantissa — the
+  /** Can this column carry a quantile summary? The zone-mappable
+    * NUMERICS (summaries ingest doubles) — strings zone-map but have no
+    * quantile form. NARROW decimals (p ≤ 18) sketch by ingesting the
+    * UNSCALED long, which is exact in the value domain wherever it fits
+    * a double's 53-bit mantissa — the
     * writer checks per value and drops the whole segment's claim on
     * the first unscaled value beyond 2^53 (claim-or-nothing), so a
     * money column's metadata percentile is never a value the column
@@ -597,8 +538,7 @@ object SegmentFile {
   }
 
   /** The per-entry exactness flag rides only on STRING entries (the
-    * tag gates the layout — numeric entries never wrote one and stay
-    * byte-identical to pre-V12 files). */
+    * tag gates the layout; numeric bounds are always exact). */
   private def writeZoneExact(out: DataOutputStream,
       dt: org.apache.spark.sql.types.DataType, exact: Boolean): Unit =
     if (dt == org.apache.spark.sql.types.StringType) out.writeBoolean(exact)
@@ -699,63 +639,25 @@ object SegmentFile {
       val m = Meta(s"$name.kv", minKey, lastKey, count, SidecarFs.size(seg),
         bloomBuilders.map(_.result()).toIndexedSeq, index.result(),
         Option(schemaJson), zoneStats.filter(z => zoneMappable(z.dataType)),
-        gen, tombstoneCount, exactZones = true, nullCounts = nullCounts)
+        gen, tombstoneCount, nullCounts = nullCounts)
       // guarded sidecar write: a mid-write failure (disk full) must not
-      // leak the handle or leave a TORN .kvmeta beside a complete .kv —
-      // on a legacy manifest-less table the .kvmeta files are the
-      // listing authority, and one torn file bricks every later query
+      // leak the handle or leave a TORN .kvmeta beside a complete .kv
       val mo = new DataOutputStream(new BufferedOutputStream(
         SidecarFs.create(metaPath(dir, name)), 1 << 16))
       def writeSidecar(): Unit = {
-      mo.writeInt(FormatV14)
-      mo.writeLong(m.gen)
-      mo.writeLong(m.tombstones)
-      m.schemaJson match {
-        case Some(js) =>
-          val b = js.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          mo.writeInt(b.length); mo.write(b)
-        case None => mo.writeInt(-1)
+        mo.writeInt(FormatV14)
+        writePlanningFields(mo, m)
+        // the sketch frame: NDV registers, then quantile summaries, in
+        // one zstd frame. Planning reads stop before it, the index load
+        // skips it whole, and only the sketch read paths decompress it
+        writeSketchFrame(mo) { f =>
+          writeNdvSection(f, ndvSketches); writeQsSection(f, qsSketches)
+        }
+        mo.writeInt(m.index.length)
+        m.index.foreach { case (k, off) =>
+          mo.writeInt(k.length); mo.write(k); mo.writeLong(off)
+        }
       }
-      mo.writeInt(m.minKey.length); mo.write(m.minKey)
-      mo.writeInt(m.maxKey.length); mo.write(m.maxKey)
-      mo.writeLong(m.count); mo.writeLong(m.sizeBytes)
-      mo.writeInt(m.blooms.length)
-      m.blooms.foreach { bl =>
-        mo.writeInt(bl.words.length)
-        bl.words.foreach(mo.writeLong)
-      }
-      // zone maps BEFORE the index: planning reads stats with
-      // withIndex=false and must not deserialize the index to get them
-      mo.writeInt(m.zoneStats.length)
-      m.zoneStats.foreach { z =>
-        val nb = z.name.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        mo.writeInt(nb.length); mo.write(nb)
-        writeZoneTag(mo, z.dataType)
-        writeZoneValue(mo, z.dataType, z.min)
-        writeZoneValue(mo, z.dataType, z.max)
-        writeZoneExact(mo, z.dataType, z.exact)
-        mo.writeBoolean(z.sum.isDefined)
-        z.sum.foreach(mo.writeLong)
-      }
-      // null counts (V10) ride between the zones and the NDV section —
-      // planning reads them (claims, not register payloads)
-      mo.writeInt(m.nullCounts.length)
-      m.nullCounts.foreach { case (n, c) =>
-        val nb = n.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        mo.writeInt(nb.length); mo.write(nb)
-        mo.writeLong(c)
-      }
-      // the sketch tail (V14): NDV registers, then quantile summaries,
-      // in one zstd frame. Planning reads stop before it, the index load
-      // skips it whole, and only the sketch read paths decompress it
-      writeSketchFrame(mo) { f =>
-        writeNdvSection(f, ndvSketches); writeQsSection(f, qsSketches)
-      }
-      mo.writeInt(m.index.length)
-      m.index.foreach { case (k, off) =>
-        mo.writeInt(k.length); mo.write(k); mo.writeLong(off)
-      }
-      } // writeSidecar
       try writeSidecar()
       catch {
         case e: Throwable =>
@@ -768,327 +670,29 @@ object SegmentFile {
     }
   }
 
-  /** Read a sidecar. `withIndex = false` skips deserializing the sparse
-    * index — planning (pruning/statistics) only needs min/max/count, and
-    * eagerly materializing O(rows/256) index entries for every segment on
-    * every query plan would not scale; only a partition reader seeking
-    * into its one segment pays for the index. */
-  def readMeta(dir: String, name: String, withIndex: Boolean = true): Meta = {
-    // count PLANNING opens only (withIndex=false): a partition reader's
-    // own index load (withIndex=true, one per task, executor-side) is
-    // per-partition work that scales correctly; the planning contract
-    // (PlanningStatsSpec) is that the driver never opens per-segment
-    // sidecars just to plan
-    if (!withIndex) metaOpens.incrementAndGet()
+  /** Open a sidecar positioned just past its header; any header other
+    * than [[FormatV14]] fails here, naming the file. */
+  private def openSidecar(dir: String, name: String): DataInputStream = {
+    val p = metaPath(dir, name)
     val in = new DataInputStream(new BufferedInputStream(
-      SidecarFs.open(metaPath(dir, name)), 1 << 16))
-    try {
-      val first = in.readInt()
-      val v14 = first == FormatV14
-      val v13 = v14 || first == FormatV13
-      val v11 = v13 || first == FormatV11
-      val v10 = v11 || first == FormatV10
-      val v9 = v10 || first == FormatV9
-      val v8 = v9 || first == FormatV8
-      val v7 = v8 || first == FormatV7
-      val v6 = v7 || first == FormatV6
-      val v5 = v6 || first == FormatV5
-      val gen = if (v5) in.readLong() else 0L
-      val tombstones = if (v6) in.readLong() else 0L
-      val v4 = v5 || first == FormatV4
-      val v3 = v4 || first == FormatV3
-      val v2plus = v3 || first == FormatV2
-      val schemaJson =
-        if (!v3) None
-        else in.readInt() match {
-          case -1 => None
-          case n =>
-            val b = new Array[Byte](n); in.readFully(b)
-            Some(new String(b, java.nio.charset.StandardCharsets.UTF_8))
-        }
-      val minLen = if (v2plus) in.readInt() else first // legacy: first int IS minLen
-      val min = new Array[Byte](minLen); in.readFully(min)
-      val max = new Array[Byte](in.readInt()); in.readFully(max)
-      val count = in.readLong(); val size = in.readLong()
-      val blooms =
-        if (!v2plus) IndexedSeq.empty
-        else (0 until in.readInt()).map { _ =>
-          val words = new Array[Long](in.readInt())
-          var i = 0
-          while (i < words.length) { words(i) = in.readLong(); i += 1 }
-          Bloom(words)
-        }
-      val stats =
-        if (!v4) Seq.empty[ZoneStat]
-        else (0 until in.readInt()).map { _ =>
-          val nb = new Array[Byte](in.readInt()); in.readFully(nb)
-          val dt = readZoneTag(in)
-          val (mn, mx) = (readZoneValue(in, dt), readZoneValue(in, dt))
-          val exact = readZoneExact(in, dt)
-          val sum =
-            if (v7 && in.readBoolean()) Some(in.readLong()) else None
-          ZoneStat(new String(nb, java.nio.charset.StandardCharsets.UTF_8),
-            dt, mn, mx, sum, exact)
-        }
-      val nullCnts =
-        if (!v10) Seq.empty[(String, Long)]
-        else (0 until in.readInt()).map { _ =>
-          val nb = new Array[Byte](in.readInt()); in.readFully(nb)
-          (new String(nb, java.nio.charset.StandardCharsets.UTF_8),
-            in.readLong())
-        }
-      // sparse index, behind the sketch frame (pre-V14 sidecars are
-      // not stepped through → seekless reads)
-      val idx = if (!withIndex || !v14) IndexedSeq.empty else try {
-        skipSketchFrame(in)
-        val n = in.readInt()
-        (0 until n).map { _ =>
-          val k = new Array[Byte](in.readInt()); in.readFully(k)
-          (k, in.readLong())
-        }
-      } catch { case _: EOFException => IndexedSeq.empty }
-      Meta(s"$name.kv", min, max, count, size, blooms, idx, schemaJson, stats,
-        gen, tombstones, exactZones = v8, nullCounts = nullCnts)
-    } finally in.close()
-  }
-
-  // ── live-segment manifest ──────────────────────────────────────────────
-  // Commits and compactions record the LIVE segment set in a versioned
-  // manifest log (`_graft_segments.vN`). The AUTHORITY is the highest
-  // retained version; version N+1 is published with CREATE-IF-ABSENT
-  // semantics (hard link — atomic fail-if-exists on POSIX), so a
-  // read-modify-write commit is an optimistic CAS: two concurrent
-  // committers can both read version N, but only one can create N+1 —
-  // the loser re-reads and re-applies, and neither can ever silently
-  // drop the other's committed segments. A multi-step rewrite (write
-  // replacement segments, THEN publish, THEN delete originals) stays
-  // crash-safe: a reader always sees a committed set, and files a
-  // crash orphaned between steps are simply never listed. Tables
-  // written before manifests existed have none — directory listing
-  // remains the authority there (the write paths start a manifest on
-  // their next commit). Concurrent readers are always safe —
-  // compaction keeps replaced segments on disk for a retention window
-  // (KvCommands.sweepUnmanifested), so scans planned against an older
-  // version finish against their own snapshot.
-
-  private def manifestPath(dir: String): String =
-    SidecarFs.child(dir, "_graft_segments")
-
-  private def readMirror(dir: String): Option[Set[String]] = {
-    val p = manifestPath(dir)
-    if (!SidecarFs.exists(p)) None
-    else try Some(SidecarFs.readString(p).linesIterator.map(_.trim)
-      .filter(_.nonEmpty).toSet)
-    catch { case _: java.io.FileNotFoundException => None }
-  }
-
-  /** Live `.kv` file names, when a manifest governs this table: the
-    * content of the highest retained snapshot version. The un-numbered
-    * `_graft_segments` mirror is informational (and the upgrade path
-    * for tables written before the versioned log existed) — it is read
-    * only when no version exists. */
-  def readManifest(dir: String): Option[Set[String]] = {
-    var attempts = 0
-    while (attempts < 64) {
-      currentVersion(dir) match {
-        case None => return readMirror(dir)
-        case Some(v) => readManifestVersion(dir, v) match {
-          case s @ Some(_) => return s
-          // version pruned between the probe and the read (a sweep or
-          // drop raced us) — re-probe
-          case None => attempts += 1
-        }
-      }
+      SidecarFs.open(p), 1 << 16))
+    val header =
+      try in.readInt()
+      catch { case e: Throwable => in.close(); throw e }
+    if (header != FormatV14) {
+      in.close()
+      throw new IOException(
+        s"$p: sidecar header $header is not format V14 ($FormatV14)")
     }
-    throw new IllegalStateException(s"cannot read a stable manifest at $dir")
+    in
   }
 
-  /** Optimistic-CAS manifest commit: read the current committed set,
-    * apply `transform`, publish the result as snapshot version N+1 with
-    * create-if-absent semantics, retrying the whole read-modify-write
-    * on conflict. `transform` returning None aborts the commit (the
-    * caller saw a base it cannot merge with — e.g. compaction whose
-    * input segments were replaced by a concurrent maintainer); a
-    * transform that leaves an already-versioned manifest unchanged is
-    * a detected no-op (no duplicate snapshot version — an epoch replay
-    * repairing an already-swapped commit publishes nothing). Returns
-    * the live set as of this commit, or None on abort. `fallbackBase`
-    * seeds the first version of a pre-manifest (legacy) table. */
-  def commitManifest(dir: String)(
-      transform: Set[String] => Option[Set[String]],
-      fallbackBase: => Set[String] = Set.empty): Option[Set[String]] = {
-    var attempts = 0
-    while (attempts < 10000) {
-      val versions = manifestVersions(dir)
-      val baseOpt = versions.lastOption.flatMap(readManifestVersion(dir, _))
-      if (versions.nonEmpty && baseOpt.isEmpty) {
-        // max version pruned between listing and read — re-list
-        attempts += 1
-      } else {
-        val base = baseOpt.orElse(readMirror(dir)).getOrElse(fallbackBase)
-        transform(base) match {
-          case None => return None
-          case Some(next) =>
-            if (next == base && versions.nonEmpty) return Some(next)
-            val v = versions.lastOption.getOrElse(0L) + 1L
-            if (tryPublishVersion(dir, v, next)) {
-              versionHints.put(dirKey(dir), v)
-              writeVersionHint(dir, v)
-              // packed planning stats ride with the new version (see the
-              // packed-stats section): previous pack + this commit's delta
-              publishStats(dir, v, versions.lastOption, next)
-              refreshMirror(dir)
-              // bound the commit log: an append-only table (streaming
-              // ingest) never compacts, so without a count cap it would
-              // accumulate one snapshot per commit forever. Metadata-only:
-              // expired versions just stop answering VERSION AS OF.
-              versions.dropRight(MaxRetainedManifests - 1).foreach { old =>
-                SidecarFs.deleteIfExists(versionedManifestPath(dir, old))
-                SidecarFs.deleteIfExists(statsPath(dir, old))
-                SidecarFs.deleteIfExists(ndvPath(dir, old))
-                // quantile packs retire with their version too — the cap
-                // used to skip them, orphaning _graft_qs.vN forever on
-                // append-only (never-compacted) streaming tables
-                SidecarFs.deleteIfExists(qsPath(dir, old))
-              }
-              return Some(next)
-            }
-            attempts += 1 // lost the CAS — re-read and re-apply
-        }
-      }
-    }
-    throw new IllegalStateException(
-      s"manifest CAS at $dir still contended after $attempts attempts")
-  }
-
-  /** Publish `files` as snapshot `v` iff no committer beat us to `v`.
-    * [[SidecarFs.createIfAbsent]] is the atomic create-if-absent
-    * primitive on every backend — hard link / `CREATE_NEW` locally,
-    * fully-written-temp + rename-if-absent on HDFS (rename would
-    * silently replace a concurrent winner's snapshot; rename-if-absent
-    * cannot). */
-  private def tryPublishVersion(dir: String, v: Long,
-      files: Set[String]): Boolean =
-    SidecarFs.createIfAbsent(versionedManifestPath(dir, v),
-      files.toSeq.sorted.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  /** Best-effort refresh of the informational `_graft_segments` mirror
-    * from the current max version. Two refreshes can interleave and
-    * leave the mirror one commit behind — harmless: nothing reads it
-    * while versions exist. */
-  private def refreshMirror(dir: String): Unit =
-    manifestVersions(dir).lastOption
-      .flatMap(readManifestVersion(dir, _)).foreach { live =>
-        // genuinely best-effort: the CAS already published the version
-        // that IS the authority, so a mirror failure (disk full, odd
-        // mount) must not fail — or re-run — the committed change
-        try SidecarFs.writeStringAtomic(manifestPath(dir),
-          live.toSeq.sorted.mkString("\n"))
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-
-  /** Publish `files` as the new live set unconditionally (overwrite /
-    * compaction-pin semantics — not a read-modify-write). Identical
-    * content on an already-versioned table is a no-op. */
-  def writeManifest(dir: String, files: Iterable[String]): Unit = {
-    val set = files.toSet
-    commitManifest(dir)(_ => Some(set))
-    ()
-  }
-
-  /** Newest snapshot manifests kept regardless of age (the time-based
-    * retention sweep prunes within this bound). */
-  val MaxRetainedManifests = 64
-
-  private def versionedManifestPath(dir: String, v: Long): String =
-    SidecarFs.child(dir, s"_graft_segments.v$v")
-
-  /** Retained snapshot versions, ascending (commit order). */
-  def manifestVersions(dir: String): Seq[Long] =
-    SidecarFs.list(dir).flatMap { n =>
-      if (n.startsWith("_graft_segments.v"))
-        n.stripPrefix("_graft_segments.v").toLongOption
-      else None
-    }.sorted
-
-  /** The snapshot manifest's commit wall-clock (file mtime); 0 when the
-    * version does not exist. */
-  def manifestVersionMtime(dir: String, v: Long): Long =
-    SidecarFs.mtime(versionedManifestPath(dir, v))
-
-  def readManifestVersion(dir: String, v: Long): Option[Set[String]] = {
-    val p = versionedManifestPath(dir, v)
-    if (!SidecarFs.exists(p)) None
-    else try Some(SidecarFs.readString(p).linesIterator.map(_.trim)
-      .filter(_.nonEmpty).toSet)
-    catch { case _: java.io.FileNotFoundException => None }
-  }
-
-  /** Delete snapshot manifests older than `cutoffMillis` (mtime), always
-    * keeping the newest one (it mirrors the current manifest). */
-  def pruneManifestVersions(dir: String, cutoffMillis: Long): Unit = {
-    val vs = manifestVersions(dir)
-    vs.dropRight(1).foreach { v =>
-      val p = versionedManifestPath(dir, v)
-      val mt = SidecarFs.mtime(p)
-      if (mt > 0 && mt <= cutoffMillis) {
-        SidecarFs.deleteIfExists(p)
-        SidecarFs.deleteIfExists(statsPath(dir, v))
-        SidecarFs.deleteIfExists(ndvPath(dir, v))
-        SidecarFs.deleteIfExists(qsPath(dir, v))
-      }
-    }
-  }
-
-  // ── packed planning stats ──────────────────────────────────────────────
-  // At 100 TB / 256 MB segments a table holds ~400k segments; planning
-  // that opens one .kvmeta sidecar per segment per query would do ~400k
-  // driver-side file opens PER PLAN (the reference amortizes the analogous
-  // region listing behind a 600 s TTL cache, HBaseRelation.scala:202-239).
-  // Instead, every manifest commit also writes `_graft_stats.vN`: ALL live
-  // segments' planning stats (key bounds, Blooms, zone maps — everything
-  // but the sparse index) in ONE packed file, built incrementally from the
-  // previous version's pack plus the commit's delta. Planning then does
-  // O(1) file reads per (table, manifest version): probe the current
-  // version, read its pack, and cache the parsed result keyed on the
-  // version file's identity — immutable once CAS-published, so the cache
-  // never needs TTL-style invalidation and stays correct across OS
-  // processes. Sidecars remain the per-segment authority (executors read
-  // them for the seek index; the pack is a planning accelerator) and the
-  // fallback when a pack is missing (legacy table, crashed committer):
-  // one sidecar sweep, after which the read path backfills the pack.
-
-  // V2 carries the optional per-zone-entry sums (sidecar V7); a V1 pack
-  // simply reads as absent and the read path backfills the new version
-  // from sidecars — packs are derived caches, never authorities.
-  private val PackedStatsV2 = -101
-  // V3 carries each entry's exactZones marker (sidecar V8). V2 packs
-  // still read — their entries conservatively report exactZones=false,
-  // so metadata MIN/MAX just stays off until the next commit repacks.
-  private val PackedStatsV3 = -102
-  // V4 carries the per-value-column null counts (sidecar V10). Older
-  // packs read with no counts — COUNT(col) pushdown and nullCount
-  // stats stay off until the next commit repacks.
-  private val PackedStatsV4 = -103
-  // V5 entries may carry STRING zone entries (tag 10, with a per-entry
-  // exactness flag — sidecar V12). V4 packs predate string zones, so
-  // they read unchanged; a V5 pack read by the V4 parser would
-  // misalign, hence the bump.
-  private val PackedStatsV5 = -104
-
-  private def statsPath(dir: String, v: Long): String =
-    SidecarFs.child(dir, s"_graft_stats.v$v")
-
-  /** Planning-path sidecar opens, i.e. readMeta(withIndex=false) calls
-    * (test instrumentation: planning must not scale its file opens with
-    * segment count). */
-  private[graft] val metaOpens = new java.util.concurrent.atomic.AtomicLong()
-
-  private def writePackedEntry(out: DataOutputStream, m: Meta): Unit = {
-    val nb = m.file.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    out.writeInt(nb.length); out.write(nb)
-    out.writeBoolean(m.exactZones)
+  /** A segment's planning fields (everything but the sketches and the
+    * sparse index), in the one layout a sidecar stores after its header
+    * and a planning-pack entry after its file name. Zone maps and null
+    * counts precede the sidecar's sketch frame and index, so planning
+    * reads them without deserializing either. */
+  private def writePlanningFields(out: DataOutputStream, m: Meta): Unit = {
     out.writeLong(m.gen); out.writeLong(m.tombstones)
     m.schemaJson match {
       case Some(js) =>
@@ -1122,11 +726,9 @@ object SegmentFile {
     }
   }
 
-  private def readPackedEntry(in: DataInputStream, v3: Boolean,
-      v4: Boolean): Meta = {
-    val nb = new Array[Byte](in.readInt()); in.readFully(nb)
-    val file = new String(nb, java.nio.charset.StandardCharsets.UTF_8)
-    val exactZones = if (v3) in.readBoolean() else false
+  /** Parse [[writePlanningFields]]' layout into a Meta for `file` (no
+    * sparse index). */
+  private def readPlanningFields(in: DataInputStream, file: String): Meta = {
     val gen = in.readLong(); val tombstones = in.readLong()
     val schemaJson = in.readInt() match {
       case -1 => None
@@ -1152,15 +754,266 @@ object SegmentFile {
       ZoneStat(new String(zb, java.nio.charset.StandardCharsets.UTF_8),
         dt, mn, mx, sum, exact)
     }
-    val nullCnts =
-      if (!v4) Seq.empty[(String, Long)]
-      else (0 until in.readInt()).map { _ =>
-        val nb = new Array[Byte](in.readInt()); in.readFully(nb)
-        (new String(nb, java.nio.charset.StandardCharsets.UTF_8),
-          in.readLong())
-      }
+    val nullCnts = (0 until in.readInt()).map { _ =>
+      val nb = new Array[Byte](in.readInt()); in.readFully(nb)
+      (new String(nb, java.nio.charset.StandardCharsets.UTF_8),
+        in.readLong())
+    }
     Meta(file, min, max, count, size, blooms, IndexedSeq.empty, schemaJson,
-      stats, gen, tombstones, exactZones, nullCounts = nullCnts)
+      stats, gen, tombstones, nullCounts = nullCnts)
+  }
+
+  /** Read a sidecar. `withIndex = false` skips deserializing the sparse
+    * index — planning (pruning/statistics) only needs min/max/count, and
+    * eagerly materializing O(rows/256) index entries for every segment on
+    * every query plan would not scale; only a partition reader seeking
+    * into its one segment pays for the index. */
+  def readMeta(dir: String, name: String, withIndex: Boolean = true): Meta = {
+    // count PLANNING opens only (withIndex=false): a partition reader's
+    // own index load (withIndex=true, one per task, executor-side) is
+    // per-partition work that scales correctly; the planning contract
+    // (PlanningStatsSpec) is that the driver never opens per-segment
+    // sidecars just to plan
+    if (!withIndex) metaOpens.incrementAndGet()
+    val in = openSidecar(dir, name)
+    try {
+      val m = readPlanningFields(in, s"$name.kv")
+      if (!withIndex) m
+      else {
+        // the sparse index sits behind the sketch frame
+        skipSketchFrame(in)
+        m.copy(index = (0 until in.readInt()).map { _ =>
+          val k = new Array[Byte](in.readInt()); in.readFully(k)
+          (k, in.readLong())
+        })
+      }
+    } finally in.close()
+  }
+
+  // ── live-segment manifest ──────────────────────────────────────────────
+  // Commits and compactions record the LIVE segment set in a versioned
+  // manifest log (`_graft_segments.vN`), the table's one metadata
+  // authority: the head (highest retained version) is the current
+  // state. Version N+1 is published with CREATE-IF-ABSENT semantics
+  // (hard link — atomic fail-if-exists on POSIX), so a
+  // read-modify-write commit is an optimistic CAS: two concurrent
+  // committers can both read version N, but only one can create N+1 —
+  // the loser re-probes and re-applies, and neither can ever silently
+  // drop the other's committed segments. A multi-step rewrite (write
+  // replacement segments, THEN publish, THEN delete originals) stays
+  // crash-safe: a reader always sees a committed set, and files a
+  // crash orphaned between steps are simply never listed. Versions are
+  // retired oldest-first (the count cap below, the retention sweep), so
+  // the retained ones are contiguous up to the head, and commits, plans
+  // and history reads find them by existence probes from the durable
+  // head hint ([[currentVersion]]) — never by listing the directory.
+  // Concurrent readers are always safe — compaction keeps replaced
+  // segments on disk for a retention window
+  // (KvCommands.sweepUnmanifested), so scans planned against an older
+  // version finish against their own snapshot.
+
+  /** Live `.kv` file names as of the head version; None when no version
+    * was ever published at `dir`. */
+  def readManifest(dir: String): Option[Set[String]] = {
+    var attempts = 0
+    while (attempts < 64) {
+      currentVersion(dir) match {
+        case None => return None
+        case Some(v) => readManifestVersion(dir, v) match {
+          case s @ Some(_) => return s
+          // version pruned between the probe and the read (a sweep or
+          // drop raced us) — re-probe
+          case None => attempts += 1
+        }
+      }
+    }
+    throw new IllegalStateException(s"cannot read a stable manifest at $dir")
+  }
+
+  /** Optimistic-CAS manifest commit: read the head's committed set (the
+    * empty set before the first commit, which publishes v1), apply
+    * `transform`, publish the result as version head+1 with
+    * create-if-absent semantics, retrying the whole read-modify-write
+    * on conflict. `transform` returning None aborts the commit (the
+    * caller saw a base it cannot merge with — e.g. compaction whose
+    * input segments were replaced by a concurrent maintainer); a
+    * transform that leaves an already-versioned manifest unchanged is
+    * a detected no-op (no duplicate snapshot version — an epoch replay
+    * repairing an already-swapped commit publishes nothing). Returns
+    * the live set as of this commit, or None on abort. */
+  def commitManifest(dir: String)(
+      transform: Set[String] => Option[Set[String]]): Option[Set[String]] = {
+    val key = dirKey(dir)
+    var attempts = 0
+    while (attempts < 10000) {
+      val head = currentVersion(dir)
+      val baseOpt = head.flatMap(readManifestVersion(dir, _))
+      if (head.nonEmpty && baseOpt.isEmpty) {
+        // head retired between the probe and the read — re-probe
+        attempts += 1
+      } else {
+        val base = baseOpt.getOrElse(Set.empty[String])
+        transform(base) match {
+          case None => return None
+          case Some(next) =>
+            if (next == base && head.nonEmpty) return Some(next)
+            val v = head.getOrElse(0L) + 1L
+            if (tryPublishVersion(dir, v, next)) {
+              versionHints.put(key, v)
+              writeVersionHint(dir, v)
+              // packed planning stats ride with the new version (see the
+              // packed-stats section): previous pack + this commit's delta
+              publishStats(dir, v, head, next)
+              // bound the commit log: an append-only table (streaming
+              // ingest) never compacts, so without a count cap it would
+              // accumulate one snapshot per commit forever. Metadata-only:
+              // expired versions just stop answering VERSION AS OF.
+              retireVersion(dir, v - MaxRetainedManifests)
+              return Some(next)
+            }
+            // lost the CAS: the winner published v — re-probe from it
+            versionHints.put(key, v)
+            attempts += 1
+        }
+      }
+    }
+    throw new IllegalStateException(
+      s"manifest CAS at $dir still contended after $attempts attempts")
+  }
+
+  /** Publish `files` as snapshot `v` iff no committer beat us to `v`.
+    * [[SidecarFs.createIfAbsent]] is the atomic create-if-absent
+    * primitive on every backend — hard link / `CREATE_NEW` locally,
+    * fully-written-temp + rename-if-absent on HDFS (rename would
+    * silently replace a concurrent winner's snapshot; rename-if-absent
+    * cannot). */
+  private def tryPublishVersion(dir: String, v: Long,
+      files: Set[String]): Boolean =
+    SidecarFs.createIfAbsent(versionedManifestPath(dir, v),
+      files.toSeq.sorted.mkString("\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  /** Publish `files` as the new live set unconditionally (overwrite /
+    * compaction-pin semantics — not a read-modify-write). Identical
+    * content on an already-versioned table is a no-op. */
+  def writeManifest(dir: String, files: Iterable[String]): Unit = {
+    val set = files.toSet
+    commitManifest(dir)(_ => Some(set))
+    ()
+  }
+
+  /** Newest snapshot manifests kept regardless of age (the time-based
+    * retention sweep prunes within this bound). */
+  val MaxRetainedManifests = 64
+
+  private def versionedManifestPath(dir: String, v: Long): String =
+    SidecarFs.child(dir, s"_graft_segments.v$v")
+
+  /** Retained snapshot versions, ascending (commit order): the head and
+    * the contiguous run below it, found by at most
+    * [[MaxRetainedManifests]] existence probes — no listing. */
+  def manifestVersions(dir: String): Seq[Long] = currentVersion(dir) match {
+    case None => Seq.empty
+    case Some(head) =>
+      var lo = head
+      while (lo > 1 && head - lo + 1 < MaxRetainedManifests &&
+          SidecarFs.exists(versionedManifestPath(dir, lo - 1))) lo -= 1
+      lo to head
+  }
+
+  /** The snapshot versions among a directory listing's names, ascending —
+    * the retention sweep's view, which also sees a version stranded
+    * below a gap (a count-cap retire a crash cut short). */
+  def versionsIn(names: Seq[String]): Seq[Long] =
+    names.flatMap { n =>
+      if (n.startsWith("_graft_segments.v"))
+        n.stripPrefix("_graft_segments.v").toLongOption
+      else None
+    }.sorted
+
+  /** The snapshot manifest's commit wall-clock (file mtime); 0 when the
+    * version does not exist. */
+  def manifestVersionMtime(dir: String, v: Long): Long =
+    SidecarFs.mtime(versionedManifestPath(dir, v))
+
+  def readManifestVersion(dir: String, v: Long): Option[Set[String]] = {
+    val p = versionedManifestPath(dir, v)
+    if (!SidecarFs.exists(p)) None
+    else try Some(SidecarFs.readString(p).linesIterator.map(_.trim)
+      .filter(_.nonEmpty).toSet)
+    catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  /** Delete snapshot `v`'s manifest and every pack derived from it. */
+  private def retireVersion(dir: String, v: Long): Unit = if (v >= 1) {
+    SidecarFs.deleteIfExists(versionedManifestPath(dir, v))
+    SidecarFs.deleteIfExists(statsPath(dir, v))
+    SidecarFs.deleteIfExists(ndvPath(dir, v))
+    SidecarFs.deleteIfExists(qsPath(dir, v))
+  }
+
+  /** Delete snapshot manifests older than `cutoffMillis` (mtime) among
+    * `versions` (as [[versionsIn]] reads them from a listing), always
+    * keeping the newest one (the current state). Returns the versions
+    * that remain. */
+  def pruneManifestVersions(dir: String, cutoffMillis: Long,
+      versions: Seq[Long]): Seq[Long] = {
+    val sorted = versions.sorted
+    val expired = sorted.dropRight(1).filter { v =>
+      val mt = manifestVersionMtime(dir, v)
+      mt > 0 && mt <= cutoffMillis
+    }.toSet
+    expired.foreach(retireVersion(dir, _))
+    sorted.filterNot(expired)
+  }
+
+  /** [[pruneManifestVersions]] over one listing of `dir`. */
+  def pruneManifestVersions(dir: String, cutoffMillis: Long): Unit = {
+    pruneManifestVersions(dir, cutoffMillis, versionsIn(SidecarFs.list(dir)))
+    ()
+  }
+
+  // ── packed planning stats ──────────────────────────────────────────────
+  // At 100 TB / 256 MB segments a table holds ~400k segments; planning
+  // that opens one .kvmeta sidecar per segment per query would do ~400k
+  // driver-side file opens PER PLAN (the reference amortizes the analogous
+  // region listing behind a 600 s TTL cache, HBaseRelation.scala:202-239).
+  // Instead, every manifest commit also writes `_graft_stats.vN`: ALL live
+  // segments' planning stats (key bounds, Blooms, zone maps — everything
+  // but the sparse index) in ONE packed file, built incrementally from the
+  // previous version's pack plus the commit's delta. Planning then does
+  // O(1) file reads per (table, manifest version): probe the current
+  // version, read its pack, and cache the parsed result keyed on the
+  // version file's identity — immutable once CAS-published, so the cache
+  // never needs TTL-style invalidation and stays correct across OS
+  // processes. Sidecars remain the per-segment authority (executors read
+  // them for the seek index; the pack is a planning accelerator) and the
+  // fallback when a pack is missing or unreadable (a crashed committer,
+  // an older pack layout): one sidecar sweep, after which the read path
+  // backfills the pack.
+
+  // The pack layout marker. Any other marker (an older layout) reads as
+  // absent and the read path rebuilds the pack from sidecars — packs are
+  // derived caches, never authorities.
+  private val PackedStatsV6 = -105
+
+  private def statsPath(dir: String, v: Long): String =
+    SidecarFs.child(dir, s"_graft_stats.v$v")
+
+  /** Planning-path sidecar opens, i.e. readMeta(withIndex=false) calls
+    * (test instrumentation: planning must not scale its file opens with
+    * segment count). */
+  private[graft] val metaOpens = new java.util.concurrent.atomic.AtomicLong()
+
+  private def writePackedEntry(out: DataOutputStream, m: Meta): Unit = {
+    val nb = m.file.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    out.writeInt(nb.length); out.write(nb)
+    writePlanningFields(out, m)
+  }
+
+  private def readPackedEntry(in: DataInputStream): Meta = {
+    val nb = new Array[Byte](in.readInt()); in.readFully(nb)
+    readPlanningFields(in, new String(nb, java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** Write the packed planning stats for snapshot `v`. Only the CAS
@@ -1175,7 +1028,7 @@ object SegmentFile {
     val out = new DataOutputStream(new BufferedOutputStream(
       SidecarFs.create(tmp, createParent = false), 1 << 16))
     try {
-      out.writeInt(PackedStatsV5)
+      out.writeInt(PackedStatsV6)
       out.writeInt(metas.length)
       metas.foreach(writePackedEntry(out, _))
     } finally out.close()
@@ -1192,14 +1045,8 @@ object SegmentFile {
       val in = new DataInputStream(new BufferedInputStream(
         SidecarFs.open(p), 1 << 16))
       try {
-        in.readInt() match {
-          case v if v == PackedStatsV2 || v == PackedStatsV3 ||
-              v == PackedStatsV4 || v == PackedStatsV5 =>
-            Some((0 until in.readInt()).map(_ =>
-              readPackedEntry(in, v3 = v != PackedStatsV2,
-                v4 = v == PackedStatsV4 || v == PackedStatsV5)))
-          case _ => None
-        }
+        if (in.readInt() != PackedStatsV6) None
+        else Some((0 until in.readInt()).map(_ => readPackedEntry(in)))
       } finally in.close()
     } catch { case _: Exception => None }
   }
@@ -1223,13 +1070,6 @@ object SegmentFile {
           e: java.util.Map.Entry[StatsKey, Seq[Meta]]): Boolean = size() > 32
     }
 
-  /** Diagnostic hook (ColdPlanProbe): run the planning-stats lookup for
-    * the current version exactly as a query plan would, returning the
-    * live segment count. */
-  private[graft] def planningStatsProbe(dir: String): Int =
-    currentVersion(dir).flatMap(segmentsForVersion(dir, _))
-      .map(_.length).getOrElse(-1)
-
   /** Test hook: drop every cached planning artifact (as a fresh driver
     * process would start). */
   private[graft] def clearPlanningCache(): Unit = {
@@ -1240,12 +1080,11 @@ object SegmentFile {
   }
 
   /** Durable twin of the in-memory `versionHints` map: the last
-    * published manifest version, persisted so a FRESH PROCESS can find
-    * the head without listing the table directory. Best-effort and
-    * self-healing — stale-behind hints walk up the existence probe,
-    * a hint for a dropped/recreated table fails the existence check
-    * and falls back to the listing, and a torn/garbled file parses to
-    * None. */
+    * published manifest version, written by every commit so a FRESH
+    * PROCESS finds the head without listing the table directory.
+    * Best-effort and self-healing: a stale-behind hint walks up the
+    * existence probe, and a lost, garbled or dead-table hint falls back
+    * as [[currentVersion]] describes. Only commits write it. */
   private def versionHintPath(dir: String): String =
     SidecarFs.child(dir, "_graft_vhead")
 
@@ -1260,43 +1099,41 @@ object SegmentFile {
     try SidecarFs.writeStringAtomic(versionHintPath(dir), v.toString)
     catch { case scala.util.control.NonFatal(_) => () }
 
-  /** The read path's hint write: only into a table directory that still
-    * exists, so a reader racing DROP TABLE cannot recreate the dropped
-    * directory (the commit path's writeVersionHint may create it). */
-  private[store] def backfillVersionHint(dir: String, v: Long): Unit =
-    try SidecarFs.writeStringAtomic(versionHintPath(dir), v.toString,
-      createParent = false)
-    catch { case scala.util.control.NonFatal(_) => () }
+  /** The table declaration (`GraftKvMeta`) beside the segments: present
+    * in every directory that holds a committed table. */
+  private val TableMetaFile = "_graft_meta.json"
 
-  /** Current max manifest version WITHOUT a directory listing in the
-    * steady state: versions are contiguous upward and the max is never
-    * pruned, so probing existence from the last observed version finds
-    * the head in O(new commits) stat calls. A cold process reads the
-    * durable `_graft_vhead` hint first (round 16: the listing fallback
-    * stats EVERY file — measured 2.2–3.4 s of the plan100k_cold wall at
-    * 200k segment files, tools/ColdPlanProbe — where the hint path is
-    * two stat calls). The listing remains only for legacy/hint-less
-    * tables, and its result backfills the hint (best-effort, like the
-    * packed-stats backfill) so it is paid at most once per table. */
+  /** Current head version WITHOUT a directory listing: versions are
+    * contiguous up to the head and the head is never retired, so
+    * probing existence upward from a known version finds the head in
+    * O(new commits) stat calls. The start is the last version this
+    * process saw, else the durable `_graft_vhead` hint, else v1 — so a
+    * fresh process pays two stat calls, and a directory that never held
+    * a commit (a new table's first commit, a compaction's scratch
+    * table, a dropped table) answers None without listing. Only a
+    * table whose hint is lost or stale AND whose v1 is retired lists
+    * its directory to find the head; that repair writes nothing — the
+    * read path never writes, and the next commit rewrites the hint. */
   def currentVersion(dir: String): Option[Long] = {
     val key = dirKey(dir)
-    val hint = versionHints.get(key)
-    var v: Long =
-      if (hint != null &&
-          SidecarFs.exists(versionedManifestPath(dir, hint.longValue)))
-        hint.longValue
-      else readVersionHint(dir)
-        .filter(h => SidecarFs.exists(versionedManifestPath(dir, h)))
-        .getOrElse {
-          val listed = manifestVersions(dir).lastOption.getOrElse {
-            versionHints.remove(key); return None
-          }
-          backfillVersionHint(dir, listed)
-          listed
-        }
-    while (SidecarFs.exists(versionedManifestPath(dir, v + 1))) v += 1
-    versionHints.put(key, v)
-    Some(v)
+    def published(v: Long) = SidecarFs.exists(versionedManifestPath(dir, v))
+    val start = Option(versionHints.get(key)).map(_.longValue)
+      .filter(published)
+      .orElse(readVersionHint(dir).filter(published))
+      .orElse(Some(1L).filter(published))
+      .orElse(
+        if (!SidecarFs.exists(SidecarFs.child(dir, TableMetaFile))) None
+        else versionsIn(SidecarFs.list(dir)).lastOption)
+    start match {
+      case None =>
+        versionHints.remove(key)
+        None
+      case Some(from) =>
+        var v = from
+        while (published(v + 1)) v += 1
+        versionHints.put(key, v)
+        Some(v)
+    }
   }
 
   /** All live segment planning stats as of snapshot `v`: cache → packed
@@ -1351,8 +1188,8 @@ object SegmentFile {
   // NDV. Instead a dedicated `_graft_ndv.vN` pack is built LAZILY on the
   // first NDV query per version (incrementally from the previous
   // version's pack — segments are immutable — so steady-state cost is
-  // O(commit delta), and only the first build on a legacy/pack-less
-  // table sweeps sidecars), cached exactly like the planning stats.
+  // O(commit delta), and only a version with no older pack to seed from
+  // sweeps sidecars), cached exactly like the planning stats.
 
   // V2 (-203; -202 is the V1 quantile pack): payloads framed like the
   // sidecar's sketch tail
@@ -1364,39 +1201,9 @@ object SegmentFile {
     SidecarFs.child(dir, s"_graft_qs.v$v")
 
   /** Sidecar opens on the NDV path (test instrumentation, mirrors
-    * metaOpens): the legacy-sweep cache and the pack's incremental build
-    * are pinned on this never growing in the steady state. */
+    * metaOpens): the pack's cache and incremental build are pinned on
+    * this never growing in the steady state. */
   private[graft] val ndvSidecarOpens = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Skip from just after the format int to the start of the sketch
-    * frame (shared by the NDV and quantile sidecar parsers). Returns
-    * false for pre-V14 sidecars, whose sketch sections are not decoded. */
-  private def skipToSketchFrame(in: DataInputStream, ver: Int): Boolean = {
-    if (ver != FormatV14) return false
-    in.skipNBytes(16) // gen + tombstones
-    val sj = in.readInt(); if (sj > 0) in.skipNBytes(sj.toLong)
-    in.skipNBytes(in.readInt().toLong) // minKey
-    in.skipNBytes(in.readInt().toLong) // maxKey
-    in.skipNBytes(16) // count + sizeBytes
-    var nb = in.readInt() // blooms
-    while (nb > 0) { in.skipNBytes(in.readInt().toLong * 8L); nb -= 1 }
-    var nz = in.readInt() // zone stats
-    while (nz > 0) {
-      in.skipNBytes(in.readInt().toLong) // column name
-      val dt = readZoneTag(in)
-      readZoneValue(in, dt); readZoneValue(in, dt)
-      readZoneExact(in, dt)
-      if (in.readBoolean()) in.readLong()
-      nz -= 1
-    }
-    var nn = in.readInt() // null counts
-    while (nn > 0) {
-      in.skipNBytes(in.readInt().toLong)
-      in.skipNBytes(8)
-      nn -= 1
-    }
-    true
-  }
 
   /** The sketch frame: `[4B rawLen][4B compLen][compLen bytes]`, the
     * body one zstd frame at level 3 (the `segment.compress` codec).
@@ -1496,33 +1303,29 @@ object SegmentFile {
     (0 until in.readInt()).map(_ => readQsSketch(in))
 
   /** One sidecar's decompressed sketch frame, positioned at its NDV
-    * section; None for pre-V14 sidecars (the callers' all-segments gates
-    * then refuse). */
-  private def readSketchTail(dir: String, name: String): Option[DataInputStream] = {
-    val in = new DataInputStream(new BufferedInputStream(
-      SidecarFs.open(metaPath(dir, name)), 1 << 16))
+    * section. */
+  private def readSketchTail(dir: String, name: String): DataInputStream = {
+    val in = openSidecar(dir, name)
     try {
-      val ver = in.readInt()
-      if (skipToSketchFrame(in, ver)) Some(readSketchFrame(in)) else None
+      readPlanningFields(in, s"$name.kv") // step over to the frame
+      readSketchFrame(in)
     } finally in.close()
   }
 
-  /** Extract just the NDV section from one sidecar (empty for pre-V14
-    * segments — the caller's all-segments gate then refuses). A
-    * dedicated parser rather than a readMeta flag so the planning-path
-    * instrumentation (metaOpens) stays a pure planning signal. */
+  /** Extract just the NDV section from one sidecar. A dedicated parser
+    * rather than a readMeta flag so the planning-path instrumentation
+    * (metaOpens) stays a pure planning signal. */
   private def readNdvSidecar(dir: String, name: String): Seq[NdvSketch] = {
     ndvSidecarOpens.incrementAndGet()
-    readSketchTail(dir, name).map(readNdvSection).getOrElse(Seq.empty)
+    readNdvSection(readSketchTail(dir, name))
   }
 
   /** Extract the quantile summaries from one sidecar's sketch frame. */
   private def readQsSidecar(dir: String, name: String): Seq[QuantileSketch] = {
     qsSidecarOpens.incrementAndGet()
-    readSketchTail(dir, name).map { f =>
-      readNdvSection(f) // step over the NDV registers
-      readQsSection(f)
-    }.getOrElse(Seq.empty)
+    val f = readSketchTail(dir, name)
+    readNdvSection(f) // step over the NDV registers
+    readQsSection(f)
   }
 
   private[graft] val qsSidecarOpens = new java.util.concurrent.atomic.AtomicLong()
@@ -1531,10 +1334,7 @@ object SegmentFile {
     * registers, quantile summaries): `get(dir)` serves the live
     * segments' payloads as of the current manifest version via
     * cache → `_<prefix>.vN` pack → incremental build from the newest
-    * older pack + only the delta's sidecars. Legacy (manifest-less)
-    * tables cache their full sweep on the directory listing itself
-    * (segments are immutable, so the sorted live file set fully
-    * determines every payload). Either way the steady-state cost per
+    * older pack + only the delta's sidecars. The steady-state cost per
     * plan is a map lookup — never O(segments) sidecar opens. */
   private[store] final class ArtifactPacks[T](prefix: String, marker: Int,
       readSidecar: (String, String) => T,
@@ -1551,19 +1351,7 @@ object SegmentFile {
             e: java.util.Map.Entry[StatsKey, Map[String, T]]): Boolean =
           size() > 16
       }
-    private val legacyLock = new Object
-    private val legacyCache =
-      new java.util.LinkedHashMap[(String, Seq[(String, String)]), Map[String, T]](
-        64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Seq[(String, String)]), Map[String, T]]): Boolean =
-          size() > 16
-      }
-
-    def clear(): Unit = {
-      lock.synchronized(cache.clear())
-      legacyLock.synchronized(legacyCache.clear())
-    }
+    def clear(): Unit = lock.synchronized(cache.clear())
 
     /** Read-path backfill: only into an existing table directory, like
       * [[writePackedStats]]. */
@@ -1603,58 +1391,39 @@ object SegmentFile {
       } catch { case _: Exception => None }
     }
 
-    def get(dir: String): Map[String, T] =
-      currentVersion(dir) match {
-        case None => // legacy table: directory listing is the authority.
-          // The key carries each live file's (size, mtime, fileKey), not
-          // just its name — a legacy table recreated in place with
-          // identical segment names must MISS, never serve the dead
-          // table's sketches (the versioned path gets the same guard
-          // from the manifest file's attributes)
-          val live = listSegments(dir).map(_.file).sorted
-          val key = (dirKey(dir), live.map { f =>
-            (f, SidecarFs.identity(SidecarFs.child(dir, f)).getOrElse("?"))
-          })
-          legacyLock.synchronized(Option(legacyCache.get(key))) match {
-            case Some(hit) => hit
-            case None =>
-              val built = live.map(f =>
-                f -> readSidecar(dir, f.stripSuffix(".kv"))).toMap
-              legacyLock.synchronized(legacyCache.put(key, built))
-              built
-          }
-        case Some(v) =>
-          val mp = versionedManifestPath(dir, v)
-          val ident = SidecarFs.identity(mp).getOrElse(return Map.empty)
-          val key = StatsKey(dirKey(dir), v, ident)
-          lock.synchronized(Option(cache.get(key))) match {
-            case Some(hit) => return hit
-            case None =>
-          }
-          val live = readManifestVersion(dir, v).getOrElse(return Map.empty)
-          // a pack is authoritative only when it lists EXACTLY the
-          // manifest's set (guards torn/mismatched packs)
-          val entries = readPack(dir, v)
-            .filter(_.iterator.map(_._1).toSet == live)
-            .getOrElse {
-              // seed from the NEWEST retained pack, whatever version
-              // wrote it — segments are immutable, so an older pack's
-              // entries stay valid for the files both versions share;
-              // only the commits since then read their sidecars
-              val pool = new scala.collection.mutable.HashMap[String, T]
-              manifestVersions(dir).filter(_ < v).sorted.reverseIterator
-                .map(readPack(dir, _))
-                .collectFirst { case Some(entries) => entries }
-                .foreach(_.foreach { case (f, s) => pool(f) = s })
-              val built = live.toSeq.sorted.map(f => f -> pool.getOrElse(f,
-                readSidecar(dir, f.stripSuffix(".kv"))))
-              try writePack(dir, v, built) catch { case _: Exception => () }
-              built
-            }
-          val m = entries.toMap
-          lock.synchronized(cache.put(key, m))
-          m
+    def get(dir: String): Map[String, T] = {
+      val v = currentVersion(dir).getOrElse(return Map.empty)
+      val ident =
+        SidecarFs.identity(versionedManifestPath(dir, v)).getOrElse(return Map.empty)
+      val key = StatsKey(dirKey(dir), v, ident)
+      lock.synchronized(Option(cache.get(key))) match {
+        case Some(hit) => return hit
+        case None =>
       }
+      val live = readManifestVersion(dir, v).getOrElse(return Map.empty)
+      // a pack is authoritative only when it lists EXACTLY the
+      // manifest's set (guards torn/mismatched packs)
+      val entries = readPack(dir, v)
+        .filter(_.iterator.map(_._1).toSet == live)
+        .getOrElse {
+          // seed from the NEWEST retained pack, whatever version wrote
+          // it — segments are immutable, so an older pack's entries stay
+          // valid for the files both versions share; only the commits
+          // since then read their sidecars
+          val pool = new scala.collection.mutable.HashMap[String, T]
+          manifestVersions(dir).filter(_ < v).reverseIterator
+            .map(readPack(dir, _))
+            .collectFirst { case Some(entries) => entries }
+            .foreach(_.foreach { case (f, s) => pool(f) = s })
+          val built = live.toSeq.sorted.map(f => f -> pool.getOrElse(f,
+            readSidecar(dir, f.stripSuffix(".kv"))))
+          try writePack(dir, v, built) catch { case _: Exception => () }
+          built
+        }
+      val m = entries.toMap
+      lock.synchronized(cache.put(key, m))
+      m
+    }
   }
 
   private[store] val ndvPacks = new ArtifactPacks[Seq[NdvSketch]](
@@ -1689,7 +1458,7 @@ object SegmentFile {
   }
 
   /** Exact null count of one value column over `segs` — None when any
-    * segment lacks the V10 claim. Key columns are handled by CALLERS
+    * segment lacks the column's null-count claim. Key columns are handled by CALLERS
     * (never null by the codec contract, so they answer 0 without a
     * claim). The caller guards soundness with [[disjointTombstoneFree]]
     * (a superseded generation's nulls are not live nulls). */
@@ -1701,7 +1470,7 @@ object SegmentFile {
 
   /** Merge one column's per-segment HLL++ registers and query the
     * estimate — None when any live segment lacks a correctly-sized
-    * sketch (pre-V14 sidecar). The caller guards soundness with
+    * sketch for the column. The caller guards soundness with
     * [[disjointTombstoneFree]]. */
   def mergedNdvEstimate(segs: Seq[Meta],
       sketches: Map[String, Seq[NdvSketch]], col: String): Option[Long] = {
@@ -1720,8 +1489,8 @@ object SegmentFile {
 
   /** Live segments' NDV sketches (file → sketches) as of the CURRENT
     * manifest version — served through [[ArtifactPacks]] (cache → pack
-    * → incremental build; legacy tables cache on the listing), so the
-    * steady-state planning cost is a map lookup. */
+    * → incremental build), so the steady-state planning cost is a map
+    * lookup. */
   def ndvSketches(dir: String): Map[String, Seq[NdvSketch]] =
     ndvPacks.get(dir)
 
@@ -1731,8 +1500,8 @@ object SegmentFile {
     qsPacks.get(dir)
 
   /** Merge one column's per-segment quantile summaries — None when any
-    * live segment lacks a summary at the writer's relative error
-    * (pre-V14 sidecar). GK merge keeps the ε-rank bound, so the merged
+    * live segment lacks a summary at the writer's relative error. GK
+    * merge keeps the ε-rank bound, so the merged
     * summary answers approx_percentile within the same contract the
     * scan-side aggregate promises. The caller guards soundness with
     * [[disjointTombstoneFree]] (a superseded generation's values must
@@ -1788,26 +1557,15 @@ object SegmentFile {
   }
 
   /** All LIVE segment metas under a table dir (index not loaded — see
-    * readMeta). Manifest-governed tables serve the packed planning stats
-    * of the current version (O(1) file reads, cached); legacy tables
-    * list the directory. */
+    * readMeta): the packed planning stats of the current version (O(1)
+    * file reads, cached); empty before the first commit. */
   def listSegments(dir: String): Seq[Meta] = {
     var attempts = 0
     while (attempts < 64) {
-      currentVersion(dir) match {
-        case Some(v) => segmentsForVersion(dir, v) match {
-          case Some(ms) => return ms
-          case None => attempts += 1 // version vanished mid-read — re-probe
-        }
-        case None =>
-          // legacy (pre-manifest) table: directory listing is authority
-          val onDisk = SidecarFs.list(dir)
-            .filter(_.endsWith(".kvmeta")).map(_.stripSuffix(".kvmeta"))
-          val names = readMirror(dir) match {
-            case Some(live) => onDisk.filter(n => live.contains(s"$n.kv"))
-            case None => onDisk
-          }
-          return names.sorted.toSeq.map(readMeta(dir, _, withIndex = false))
+      val v = currentVersion(dir).getOrElse(return Seq.empty)
+      segmentsForVersion(dir, v) match {
+        case Some(ms) => return ms
+        case None => attempts += 1 // version vanished mid-read — re-probe
       }
     }
     throw new IllegalStateException(s"cannot list a stable segment set at $dir")

@@ -849,29 +849,6 @@ class KvConnectorSpec extends AnyFunSuite {
     assert(KvCommands.table(spark, path2).count() == 100)
   }
 
-  test("minor compaction on a legacy (manifest-less) table becomes manifest-governed first") {
-    val path = tmpTable()
-    KvCommands.createTable(
-      spark.range(0, 100).select(col("id").as("k"), lit("old").as("v")),
-      path, Seq("k"))
-    KvCommands.append(
-      spark.range(50, 150).select(col("id").as("k"), lit("new").as("v")), path)
-    // simulate a pre-manifest table: directory listing is the authority
-    // (a true legacy table has neither the mirror nor the versioned log)
-    java.nio.file.Files.delete(java.nio.file.Paths.get(path, "_graft_segments"))
-    SegmentFile.manifestVersions(path).foreach(v =>
-      java.nio.file.Files.delete(
-        java.nio.file.Paths.get(path, s"_graft_segments.v$v")))
-    assert(SegmentFile.readManifest(path).isEmpty)
-    assert(KvCommands.compactMinor(spark, path) > 0)
-    // the table is manifest-governed now, with exactly the merged rows
-    assert(SegmentFile.readManifest(path).isDefined)
-    val t = KvCommands.table(spark, path)
-    assert(t.count() == 150)
-    assert(t.filter(col("k") === 75).head().getString(1) == "new")
-    assert(t.filter(col("k") === 25).head().getString(1) == "old")
-  }
-
   test("kv SUM of integral value columns is answered from segment metadata") {
     val path = tmpTable()
     val df = spark.range(5000).select(col("id").as("k"),

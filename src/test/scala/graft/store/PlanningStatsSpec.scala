@@ -57,9 +57,9 @@ class PlanningStatsSpec extends AnyFunSuite {
   }
 
   test("cold version discovery reads the durable hint, never lists (r16)") {
-    // the listing stats every child — 2.2-3.4 s at 200k files
-    // (tools/ColdPlanProbe) — so a fresh process must find the head
-    // from _graft_vhead in O(1) stat calls
+    // a listing stats every child (seconds at 100k+ segment files), so
+    // a fresh process must find the head from _graft_vhead in O(1) stat
+    // calls
     val path = tmpTable()
     mkTable(path)
     val head = SegmentFile.currentVersion(path)
@@ -71,41 +71,25 @@ class PlanningStatsSpec extends AnyFunSuite {
     assert(SegmentFile.currentVersion(path) == head)
     val listed = graft.io.SidecarFs.listCalls.get() - before
     assert(listed == 0, s"cold currentVersion listed the directory $listed times")
-    // hint-less (legacy) table: the one-time listing fallback still
-    // finds the head AND backfills the hint for the next cold process
+    // hint-less table: the fallback still finds the head, and the read
+    // path writes nothing — no hint appears until the next commit
     assert(new java.io.File(path, "_graft_vhead").delete())
     SegmentFile.clearPlanningCache()
     assert(SegmentFile.currentVersion(path) == head)
-    assert(new java.io.File(path, "_graft_vhead").isFile,
-      "listing fallback must backfill the hint")
-    SegmentFile.clearPlanningCache()
-    val before2 = graft.io.SidecarFs.listCalls.get()
-    assert(SegmentFile.currentVersion(path) == head)
-    assert(graft.io.SidecarFs.listCalls.get() == before2)
+    assert(!new java.io.File(path, "_graft_vhead").exists(),
+      "the read path wrote a version hint")
     // stale hint from a dropped-and-recreated table self-heals
     java.nio.file.Files.writeString(
       Paths.get(path, "_graft_vhead"), "999999")
     SegmentFile.clearPlanningCache()
     assert(SegmentFile.currentVersion(path) == head)
-  }
-
-  test("a hint backfill aimed at a deleted table directory leaves no directory behind") {
-    // a reader racing DROP TABLE: its listing saw the table, the drop
-    // then removed the directory, and only then does the backfill run
-    val path = tmpTable()
-    mkTable(path)
-    val head = SegmentFile.currentVersion(path).get
+    // a reader racing DROP TABLE finds no head and leaves no directory
     graft.io.SidecarFs.deleteRecursively(path)
-    SegmentFile.backfillVersionHint(path, head)
-    assert(!Files.exists(Paths.get(path)),
-      "a read-path hint write recreated the dropped table directory")
+    assert(SegmentFile.currentVersion(path).isEmpty)
     SegmentFile.clearPlanningCache()
     assert(SegmentFile.currentVersion(path).isEmpty)
-    assert(!Files.exists(Paths.get(path)))
-    // into a directory that exists, the backfill still lands
-    Files.createDirectories(Paths.get(path))
-    SegmentFile.backfillVersionHint(path, head)
-    assert(Files.readString(Paths.get(path, "_graft_vhead")) == head.toString)
+    assert(!Files.exists(Paths.get(path)),
+      "a read-path version lookup recreated the dropped table directory")
   }
 
   test("pack backfills aimed at a deleted table directory leave no directory behind") {
@@ -149,7 +133,7 @@ class PlanningStatsSpec extends AnyFunSuite {
     val path = tmpTable()
     mkTable(path)
     val nSegs = SegmentFile.listSegments(path).length
-    // destroy every pack (a pre-pack legacy table / crashed committers)
+    // destroy every pack (crashed committers / an older pack layout)
     statsFiles(path).foreach(n => Files.delete(Paths.get(path, n)))
     SegmentFile.clearPlanningCache()
     val before = SegmentFile.metaOpens.get()
@@ -191,82 +175,6 @@ class PlanningStatsSpec extends AnyFunSuite {
       }
       assert(p.zoneStats == s.zoneStats)
     }
-  }
-
-  test("legacy (manifest-less) NDV sweep is cached on the directory listing") {
-    val path = tmpTable()
-    mkTable(path)
-    // strip every manifest + pack: the pre-manifest on-disk layout, where
-    // the directory listing is the authority and there is no version to
-    // key an NDV pack on
-    Option(new java.io.File(path).list()).getOrElse(Array.empty[String])
-      .filter(n => n.startsWith("_graft_segments") ||
-        n.startsWith("_graft_stats") || n.startsWith("_graft_ndv"))
-      .foreach(n => Files.delete(Paths.get(path, n)))
-    SegmentFile.clearPlanningCache()
-    assert(SegmentFile.currentVersion(path).isEmpty)
-    val nSegs = SegmentFile.listSegments(path).length
-    assert(nSegs >= 2)
-    val before = SegmentFile.ndvSidecarOpens.get()
-    val first = SegmentFile.ndvSketches(path)
-    assert(first.size == nSegs)
-    assert(SegmentFile.ndvSidecarOpens.get() - before == nSegs,
-      "first legacy NDV read must sweep each sidecar exactly once")
-    // every later call (each CBO plan's estimateStatistics) serves the
-    // cache: segments are immutable, so the unchanged listing fully
-    // determines the sweep — zero sidecar opens
-    val before2 = SegmentFile.ndvSidecarOpens.get()
-    assert(SegmentFile.ndvSketches(path) eq first)
-    assert(SegmentFile.ndvSketches(path) eq first)
-    assert(SegmentFile.ndvSidecarOpens.get() - before2 == 0,
-      "cached legacy NDV sweep re-opened sidecars")
-  }
-
-  test("legacy sweep cache keys on file attributes, not just names") {
-    // a legacy table recreated IN PLACE with identical segment file
-    // names must MISS the sweep cache (the key carries each file's
-    // size/mtime/fileKey) — serving the dead table's sketches would be
-    // a silently-wrong NDV
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-    import org.apache.spark.sql.catalyst.util.HyperLogLogPlusPlusHelper
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val dir = Files.createTempDirectory("graftkv_legacy_attr").toString
-    val schema = StructType(Seq(
-      StructField("k", LongType, nullable = false),
-      StructField("v", LongType, nullable = false)))
-    val name = "segment-00000-000000-legacy00"
-    def write(vals: Seq[Long]): Unit = {
-      val codec = RowCodec(schema, Seq("k"))
-      val hll = new HyperLogLogPlusPlusHelper(SegmentFile.NdvRsd)
-      val buf = new GenericInternalRow(Array.fill[Any](hll.numWords)(0L))
-      val w = new SegmentFile.Writer(dir, name,
-        cmp = codec.compareKeys, schemaJson = schema.json, gen = 1L)
-      vals.foreach { x =>
-        val row = new GenericInternalRow(Array[Any](x, x % 997))
-        w.write(codec.encodeKey(row), codec.encodeValue(row))
-        hll.update(buf, 0, x % 997, LongType)
-      }
-      w.close(Seq.empty,
-        Seq(SegmentFile.NdvSketch("v",
-          Array.tabulate(hll.numWords)(buf.getLong))),
-        Seq.empty, Seq.empty)
-      graft.connector.GraftKvMeta.write(dir, schema, Seq("k"))
-    }
-    write(0L until 10L)
-    assert(SegmentFile.currentVersion(dir).isEmpty, "must stay legacy")
-    val segs = SegmentFile.listSegments(dir)
-    val first = SegmentFile.mergedNdvEstimate(segs,
-      SegmentFile.ndvSketches(dir), "v")
-    assert(first.exists(n => math.abs(n - 10L) <= 2), s"ndv: $first")
-    // recreate in place: same directory, same segment file name
-    Files.delete(Paths.get(dir, s"$name.kv"))
-    Files.delete(Paths.get(dir, s"$name.kvmeta"))
-    write(0L until 3000L) // 997 distinct v values now
-    val segs2 = SegmentFile.listSegments(dir)
-    val second = SegmentFile.mergedNdvEstimate(segs2,
-      SegmentFile.ndvSketches(dir), "v")
-    assert(second.exists(n => math.abs(n - 997L) <= 997 * 0.1),
-      s"stale legacy sweep served: $second (want ≈997, stale ≈10)")
   }
 
   test("stale pack from a dead table at the same path is never trusted") {

@@ -202,25 +202,27 @@ class SketchFrameSpec extends AnyFunSuite {
         Paths.get(path, s"$prefix.v$v"))).getInt == newMarker, s"$prefix not rebuilt")
   }
 
-  test("a pre-V14 sidecar reports no sketches and reads seekless") {
+  test("a non-V14 sidecar fails to open with a clear error") {
     val dir = tmpDir("prev14")
     Files.createDirectories(Paths.get(dir))
     val w = new SegmentFile.Writer(dir, "s0", indexEvery = 10)
     (0 until 100).foreach(i =>
       w.write(OrderedCodec.encodeLong(i.toLong), Array[Byte](1)))
-    w.close(qsSketches = Seq(SegmentFile.QuantileSketch("k",
-      SegmentFile.QsRelativeError, 1L, Array(1.0), Array(1L), Array(0L))))
+    w.close()
     SegmentFile.commitManifest(dir)(_ => Some(Set("s0.kv")))
     val meta = Paths.get(dir, "s0.kvmeta")
     val bytes = Files.readAllBytes(meta)
-    java.nio.ByteBuffer.wrap(bytes).putInt(-13) // the V13 header
+    java.nio.ByteBuffer.wrap(bytes).putInt(-13) // an older header
     Files.write(meta, bytes)
     SegmentFile.clearPlanningCache()
-    val m = SegmentFile.readMeta(dir, "s0", withIndex = true)
-    assert(m.count == 100 && m.index.isEmpty)
-    assert(SegmentFile.qsSketches(dir)("s0.kv").isEmpty)
-    assert(SegmentFile.ndvSketches(dir)("s0.kv").isEmpty)
-    val r = new SegmentFile.Reader(dir, "s0.kv", 0L)
-    assert(r.size == 100)
+    def fails(read: => Any): Unit = {
+      val e = intercept[java.io.IOException](read)
+      assert(e.getMessage.contains("s0.kvmeta") && e.getMessage.contains("-13"),
+        e.getMessage)
+    }
+    fails(SegmentFile.readMeta(dir, "s0", withIndex = true))
+    fails(SegmentFile.readMeta(dir, "s0", withIndex = false))
+    fails(SegmentFile.qsSketches(dir))
+    fails(SegmentFile.ndvSketches(dir))
   }
 }
