@@ -83,13 +83,26 @@ class PlanningStatsSpec extends AnyFunSuite {
       Paths.get(path, "_graft_vhead"), "999999")
     SegmentFile.clearPlanningCache()
     assert(SegmentFile.currentVersion(path) == head)
-    // a reader racing DROP TABLE finds no head and leaves no directory
+  }
+
+  test("a hint backfill aimed at a deleted table directory leaves no directory behind") {
+    // a reader racing DROP TABLE: its lookup cached the head, the drop
+    // then removed the directory, and only then does it look again.
+    // The read path writes no hint, so nothing can recreate the table.
+    val path = tmpTable()
+    mkTable(path)
+    assert(SegmentFile.currentVersion(path).nonEmpty)
     graft.io.SidecarFs.deleteRecursively(path)
-    assert(SegmentFile.currentVersion(path).isEmpty)
-    SegmentFile.clearPlanningCache()
     assert(SegmentFile.currentVersion(path).isEmpty)
     assert(!Files.exists(Paths.get(path)),
       "a read-path version lookup recreated the dropped table directory")
+    SegmentFile.clearPlanningCache()
+    assert(SegmentFile.currentVersion(path).isEmpty)
+    assert(!Files.exists(Paths.get(path)))
+    // a table re-created at the path: its commits still land the hint
+    mkTable(path, appends = 1)
+    val head = SegmentFile.currentVersion(path).get
+    assert(Files.readString(Paths.get(path, "_graft_vhead")) == head.toString)
   }
 
   test("pack backfills aimed at a deleted table directory leave no directory behind") {
