@@ -342,8 +342,10 @@ class GraftKvTable(path: String, tableSchema: StructType, keys: Seq[String],
     // tombstone writes (DELETE) append key-only records whose value is
     // the delete marker; the input schema is just the key columns
     val tombstone = Option(info.options.get("tombstone")).exists(_.toBoolean)
-    // internal: compaction pins the output generation to its inputs' max
-    val genOverride = Option(info.options.get("gen.override")).map(_.toLong)
+    // internal: a rewrite (compaction) names the live files it replaces;
+    // its commit swaps them for its own (GraftKvCommitProtocol)
+    val replace = Option(info.options.get("replace"))
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // z-clustered create: the dim specs whose Morton interleave is the
     // _z lead (serialized ZDim list from createZOrderTable)
     val zorder = Option(info.options.get("zorder")).map { s =>
@@ -369,7 +371,7 @@ class GraftKvTable(path: String, tableSchema: StructType, keys: Seq[String],
     }
     new GraftKvWriteBuilder(path, info.schema(), keys, truncate = false,
       encoding = encoding, maxSegBytes = maxSegBytes, tombstone = tombstone,
-      genOverride = genOverride, queryId = info.queryId(), zorder = zorder,
+      replace = replace, queryId = info.queryId(), zorder = zorder,
       tableProps = props)
   }
 }
@@ -2725,7 +2727,7 @@ class GraftKvColumnarReader(p: GraftKvInputPartition, schema: StructType,
 class GraftKvWriteBuilder(path: String, schema: StructType, keys: Seq[String],
     truncate: Boolean, encoding: String = graft.store.RowCodec.Binary,
     maxSegBytes: Long = GraftKvDataWriter.DefaultMaxSegmentBytes,
-    tombstone: Boolean = false, genOverride: Option[Long] = None,
+    tombstone: Boolean = false, replace: Option[Set[String]] = None,
     queryId: String = "", zorder: Seq[graft.codec.ZDim] = Nil,
     tableProps: Map[String, String] = Map.empty)
     extends WriteBuilder with SupportsTruncate {
@@ -2735,12 +2737,11 @@ class GraftKvWriteBuilder(path: String, schema: StructType, keys: Seq[String],
     // makes the write schema authoritative, so forwarding the flag would
     // replace the table with a key-only shell, and dropping it would
     // store the markers as rows — fail instead of corrupting either way
-    if (tombstone) throw new IllegalArgumentException(
-      "tombstone writes append delete markers; combining them with " +
+    if (tombstone || replace.nonEmpty) throw new IllegalArgumentException(
+      "tombstone and replace writes append; combining them with " +
         "overwrite would truncate the table — use mode(\"append\")")
     new GraftKvWriteBuilder(path, schema, keys, truncate = true, encoding,
-      maxSegBytes, genOverride = genOverride, queryId = queryId,
-      zorder = zorder, tableProps = tableProps)
+      maxSegBytes, queryId = queryId, zorder = zorder, tableProps = tableProps)
   }
 
   private def zoneMaxChars: Int =
@@ -2771,16 +2772,23 @@ class GraftKvWriteBuilder(path: String, schema: StructType, keys: Seq[String],
     // contract): one more than the newest live segment's. Readers use it
     // for last-write-wins merge when later appends overlap older
     // segments — the HBase cell-timestamp analog, with a deterministic
-    // total order instead of wall clocks. Compaction overrides it with
-    // the max generation of the segments it rewrites: the output holds
-    // the SAME versions, so stamping it "newer" would lie to streaming
-    // readers (whose offsets are generations) and re-emit old rows.
-    private val gen: Long = genOverride.getOrElse {
+    // total order instead of wall clocks. A rewrite keeps the max
+    // generation of the segments it replaces: the output holds the SAME
+    // versions, so stamping it "newer" would lie to streaming readers
+    // (whose offsets are generations) and re-emit old rows.
+    private val gen: Long =
       if (truncate) 1L
-      else (try graft.store.SegmentFile.listSegments(path).map(_.gen)
-        catch { case _: Exception => Seq.empty[Long] })
-        .maxOption.getOrElse(0L) + 1L
-    }
+      else {
+        val live = try SegmentFile.listSegments(path)
+          catch { case _: Exception => Seq.empty[SegmentFile.Meta] }
+        replace.filter(_.nonEmpty) match {
+          case Some(r) =>
+            val hit = live.filter(m => r.contains(m.file))
+            if (hit.size < r.size) throw new GraftKvRewriteConflict(path)
+            hit.map(_.gen).max
+          case None => live.map(_.gen).maxOption.getOrElse(0L) + 1L
+        }
+      }
 
     // Global range partitioning on the LEADING key dimension only + full
     // composite-key sort within partitions = declarative bulk-load
@@ -2834,9 +2842,9 @@ class GraftKvWriteBuilder(path: String, schema: StructType, keys: Seq[String],
             .foreach(n => SidecarFs.deleteIfExists(SidecarFs.child(path, n)))
           GraftKvMeta.write(path, schema, keys, encoding, zorder, tableProps)
         } else {
-          // append: the shared protocol (see GraftKvCommitProtocol)
+          // append or rewrite: the shared protocol (GraftKvCommitProtocol)
           GraftKvCommitProtocol.commitAppend(path, committed, schema, keys,
-            encoding)
+            encoding, replace.getOrElse(Set.empty))
         }
       }
 
@@ -2848,23 +2856,48 @@ class GraftKvWriteBuilder(path: String, schema: StructType, keys: Seq[String],
 
 final case class GraftKvCommit(files: Seq[String]) extends WriterCommitMessage
 
-/** The append-commit protocol, shared by the batch append and the delta
-  * (row-level DML) writes so the two can never drift: manifest-FIRST
-  * swap of prevLive ++ committed — a reader always sees either the old
-  * committed set or the new one, and a crash after the swap leaves only
-  * orphans the manifest already excludes — then a meta refresh that
-  * preserves the DECLARED schema (an append must not let the write's
-  * input schema replace the table's: INSERT VALUES resolves literals
-  * non-nullable, and tightened nullability makes codegen read genuinely
-  * null columns as 0). */
+/** A rewrite (internal `replace=<files>` write) found a file it replaces
+  * no longer live — a concurrent commit replaced it first. */
+final class GraftKvRewriteConflict(path: String) extends IllegalStateException(
+  s"a segment the rewrite of $path replaces is no longer live; " +
+    "nothing was published")
+
+/** The commit protocol, shared by the batch append/rewrite, the delta
+  * (row-level DML) writes and the stream sink so they can never drift:
+  * manifest-FIRST swap of prevLive − replaced ++ committed (an append
+  * replaces nothing) — a reader always sees either the old committed
+  * set or the new one, and a crash after the swap leaves only orphans
+  * the manifest already excludes — then a meta refresh that preserves
+  * the DECLARED schema (an append must not let the write's input schema
+  * replace the table's: INSERT VALUES resolves literals non-nullable,
+  * and tightened nullability makes codegen read genuinely null columns
+  * as 0). */
 private[connector] object GraftKvCommitProtocol {
   def commitAppend(path: String, committed: Set[String],
-      writeSchema: StructType, keys: Seq[String], encoding: String): Unit = {
-    // optimistic CAS (SegmentFile.commitManifest): concurrent appenders
-    // each publish prevLive ++ own files at a fresh version — a lost
-    // race re-reads, so no committer drops another's segments. A replay
+      writeSchema: StructType, keys: Seq[String], encoding: String,
+      replaced: Set[String] = Set.empty): Unit = {
+    // optimistic CAS (SegmentFile.commitManifest): concurrent committers
+    // each publish their own swap at a fresh version — a lost race
+    // re-reads, so no committer drops another's segments. A replay
     // whose files are already live publishes nothing (no-op detection).
-    graft.store.SegmentFile.commitManifest(path)(base => Some(base ++ committed))
+    // A rewrite whose replaced files are not all live publishes nothing
+    // and fails; Spark's abort then deletes its files.
+    val swapped = SegmentFile.commitManifest(path) { base =>
+      if (replaced.subsetOf(base)) Some(base -- replaced ++ committed) else None
+    }
+    if (swapped.isEmpty) throw new GraftKvRewriteConflict(path)
+    // replaced files stay on disk for the retention window of the
+    // mtime-based sweep (KvCommands.sweepUnmanifested): age them from
+    // their REPLACEMENT, not their write, or an old segment is reclaimed
+    // the instant it is replaced (best-effort: read-only mounts lose it)
+    val now = System.currentTimeMillis()
+    replaced.foreach { f =>
+      try {
+        SidecarFs.setMtime(SidecarFs.child(path, f), now)
+        SidecarFs.setMtime(
+          SidecarFs.child(path, f.stripSuffix(".kv") + ".kvmeta"), now)
+      } catch { case scala.util.control.NonFatal(_) => () }
+    }
     val prev = GraftKvMeta.read(path)
     val declared = prev.map(_.schema).getOrElse(writeSchema)
     // appends preserve the table's z-clustering declaration + properties

@@ -20,7 +20,6 @@ object KvCommands {
     * codec (binary | stringformat, reference DDL `IN stringformat`). */
   def createTable(df: DataFrame, path: String, keys: Seq[String],
       encoding: String = graft.store.RowCodec.Binary,
-      genOverride: Option[Long] = None,
       zorder: Seq[graft.codec.ZDim] = Nil,
       maxSegBytes: Option[Long] = None,
       compress: Option[String] = None): Unit = {
@@ -28,7 +27,6 @@ object KvCommands {
       .option("key", keys.mkString(","))
       .option("encoding", encoding)
       .mode("overwrite")
-    genOverride.foreach(g => w.option("gen.override", g.toString))
     if (zorder.nonEmpty) w.option("zorder", graft.codec.ZDim.serialize(zorder))
     maxSegBytes.foreach(b => w.option("segment.maxBytes", b.toString))
     compress.foreach(c => w.option(GraftKvMeta.SegmentCompressProp, c))
@@ -330,11 +328,9 @@ object KvCommands {
         // (a recreated table must not trip over a dead table's crc)
         (n.startsWith("._graft") && n.endsWith(".crc")))
       .foreach(n => SidecarFs.deleteIfExists(SidecarFs.child(path, n)))
-    // sweep scratch dirs stranded by a crashed minor compaction or
-    // z-order conversion
+    // sweep scratch dirs stranded by a crashed z-order conversion
     SidecarFs.list(path)
-      .filter(n => (n.startsWith(".compacting-") ||
-        n.startsWith(".zconvert-")) &&
+      .filter(n => n.startsWith(".zconvert-") &&
         SidecarFs.isDirectory(SidecarFs.child(path, n)))
       .foreach(n => SidecarFs.deleteRecursively(SidecarFs.child(path, n)))
     // secondary indexes and materialized views die with their table
@@ -369,24 +365,45 @@ object KvCommands {
   def segments(path: String): Seq[(String, Long, Long)] =
     SegmentFile.listSegments(path).map(m => (m.file, m.count, m.sizeBytes))
 
-  /** Compaction: appends create key-overlapping segments (pruning still
-    * correct, but a point lookup may touch several runs); rewriting the
-    * table through the ordered write path restores disjoint sorted
-    * segments — the major-compaction analog of an LSM/region store.
-    * Safe in one step: new segments get fresh names and the overwrite
-    * commit deletes the old files only after every task finished. */
+  /** Major compaction: appends create key-overlapping segments (pruning
+    * still correct, but a point lookup may touch several runs);
+    * rewriting the whole live set through the ordered write path
+    * restores disjoint sorted segments without superseded versions or
+    * tombstones — the major-compaction analog of an LSM/region store.
+    * It commits through the one manifest CAS every write uses
+    * ([[rewrite]]): a commit landing meanwhile survives it, and a
+    * concurrent rewrite of the same segments fails it with an
+    * IllegalStateException, publishing nothing. Replaced segments stay
+    * on disk for the retention window, so the pre-compaction snapshot
+    * stays readable. `maxSegBytes` sizes this rewrite's segments only. */
   def compact(spark: SparkSession, path: String,
       maxSegBytes: Option[Long] = None): Unit = {
-    val m = GraftKvMeta.read(path).getOrElse(
+    GraftKvMeta.read(path).getOrElse(
       throw new IllegalArgumentException(s"no graftkv table at $path"))
-    // preserve the max input generation: compaction reorganizes existing
-    // versions, it doesn't create new ones — streaming readers key their
-    // offsets on generations and must not re-emit compacted rows
-    val maxGen = SegmentFile.listSegments(path).map(_.gen).maxOption
-    // the z-clustering declaration rides through the rewrite (the _z
-    // column is ordinary data here — already present in the read-back)
-    createTable(table(spark, path), path, m.keys, m.encoding, maxGen,
-      zorder = m.zorder, maxSegBytes = maxSegBytes)
+    val live = SegmentFile.readManifest(path).getOrElse(Set.empty[String])
+    if (!rewrite(spark, path, live, maxSegBytes))
+      throw new IllegalStateException(
+        s"concurrent rewrite of $path during major compaction; aborted")
+    sweepUnmanifested(path, RetainReplacedMs)
+  }
+
+  /** How long compaction keeps the segments it replaced on disk. */
+  private val RetainReplacedMs = 600000L
+
+  /** Rewrite the live segments `files` of `path` into fresh sorted ones:
+    * a read restricted to those files, appended with the internal
+    * `replace` option, so the output keeps their max generation and the
+    * commit swaps exactly them — concurrent appends ride along. False
+    * when a concurrent commit replaced one of them first (merging would
+    * resurrect its rows as duplicates): nothing was published. */
+  private def rewrite(spark: SparkSession, path: String, files: Set[String],
+      maxSegBytes: Option[Long] = None): Boolean = {
+    val names = files.mkString(",")
+    val w = spark.read.format("graftkv").option("files", names).load(path)
+      .write.format("graftkv").option("replace", names).mode("append")
+    maxSegBytes.foreach(b => w.option("segment.maxBytes", b.toString))
+    try { w.save(path); true }
+    catch { case _: GraftKvRewriteConflict => false }
   }
 
   /** Read amplification of a point lookup: the largest number of live
@@ -417,11 +434,11 @@ object KvCommands {
     * (an LSM/region store's compaction-by-region, not a full-table
     * rewrite — at 100 TB the table never rewrites whole). Each connected
     * component of the segment-overlap graph with ≥ `minGroup` members is
-    * read back through a file-restricted scan, rewritten via the ordered
-    * write path into fresh disjoint segments, and swapped into the
-    * segment manifest atomically; disjoint segments are never touched.
-    * A crash mid-compaction leaves only orphan files the manifest
-    * excludes — readers never see duplicates.
+    * rewritten in place by [[rewrite]] into fresh disjoint segments,
+    * swapped into the manifest by the one commit CAS; disjoint segments
+    * are never touched. A group a concurrent compactor already replaced
+    * is skipped. A crash mid-compaction leaves only orphan files the
+    * manifest excludes — readers never see duplicates.
     *
     * Replaced segments are NOT deleted at the swap: they stay on disk
     * (invisible — the manifest excludes them) for `retainReplacedMs`,
@@ -431,7 +448,7 @@ object KvCommands {
     * unmanifested segment file older than the window, which also
     * reclaims crash orphans. Returns the number of segments rewritten. */
   def compactMinor(spark: SparkSession, path: String, minGroup: Int = 2,
-      retainReplacedMs: Long = 600000L): Int = {
+      retainReplacedMs: Long = RetainReplacedMs): Int = {
     val m = GraftKvMeta.read(path).getOrElse(
       throw new IllegalArgumentException(s"no graftkv table at $path"))
     val cmp = graft.store.RowCodec(m.schema, m.keys, m.encoding).compareKeys _
@@ -450,70 +467,9 @@ object KvCommands {
         groupMax = s.maxKey
       }
     }
-    val toRewrite = groups.filter(_.size >= math.max(minGroup, 2)).toSeq
-    var rewritten = 0
-    toRewrite.foreach { g =>
-      val files = g.map(_.file).toSet
-      val grouped = spark.read.format("graftkv")
-        .option("files", files.mkString(",")).load(path)
-      // replacement segments are produced in a scratch table (a hidden
-      // subdirectory of the table dir — the manifest hides it from
-      // readers, and dropTable sweeps it if a crash strands it) by the
-      // ordered range-shuffle write, then MOVED in — they become visible
-      // only at the manifest swap below
-      val tmp = SidecarFs.child(path,
-        s".compacting-${java.util.UUID.randomUUID().toString.take(8)}")
-      // replacement segments keep the group's max generation (same
-      // versions, reorganized) so gen-offset streams don't re-emit them
-      // the scratch dir has no persisted meta, so the table's declared
-      // codec and segment size must ride in explicitly
-      createTable(grouped, tmp, m.keys, m.encoding,
-        genOverride = Some(g.map(_.gen).max),
-        maxSegBytes = m.props.get(GraftKvMeta.SegmentMaxBytesProp).map(_.toLong),
-        compress = m.props.get(GraftKvMeta.SegmentCompressProp))
-      val moved = SegmentFile.listSegments(tmp).map(_.file)
-      moved.foreach { f =>
-        SidecarFs.move(SidecarFs.child(tmp, f), SidecarFs.child(path, f))
-        SidecarFs.move(SidecarFs.child(tmp, f.stripSuffix(".kv") + ".kvmeta"),
-          SidecarFs.child(path, f.stripSuffix(".kv") + ".kvmeta"))
-      }
-      // commit point (CAS): merge the swap into whatever the manifest
-      // says NOW — concurrent appends ride along untouched. If any of
-      // this group's inputs is no longer live (a concurrent compactor
-      // already replaced it), merging our rewrite would resurrect its
-      // rows as duplicates — abort THIS group instead and drop its
-      // replacement files; the concurrent maintainer owns that range.
-      val swapped = SegmentFile.commitManifest(path) { live =>
-        if (files.subsetOf(live)) Some(live -- files ++ moved) else None
-      }
-      if (swapped.isEmpty) {
-        moved.foreach { f =>
-          SidecarFs.deleteIfExists(SidecarFs.child(path, f))
-          SidecarFs.deleteIfExists(
-            SidecarFs.child(path, f.stripSuffix(".kv") + ".kvmeta"))
-        }
-      } else {
-        // replaced files stay on disk for the retention window (see
-        // scaladoc), invisible behind the manifest. Age them from their
-        // REPLACEMENT, not their write: the sweep's cutoff is
-        // mtime-based, and a segment written long ago would otherwise
-        // be reclaimed the instant it is replaced, voiding the grace
-        // window for in-flight scans and snapshots.
-        val now = System.currentTimeMillis()
-        files.foreach { f =>
-          // best-effort (read-only mounts just lose the grace window)
-          try {
-            SidecarFs.setMtime(SidecarFs.child(path, f), now)
-            SidecarFs.setMtime(
-              SidecarFs.child(path, f.stripSuffix(".kv") + ".kvmeta"), now)
-          } catch { case scala.util.control.NonFatal(_) => () }
-        }
-        rewritten += g.size
-      }
-      SidecarFs.list(tmp)
-        .foreach(n => SidecarFs.deleteIfExists(SidecarFs.child(tmp, n)))
-      SidecarFs.deleteQuiet(tmp)
-    }
+    val rewritten = groups.filter(_.size >= math.max(minGroup, 2))
+      .filter(g => rewrite(spark, path, g.map(_.file).toSet))
+      .map(_.size).sum
     if (rewritten > 0) sweepUnmanifested(path, retainReplacedMs)
     rewritten
   }

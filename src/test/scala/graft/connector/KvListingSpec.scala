@@ -53,10 +53,11 @@ class KvListingSpec extends AnyFunSuite {
     val (compacted, compactLists) =
       listings(spark.sql(s"COMPACT TABLE $t").head().getInt(0))
     assert(compacted > 0)
-    // one listing of the table directory (the sweep); the other two are
-    // of the compaction's scratch table (its overwrite commit's cleanup
-    // and its removal)
-    assert(compactLists == 3, s"COMPACT listed $compactLists times")
+    // the rewrite commits like any append; the only listing is the sweep
+    assert(compactLists == 1, s"COMPACT listed $compactLists times")
+    val (_, majorLists) =
+      listings(spark.sql(s"COMPACT TABLE $t MAJOR").collect())
+    assert(majorLists == 1, s"COMPACT MAJOR listed $majorLists times")
     val (_, vacuumLists) =
       listings(spark.sql(s"VACUUM TABLE $t RETAIN 0 MINUTES").collect())
     assert(vacuumLists == 1, s"VACUUM listed $vacuumLists times")
