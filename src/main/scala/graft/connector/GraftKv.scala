@@ -48,24 +48,24 @@ class GraftKvDataSource extends TableProvider with DataSourceRegister {
     val opts = new CaseInsensitiveStringMap(properties)
     val path = GraftKvDataSource.path(opts)
     val meta = GraftKvMeta.read(path)
-    val keys = meta.map(_.keys)
-      .orElse(Option(opts.get("key")).map(_.split(",").map(_.trim).toSeq))
+    val requested = Option(opts.get("encoding"))
+    val requestedKeys =
+      Option(opts.get("key")).map(_.split(",").map(_.trim).toSeq)
+    // key layout and encoding are fixed at table birth: existing segments
+    // (and every retained snapshot, which an overwrite keeps) are keyed
+    // and encoded the meta's way, so a CONFLICTING request must fail
+    // loudly, never be silently dropped. Re-key or re-encode = drop
+    // table (or new path) + rewrite.
+    def fixed(what: String, have: Option[String], want: Option[String]): Unit =
+      for (h <- have; w <- want if h != w) throw new IllegalArgumentException(
+        s"graftkv table at $path has $what '$h'; cannot open it with " +
+          s"$what '$w' — the $what is fixed at table creation (drop the " +
+          "table and rewrite to change it)")
+    fixed("key", meta.map(_.keys.mkString(",")), requestedKeys.map(_.mkString(",")))
+    fixed("encoding", meta.map(_.encoding), requested)
+    val keys = meta.map(_.keys).orElse(requestedKeys)
       .getOrElse(throw new IllegalArgumentException(
         "graftkv requires option key='col1,col2' on first write"))
-    // encoding is fixed at table birth: existing segments (even ones an
-    // overwrite is about to replace — truncate keeps concurrent readers'
-    // segments decodable until commit) are encoded with the meta's
-    // codec, so a CONFLICTING request must fail loudly, never be
-    // silently dropped. Re-encode = drop table (or new path) + rewrite.
-    val requested = Option(opts.get("encoding"))
-    (meta.map(_.encoding), requested) match {
-      case (Some(have), Some(want)) if have != want =>
-        throw new IllegalArgumentException(
-          s"graftkv table at $path is encoded '$have'; cannot open it as " +
-            s"'$want' — encoding is fixed at table creation (drop the " +
-            "table and rewrite to change it)")
-      case _ => ()
-    }
     val encoding = meta.map(_.encoding)
       .orElse(requested)
       .getOrElse(graft.store.RowCodec.Binary)
@@ -344,8 +344,9 @@ class GraftKvTable(path: String, tableSchema: StructType, keys: Seq[String],
     val tombstone = Option(info.options.get("tombstone")).exists(_.toBoolean)
     // internal: a rewrite (compaction) names the live files it replaces;
     // its commit swaps them for its own (GraftKvCommitProtocol)
-    val replace = Option(info.options.get("replace"))
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val replaces: KvReplace = Option(info.options.get("replace"))
+      .map(s => KvReplace.Files(s.split(",").map(_.trim).filter(_.nonEmpty).toSet))
+      .getOrElse(KvReplace.NoFiles)
     // z-clustered create: the dim specs whose Morton interleave is the
     // _z lead (serialized ZDim list from createZOrderTable)
     val zorder = Option(info.options.get("zorder")).map { s =>
@@ -369,10 +370,8 @@ class GraftKvTable(path: String, tableSchema: StructType, keys: Seq[String],
         s"${GraftKvMeta.SegmentCompressProp}='$c' — expected one of " +
           graft.store.SegmentFile.Compression.Names.mkString(" | "))
     }
-    new GraftKvWriteBuilder(path, info.schema(), keys, truncate = false,
-      encoding = encoding, maxSegBytes = maxSegBytes, tombstone = tombstone,
-      replace = replace, queryId = info.queryId(), zorder = zorder,
-      tableProps = props)
+    new GraftKvWriteBuilder(path, info.schema(), keys, encoding, maxSegBytes,
+      tombstone, replaces, info.queryId(), zorder, props)
   }
 }
 
@@ -2093,10 +2092,10 @@ class GraftKvMicroBatchStream(path: String, schema: StructType,
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit, ReadMaxFiles}
 
-  /** Monotonic guard: a truncate/overwrite resets generations to 1;
+  /** Monotonic guard: a RESTORE can lower the live max generation;
     * clamping keeps offsets non-decreasing (the stream stays silent
     * until new commits pass the old offset — restart the query after
-    * an overwrite, as with any file-based source). */
+    * a restore, as with any file-based source). */
   @volatile private var maxSeen = 0L
 
   private def liveSegs: Seq[SegmentFile.Meta] =
@@ -2725,9 +2724,9 @@ class GraftKvColumnarReader(p: GraftKvInputPartition, schema: StructType,
 // ── write path ───────────────────────────────────────────────────────────
 
 class GraftKvWriteBuilder(path: String, schema: StructType, keys: Seq[String],
-    truncate: Boolean, encoding: String = graft.store.RowCodec.Binary,
+    encoding: String = graft.store.RowCodec.Binary,
     maxSegBytes: Long = GraftKvDataWriter.DefaultMaxSegmentBytes,
-    tombstone: Boolean = false, replace: Option[Set[String]] = None,
+    tombstone: Boolean = false, replaces: KvReplace = KvReplace.NoFiles,
     queryId: String = "", zorder: Seq[graft.codec.ZDim] = Nil,
     tableProps: Map[String, String] = Map.empty)
     extends WriteBuilder with SupportsTruncate {
@@ -2737,11 +2736,12 @@ class GraftKvWriteBuilder(path: String, schema: StructType, keys: Seq[String],
     // makes the write schema authoritative, so forwarding the flag would
     // replace the table with a key-only shell, and dropping it would
     // store the markers as rows — fail instead of corrupting either way
-    if (tombstone || replace.nonEmpty) throw new IllegalArgumentException(
-      "tombstone and replace writes append; combining them with " +
-        "overwrite would truncate the table — use mode(\"append\")")
-    new GraftKvWriteBuilder(path, schema, keys, truncate = true, encoding,
-      maxSegBytes, queryId = queryId, zorder = zorder, tableProps = tableProps)
+    if (tombstone || replaces != KvReplace.NoFiles)
+      throw new IllegalArgumentException(
+        "tombstone and replace writes append; combining them with " +
+          "overwrite would truncate the table — use mode(\"append\")")
+    new GraftKvWriteBuilder(path, schema, keys, encoding, maxSegBytes,
+      tombstone, KvReplace.AllLive, queryId, zorder, tableProps)
   }
 
   private def zoneMaxChars: Int =
@@ -2769,26 +2769,21 @@ class GraftKvWriteBuilder(path: String, schema: StructType, keys: Seq[String],
       else Array.empty
 
     // This write's commit GENERATION (driver-side, under the one-writer
-    // contract): one more than the newest live segment's. Readers use it
-    // for last-write-wins merge when later appends overlap older
-    // segments — the HBase cell-timestamp analog, with a deterministic
-    // total order instead of wall clocks. A rewrite keeps the max
-    // generation of the segments it replaces: the output holds the SAME
-    // versions, so stamping it "newer" would lie to streaming readers
-    // (whose offsets are generations) and re-emit old rows.
-    private val gen: Long =
-      if (truncate) 1L
-      else {
-        val live = try SegmentFile.listSegments(path)
-          catch { case _: Exception => Seq.empty[SegmentFile.Meta] }
-        replace.filter(_.nonEmpty) match {
-          case Some(r) =>
-            val hit = live.filter(m => r.contains(m.file))
-            if (hit.size < r.size) throw new GraftKvRewriteConflict(path)
-            hit.map(_.gen).max
-          case None => live.map(_.gen).maxOption.getOrElse(0L) + 1L
-        }
-      }
+    // contract): one more than the newest live segment's, for an append
+    // and an overwrite alike. Readers use it for last-write-wins merge
+    // when later appends overlap older segments — the HBase
+    // cell-timestamp analog, with a deterministic total order instead of
+    // wall clocks — and streaming readers use it as their offset. A
+    // rewrite keeps the max generation of the segments it replaces: the
+    // output holds the SAME versions, so stamping it "newer" would lie
+    // to streaming readers and re-emit old rows.
+    private val gen: Long = replaces match {
+      case KvReplace.Files(r) if r.nonEmpty =>
+        val hit = SegmentFile.listSegments(path).filter(m => r.contains(m.file))
+        if (hit.size < r.size) throw new GraftKvRewriteConflict(path)
+        hit.map(_.gen).max
+      case _ => GraftKvCommitProtocol.nextGen(path)
+    }
 
     // Global range partitioning on the LEADING key dimension only + full
     // composite-key sort within partitions = declarative bulk-load
@@ -2807,9 +2802,10 @@ class GraftKvWriteBuilder(path: String, schema: StructType, keys: Seq[String],
       * epoch-idempotent Put appends (GraftKvStreamSink.scala). */
     override def toStreaming
         : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-      if (truncate || tombstone) throw new UnsupportedOperationException(
-        "streaming kv writes are append-only Puts " +
-          "(no complete-mode truncate, no tombstone streams)")
+      if (replaces == KvReplace.AllLive || tombstone)
+        throw new UnsupportedOperationException(
+          "streaming kv writes are append-only Puts " +
+            "(no complete-mode truncate, no tombstone streams)")
       new GraftKvStreamingWrite(path, schema, keys, encoding, queryId,
         maxSegBytes)
     }
@@ -2824,29 +2820,10 @@ class GraftKvWriteBuilder(path: String, schema: StructType, keys: Seq[String],
           tombstone, zoneMaxChars = zoneMaxChars, compress = compress)
       }
 
-      override def commit(messages: Array[WriterCommitMessage]): Unit = {
-        val committed = messages.collect {
-          case GraftKvCommit(files) => files
-        }.flatten.toSet
-        if (truncate) {
-          // overwrite: the manifest swap is still the commit point —
-          // manifest FIRST, deletes after, so a reader always sees
-          // either the old committed set or the new one, and a crash
-          // between swap and delete leaves only orphans the manifest
-          // already excludes. The write schema is authoritative here
-          // (all data is replaced).
-          graft.store.SegmentFile.writeManifest(path, committed)
-          SidecarFs.list(path)
-            .filter(n => (n.endsWith(".kv") || n.endsWith(".kvmeta")) &&
-              !committed.contains(n.stripSuffix("meta").stripSuffix(".kv") + ".kv"))
-            .foreach(n => SidecarFs.deleteIfExists(SidecarFs.child(path, n)))
-          GraftKvMeta.write(path, schema, keys, encoding, zorder, tableProps)
-        } else {
-          // append or rewrite: the shared protocol (GraftKvCommitProtocol)
-          GraftKvCommitProtocol.commitAppend(path, committed, schema, keys,
-            encoding, replace.getOrElse(Set.empty))
-        }
-      }
+      override def commit(messages: Array[WriterCommitMessage]): Unit =
+        GraftKvCommitProtocol.commit(path,
+          messages.collect { case GraftKvCommit(files) => files }.flatten.toSet,
+          KvTableMeta(schema, keys, encoding, zorder, tableProps), replaces)
 
       override def abort(messages: Array[WriterCommitMessage]): Unit =
         GraftKvCommitProtocol.abortFiles(path, messages)
@@ -2856,33 +2833,57 @@ class GraftKvWriteBuilder(path: String, schema: StructType, keys: Seq[String],
 
 final case class GraftKvCommit(files: Seq[String]) extends WriterCommitMessage
 
+/** What a write's commit replaces: nothing (an append), the named live
+  * files (a rewrite — it aborts unless all are still live), or
+  * everything live at its CAS base (an overwrite). */
+private[connector] sealed trait KvReplace
+private[connector] object KvReplace {
+  case object NoFiles extends KvReplace
+  final case class Files(names: Set[String]) extends KvReplace
+  case object AllLive extends KvReplace
+}
+
 /** A rewrite (internal `replace=<files>` write) found a file it replaces
   * no longer live — a concurrent commit replaced it first. */
 final class GraftKvRewriteConflict(path: String) extends IllegalStateException(
   s"a segment the rewrite of $path replaces is no longer live; " +
     "nothing was published")
 
-/** The commit protocol, shared by the batch append/rewrite, the delta
-  * (row-level DML) writes and the stream sink so they can never drift:
-  * manifest-FIRST swap of prevLive − replaced ++ committed (an append
-  * replaces nothing) — a reader always sees either the old committed
-  * set or the new one, and a crash after the swap leaves only orphans
-  * the manifest already excludes — then a meta refresh that preserves
-  * the DECLARED schema (an append must not let the write's input schema
-  * replace the table's: INSERT VALUES resolves literals non-nullable,
-  * and tightened nullability makes codegen read genuinely null columns
-  * as 0). */
+/** The commit protocol, shared by the batch append/rewrite/overwrite,
+  * the delta (row-level DML) writes and the stream sink so they can
+  * never drift: manifest-FIRST swap of base − replaced ++ committed — a
+  * reader always sees either the old committed set or the new one, and
+  * a crash after the swap leaves only orphans the manifest already
+  * excludes — then a meta refresh. The first write declares the
+  * table's meta; appends and rewrites preserve it (the write's input
+  * schema must not replace the table's: INSERT VALUES resolves literals
+  * non-nullable, and tightened nullability makes codegen read genuinely
+  * null columns as 0); an overwrite replaces everything, so its own
+  * schema, z-order and properties become the table's. */
 private[connector] object GraftKvCommitProtocol {
-  def commitAppend(path: String, committed: Set[String],
-      writeSchema: StructType, keys: Seq[String], encoding: String,
-      replaced: Set[String] = Set.empty): Unit = {
+  /** One more than the newest live segment's generation: the commit
+    * generation of an append, an overwrite and a DML write alike. */
+  def nextGen(path: String): Long =
+    (try SegmentFile.listSegments(path).map(_.gen)
+    catch { case _: Exception => Seq.empty[Long] }).maxOption.getOrElse(0L) + 1L
+
+  def commit(path: String, committed: Set[String], write: KvTableMeta,
+      replaces: KvReplace = KvReplace.NoFiles): Unit = {
     // optimistic CAS (SegmentFile.commitManifest): concurrent committers
     // each publish their own swap at a fresh version — a lost race
-    // re-reads, so no committer drops another's segments. A replay
-    // whose files are already live publishes nothing (no-op detection).
-    // A rewrite whose replaced files are not all live publishes nothing
-    // and fails; Spark's abort then deletes its files.
+    // re-reads, so no appender drops another's segments. A replay whose
+    // files are already live publishes nothing (no-op detection). A
+    // rewrite whose replaced files are not all live publishes nothing
+    // and fails; Spark's abort then deletes its files. An overwrite
+    // replaces whatever its winning attempt read — last writer wins,
+    // and the overwritten commit stays a retained snapshot.
+    var replaced = Set.empty[String]
     val swapped = SegmentFile.commitManifest(path) { base =>
+      replaced = replaces match {
+        case KvReplace.NoFiles => Set.empty
+        case KvReplace.Files(r) => r
+        case KvReplace.AllLive => base
+      }
       if (replaced.subsetOf(base)) Some(base -- replaced ++ committed) else None
     }
     if (swapped.isEmpty) throw new GraftKvRewriteConflict(path)
@@ -2899,11 +2900,29 @@ private[connector] object GraftKvCommitProtocol {
       } catch { case scala.util.control.NonFatal(_) => () }
     }
     val prev = GraftKvMeta.read(path)
-    val declared = prev.map(_.schema).getOrElse(writeSchema)
-    // appends preserve the table's z-clustering declaration + properties
-    GraftKvMeta.write(path, declared, keys, encoding,
-      prev.map(_.zorder).getOrElse(Nil),
-      prev.map(_.props).getOrElse(Map.empty))
+    val meta = prev match {
+      case Some(p) if replaces != KvReplace.AllLive => p
+      case Some(p) =>
+        // never tighten a column to NOT NULL: the overwritten snapshot
+        // stays readable (a column it lacks reads as null), and INSERT
+        // OVERWRITE VALUES resolves its literals non-nullable
+        val strict = p.schema.filterNot(_.nullable).map(_.name).toSet
+        write.copy(schema = StructType(write.schema.map(f =>
+          f.copy(nullable = f.nullable || !strict(f.name)))))
+      case None => write
+    }
+    GraftKvMeta.write(path, meta.schema, meta.keys, meta.encoding,
+      meta.zorder, meta.props)
+    if (replaces == KvReplace.AllLive) {
+      // retained snapshots hold `_z` codes of their own normalization: a
+      // RESTORE of one would meet live z-pruning under the new specs
+      if (prev.exists(_.zorder != meta.zorder))
+        SegmentFile.pruneManifestVersions(path, Long.MaxValue)
+      // the one reclamation path: a table that is only ever overwritten
+      // (index and matview rebuilds, repeated CREATE) stays bounded
+      if (replaced.nonEmpty)
+        KvCommands.sweepUnmanifested(path, KvCommands.RetainReplacedMs)
+    }
   }
 
   def abortFiles(path: String, messages: Array[WriterCommitMessage]): Unit =

@@ -84,9 +84,10 @@ class GraftKvCatalog extends TableCatalog with SupportsNamespaces {
 
   /** Time travel: `SELECT … FROM graft.db.t VERSION AS OF n` — Spark
     * routes the version literal here; `n` is a snapshot manifest version
-    * (one per commit, see SegmentFile.writeManifest). The snapshot is a
+    * (one per commit, see SegmentFile.commitManifest). The snapshot is a
     * frozen read-only view listed from its retained manifest; it stays
-    * readable through compaction's retention window. */
+    * readable through the retention window of compaction and overwrite,
+    * which both keep the files they replace. */
   override def loadTable(ident: Identifier, version: String): Table =
     GraftKvMeta.read(tableDir(ident)) match {
       case Some(m) =>

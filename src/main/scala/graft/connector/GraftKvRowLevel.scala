@@ -62,20 +62,17 @@ class GraftKvDeltaWrite(path: String, schema: StructType, keys: Seq[String],
     encoding: String, idSchema: StructType) extends DeltaWrite {
 
   override def toBatch: DeltaBatchWrite = new DeltaBatchWrite {
-    // driver-side generation claim, one-writer contract (same rule as
-    // GraftKvWriteBuilder): tombstones at gen, puts at gen+1
-    private val gen: Long =
-      (try graft.store.SegmentFile.listSegments(path).map(_.gen)
-      catch { case _: Exception => Seq.empty[Long] })
-        .maxOption.getOrElse(0L) + 1L
+    // driver-side generation claim, one-writer contract (the rule every
+    // writer shares): tombstones at gen, puts at gen+1
+    private val gen: Long = GraftKvCommitProtocol.nextGen(path)
 
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
       new GraftKvDeltaWriterFactory(path, schema, keys, encoding, idSchema, gen)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit =
-      GraftKvCommitProtocol.commitAppend(path,
+      GraftKvCommitProtocol.commit(path,
         messages.collect { case GraftKvCommit(files) => files }.flatten.toSet,
-        schema, keys, encoding)
+        KvTableMeta(schema, keys, encoding))
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =
       GraftKvCommitProtocol.abortFiles(path, messages)

@@ -44,10 +44,7 @@ class GraftKvStreamingWrite(path: String, schema: StructType,
     maxSegBytes: Long = GraftKvDataWriter.DefaultMaxSegmentBytes)
     extends StreamingWrite {
 
-  private val baseGen: Long =
-    (try graft.store.SegmentFile.listSegments(path).map(_.gen)
-    catch { case _: Exception => Seq.empty[Long] })
-      .maxOption.getOrElse(0L)
+  private val baseGen: Long = GraftKvCommitProtocol.nextGen(path) - 1L
 
   // z-clustered sink: a stream writes the LOGICAL schema and the sink
   // derives the `_z` lead per row from the table's persisted dim specs
@@ -67,6 +64,8 @@ class GraftKvStreamingWrite(path: String, schema: StructType,
   private def done(epochId: Long) =
     SidecarFs.child(path, s"._graft_epoch-$queryId-$epochId.done")
 
+  private def writeMeta = KvTableMeta(schema, keys, encoding)
+
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
     val fresh = messages.collect {
@@ -81,19 +80,19 @@ class GraftKvStreamingWrite(path: String, schema: StructType,
       val prior = SidecarFs.readString(intent(epochId))
         .split("\n").filter(_.nonEmpty).toSet
       if (prior.forall(f => SidecarFs.exists(SidecarFs.child(path, f)))) {
-        GraftKvCommitProtocol.commitAppend(path, prior, schema, keys, encoding)
+        GraftKvCommitProtocol.commit(path, prior, writeMeta)
         markDone(epochId)
         GraftKvCommitProtocol.abortFiles(path, messages)
       } else {
         // the first attempt's files were aborted away — the replay's
         // (identical, sources replay deterministically) batch commits
         writeIntent(epochId, fresh)
-        GraftKvCommitProtocol.commitAppend(path, fresh, schema, keys, encoding)
+        GraftKvCommitProtocol.commit(path, fresh, writeMeta)
         markDone(epochId)
       }
     } else {
       writeIntent(epochId, fresh)
-      GraftKvCommitProtocol.commitAppend(path, fresh, schema, keys, encoding)
+      GraftKvCommitProtocol.commit(path, fresh, writeMeta)
       markDone(epochId)
     }
     // GC: only the LATEST epoch can ever be re-offered; older markers

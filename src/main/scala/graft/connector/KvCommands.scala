@@ -17,7 +17,10 @@ object KvCommands {
 
   /** O1: CREATE TABLE ... (+ initial data). The key columns are the
     * composite primary key, in order; `encoding` picks the per-table
-    * codec (binary | stringformat, reference DDL `IN stringformat`). */
+    * codec (binary | stringformat, reference DDL `IN stringformat`).
+    * Onto an existing table (same key and encoding) it is an overwrite:
+    * one commit replaces everything live, and the previous version
+    * stays a retained snapshot. */
   def createTable(df: DataFrame, path: String, keys: Seq[String],
       encoding: String = graft.store.RowCodec.Binary,
       zorder: Seq[graft.codec.ZDim] = Nil,
@@ -82,14 +85,7 @@ object KvCommands {
     }
     val withZ = df.withColumn("_z",
       graft.functions.ZValue.forDims(zdims, dims.map(df(_))))
-    val w = withZ.write.format("graftkv")
-      .option("key", ("_z" +: dims).mkString(","))
-      .option("zorder", ZDim.serialize(zdims))
-      .option("encoding", encoding)
-      .mode("overwrite")
-    maxSegBytes.foreach(b => w.option("segment.maxBytes", b.toString))
-    compress.foreach(c => w.option(GraftKvMeta.SegmentCompressProp, c))
-    w.save(path)
+    createTable(withZ, path, "_z" +: dims, encoding, zdims, maxSegBytes, compress)
   }
 
   /** Read back (the relation itself). */
@@ -387,8 +383,9 @@ object KvCommands {
     sweepUnmanifested(path, RetainReplacedMs)
   }
 
-  /** How long compaction keeps the segments it replaced on disk. */
-  private val RetainReplacedMs = 600000L
+  /** How long compaction and overwrites keep the segments they replaced
+    * on disk. */
+  private[connector] val RetainReplacedMs = 600000L
 
   /** Rewrite the live segments `files` of `path` into fresh sorted ones:
     * a read restricted to those files, appended with the internal

@@ -286,9 +286,9 @@ object KvIndex {
     * diff since its watermark: outdated entries tombstone out, new
     * values append — both ordinary index-table commits, sized by the
     * delta. No-op when already in sync. When the watermark snapshot is
-    * no longer reconstructible — an overwrite deletes replaced files
-    * at commit, and old manifests expire past the retention window or
-    * count — the incremental path cannot diff, and the
+    * no longer reconstructible — old manifests expire past the
+    * retention window or count, and the sweep then reclaims the files
+    * only they listed — the incremental path cannot diff, and the
     * refresh falls back to a FULL REBUILD from the current snapshot
     * (the same cost as CREATE INDEX; a half-applied incremental leaves
     * the watermark untouched, so the index just stays invisible to the

@@ -893,9 +893,10 @@ object SegmentFile {
       files.toSeq.sorted.mkString("\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
-  /** Publish `files` as the new live set unconditionally (overwrite /
-    * compaction-pin semantics — not a read-modify-write). Identical
-    * content on an already-versioned table is a no-op. */
+  /** Publish `files` as the new live set unconditionally — not a
+    * read-modify-write (CLONE's frozen copy, the empty seed of a
+    * catalog CREATE, bench fixtures). Identical content on an
+    * already-versioned table is a no-op. */
   def writeManifest(dir: String, files: Iterable[String]): Unit = {
     val set = files.toSet
     commitManifest(dir)(_ => Some(set))

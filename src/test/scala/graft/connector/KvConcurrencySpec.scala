@@ -199,8 +199,8 @@ class KvConcurrencySpec extends AnyFunSuite {
       }
       w.commit() match {
         case GraftKvCommit(files) =>
-          GraftKvCommitProtocol.commitAppend(path, files.toSet, schema,
-            Seq("k"), graft.store.RowCodec.Binary)
+          GraftKvCommitProtocol.commit(path, files.toSet,
+            KvTableMeta(schema, Seq("k"), graft.store.RowCodec.Binary))
       }
     }
     val segsBefore = graft.store.SegmentFile.listSegments(path).size
@@ -302,8 +302,8 @@ class KvConcurrencySpec extends AnyFunSuite {
       }
       w.commit() match {
         case GraftKvCommit(files) =>
-          GraftKvCommitProtocol.commitAppend(path, files.toSet, schema,
-            Seq("k"), graft.store.RowCodec.Binary)
+          GraftKvCommitProtocol.commit(path, files.toSet,
+            KvTableMeta(schema, Seq("k"), graft.store.RowCodec.Binary))
       }
     }
     assert(child.waitFor(120, TimeUnit.SECONDS), "child JVM timed out")

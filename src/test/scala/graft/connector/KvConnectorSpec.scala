@@ -404,6 +404,24 @@ class KvConnectorSpec extends AnyFunSuite {
     assert(rows.length == 1 && rows.head.getLong(0) == 9L)
   }
 
+  test("a key option that conflicts with the table's key fails loudly") {
+    val path = tmpTable()
+    KvCommands.createTable(Seq((1L, "a")).toDF("k", "v"), path, Seq("k"))
+    val e = intercept[IllegalArgumentException] {
+      KvCommands.createTable(Seq((2L, "b")).toDF("k", "v"), path, Seq("v"))
+    }
+    assert(e.getMessage.contains("has key 'k'") &&
+      e.getMessage.contains("fixed at table creation"), e.getMessage)
+    // nothing was written: the table still holds its one row, keyed k
+    assert(KvCommands.table(spark, path).collect().map(_.getLong(0)).toSeq ==
+      Seq(1L))
+    assert(GraftKvMeta.read(path).map(_.keys).contains(Seq("k")))
+    // restating the table's own key (spaces aside) still overwrites
+    KvCommands.createTable(Seq((3L, "c")).toDF("k", "v"), path, Seq(" k "))
+    assert(KvCommands.table(spark, path).collect().map(_.getLong(0)).toSeq ==
+      Seq(3L))
+  }
+
   test("compaction merges overlapping appended segments, preserving data") {
     val path = tmpTable()
     KvCommands.createTable(

@@ -25,8 +25,8 @@ object KvCrossProcessMain {
       }
       w.commit() match {
         case GraftKvCommit(files) =>
-          GraftKvCommitProtocol.commitAppend(path, files.toSet, schema,
-            Seq("k"), graft.store.RowCodec.Binary)
+          GraftKvCommitProtocol.commit(path, files.toSet,
+            KvTableMeta(schema, Seq("k"), graft.store.RowCodec.Binary))
       }
     }
   }

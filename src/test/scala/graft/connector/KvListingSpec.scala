@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The manifest is a table's only metadata authority, found from the
   * durable head hint by existence probes: commits, plans and history
   * reads never list the table directory. Only the retention sweep
-  * (COMPACT's and VACUUM's) lists it, once. */
+  * (COMPACT's, VACUUM's and an overwrite's) lists it, once. */
 class KvListingSpec extends AnyFunSuite {
   private lazy val spark = {
     val s = TestSpark.spark
@@ -62,6 +62,22 @@ class KvListingSpec extends AnyFunSuite {
       listings(spark.sql(s"VACUUM TABLE $t RETAIN 0 MINUTES").collect())
     assert(vacuumLists == 1, s"VACUUM listed $vacuumLists times")
     assert(answers() == want)
+    // an overwrite of a populated table replaces through the same CAS;
+    // its one listing is the sweep that reclaims what it replaced
+    val (_, overwriteLists) =
+      listings(spark.sql(s"INSERT OVERWRITE $t VALUES (5, 'e', 50)"))
+    assert(overwriteLists == 1, s"INSERT OVERWRITE listed $overwriteLists times")
+    assert(spark.sql(s"SELECT k FROM $t").collect().map(_.getLong(0)).toSeq ==
+      Seq(5L))
     spark.sql(s"DROP TABLE $t")
+  }
+
+  test("createTable at a fresh path lists nothing") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("graft_listing_fresh").toString + "/t"
+    val (_, lists) = listings(KvCommands.createTable(
+      Seq((1L, "a"), (2L, "b")).toDF("k", "v"), path, Seq("k")))
+    assert(lists == 0, s"createTable at a fresh path listed $lists times")
+    assert(KvCommands.table(spark, path).count() == 2)
   }
 }

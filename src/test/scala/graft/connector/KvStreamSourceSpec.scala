@@ -56,6 +56,29 @@ class KvStreamSourceSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("an overwrite and the append after it both stream") {
+    val path = Files.createTempDirectory("graftkv_stream_ow").toString + "/t"
+    KvCommands.createTable(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"),
+      path, Seq("k"))
+    val q = spark.readStream.format("graftkv").load(path)
+      .writeStream.format("memory").queryName("kv_src_overwrite")
+      .option("checkpointLocation",
+        Files.createTempDirectory("graftkv_stream_ow_ckpt").toString)
+      .start()
+    try {
+      def rows(): Seq[(Long, String)] = {
+        q.processAllAvailable()
+        spark.table("kv_src_overwrite").as[(Long, String)].collect().toSeq.sorted
+      }
+      assert(rows().length == 3)
+      // the overwrite commits at the next generation, like an append
+      KvCommands.createTable(Seq((4L, "d")).toDF("k", "v"), path, Seq("k"))
+      assert(rows().length == 4)
+      KvCommands.append(Seq((5L, "e")).toDF("k", "v"), path)
+      assert(rows() == Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"), (5L, "e")))
+    } finally q.stop()
+  }
+
   test("maxFilesPerTrigger paces a backlog commit-by-commit") {
     val path = Files.createTempDirectory("graftkv_stream_adm").toString + "/t"
     KvCommands.createTable(Seq((0L, "s")).toDF("k", "v"), path, Seq("k"))

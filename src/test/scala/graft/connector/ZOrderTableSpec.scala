@@ -188,8 +188,9 @@ class ZOrderTableSpec extends AnyFunSuite {
 
   test("snapshot reads never narrow with current z specs") {
     // a retained snapshot could predate a spec change (defense-in-depth:
-    // today every re-create also deletes the old files, but the frozen
-    // view must never depend on the CURRENT meta's normalization), so z
+    // today a re-create that changes the normalization retires the older
+    // snapshots, but the frozen view must never depend on the CURRENT
+    // meta's normalization), so z
     // narrowing is off for snapshot scans — results still exact via
     // residuals, pruning deliberately foregone
     val path = tmpTable()
@@ -215,6 +216,30 @@ class ZOrderTableSpec extends AnyFunSuite {
       .select("a", "b", "v").collect().map(_.toSeq).toSet
     val got = KvCommands.tableAsOf(spark, path, v1)
       .filter(col("a").between(10, 19) && col("b").between(30, 39))
+      .select("a", "b", "v").collect().map(_.toSeq).toSet
+    assert(got == exp)
+  }
+
+  test("a re-create with a new normalization retires the older snapshots") {
+    val path = tmpTable()
+    KvCommands.createZOrderTable(grid, path, Seq("a", "b"))
+    KvCommands.append(grid.filter(col("a") === 0L).select(
+      col("a"), col("b"), lit(-1L).as("v")), path)
+    val old = KvCommands.snapshots(path).last
+    val oldSpecs = GraftKvMeta.read(path).get.zorder
+    // a moved range changes dim a's minCode: live z-pruning under the
+    // new specs must never meet a restored old-spec segment
+    val wide = grid.select((col("a") + 5000).as("a"), col("b"), col("v"))
+    KvCommands.createZOrderTable(wide, path, Seq("a", "b"))
+    assert(GraftKvMeta.read(path).get.zorder != oldSpecs)
+    assert(KvCommands.snapshots(path).size == 1)
+    val e = intercept[IllegalArgumentException](
+      KvCommands.restoreTable(path, old))
+    assert(e.getMessage.contains("no snapshot"), e.getMessage)
+    val exp = wide.filter(col("a").between(5010, 5019) && col("b") < 5)
+      .collect().map(_.toSeq).toSet
+    val got = KvCommands.table(spark, path)
+      .filter(col("a").between(5010, 5019) && col("b") < 5)
       .select("a", "b", "v").collect().map(_.toSeq).toSet
     assert(got == exp)
   }
