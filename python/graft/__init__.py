@@ -77,7 +77,7 @@ class GraftSession:
     @staticmethod
     def table_as_of(spark, name, version):
         """Time travel: the catalog table as of snapshot `version`
-        (one snapshot per commit; see SegmentFile.writeManifest)."""
+        (one snapshot per commit; see SegmentFile.commitManifest)."""
         return spark.sql("SELECT * FROM %s VERSION AS OF %d" % (name, version))
 
     @staticmethod

@@ -33,14 +33,14 @@ object Bench {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val schema = StructType(Seq(StructField("k", LongType, nullable = false),
       StructField("v", LongType, nullable = false)))
-    if (new java.io.File(dir, "_graft_meta.json").exists() &&
+    if (fixtureExists(dir) &&
       (!graft.store.SegmentFile.ndvSketches(dir).values.headOption
         .exists(_.exists(_.name == "v")) ||
         !graft.store.SegmentFile.qsSketches(dir).values.headOption
           .exists(_.exists(_.name == "v")))) {
       graft.connector.KvCommands.dropTable(dir)
     }
-    if (new java.io.File(dir, "_graft_meta.json").exists()) return
+    if (fixtureExists(dir)) return
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     val codec = graft.store.RowCodec(schema, Seq("k"))
     val hll = new org.apache.spark.sql.catalyst.util.HyperLogLogPlusPlusHelper(
@@ -77,9 +77,23 @@ object Bench {
           graft.store.SegmentFile.QuantileSketch.fromSummaries("v", qsV)))
       s"$name.kv"
     }
-    graft.connector.GraftKvMeta.write(dir, schema, Seq("k"))
-    graft.store.SegmentFile.writeManifest(dir, names)
+    commitFixture(dir, graft.connector.KvTableMeta(schema, Seq("k"),
+      graft.store.RowCodec.Binary), names)
   }
+
+  /** A kv fixture left by an earlier run; a directory holding one in
+    * another layout is dropped, so the caller rebuilds it. */
+  private def fixtureExists(dir: String): Boolean =
+    graft.Tables.kvFixtureMeta(dir).isDefined || {
+      graft.connector.KvCommands.dropTable(dir)
+      false
+    }
+
+  /** Publish hand-written segments as a fixture table's first version. */
+  private def commitFixture(dir: String, meta: graft.connector.KvTableMeta,
+      names: Seq[String]): Unit =
+    graft.store.SegmentFile.createManifest(dir, graft.store.SegmentFile.Manifest(
+      graft.connector.GraftKvMeta.encode(meta), names.toSet)): Unit
 
   /** Headline set: one representative per operator family, weighted
     * toward the scans/joins/aggs that dominate 100 TB workloads. */
@@ -502,7 +516,7 @@ object Bench {
       // rebuild a leftover fixture the NDV and percentile probes cannot
       // use: segments without sketches, or sidecars in an older format
       // (which fail to open)
-      if (new java.io.File(dir, "_graft_meta.json").exists() &&
+      if (fixtureExists(dir) &&
         !scala.util.Try(
           graft.store.SegmentFile.ndvSketches(dir).values.headOption
             .exists(_.exists(_.name == "v")) &&
@@ -640,7 +654,7 @@ object Bench {
     val skipscanJson = try {
       import org.apache.spark.sql.functions.{col, pmod, lit}
       val dir = s"$repoRoot/tmp/benchskipscan"
-      if (!new java.io.File(dir, "_graft_meta.json").exists()) {
+      if (!fixtureExists(dir)) {
         graft.connector.KvCommands.createTable(
           spark.range(4000000L).select(
             (col("id") / 250000L).cast("long").as("k1"),
@@ -718,7 +732,7 @@ object Bench {
       val zdims = Seq(
         graft.codec.ZDim("a", graft.codec.ZOrder.codeLong(0L), 0),
         graft.codec.ZDim("b", graft.codec.ZOrder.codeLong(0L), 0))
-      if (!new java.io.File(dir, "_graft_meta.json").exists()) {
+      if (!fixtureExists(dir)) {
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
         val codec = graft.store.RowCodec(schema, keys)
         val total = 1024L * 1024L
@@ -748,8 +762,8 @@ object Bench {
           w.close()
           s"$name.kv"
         }
-        graft.connector.GraftKvMeta.write(dir, schema, keys, zorder = zdims)
-        graft.store.SegmentFile.writeManifest(dir, names)
+        commitFixture(dir, graft.connector.KvTableMeta(schema, keys,
+          graft.store.RowCodec.Binary, zdims), names)
       }
       // deliberately UNALIGNED to the quadtree cells — the worst-case
       // cover shape, so `touched` is an honest upper bound

@@ -36,7 +36,7 @@ class GraftKvDataSource extends TableProvider with DataSourceRegister {
   override def supportsExternalMetadata(): Boolean = true
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    GraftKvMeta.read(GraftKvDataSource.path(options)) match {
+    GraftKvDataSource.meta(options) match {
       case Some(m) => m.schema
       case None => throw new IllegalArgumentException(
         s"graftkv table at ${GraftKvDataSource.path(options)} has no metadata; " +
@@ -47,23 +47,28 @@ class GraftKvDataSource extends TableProvider with DataSourceRegister {
       properties: java.util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
     val path = GraftKvDataSource.path(opts)
-    val meta = GraftKvMeta.read(path)
+    val meta = GraftKvDataSource.meta(opts)
     val requested = Option(opts.get("encoding"))
     val requestedKeys =
       Option(opts.get("key")).map(_.split(",").map(_.trim).toSeq)
-    // key layout and encoding are fixed at table birth: existing segments
-    // (and every retained snapshot, which an overwrite keeps) are keyed
-    // and encoded the meta's way, so a CONFLICTING request must fail
-    // loudly, never be silently dropped. Re-key or re-encode = drop
-    // table (or new path) + rewrite.
+    // key layout and encoding are fixed at table birth: appends and
+    // rewrites keep the table's declaration, so a CONFLICTING request
+    // must fail loudly, never be silently dropped. Re-key or re-encode =
+    // drop table (or new path) + rewrite. The one exception is the
+    // z-order conversion's conditional overwrite (`replace` on an
+    // overwrite, see convertToZOrder): its commit publishes its own key
+    // layout, and it aborts unless it replaces exactly what it read.
+    val relayout = opts.containsKey("replace")
     def fixed(what: String, have: Option[String], want: Option[String]): Unit =
-      for (h <- have; w <- want if h != w) throw new IllegalArgumentException(
-        s"graftkv table at $path has $what '$h'; cannot open it with " +
-          s"$what '$w' — the $what is fixed at table creation (drop the " +
-          "table and rewrite to change it)")
+      for (h <- have; w <- want if h != w && !relayout)
+        throw new IllegalArgumentException(
+          s"graftkv table at $path has $what '$h'; cannot open it with " +
+            s"$what '$w' — the $what is fixed at table creation (drop the " +
+            "table and rewrite to change it)")
     fixed("key", meta.map(_.keys.mkString(",")), requestedKeys.map(_.mkString(",")))
     fixed("encoding", meta.map(_.encoding), requested)
-    val keys = meta.map(_.keys).orElse(requestedKeys)
+    val keys = (if (relayout) requestedKeys.orElse(meta.map(_.keys))
+      else meta.map(_.keys).orElse(requestedKeys))
       .getOrElse(throw new IllegalArgumentException(
         "graftkv requires option key='col1,col2' on first write"))
     val encoding = meta.map(_.encoding)
@@ -77,30 +82,28 @@ object GraftKvDataSource {
   def path(options: CaseInsensitiveStringMap): String =
     Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException("graftkv requires a path"))
+
+  /** The declaration a path read decodes with: the snapshot's own when
+    * the `snapshot.version` read option names one, else the head's. */
+  def meta(options: CaseInsensitiveStringMap): Option[KvTableMeta] =
+    GraftKvMeta.readAsOf(path(options),
+      Option(options.get("snapshot.version")).map(_.toLong))
 }
 
-/** Table-level metadata: key column list (+ codec encoding, optional
-  * z-order clustering dims, optional table properties) and schema json.
-  * Header line `k1,k2` (legacy, binary codec), `k1,k2|encoding`,
-  * `k1,k2|encoding|z1,z2` for a z-clustered table (whose physical
-  * leading key `_z` is the dims' Morton interleave — see
-  * graft.codec.ZOrder), or `k1,k2|encoding|z…|p1=v1;p2=v2` when table
-  * properties are set (older readers split on `|` and ignore trailing
-  * fields, so the format extends compatibly). */
+/** A table's declaration: key columns (+ codec encoding, optional
+  * z-order clustering dims, optional table properties) and schema. It
+  * is the header of every manifest version (graft.store.SegmentFile),
+  * so one CAS publishes it together with the file set and each snapshot
+  * decodes with its own declaration. Encoded as one line
+  * `k1,k2|encoding|z1,z2|p1=v1;p2=v2` (the z dims' specs — a
+  * z-clustered table's physical leading key `_z` is their Morton
+  * interleave, see graft.codec.ZOrder — and the property list may be
+  * empty), then the schema json. */
 final case class KvTableMeta(schema: StructType, keys: Seq[String],
     encoding: String, zorder: Seq[graft.codec.ZDim] = Nil,
     props: Map[String, String] = Map.empty)
 
 object GraftKvMeta {
-  // Meta sidecar I/O goes through the Hadoop FileSystem API
-  // (graft.io.SidecarFs): table METADATA follows the table path's
-  // scheme, so catalogs over shared storage read/write it like any
-  // Spark artifact. (The segment data layer — SegmentFile and its
-  // maintenance leases — remains the embedded local store by design,
-  // SURVEY §3.4.)
-  private def metaFile(dir: String) =
-    graft.io.SidecarFs.child(dir, "_graft_meta.json")
-
   /** Per-table string-zone truncation cap (codepoints): a corpus whose
     * values share long prefixes (URLs, paths) gets useless bounds at
     * the 64-cp default — raise it per table at CREATE. */
@@ -132,63 +135,68 @@ object GraftKvMeta {
     Seq(StringZoneMaxCharsProp, SegmentMaxBytesProp, SegmentCompressProp,
       MappedTableProp, MappedColsProp)
 
-  def write(dir: String, schema: StructType, keys: Seq[String],
-      encoding: String = graft.store.RowCodec.Binary,
-      zorder: Seq[graft.codec.ZDim] = Nil,
-      props: Map[String, String] = Map.empty): Unit = {
-    graft.io.SidecarFs.mkdirs(dir)
-    props.foreach { case (k, v) =>
+  def encode(m: KvTableMeta): String = {
+    m.props.foreach { case (k, v) =>
       require(!s"$k$v".exists(c => c == '|' || c == ';' || c == '=' || c == '\n'),
         s"table property '$k'='$v' may not contain | ; = or newline")
     }
-    val zPart =
-      if (zorder.nonEmpty || props.nonEmpty)
-        "|" + graft.codec.ZDim.serialize(zorder)
-      else ""
-    val pPart =
-      if (props.nonEmpty)
-        "|" + props.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(";")
-      else ""
-    // tmp + atomic overwrite-rename: a concurrent committer's meta
-    // refresh must never expose a half-written file to a racing read
-    // (the CAS commit protocol makes concurrent committers the NORMAL
-    // case)
-    graft.io.SidecarFs.writeStringAtomic(metaFile(dir),
-      keys.mkString(",") + "|" + encoding + zPart + pPart + "\n" + schema.json)
+    m.keys.mkString(",") + "|" + m.encoding + "|" +
+      graft.codec.ZDim.serialize(m.zorder) + "|" +
+      m.props.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(";") +
+      "\n" + m.schema.json
   }
 
-  def read(dir: String): Option[KvTableMeta] = {
-    // finish (or undo) a crashed z-order conversion before trusting the
-    // meta: the conversion's commit point is the manifest CAS, and the
-    // meta flip is completed read-side if the converter died after it
-    // (one Files.exists when no conversion ever touched this table)
-    ZConvert.repair(dir)
-    val f = metaFile(dir)
-    if (!graft.io.SidecarFs.exists(f)) None
-    else {
-      val lines = graft.io.SidecarFs.readString(f)
-      val sep = lines.indexOf('\n')
+  /** The declaration in a manifest header; None for an empty header. */
+  def decode(header: String): Option[KvTableMeta] =
+    if (header.isEmpty) None
+    else decoded.synchronized(Option(decoded.get(header))).orElse {
+      val sep = header.indexOf('\n')
       if (sep < 0) throw new IllegalStateException(
-        s"corrupt graftkv meta at $f (no header line)")
-      val parts = lines.substring(0, sep).split("\\|", -1)
-      val keys = parts(0).split(",").map(_.trim).toSeq
-      val encoding =
-        if (parts.length > 1) parts(1) else graft.store.RowCodec.Binary
+        s"corrupt graftkv table header (no schema line): $header")
+      val parts = header.substring(0, sep).split("\\|", -1)
       val zorder =
-        if (parts.length > 2 && parts(2).nonEmpty) {
+        if (parts(2).nonEmpty) {
           val k = parts(2).split(",").count(_.trim.nonEmpty)
           graft.codec.ZDim.parse(parts(2), graft.codec.ZOrder.bitsPerDim(k))
         } else Nil
-      val props =
-        if (parts.length > 3 && parts(3).nonEmpty)
-          parts(3).split(";").iterator.map(_.split("=", 2))
-            .collect { case Array(k, v) => k -> v }.toMap
-        else Map.empty[String, String]
+      val props = parts(3).split(";").iterator.map(_.split("=", 2))
+        .collect { case Array(k, v) => k -> v }.toMap
       val schema = org.apache.spark.sql.types.DataType.fromJson(
-        lines.substring(sep + 1)).asInstanceOf[StructType]
-      Some(KvTableMeta(schema, keys, encoding, zorder, props))
+        header.substring(sep + 1)).asInstanceOf[StructType]
+      val m = KvTableMeta(schema, parts(0).split(",").map(_.trim).toSeq,
+        parts(1), zorder, props)
+      decoded.synchronized(decoded.put(header, m))
+      Some(m)
     }
-  }
+
+  /** Parsed headers: every manifest version of a table usually carries
+    * the same header, and a schema parse costs far more than the probe
+    * that found it. */
+  private val decoded =
+    new java.util.LinkedHashMap[String, KvTableMeta](64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, KvTableMeta]): Boolean = size() > 256
+    }
+
+  /** The head version's declaration; None when no table is at `dir`. */
+  def read(dir: String): Option[KvTableMeta] =
+    SegmentFile.readHead(dir).flatMap(h => decode(h._2.header))
+
+  /** Snapshot `v`'s own declaration; None when `v` is not retained. */
+  def readVersion(dir: String, v: Long): Option[KvTableMeta] =
+    SegmentFile.readVersion(dir, v).flatMap(m => decode(m.header))
+
+  /** The declaration a read of `dir` decodes with: the head's, or the
+    * snapshot's when `snapshot` names one — failing when it is not
+    * retained. */
+  def readAsOf(dir: String, snapshot: Option[Long]): Option[KvTableMeta] =
+    snapshot match {
+      case None => read(dir)
+      case Some(v) => Some(readVersion(dir, v).getOrElse(
+        throw new IllegalArgumentException(
+          s"no snapshot version $v at $dir (retained: " +
+            s"${SegmentFile.manifestVersions(dir).mkString(", ")})")))
+    }
 }
 
 object GraftKvTable {
@@ -356,8 +364,9 @@ class GraftKvTable(path: String, tableSchema: StructType, keys: Seq[String],
     // table properties: a write option overrides, an existing table's
     // persisted props otherwise govern (so appends honor the CREATE-time
     // stringzone.maxchars / segment.maxbytes without restating them)
+    val planned = GraftKvMeta.read(path)
     val props: Map[String, String] = {
-      val persisted = GraftKvMeta.read(path).map(_.props).getOrElse(Map.empty)
+      val persisted = planned.map(_.props).getOrElse(Map.empty)
       val opts = GraftKvMeta.PersistedProps.flatMap(p =>
         Option(info.options.get(p)).map(p -> _))
       persisted ++ opts
@@ -371,7 +380,7 @@ class GraftKvTable(path: String, tableSchema: StructType, keys: Seq[String],
           graft.store.SegmentFile.Compression.Names.mkString(" | "))
     }
     new GraftKvWriteBuilder(path, info.schema(), keys, encoding, maxSegBytes,
-      tombstone, replaces, info.queryId(), zorder, props)
+      tombstone, replaces, info.queryId(), zorder, props, planned)
   }
 }
 
@@ -1028,10 +1037,10 @@ class GraftKvScan(path: String, schema: StructType, keys: Seq[String],
   private lazy val codec = RowCodec(schema, keys, encoding)
 
   /** Z-clustering declaration (empty for plain tables): the dim specs
-    * whose Morton interleave is the `_z` leading key. One tiny JSON
-    * read per scan, driver-side — not a per-segment sidecar. */
+    * whose Morton interleave is the `_z` leading key — a snapshot's own,
+    * since a later overwrite may normalize the dims differently. */
   private lazy val zorderDims: Seq[graft.codec.ZDim] =
-    GraftKvMeta.read(path).map(_.zorder).getOrElse(Nil)
+    GraftKvMeta.readAsOf(path, snapshotVersion).map(_.zorder).getOrElse(Nil)
 
   /** The segment set this scan plans over, listed ONCE — compile-time
     * pruning and any later runtime re-prune both start from this list,
@@ -1084,13 +1093,7 @@ class GraftKvScan(path: String, schema: StructType, keys: Seq[String],
     * out anyway. None = no usable bound (plain table, no dim filters). */
   lazy val zBoxRanges: Option[Seq[graft.pruning.TriEval.ValueRange]] = {
     import graft.pruning.TriEval
-    // never on a snapshot read: a retained snapshot of a table that was
-    // later RE-CREATED with different z specs stores z-values under the
-    // OLD normalization, and narrowing with the CURRENT meta's specs
-    // would silently drop rows — the frozen view stays correct through
-    // residual filters, just without z pruning
-    if (snapshotVersion.nonEmpty || zorderDims.isEmpty ||
-      (filters.isEmpty && extraRanges.isEmpty)) None
+    if (zorderDims.isEmpty || (filters.isEmpty && extraRanges.isEmpty)) None
     else try {
       val k = zorderDims.length
       val bits = graft.codec.ZOrder.bitsPerDim(k)
@@ -2728,7 +2731,8 @@ class GraftKvWriteBuilder(path: String, schema: StructType, keys: Seq[String],
     maxSegBytes: Long = GraftKvDataWriter.DefaultMaxSegmentBytes,
     tombstone: Boolean = false, replaces: KvReplace = KvReplace.NoFiles,
     queryId: String = "", zorder: Seq[graft.codec.ZDim] = Nil,
-    tableProps: Map[String, String] = Map.empty)
+    tableProps: Map[String, String] = Map.empty,
+    planned: Option[KvTableMeta] = None)
     extends WriteBuilder with SupportsTruncate {
 
   override def truncate(): WriteBuilder = {
@@ -2736,12 +2740,17 @@ class GraftKvWriteBuilder(path: String, schema: StructType, keys: Seq[String],
     // makes the write schema authoritative, so forwarding the flag would
     // replace the table with a key-only shell, and dropping it would
     // store the markers as rows — fail instead of corrupting either way
-    if (tombstone || replaces != KvReplace.NoFiles)
-      throw new IllegalArgumentException(
-        "tombstone and replace writes append; combining them with " +
-          "overwrite would truncate the table — use mode(\"append\")")
+    if (tombstone) throw new IllegalArgumentException(
+      "tombstone writes append; combining them with overwrite would " +
+        "truncate the table — use mode(\"append\")")
+    // an overwrite that names files replaces exactly them: the z-order
+    // conversion's conditional overwrite
+    val all = replaces match {
+      case KvReplace.Files(r) => KvReplace.Exactly(r)
+      case _ => KvReplace.AllLive
+    }
     new GraftKvWriteBuilder(path, schema, keys, encoding, maxSegBytes,
-      tombstone, KvReplace.AllLive, queryId, zorder, tableProps)
+      tombstone, all, queryId, zorder, tableProps, planned)
   }
 
   private def zoneMaxChars: Int =
@@ -2778,6 +2787,10 @@ class GraftKvWriteBuilder(path: String, schema: StructType, keys: Seq[String],
     // output holds the SAME versions, so stamping it "newer" would lie
     // to streaming readers and re-emit old rows.
     private val gen: Long = replaces match {
+      case KvReplace.Files(_) if planned.exists(_.keys != keys) =>
+        throw new IllegalArgumentException(
+          s"a rewrite of graftkv:$path keeps its key layout; only an " +
+            "overwrite may change it")
       case KvReplace.Files(r) if r.nonEmpty =>
         val hit = SegmentFile.listSegments(path).filter(m => r.contains(m.file))
         if (hit.size < r.size) throw new GraftKvRewriteConflict(path)
@@ -2802,7 +2815,7 @@ class GraftKvWriteBuilder(path: String, schema: StructType, keys: Seq[String],
       * epoch-idempotent Put appends (GraftKvStreamSink.scala). */
     override def toStreaming
         : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-      if (replaces == KvReplace.AllLive || tombstone)
+      if (replaces != KvReplace.NoFiles || tombstone)
         throw new UnsupportedOperationException(
           "streaming kv writes are append-only Puts " +
             "(no complete-mode truncate, no tombstone streams)")
@@ -2823,7 +2836,8 @@ class GraftKvWriteBuilder(path: String, schema: StructType, keys: Seq[String],
       override def commit(messages: Array[WriterCommitMessage]): Unit =
         GraftKvCommitProtocol.commit(path,
           messages.collect { case GraftKvCommit(files) => files }.flatten.toSet,
-          KvTableMeta(schema, keys, encoding, zorder, tableProps), replaces)
+          KvTableMeta(schema, keys, encoding, zorder, tableProps), replaces,
+          planned)
 
       override def abort(messages: Array[WriterCommitMessage]): Unit =
         GraftKvCommitProtocol.abortFiles(path, messages)
@@ -2834,13 +2848,16 @@ class GraftKvWriteBuilder(path: String, schema: StructType, keys: Seq[String],
 final case class GraftKvCommit(files: Seq[String]) extends WriterCommitMessage
 
 /** What a write's commit replaces: nothing (an append), the named live
-  * files (a rewrite — it aborts unless all are still live), or
-  * everything live at its CAS base (an overwrite). */
+  * files (a rewrite — it aborts unless all are still live), everything
+  * live at its CAS base (an overwrite), or exactly the named files (a
+  * conditional overwrite — it aborts unless they are the whole live
+  * set). */
 private[connector] sealed trait KvReplace
 private[connector] object KvReplace {
   case object NoFiles extends KvReplace
   final case class Files(names: Set[String]) extends KvReplace
   case object AllLive extends KvReplace
+  final case class Exactly(names: Set[String]) extends KvReplace
 }
 
 /** A rewrite (internal `replace=<files>` write) found a file it replaces
@@ -2851,15 +2868,18 @@ final class GraftKvRewriteConflict(path: String) extends IllegalStateException(
 
 /** The commit protocol, shared by the batch append/rewrite/overwrite,
   * the delta (row-level DML) writes and the stream sink so they can
-  * never drift: manifest-FIRST swap of base − replaced ++ committed — a
-  * reader always sees either the old committed set or the new one, and
-  * a crash after the swap leaves only orphans the manifest already
-  * excludes — then a meta refresh. The first write declares the
-  * table's meta; appends and rewrites preserve it (the write's input
-  * schema must not replace the table's: INSERT VALUES resolves literals
-  * non-nullable, and tightened nullability makes codegen read genuinely
-  * null columns as 0); an overwrite replaces everything, so its own
-  * schema, z-order and properties become the table's. */
+  * never drift: ONE manifest CAS publishes base − replaced ++ committed
+  * together with the table's declaration, so a reader always sees
+  * either the old version or the new one, declaration included, and a
+  * crash leaves only orphans the manifest already excludes. The first
+  * write declares the table's meta; appends and rewrites keep the
+  * base's (the write's input schema must not replace the table's:
+  * INSERT VALUES resolves literals non-nullable, and tightened
+  * nullability makes codegen read genuinely null columns as 0); an
+  * overwrite replaces everything, so its own schema, keys, z-order and
+  * properties become the table's — never tightening a column to NOT
+  * NULL, and keeping the columns and properties a concurrent commit
+  * (an ALTER) added after the write was planned. */
 private[connector] object GraftKvCommitProtocol {
   /** One more than the newest live segment's generation: the commit
     * generation of an append, an overwrite and a DML write alike. */
@@ -2867,24 +2887,58 @@ private[connector] object GraftKvCommitProtocol {
     (try SegmentFile.listSegments(path).map(_.gen)
     catch { case _: Exception => Seq.empty[Long] }).maxOption.getOrElse(0L) + 1L
 
+  /** The declaration a commit publishes over `base` (None for the first
+    * write); `planned` is the one the write read when it was planned. */
+  private def declare(base: Option[KvTableMeta], write: KvTableMeta,
+      replaces: KvReplace, planned: Option[KvTableMeta]): KvTableMeta =
+    base match {
+      case None => write
+      case Some(b) => replaces match {
+        case KvReplace.NoFiles | KvReplace.Files(_) => b
+        case KvReplace.AllLive | KvReplace.Exactly(_) =>
+          val p = planned.getOrElse(b)
+          val added = b.schema.filterNot(f =>
+            p.schema.fieldNames.contains(f.name) ||
+              write.schema.fieldNames.contains(f.name))
+          val strict = b.schema.filterNot(_.nullable).map(_.name).toSet
+          write.copy(
+            schema = StructType((write.schema ++ added).map(f =>
+              f.copy(nullable = f.nullable || !strict(f.name)))),
+            props = (b.props -- p.props.keys) ++ write.props)
+      }
+    }
+
   def commit(path: String, committed: Set[String], write: KvTableMeta,
-      replaces: KvReplace = KvReplace.NoFiles): Unit = {
+      replaces: KvReplace = KvReplace.NoFiles,
+      planned: Option[KvTableMeta] = None): Unit = {
     // optimistic CAS (SegmentFile.commitManifest): concurrent committers
     // each publish their own swap at a fresh version — a lost race
     // re-reads, so no appender drops another's segments. A replay whose
     // files are already live publishes nothing (no-op detection). A
-    // rewrite whose replaced files are not all live publishes nothing
-    // and fails; Spark's abort then deletes its files. An overwrite
-    // replaces whatever its winning attempt read — last writer wins,
-    // and the overwritten commit stays a retained snapshot.
+    // rewrite whose replaced files are not all live, or a conditional
+    // overwrite whose files are not exactly the live set, publishes
+    // nothing and fails; Spark's abort then deletes its files. An
+    // overwrite replaces whatever its winning attempt read — last writer
+    // wins, and the overwritten commit stays a retained snapshot with
+    // its own declaration.
     var replaced = Set.empty[String]
     val swapped = SegmentFile.commitManifest(path) { base =>
       replaced = replaces match {
         case KvReplace.NoFiles => Set.empty
         case KvReplace.Files(r) => r
-        case KvReplace.AllLive => base
+        case KvReplace.AllLive | KvReplace.Exactly(_) => base.files
       }
-      if (replaced.subsetOf(base)) Some(base -- replaced ++ committed) else None
+      val expected = replaces match {
+        case KvReplace.Files(r) => r.subsetOf(base.files)
+        case KvReplace.Exactly(r) => r == base.files
+        case _ => true
+      }
+      if (!expected) None
+      else {
+        val meta = declare(GraftKvMeta.decode(base.header), write, replaces, planned)
+        Some(SegmentFile.Manifest(GraftKvMeta.encode(meta),
+          base.files -- replaced ++ committed))
+      }
     }
     if (swapped.isEmpty) throw new GraftKvRewriteConflict(path)
     // replaced files stay on disk for the retention window of the
@@ -2899,30 +2953,10 @@ private[connector] object GraftKvCommitProtocol {
           SidecarFs.child(path, f.stripSuffix(".kv") + ".kvmeta"), now)
       } catch { case scala.util.control.NonFatal(_) => () }
     }
-    val prev = GraftKvMeta.read(path)
-    val meta = prev match {
-      case Some(p) if replaces != KvReplace.AllLive => p
-      case Some(p) =>
-        // never tighten a column to NOT NULL: the overwritten snapshot
-        // stays readable (a column it lacks reads as null), and INSERT
-        // OVERWRITE VALUES resolves its literals non-nullable
-        val strict = p.schema.filterNot(_.nullable).map(_.name).toSet
-        write.copy(schema = StructType(write.schema.map(f =>
-          f.copy(nullable = f.nullable || !strict(f.name)))))
-      case None => write
-    }
-    GraftKvMeta.write(path, meta.schema, meta.keys, meta.encoding,
-      meta.zorder, meta.props)
-    if (replaces == KvReplace.AllLive) {
-      // retained snapshots hold `_z` codes of their own normalization: a
-      // RESTORE of one would meet live z-pruning under the new specs
-      if (prev.exists(_.zorder != meta.zorder))
-        SegmentFile.pruneManifestVersions(path, Long.MaxValue)
-      // the one reclamation path: a table that is only ever overwritten
-      // (index and matview rebuilds, repeated CREATE) stays bounded
-      if (replaced.nonEmpty)
-        KvCommands.sweepUnmanifested(path, KvCommands.RetainReplacedMs)
-    }
+    // the one reclamation path: a table that is only ever overwritten
+    // (index and matview rebuilds, repeated CREATE) stays bounded
+    if (replaces == KvReplace.AllLive && replaced.nonEmpty)
+      KvCommands.sweepUnmanifested(path, KvCommands.RetainReplacedMs)
   }
 
   def abortFiles(path: String, messages: Array[WriterCommitMessage]): Unit =

@@ -12,8 +12,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 /** Filesystem-backed `TableCatalog` for graftkv tables — the Spark-native
   * restatement of the reference's HBase `metadata`-table catalog
   * (/root/reference src/main/scala/.../HBaseCatalog.scala): table
-  * metadata lives as plain JSON under `<root>/<namespace>/<table>/`,
-  * not Java-serialized blobs, and the whole DDL surface works through
+  * metadata is the plain-text header of each manifest version under
+  * `<root>/<namespace>/<table>/`, not a Java-serialized blob in a
+  * catalog table of its own, and the whole DDL surface works through
   * stock SQL once the catalog is registered:
   *
   * {{{
@@ -52,8 +53,9 @@ class GraftKvCatalog extends TableCatalog with SupportsNamespaces {
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val d = (Seq(root) ++ namespace.toSeq).mkString("/")
     if (!SidecarFs.isDirectory(d)) throw new NoSuchNamespaceException(namespace)
+    // every commit writes the head hint, so it marks a table directory
     listNames(d).filter(n => SidecarFs.exists(
-        SidecarFs.child(SidecarFs.child(d, n), "_graft_meta.json")))
+        SidecarFs.child(SidecarFs.child(d, n), "_graft_vhead")))
       .map(n => Identifier.of(namespace, n))
       .toArray
   }
@@ -85,38 +87,38 @@ class GraftKvCatalog extends TableCatalog with SupportsNamespaces {
   /** Time travel: `SELECT … FROM graft.db.t VERSION AS OF n` — Spark
     * routes the version literal here; `n` is a snapshot manifest version
     * (one per commit, see SegmentFile.commitManifest). The snapshot is a
-    * frozen read-only view listed from its retained manifest; it stays
-    * readable through the retention window of compaction and overwrite,
-    * which both keep the files they replace. */
-  override def loadTable(ident: Identifier, version: String): Table =
-    GraftKvMeta.read(tableDir(ident)) match {
-      case Some(m) =>
-        val v = version.toLongOption.getOrElse(
-          throw new IllegalArgumentException(
-            s"graftkv snapshot versions are numeric commit ids; got '$version'"))
-        new GraftKvTable(tableDir(ident), m.schema, m.keys, m.encoding, Some(v))
-      case None => throw new NoSuchTableException(ident)
-    }
+    * frozen read-only view listed from its retained manifest and decoded
+    * with that version's own declaration; it stays readable through the
+    * retention window of compaction and overwrite, which both keep the
+    * files they replace. */
+  override def loadTable(ident: Identifier, version: String): Table = {
+    if (!tableExists(ident)) throw new NoSuchTableException(ident)
+    snapshotTable(tableDir(ident), version.toLongOption.getOrElse(
+      throw new IllegalArgumentException(
+        s"graftkv snapshot versions are numeric commit ids; got '$version'")))
+  }
+
+  private def snapshotTable(dir: String, v: Long): Table = {
+    val m = GraftKvMeta.readAsOf(dir, Some(v)).get
+    new GraftKvTable(dir, m.schema, m.keys, m.encoding, Some(v))
+  }
 
   /** Time travel by wall clock: `SELECT … FROM graft.db.t TIMESTAMP AS
     * OF ts` — the newest snapshot committed at or before `ts` (snapshot
     * manifest mtime = commit time; Spark hands micros). Retention
     * applies exactly as for VERSION AS OF: a `ts` before the oldest
     * retained snapshot has no consistent view and fails. */
-  override def loadTable(ident: Identifier, timestamp: Long): Table =
-    GraftKvMeta.read(tableDir(ident)) match {
-      case Some(m) =>
-        val dir = tableDir(ident)
-        val tsMillis = timestamp / 1000L
-        val versions = graft.store.SegmentFile.manifestVersions(dir)
-        val v = versions.filter(v => graft.store.SegmentFile
-            .manifestVersionMtime(dir, v) <= tsMillis)
-          .lastOption.getOrElse(throw new IllegalArgumentException(
-            s"no graftkv snapshot at or before timestamp $tsMillis " +
-              s"(retained: ${versions.mkString(", ")})"))
-        new GraftKvTable(dir, m.schema, m.keys, m.encoding, Some(v))
-      case None => throw new NoSuchTableException(ident)
-    }
+  override def loadTable(ident: Identifier, timestamp: Long): Table = {
+    if (!tableExists(ident)) throw new NoSuchTableException(ident)
+    val dir = tableDir(ident)
+    val tsMillis = timestamp / 1000L
+    val versions = graft.store.SegmentFile.manifestVersions(dir)
+    snapshotTable(dir, versions.filter(v => graft.store.SegmentFile
+        .manifestVersionMtime(dir, v) <= tsMillis)
+      .lastOption.getOrElse(throw new IllegalArgumentException(
+        s"no graftkv snapshot at or before timestamp $tsMillis " +
+          s"(retained: ${versions.mkString(", ")})")))
+  }
 
   override def tableExists(ident: Identifier): Boolean =
     GraftKvMeta.read(tableDir(ident)).isDefined
@@ -148,12 +150,14 @@ class GraftKvCatalog extends TableCatalog with SupportsNamespaces {
     persistedProps.get(GraftKvMeta.SegmentMaxBytesProp).foreach(v =>
       require(v.toLong > 0, s"${GraftKvMeta.SegmentMaxBytesProp} must be " +
         s"a positive byte count, got '$v'"))
-    GraftKvMeta.write(tableDir(ident), schema, keys, encoding,
-      props = persistedProps)
-    // the table is born with manifest v1, the EMPTY set: its history
-    // starts at the empty table, and every later commit CASes against a
-    // published base
-    graft.store.SegmentFile.writeManifest(tableDir(ident), Nil)
+    // the table is born with manifest v1, its declaration over the
+    // EMPTY set: its history starts at the empty table, and every later
+    // commit CASes against a published base. A racing CREATE loses the
+    // CAS and fails here.
+    val meta = KvTableMeta(schema, keys, encoding, props = persistedProps)
+    if (!graft.store.SegmentFile.createManifest(tableDir(ident),
+        graft.store.SegmentFile.Manifest(GraftKvMeta.encode(meta), Set.empty)))
+      throw new TableAlreadyExistsException(ident)
     new GraftKvTable(tableDir(ident), schema, keys, encoding)
   }
 
@@ -161,11 +165,21 @@ class GraftKvCatalog extends TableCatalog with SupportsNamespaces {
     * tables (reference HBaseCatalog.scala:217-251) — segments are
     * self-describing (their sidecar carries the schema they were written
     * with), so existing data keeps decoding with its own layout and
-    * added columns read as null until rewritten. */
+    * added columns read as null until rewritten. One manifest CAS
+    * applies the changes to the head's declaration, so a commit racing
+    * the ALTER re-applies it to the winner's, never loses it. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val dir = tableDir(ident)
-    val m = GraftKvMeta.read(dir)
+    val committed = graft.store.SegmentFile.commitManifest(dir) { base =>
+      GraftKvMeta.decode(base.header).map(m => base.copy(
+        header = GraftKvMeta.encode(altered(m, changes))))
+    }
+    val m = committed.flatMap(c => GraftKvMeta.decode(c.header))
       .getOrElse(throw new NoSuchTableException(ident))
+    new GraftKvTable(dir, m.schema, m.keys, m.encoding)
+  }
+
+  private def altered(m: KvTableMeta, changes: Seq[TableChange]): KvTableMeta = {
     var s = m.schema
     var props = m.props
     changes.foreach {
@@ -196,8 +210,7 @@ class GraftKvCatalog extends TableCatalog with SupportsNamespaces {
       case other =>
         throw new UnsupportedOperationException(s"unsupported table change $other")
     }
-    GraftKvMeta.write(dir, s, m.keys, m.encoding, m.zorder, props)
-    new GraftKvTable(dir, s, m.keys, m.encoding)
+    m.copy(schema = s, props = props)
   }
 
   override def dropTable(ident: Identifier): Boolean = {

@@ -25,7 +25,17 @@ object KvCommands {
       encoding: String = graft.store.RowCodec.Binary,
       zorder: Seq[graft.codec.ZDim] = Nil,
       maxSegBytes: Option[Long] = None,
-      compress: Option[String] = None): Unit = {
+      compress: Option[String] = None): Unit =
+    overwrite(df, path, keys, encoding, zorder, maxSegBytes, compress)
+
+  /** The overwrite write; with `replace` it is conditional — it replaces
+    * exactly those files, changing the key layout if the table's
+    * differs, and aborts with a GraftKvRewriteConflict unless they are
+    * the whole live set at its commit. */
+  private def overwrite(df: DataFrame, path: String, keys: Seq[String],
+      encoding: String, zorder: Seq[graft.codec.ZDim],
+      maxSegBytes: Option[Long], compress: Option[String],
+      replace: Option[Set[String]] = None): Unit = {
     val w = df.write.format("graftkv")
       .option("key", keys.mkString(","))
       .option("encoding", encoding)
@@ -33,6 +43,7 @@ object KvCommands {
     if (zorder.nonEmpty) w.option("zorder", graft.codec.ZDim.serialize(zorder))
     maxSegBytes.foreach(b => w.option("segment.maxBytes", b.toString))
     compress.foreach(c => w.option(GraftKvMeta.SegmentCompressProp, c))
+    replace.foreach(r => w.option("replace", r.mkString(",")))
     w.save(path)
   }
 
@@ -67,6 +78,13 @@ object KvCommands {
       encoding: String = graft.store.RowCodec.Binary,
       maxSegBytes: Option[Long] = None,
       compress: Option[String] = None): Unit = {
+    val (withZ, zdims) = zOrdered(df, dims)
+    createTable(withZ, path, "_z" +: dims, encoding, zdims, maxSegBytes, compress)
+  }
+
+  /** `df` with its `_z` lead derived over `dims`, and the dims' specs. */
+  private def zOrdered(df: DataFrame, dims: Seq[String])
+      : (DataFrame, Seq[graft.codec.ZDim]) = {
     require(dims.length >= 2, "z-order clustering wants >= 2 dimensions")
     import org.apache.spark.sql.functions.{max, min}
     import graft.codec.{ZDim, ZOrder}
@@ -83,9 +101,8 @@ object KvCommands {
         ZDim(d, loC, ZOrder.shiftFor(hiC - loC, bits)) // unsigned diff: hi >= lo
       }
     }
-    val withZ = df.withColumn("_z",
-      graft.functions.ZValue.forDims(zdims, dims.map(df(_))))
-    createTable(withZ, path, "_z" +: dims, encoding, zdims, maxSegBytes, compress)
+    (df.withColumn("_z", graft.functions.ZValue.forDims(zdims, dims.map(df(_)))),
+      zdims)
   }
 
   /** Read back (the relation itself). */
@@ -93,160 +110,59 @@ object KvCommands {
     spark.read.format("graftkv").load(path)
 
   /** Re-cluster an EXISTING table z-ordered by `dims` (the
-    * `OPTIMIZE t ZORDER BY (…)` statement): builds the z-clustered
-    * form in a hidden scratch subdirectory (full rewrite through the
-    * range-shuffled sorted write — the data never round-trips the
-    * driver), moves the new segments in unmanifested (invisible), and
-    * commits through the SAME versioned manifest-CAS protocol as
-    * compaction. Returns the row count of the rebuilt table.
+    * `OPTIMIZE t ZORDER BY (…)` statement): one write of the table's
+    * rows, with `_z` derived as [[createZOrderTable]] does, straight
+    * into the table directory through the range-shuffled sorted write
+    * (the data never round-trips the driver). Its commit is an
+    * overwrite that replaces exactly the live set the conversion read
+    * and carries the new key layout in its header. Returns the row count
+    * of the converted table.
     *
     * SEMANTICS CHANGE, deliberately loud: the physical key becomes
     * `(_z, dims…)`, so Put-upsert identity follows the dims — exactly
     * what CREATE-time z-clustering declares. Secondary indexes and
     * materialized views key on the old layout and must be dropped
-    * first (the call refuses otherwise); snapshot history does not
-    * carry across the rewrite (older versions describe the OLD key
-    * layout, so they are pruned at the commit — VERSION AS OF across a
-    * re-clustering fails with "no snapshot", never a garbage decode).
+    * first (the call refuses otherwise). Older snapshots keep their own
+    * declaration, so VERSION AS OF and RESTORE across the re-clustering
+    * read the old layout.
     *
-    * Crash safety (no manual-repair window, unlike the pre-round-9
-    * directory swap): the commit point is one manifest CAS, fenced by
-    * an intent marker carrying the new segment set + new table meta.
-    * The marker goes down BEFORE any replacement segment moves into
-    * the table directory, so a crash at ANY later point leaves a
-    * marker a reader can repair from — nothing the conversion ever
-    * moves in can be stranded invisibly. A crash BEFORE the CAS
-    * leaves the old table fully intact (marker + any moved-in
-    * unmanifested segments are swept by the next reader once the
-    * lease is stealable); a crash AFTER the CAS but before the meta
-    * flip is finished by the next reader (GraftKvMeta.read →
-    * ZConvert.repair — the flip is idempotent). A concurrent commit
-    * (e.g. an append) between the source read and the CAS aborts the
-    * conversion instead of silently dropping the concurrent writer's
-    * rows. Repair's destructive branch runs only under the STOLEN
-    * maintenance lease (never an mtime-age guess), the converter
-    * refreshes its lease right before the marker goes down, and it
-    * re-verifies marker + segments immediately after winning the CAS
-    * (rolling the manifest back if a racing repair swept them) — so a
-    * repair and a live converter can never both win. */
+    * Crash safety: the commit is the one manifest CAS. A failure before
+    * it leaves the old table (Spark's abort deletes the written
+    * segments; a crash strands only unmanifested files, which VACUUM
+    * reclaims); after it the table is converted — nothing is left to
+    * repair. A concurrent commit between the read and the CAS aborts
+    * the conversion instead of silently dropping the concurrent
+    * writer's rows. */
   def convertToZOrder(spark: SparkSession, path: String,
       dims: Seq[String]): Long = {
-    import graft.store.SegmentFile
-    val m = GraftKvMeta.read(path).getOrElse(
+    val (v, read, m) = (for {
+      (v, read) <- SegmentFile.readHead(path)
+      m <- GraftKvMeta.decode(read.header)
+    } yield (v, read, m)).getOrElse(
       throw new IllegalArgumentException(s"no graftkv table at $path"))
     dims.foreach(d => require(m.schema.fieldNames.contains(d),
       s"no column '$d' to z-order by"))
     require(KvIndex.list(path).isEmpty && KvMatView.list(path).isEmpty,
       "re-clustering changes the key layout: drop secondary indexes and " +
         "materialized views first")
-    // one converter at a time: the cross-process maintenance lease
-    // serializes concurrent OPTIMIZE ZORDER calls (the second refuses
-    // instead of both racing the commit)
-    val lease = KvMaintenance.acquire(path).getOrElse(
-      throw new IllegalStateException(
-        s"another maintenance operation holds the lease on $path"))
-    try {
-      val oldSet = SegmentFile.readManifest(path).getOrElse(Set.empty[String])
-      val src = table(spark, path)
-      val data = if (src.columns.contains("_z")) src.drop("_z") else src
-      // hidden scratch SUBdirectory: invisible to segment listing,
-      // swept by dropTable if a crash strands it
-      val tmp = SidecarFs.child(path,
-        s".zconvert-${java.util.UUID.randomUUID().toString.take(8)}")
-      createZOrderTable(data, tmp, dims, m.encoding,
-        maxSegBytes = m.props.get(GraftKvMeta.SegmentMaxBytesProp).map(_.toLong),
-        compress = m.props.get(GraftKvMeta.SegmentCompressProp))
-      // table properties ride through the re-cluster: rewrite the
-      // scratch meta with them before it becomes the marker payload
-      val sm = GraftKvMeta.read(tmp).get
-      if (m.props.nonEmpty)
-        GraftKvMeta.write(tmp, sm.schema, sm.keys, sm.encoding, sm.zorder,
-          m.props)
-      val rows = SegmentFile.listSegments(tmp).map(_.count).sum
-      val newFiles = SegmentFile.listSegments(tmp).map(_.file)
-      val newMeta = SidecarFs.readString(
-        SidecarFs.child(tmp, "_graft_meta.json"))
-      ZConvert.checkpoint(1) // built, no marker, nothing moved yet
-      // the build above can outlive the lease's staleness window —
-      // refresh (and re-verify) the lease BEFORE the marker goes down,
-      // so the marker-down window starts with a full lease term and a
-      // repairing reader cannot judge this converter dead mid-commit
-      if (!KvMaintenance.refresh(lease)) {
-        dropTable(tmp)
-        throw new IllegalStateException(
-          s"maintenance lease on $path was stolen mid-conversion; aborted")
-      }
-      // intent marker FIRST: from here every file this conversion
-      // moves into the table directory is named by a durable marker,
-      // so a crash at ANY later point is sweepable by any reader —
-      // nothing moved in can be stranded invisibly
-      ZConvert.writeMarker(path, newFiles.toSet, newMeta)
-      ZConvert.checkpoint(2) // marker down, nothing moved yet
-      var moved = 0
-      newFiles.foreach { f =>
-        SidecarFs.move(SidecarFs.child(tmp, f), SidecarFs.child(path, f))
-        SidecarFs.move(SidecarFs.child(tmp, f.stripSuffix(".kv") + ".kvmeta"),
-          SidecarFs.child(path, f.stripSuffix(".kv") + ".kvmeta"))
-        moved += 1
-        if (moved == 1) ZConvert.checkpoint(3) // mid-move, marker down
-      }
-      dropTable(tmp)
-      def dropMoved(): Unit = newFiles.foreach { f =>
-        SidecarFs.deleteIfExists(SidecarFs.child(path, f))
-        SidecarFs.deleteIfExists(
-          SidecarFs.child(path, f.stripSuffix(".kv") + ".kvmeta"))
-      }
-      // a stolen lease means a successor (converter or repair) may
-      // already own the directory — abandon our build, never commit
-      if (!KvMaintenance.stillHeld(lease)) {
-        dropMoved()
-        ZConvert.clearMarker(path)
-        throw new IllegalStateException(
-          s"maintenance lease on $path was stolen mid-conversion; aborted")
-      }
-      ZConvert.checkpoint(4) // moved in + marker down, CAS not attempted
-      // the single commit point: the manifest CAS. The CAS requires the
-      // live set to still be what the rewrite READ; any concurrent
-      // commit aborts the conversion (its rows would otherwise vanish
-      // from the converted table).
-      val swapped = SegmentFile.commitManifest(path) { live =>
-        if (live == oldSet) Some(newFiles.toSet) else None
-      }
-      if (swapped.isEmpty) {
-        ZConvert.clearMarker(path)
-        dropMoved()
-        throw new IllegalStateException(
-          s"concurrent commit on $path during z-order conversion; aborted")
-      }
-      // post-CAS verify: if a repair stole the lease in the window
-      // between stillHeld above and the CAS, it may have swept the
-      // marker and the replacement segments this manifest now names —
-      // roll the manifest back to the old set (old segments are still
-      // on disk; nothing is pruned yet) and fail loudly, rather than
-      // leave a committed manifest pointing at deleted files
-      val survived = SidecarFs.exists(ZConvert.markerPath(path)) &&
-        newFiles.forall(f => SidecarFs.exists(SidecarFs.child(path, f)))
-      if (!survived) {
-        SegmentFile.commitManifest(path) { live =>
-          if (live == newFiles.toSet) Some(oldSet) else None
-        }
-        dropMoved()
-        ZConvert.clearMarker(path)
-        throw new IllegalStateException(
-          s"z-order conversion on $path lost its lease to a repair at " +
-            "the commit point; manifest rolled back")
-      }
-      ZConvert.checkpoint(5) // committed; meta still the old layout
-      // post-commit completion — idempotent, re-run by ZConvert.repair
-      // from any reader if this process dies here
-      ZConvert.writeMetaContent(path, newMeta)
-      ZConvert.checkpoint(6) // meta flipped, history not pruned
-      SegmentFile.pruneManifestVersions(path, Long.MaxValue)
-      ZConvert.checkpoint(7) // pruned, marker still down
-      ZConvert.clearMarker(path)
-      KvIndex.invalidate(path)
-      rows
-    } finally KvMaintenance.release(lease)
+    relayout(tableAsOf(spark, path, v), path, dims, m.encoding, read.files)
+  }
+
+  /** The conversion's write: `src` (the table as of the version whose
+    * live set is `read`) re-keyed by `dims`, committed only if `read` is
+    * still the whole live set. */
+  private[connector] def relayout(src: DataFrame, path: String,
+      dims: Seq[String], encoding: String, read: Set[String]): Long = {
+    val (withZ, zdims) =
+      zOrdered(if (src.columns.contains("_z")) src.drop("_z") else src, dims)
+    try overwrite(withZ, path, "_z" +: dims, encoding, zdims, None, None,
+      replace = Some(read))
+    catch {
+      case _: GraftKvRewriteConflict => throw new IllegalStateException(
+        s"concurrent commit on $path during z-order conversion; aborted")
+    }
+    KvIndex.invalidate(path)
+    SegmentFile.listSegments(path).map(_.count).sum
   }
 
   /** Pruning evidence for a kv query, as a relation: one row per kv
@@ -310,7 +226,6 @@ object KvCommands {
   def dropTable(path: String): Unit = {
     SidecarFs.list(path)
       .filter(n => n.endsWith(".kv") || n.endsWith(".kvmeta") ||
-        n == "_graft_meta.json" ||
         n == "_graft_vhead" || // durable head-version hint dies too
         n.startsWith("_graft_segments.v") || // snapshot manifests: a
         // recreated table must not inherit the dead table's history
@@ -318,17 +233,11 @@ object KvCommands {
         n.startsWith("_graft_ndv.v") || // NDV sketch packs die too
         n.startsWith("_graft_qs.v") || // quantile-summary packs die too
         SidecarFs.isTempArtifact(n) || // crash-stranded atomic-write temps
-        n.startsWith("._graft_zconvert") || // conversion intent markers
         n.startsWith("._graft_epoch-") || // streaming markers die with the table
         // Hadoop local-FS checksum shadows of the control files above
         // (a recreated table must not trip over a dead table's crc)
         (n.startsWith("._graft") && n.endsWith(".crc")))
       .foreach(n => SidecarFs.deleteIfExists(SidecarFs.child(path, n)))
-    // sweep scratch dirs stranded by a crashed z-order conversion
-    SidecarFs.list(path)
-      .filter(n => n.startsWith(".zconvert-") &&
-        SidecarFs.isDirectory(SidecarFs.child(path, n)))
-      .foreach(n => SidecarFs.deleteRecursively(SidecarFs.child(path, n)))
     // secondary indexes and materialized views die with their table
     val idx = SidecarFs.child(path, "_index")
     if (SidecarFs.isDirectory(idx)) SidecarFs.deleteRecursively(idx)
@@ -530,7 +439,7 @@ object KvCommands {
         .foreach(n => SidecarFs.deleteIfExists(SidecarFs.child(path, n)))
       // temp files stranded by a crash between write and the
       // finally-delete in any SidecarFs atomic primitive (manifest CAS,
-      // meta/stats/ndv/qs swaps, epoch/zconvert markers): nothing else
+      // stats/ndv/qs swaps, epoch markers, the head hint): nothing else
       // reclaims them, so they'd accumulate until DROP TABLE. One
       // shared recognizer — a hand-kept prefix list here silently
       // missed `_graft_segments.v<N>` CAS temps and the double-dotted
@@ -546,24 +455,28 @@ object KvCommands {
   def snapshots(path: String): Seq[Long] = SegmentFile.manifestVersions(path)
 
   /** Roll the table back to a retained snapshot: publish that
-    * snapshot's segment set as a NEW commit (history moves forward — the
-    * rolled-back-over commits stay retained and readable until the
-    * sweep, so a restore is itself undoable). Segments are immutable
-    * and still on disk within the retention window, so this is a
-    * metadata-only operation at any table size. */
+    * snapshot's manifest — its declaration and its segment set — as a
+    * NEW commit (history moves forward — the rolled-back-over commits
+    * stay retained and readable until the sweep, so a restore is itself
+    * undoable). Segments are immutable and still on disk within the
+    * retention window, so this is a metadata-only operation at any
+    * table size. */
   def restoreTable(path: String, version: Long): Unit = {
-    val snap = SegmentFile.readManifestVersion(path, version).getOrElse(
-      throw new IllegalArgumentException(
-        s"no snapshot version $version at $path " +
-          s"(retained: ${SegmentFile.manifestVersions(path).mkString(", ")})"))
+    val snap = snapshot(path, version)
     val missing =
-      snap.filterNot(f => SidecarFs.exists(SidecarFs.child(path, f)))
+      snap.files.filterNot(f => SidecarFs.exists(SidecarFs.child(path, f)))
     if (missing.nonEmpty) throw new IllegalStateException(
       s"snapshot $version references swept segments: " +
         missing.toSeq.sorted.mkString(", "))
     SegmentFile.commitManifest(path)(_ => Some(snap))
     ()
   }
+
+  private def snapshot(path: String, version: Long): SegmentFile.Manifest =
+    SegmentFile.readVersion(path, version).getOrElse(
+      throw new IllegalArgumentException(
+        s"no snapshot version $version at $path " +
+          s"(retained: ${SegmentFile.manifestVersions(path).mkString(", ")})"))
 
   /** ZERO-COPY clone: a new independent table over the same immutable
     * segment files (hard links — same inodes, separate directory
@@ -576,27 +489,21 @@ object KvCommands {
     * to file copies when linking is impossible (cross-device). */
   def cloneTable(src: String, dst: String,
       version: Option[Long] = None): Unit = {
-    val m = GraftKvMeta.read(src).getOrElse(
-      throw new IllegalArgumentException(s"no graftkv table at $src"))
-    if (GraftKvMeta.read(dst).isDefined)
-      throw new IllegalArgumentException(s"clone target $dst already exists")
-    val live: Set[String] = version match {
-      case Some(v) => SegmentFile.readManifestVersion(src, v).getOrElse(
-        throw new IllegalArgumentException(
-          s"no snapshot version $v at $src " +
-            s"(retained: ${SegmentFile.manifestVersions(src).mkString(", ")})"))
-      case None => SegmentFile.readManifest(src).getOrElse(Set.empty[String])
-    }
+    val snap = version.map(snapshot(src, _))
+      .orElse(SegmentFile.readHead(src).map(_._2))
+      .filter(s => GraftKvMeta.decode(s.header).nonEmpty)
+      .getOrElse(throw new IllegalArgumentException(s"no graftkv table at $src"))
+    def exists = new IllegalArgumentException(s"clone target $dst already exists")
+    if (GraftKvMeta.read(dst).isDefined) throw exists
     SidecarFs.mkdirs(dst)
     def share(name: String): Unit =
       SidecarFs.shareOrCopy(SidecarFs.child(src, name),
         SidecarFs.child(dst, name))
-    live.foreach { f =>
+    snap.files.foreach { f =>
       share(f)
       share(f.stripSuffix(".kv") + ".kvmeta")
     }
-    GraftKvMeta.write(dst, m.schema, m.keys, m.encoding, m.zorder, m.props)
-    SegmentFile.writeManifest(dst, live)
+    if (!SegmentFile.createManifest(dst, snap)) throw exists
   }
 
   /** Time travel via the path API: the table as of snapshot `version`
@@ -675,120 +582,4 @@ object KvCommands {
     * overlapping groups. Returns true if a compaction ran. */
   def autoCompact(spark: SparkSession, path: String, maxDepth: Int = 4): Boolean =
     overlapDepth(path) > maxDepth && compactMinor(spark, path) > 0
-}
-
-/** Crash-repair protocol for `OPTIMIZE … ZORDER BY` (see
-  * [[KvCommands.convertToZOrder]]): an intent marker written just
-  * before the manifest CAS carries the new segment set and the new
-  * table meta, so ANY later reader can tell which side of the commit
-  * point a crash landed on and finish (or undo) deterministically —
-  * the conversion has no manual-repair window.
-  *
-  * Marker format (written via tmp + atomic move, so never torn):
-  * {{{
-  *   <n>            — count of new segment files
-  *   <file_1..n>    — the new live set, sorted
-  *   <meta>         — the new _graft_meta.json content (2 lines)
-  * }}} */
-private[connector] object ZConvert {
-  import graft.io.SidecarFs
-  import graft.store.SegmentFile
-
-  /** Test-only fault injection: `convertToZOrder` calls
-    * `checkpoint(n)` between protocol steps; a spec can arm a crash at
-    * a step, or an arbitrary action (e.g. a concurrent append racing
-    * the CAS). Production values never fire. */
-  @volatile private[connector] var testCrashPoint: Int = -1
-  @volatile private[connector] var testCheckpointAction: Int => Unit = null
-  private[connector] def checkpoint(step: Int): Unit = {
-    val a = testCheckpointAction
-    if (a != null) a(step)
-    if (testCrashPoint == step)
-      throw new RuntimeException(s"injected crash at zconvert step $step")
-  }
-
-  def markerPath(dir: String): String =
-    SidecarFs.child(dir, "._graft_zconvert")
-
-  def writeMarker(dir: String, newFiles: Set[String], meta: String): Unit =
-    SidecarFs.writeStringAtomic(markerPath(dir),
-      (Seq(newFiles.size.toString) ++ newFiles.toSeq.sorted :+ meta)
-        .mkString("\n"))
-
-  def readMarker(dir: String): Option[(Set[String], String)] =
-    try {
-      if (!SidecarFs.exists(markerPath(dir))) None
-      else {
-        val lines = SidecarFs.readString(markerPath(dir)).split("\n", -1)
-        val n = lines(0).trim.toInt
-        Some((lines.slice(1, 1 + n).toSet,
-          lines.drop(1 + n).mkString("\n")))
-      }
-    } catch { case _: Exception => None }
-
-  def clearMarker(dir: String): Unit =
-    SidecarFs.deleteIfExists(markerPath(dir))
-
-  /** Atomic meta publish from raw content (GraftKvMeta.write's rename
-    * discipline, without re-deriving the serialized form). */
-  def writeMetaContent(dir: String, content: String): Unit =
-    SidecarFs.writeStringAtomic(
-      SidecarFs.child(dir, "_graft_meta.json"), content)
-
-  /** Read-side repair, called by GraftKvMeta.read before every meta
-    * read (one Files.exists on the hot path). Cases:
-    *  - manifest == marker's new set → the CAS committed: finish the
-    *    meta flip (idempotent — the live converter may be doing the
-    *    same), prune pre-conversion snapshots, clear the marker;
-    *  - manifest ≠ new set → either a converter is mid-flight or one
-    *    crashed before the commit point. The two are distinguished by
-    *    ACQUIRING the maintenance lease (steal-if-stale), never by an
-    *    mtime-age guess: acquisition failing means a live converter
-    *    holds it — old meta governs, leave everything alone; acquiring
-    *    it means any converter is dead or expired, so under the lease
-    *    the old table governs — drop the stranded unmanifested
-    *    replacement segments, stranded scratch dirs, and the marker.
-    *    (A zombie converter that expired mid-commit is still fenced:
-    *    its post-CAS verify sees the swept marker/segments and rolls
-    *    its manifest back — see [[KvCommands.convertToZOrder]].) */
-  def repair(dir: String): Unit = {
-    if (!SidecarFs.exists(markerPath(dir))) return
-    readMarker(dir).foreach { case (newSet, meta) =>
-      val live = try SegmentFile.readManifest(dir)
-        catch { case _: Exception => None }
-      if (live.contains(newSet)) {
-        writeMetaContent(dir, meta)
-        SegmentFile.pruneManifestVersions(dir, Long.MaxValue)
-        clearMarker(dir)
-        KvIndex.invalidate(dir)
-      } else KvMaintenance.acquire(dir).foreach { l =>
-        try {
-          // re-read under the lease: the marker may have been cleared
-          // (conversion finished or aborted) between the check above
-          // and the acquisition — destructive cleanup must act only on
-          // the state the lease now fences
-          readMarker(dir).foreach { case (newSet2, _) =>
-            val live2 = try SegmentFile.readManifest(dir)
-              catch { case _: Exception => None }
-            if (!live2.contains(newSet2)) {
-              newSet2.filterNot(f => live2.exists(_.contains(f))).foreach { f =>
-                SidecarFs.deleteIfExists(SidecarFs.child(dir, f))
-                SidecarFs.deleteIfExists(
-                  SidecarFs.child(dir, f.stripSuffix(".kv") + ".kvmeta"))
-              }
-              // a crash mid-build also strands the hidden scratch
-              // subdirectory; with the lease held no converter is
-              // live, so any scratch here is dead
-              SidecarFs.list(dir)
-                .filter(n => n.startsWith(".zconvert-") &&
-                  SidecarFs.isDirectory(SidecarFs.child(dir, n)))
-                .foreach(n =>
-                  SidecarFs.deleteRecursively(SidecarFs.child(dir, n)))
-              clearMarker(dir)
-            }
-          }
-        } finally KvMaintenance.release(l)
-      }
-    }
-  }
 }

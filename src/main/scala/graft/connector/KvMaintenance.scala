@@ -120,23 +120,6 @@ object KvMaintenance {
     None
   }
 
-  /** Refresh OUR lease's mtime so age-based staleness restarts from
-    * now. A long-running holder (the z-order converter's build can
-    * exceed `DefaultLeaseMs`) calls this right before entering a
-    * window where expiry would let a destructive repair race it.
-    * Verify-then-touch: the content check keeps us from refreshing a
-    * thief's lease as a matter of course; the residual window (steal
-    * lands between check and touch) only freshens a lease that was
-    * fresh moments ago — harmless. Returns stillHeld. */
-  def refresh(l: Lease): Boolean =
-    try {
-      if (SidecarFs.readString(l.path) != l.token) false
-      else {
-        SidecarFs.setMtime(l.path, System.currentTimeMillis())
-        true
-      }
-    } catch { case _: Exception => false }
-
   /** Does `l` still name the CURRENT lease? A holder must re-check this
     * immediately before publishing anything irreversible — a stolen
     * lease means a successor may have run, and the holder's writes are

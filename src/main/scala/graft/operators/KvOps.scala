@@ -47,7 +47,7 @@ object KvOps {
       compress: Option[String] = None): String = lock.synchronized {
     val path = s"${kvRoot(sfDir)}/$fixture"
     val marker = java.nio.file.Paths.get(path, "_fixture_format")
-    val current = graft.connector.GraftKvMeta.read(path)
+    val current = graft.Tables.kvFixtureMeta(path)
         .exists(m => m.keys == keys && m.encoding == encoding &&
           m.props.get(graft.connector.GraftKvMeta.SegmentCompressProp) ==
             compress) &&
@@ -168,7 +168,7 @@ object KvOps {
       val p = s"${kvRoot(d)}/orders_upsert"
       // rebuild when absent OR when built by a pre-snapshot code version
       // (kv19 reads the creation snapshot, so the commit log must exist)
-      if (graft.connector.GraftKvMeta.read(p).isEmpty ||
+      if (graft.Tables.kvFixtureMeta(p).isEmpty ||
         KvCommands.snapshots(p).size < 2) {
         KvCommands.dropTable(p)
         val o = Tables.table(s, d, "orders")
@@ -188,7 +188,8 @@ object KvOps {
   private def ordersDeleteKv(s: SparkSession, d: String): DataFrame = {
     val path = lock.synchronized {
       val p = s"${kvRoot(d)}/orders_delete"
-      if (graft.connector.GraftKvMeta.read(p).isEmpty) {
+      if (graft.Tables.kvFixtureMeta(p).isEmpty) {
+        KvCommands.dropTable(p)
         KvCommands.createTable(Tables.table(s, d, "orders"), p, Seq("o_orderkey"))
         KvCommands.delete(s, p, col("o_totalprice") < 100000.0)
       }
@@ -204,7 +205,7 @@ object KvOps {
     val path = lock.synchronized {
       val p = s"${kvRoot(d)}/orders_update"
       // snapshots < 2 = created but the update never committed: rebuild
-      if (graft.connector.GraftKvMeta.read(p).isEmpty ||
+      if (graft.Tables.kvFixtureMeta(p).isEmpty ||
         KvCommands.snapshots(p).size < 2) {
         KvCommands.dropTable(p)
         KvCommands.createTable(Tables.table(s, d, "orders"), p, Seq("o_orderkey"))
@@ -228,7 +229,7 @@ object KvOps {
   private def ordersZPath(s: SparkSession, d: String): String =
     lock.synchronized {
       val p = s"${kvRoot(d)}/orders_z"
-      if (!graft.connector.GraftKvMeta.read(p).exists(_.zorder.nonEmpty)) {
+      if (!graft.Tables.kvFixtureMeta(p).exists(_.zorder.nonEmpty)) {
         KvCommands.dropTable(p)
         KvCommands.createZOrderTable(Tables.table(s, d, "orders"), p,
           Seq("o_custkey", "o_orderkey"))
@@ -242,7 +243,7 @@ object KvOps {
   private def eventsZPath(s: SparkSession, d: String): String =
     lock.synchronized {
       val p = s"${kvRoot(d)}/events_z"
-      if (!graft.connector.GraftKvMeta.read(p).exists(_.zorder.nonEmpty)) {
+      if (!graft.Tables.kvFixtureMeta(p).exists(_.zorder.nonEmpty)) {
         KvCommands.dropTable(p)
         KvCommands.createZOrderTable(Tables.table(s, d, "events"), p,
           Seq("user_id", "event_type", "event_id"))
@@ -272,7 +273,7 @@ object KvOps {
       val cat = "graft_kvops_" + d.replaceAll("[^a-zA-Z0-9]", "_")
       val p = s"$root/db/orders_merge"
       // snapshots < 2 = created but the merge never committed: rebuild
-      if (graft.connector.GraftKvMeta.read(p).isEmpty ||
+      if (graft.Tables.kvFixtureMeta(p).isEmpty ||
         KvCommands.snapshots(p).size < 2) {
         KvCommands.dropTable(p)
         s.conf.set(s"spark.sql.catalog.$cat",

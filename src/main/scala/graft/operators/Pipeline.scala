@@ -409,9 +409,9 @@ object PipelineOps {
       val fp = corpusFp(sfDir)
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_ir/" +
         s"${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}/v3_$fp" // v3: + docterms
-      if (graft.connector.GraftKvMeta.read(s"$path/postings").isEmpty ||
-          graft.connector.GraftKvMeta.read(s"$path/positions").isEmpty ||
-          graft.connector.GraftKvMeta.read(s"$path/docterms").isEmpty ||
+      if (graft.Tables.kvFixtureMeta(s"$path/postings").isEmpty ||
+          graft.Tables.kvFixtureMeta(s"$path/positions").isEmpty ||
+          graft.Tables.kvFixtureMeta(s"$path/docterms").isEmpty ||
           !new java.io.File(s"$path/stats/_SUCCESS").exists()) {
         graft.connector.KvCommands.dropTable(s"$path/postings")
         graft.connector.KvCommands.dropTable(s"$path/positions")
@@ -439,8 +439,8 @@ object PipelineOps {
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_ir/" +
         s"${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}/del1_$fp"
       val marker = new java.io.File(s"$path/_DELETED")
-      if (graft.connector.GraftKvMeta.read(s"$path/postings").isEmpty ||
-          graft.connector.GraftKvMeta.read(s"$path/docterms").isEmpty ||
+      if (graft.Tables.kvFixtureMeta(s"$path/postings").isEmpty ||
+          graft.Tables.kvFixtureMeta(s"$path/docterms").isEmpty ||
           !marker.exists()) {
         Seq("postings", "positions", "doclen", "docterms").foreach(tbl =>
           graft.connector.KvCommands.dropTable(s"$path/$tbl"))

@@ -791,36 +791,64 @@ object SegmentFile {
   }
 
   // ── live-segment manifest ──────────────────────────────────────────────
-  // Commits and compactions record the LIVE segment set in a versioned
-  // manifest log (`_graft_segments.vN`), the table's one metadata
-  // authority: the head (highest retained version) is the current
-  // state. Version N+1 is published with CREATE-IF-ABSENT semantics
-  // (hard link — atomic fail-if-exists on POSIX), so a
-  // read-modify-write commit is an optimistic CAS: two concurrent
-  // committers can both read version N, but only one can create N+1 —
-  // the loser re-probes and re-applies, and neither can ever silently
-  // drop the other's committed segments. A multi-step rewrite (write
-  // replacement segments, THEN publish, THEN delete originals) stays
-  // crash-safe: a reader always sees a committed set, and files a
-  // crash orphaned between steps are simply never listed. Versions are
-  // retired oldest-first (the count cap below, the retention sweep), so
-  // the retained ones are contiguous up to the head, and commits, plans
-  // and history reads find them by existence probes from the durable
-  // head hint ([[currentVersion]]) — never by listing the directory.
-  // Concurrent readers are always safe — compaction keeps replaced
-  // segments on disk for a retention window
+  // Every commit publishes one versioned manifest file
+  // (`_graft_segments.vN`), the table's one metadata authority: a header
+  // (the table declaration — opaque text here, encoded and decoded by
+  // graft.connector.GraftKvMeta), a blank line, then the LIVE segment
+  // set, one file name per line. The head (highest retained version) is
+  // the current state and every older version is a complete snapshot,
+  // declaration included. Version N+1 is published with
+  // CREATE-IF-ABSENT semantics (hard link — atomic fail-if-exists on
+  // POSIX), so a read-modify-write commit is an optimistic CAS: two
+  // concurrent committers can both read version N, but only one can
+  // create N+1 — the loser re-probes and re-applies, and neither can
+  // ever silently drop the other's segments or declaration change. A
+  // multi-step rewrite (write replacement segments, THEN publish, THEN
+  // delete originals) stays crash-safe: a reader always sees a committed
+  // version, and files a crash orphaned between steps are simply never
+  // listed. Versions are retired oldest-first (the count cap below, the
+  // retention sweep), so the retained ones are contiguous up to the
+  // head, and commits, plans and history reads find them by existence
+  // probes from the durable head hint ([[currentVersion]]) — never by
+  // listing the directory. Concurrent readers are always safe —
+  // compaction keeps replaced segments on disk for a retention window
   // (KvCommands.sweepUnmanifested), so scans planned against an older
   // version finish against their own snapshot.
 
+  /** One manifest version: the table declaration and the live set. */
+  final case class Manifest(header: String, files: Set[String])
+  object Manifest {
+    /** The base a table's first commit transforms. */
+    val Empty: Manifest = Manifest("", Set.empty)
+  }
+
+  private def encodeManifest(m: Manifest): Array[Byte] = {
+    require(!m.header.contains("\n\n") && !m.header.endsWith("\n"),
+      "a manifest header may not hold a blank line or end with a newline")
+    (m.header + "\n\n" + m.files.toSeq.sorted.mkString("\n"))
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  }
+
+  private def decodeManifest(text: String): Manifest = {
+    val cut = text.indexOf("\n\n")
+    if (cut < 0) throw new IllegalStateException("torn manifest (no header)")
+    Manifest(text.substring(0, cut),
+      text.substring(cut + 2).linesIterator.map(_.trim).filter(_.nonEmpty).toSet)
+  }
+
   /** Live `.kv` file names as of the head version; None when no version
     * was ever published at `dir`. */
-  def readManifest(dir: String): Option[Set[String]] = {
+  def readManifest(dir: String): Option[Set[String]] = readHead(dir).map(_._2.files)
+
+  /** The head version and its manifest; None when no version was ever
+    * published at `dir`. */
+  def readHead(dir: String): Option[(Long, Manifest)] = {
     var attempts = 0
     while (attempts < 64) {
       currentVersion(dir) match {
         case None => return None
-        case Some(v) => readManifestVersion(dir, v) match {
-          case s @ Some(_) => return s
+        case Some(v) => readVersion(dir, v) match {
+          case Some(m) => return Some(v -> m)
           // version pruned between the probe and the read (a sweep or
           // drop raced us) — re-probe
           case None => attempts += 1
@@ -830,40 +858,42 @@ object SegmentFile {
     throw new IllegalStateException(s"cannot read a stable manifest at $dir")
   }
 
-  /** Optimistic-CAS manifest commit: read the head's committed set (the
-    * empty set before the first commit, which publishes v1), apply
-    * `transform`, publish the result as version head+1 with
+  /** Optimistic-CAS manifest commit: read the head's manifest
+    * ([[Manifest.Empty]] before the first commit, which publishes v1),
+    * apply `transform`, publish the result as version head+1 with
     * create-if-absent semantics, retrying the whole read-modify-write
     * on conflict. `transform` returning None aborts the commit (the
     * caller saw a base it cannot merge with — e.g. compaction whose
     * input segments were replaced by a concurrent maintainer); a
-    * transform that leaves an already-versioned manifest unchanged is
-    * a detected no-op (no duplicate snapshot version — an epoch replay
-    * repairing an already-swapped commit publishes nothing). Returns
-    * the live set as of this commit, or None on abort. */
+    * transform that leaves an already-versioned manifest unchanged —
+    * header and files alike — is a detected no-op (no duplicate
+    * snapshot version — an epoch replay repairing an already-swapped
+    * commit publishes nothing). Returns the manifest as of this commit,
+    * or None on abort. */
   def commitManifest(dir: String)(
-      transform: Set[String] => Option[Set[String]]): Option[Set[String]] = {
+      transform: Manifest => Option[Manifest]): Option[Manifest] = {
     val key = dirKey(dir)
     var attempts = 0
     while (attempts < 10000) {
       val head = currentVersion(dir)
-      val baseOpt = head.flatMap(readManifestVersion(dir, _))
+      val baseOpt = head.flatMap(readVersion(dir, _))
       if (head.nonEmpty && baseOpt.isEmpty) {
         // head retired between the probe and the read — re-probe
         attempts += 1
       } else {
-        val base = baseOpt.getOrElse(Set.empty[String])
+        val base = baseOpt.getOrElse(Manifest.Empty)
         transform(base) match {
           case None => return None
           case Some(next) =>
             if (next == base && head.nonEmpty) return Some(next)
             val v = head.getOrElse(0L) + 1L
-            if (tryPublishVersion(dir, v, next)) {
+            if (SidecarFs.createIfAbsent(versionedManifestPath(dir, v),
+                encodeManifest(next))) {
               versionHints.put(key, v)
               writeVersionHint(dir, v)
               // packed planning stats ride with the new version (see the
               // packed-stats section): previous pack + this commit's delta
-              publishStats(dir, v, head, next)
+              publishStats(dir, v, head, next.files)
               // bound the commit log: an append-only table (streaming
               // ingest) never compacts, so without a count cap it would
               // accumulate one snapshot per commit forever. Metadata-only:
@@ -881,26 +911,13 @@ object SegmentFile {
       s"manifest CAS at $dir still contended after $attempts attempts")
   }
 
-  /** Publish `files` as snapshot `v` iff no committer beat us to `v`.
-    * [[SidecarFs.createIfAbsent]] is the atomic create-if-absent
-    * primitive on every backend — hard link / `CREATE_NEW` locally,
-    * fully-written-temp + rename-if-absent on HDFS (rename would
-    * silently replace a concurrent winner's snapshot; rename-if-absent
-    * cannot). */
-  private def tryPublishVersion(dir: String, v: Long,
-      files: Set[String]): Boolean =
-    SidecarFs.createIfAbsent(versionedManifestPath(dir, v),
-      files.toSeq.sorted.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  /** Publish `files` as the new live set unconditionally — not a
-    * read-modify-write (CLONE's frozen copy, the empty seed of a
-    * catalog CREATE, bench fixtures). Identical content on an
-    * already-versioned table is a no-op. */
-  def writeManifest(dir: String, files: Iterable[String]): Unit = {
-    val set = files.toSet
-    commitManifest(dir)(_ => Some(set))
-    ()
+  /** Publish `m` as the first version of a new table at `dir` (catalog
+    * CREATE, CLONE, bench fixtures); false, publishing nothing, when a
+    * version already exists there. */
+  def createManifest(dir: String, m: Manifest): Boolean = {
+    SidecarFs.mkdirs(dir)
+    commitManifest(dir)(base =>
+      if (base == Manifest.Empty) Some(m) else None).nonEmpty
   }
 
   /** Newest snapshot manifests kept regardless of age (the time-based
@@ -937,12 +954,23 @@ object SegmentFile {
   def manifestVersionMtime(dir: String, v: Long): Long =
     SidecarFs.mtime(versionedManifestPath(dir, v))
 
-  def readManifestVersion(dir: String, v: Long): Option[Set[String]] = {
+  def readManifestVersion(dir: String, v: Long): Option[Set[String]] =
+    readVersion(dir, v).map(_.files)
+
+  /** Snapshot `v`'s manifest, parsed once per version file: cached on
+    * (dir, v, version-file identity) like the planning stats, so a warm
+    * read costs one stat. None when the version does not exist. */
+  def readVersion(dir: String, v: Long): Option[Manifest] = {
     val p = versionedManifestPath(dir, v)
-    if (!SidecarFs.exists(p)) None
-    else try Some(SidecarFs.readString(p).linesIterator.map(_.trim)
-      .filter(_.nonEmpty).toSet)
-    catch { case _: java.io.FileNotFoundException => None }
+    val key = StatsKey(dirKey(dir), v, SidecarFs.identity(p).getOrElse(return None))
+    manifestLock.synchronized(Option(manifestCache.get(key))) match {
+      case hit @ Some(_) => return hit
+      case None =>
+    }
+    val m = try decodeManifest(SidecarFs.readString(p))
+      catch { case _: java.io.FileNotFoundException => return None }
+    manifestLock.synchronized(manifestCache.put(key, m))
+    Some(m)
   }
 
   /** Delete snapshot `v`'s manifest and every pack derived from it. */
@@ -1071,10 +1099,19 @@ object SegmentFile {
           e: java.util.Map.Entry[StatsKey, Seq[Meta]]): Boolean = size() > 32
     }
 
+  /** (dir, version, version-file identity) → parsed manifest. */
+  private val manifestLock = new Object
+  private val manifestCache =
+    new java.util.LinkedHashMap[StatsKey, Manifest](64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[StatsKey, Manifest]): Boolean = size() > 256
+    }
+
   /** Test hook: drop every cached planning artifact (as a fresh driver
     * process would start). */
   private[graft] def clearPlanningCache(): Unit = {
     statsLock.synchronized(statsCache.clear())
+    manifestLock.synchronized(manifestCache.clear())
     ndvPacks.clear()
     qsPacks.clear()
     versionHints.clear()
@@ -1100,10 +1137,6 @@ object SegmentFile {
     try SidecarFs.writeStringAtomic(versionHintPath(dir), v.toString)
     catch { case scala.util.control.NonFatal(_) => () }
 
-  /** The table declaration (`GraftKvMeta`) beside the segments: present
-    * in every directory that holds a committed table. */
-  private val TableMetaFile = "_graft_meta.json"
-
   /** Current head version WITHOUT a directory listing: versions are
     * contiguous up to the head and the head is never retired, so
     * probing existence upward from a known version finds the head in
@@ -1112,8 +1145,9 @@ object SegmentFile {
     * fresh process pays two stat calls, and a directory that never held
     * a commit (a new table's first commit, a compaction's scratch
     * table, a dropped table) answers None without listing. Only a
-    * table whose hint is lost or stale AND whose v1 is retired lists
-    * its directory to find the head; that repair writes nothing — the
+    * table whose hint is stale or garbled AND whose v1 is retired lists
+    * its directory to find the head (a directory without the hint holds
+    * no table: every commit writes it); that repair writes nothing — the
     * read path never writes, and the next commit rewrites the hint. */
   def currentVersion(dir: String): Option[Long] = {
     val key = dirKey(dir)
@@ -1123,7 +1157,7 @@ object SegmentFile {
       .orElse(readVersionHint(dir).filter(published))
       .orElse(Some(1L).filter(published))
       .orElse(
-        if (!SidecarFs.exists(SidecarFs.child(dir, TableMetaFile))) None
+        if (!SidecarFs.exists(versionHintPath(dir))) None
         else versionsIn(SidecarFs.list(dir)).lastOption)
     start match {
       case None =>
@@ -1150,7 +1184,7 @@ object SegmentFile {
       case hit @ Some(_) => return hit
       case None =>
     }
-    val live = readManifestVersion(dir, v).getOrElse(return None)
+    val live = readVersion(dir, v).getOrElse(return None).files
     // a pack is authoritative only when it lists EXACTLY the manifest's
     // set (guards torn/mismatched packs from a crashed committer)
     val metas = readPackedStats(dir, v)

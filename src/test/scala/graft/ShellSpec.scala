@@ -15,6 +15,14 @@ class ShellSpec extends AnyFunSuite {
     s
   }
 
+  /** A table's directory under the `graft` catalog instance Spark
+    * resolves: Spark keeps the first instance it built under a name, so
+    * a suite that registered `graft` earlier in this JVM owns the root. */
+  private def tableDir(ns: String, t: String): String =
+    spark.sessionState.catalogManager.catalog("graft")
+      .asInstanceOf[connector.GraftKvCatalog]
+      .tableDir(org.apache.spark.sql.connector.catalog.Identifier.of(Array(ns), t))
+
   test("corpus views, kv DDL, and native functions through one SQL session") {
     assert(Shell.execute(spark, "SELECT count(*) AS c FROM lineitem;").head().getLong(0) == 6000L)
     Shell.execute(spark, "CREATE NAMESPACE IF NOT EXISTS graft.sh")
@@ -104,8 +112,7 @@ class ShellSpec extends AnyFunSuite {
       "CREATE TABLE graft.cl.src (k BIGINT, v STRING) TBLPROPERTIES('key'='k')")
     Shell.execute(spark, "INSERT INTO graft.cl.src VALUES (1, 'a')")
     Shell.execute(spark, "INSERT INTO graft.cl.src VALUES (2, 'b')")
-    val root = spark.conf.get("spark.sql.catalog.graft.root")
-    val midVersion = graft.connector.KvCommands.snapshots(s"$root/cl/src")
+    val midVersion = graft.connector.KvCommands.snapshots(tableDir("cl", "src"))
       .dropRight(1).last // the state after the first INSERT
 
     Shell.execute(spark, "CLONE TABLE graft.cl.src INTO graft.cl.full")
@@ -135,8 +142,7 @@ class ShellSpec extends AnyFunSuite {
     Shell.execute(spark,
       "CREATE TABLE graft.rs.t (k BIGINT, v STRING) TBLPROPERTIES('key'='k')")
     Shell.execute(spark, "INSERT INTO graft.rs.t VALUES (1, 'a')")
-    val root = spark.conf.get("spark.sql.catalog.graft.root")
-    val goodVersion = graft.connector.KvCommands.snapshots(s"$root/rs/t").last
+    val goodVersion = graft.connector.KvCommands.snapshots(tableDir("rs", "t")).last
     Shell.execute(spark, "INSERT INTO graft.rs.t VALUES (2, 'oops')")
     def ks(): Seq[Long] =
       Shell.execute(spark, "SELECT k FROM graft.rs.t ORDER BY k")
@@ -147,7 +153,7 @@ class ShellSpec extends AnyFunSuite {
     assert(ks() == Seq(1L))
     // the restore is itself a commit: the pre-restore state stays a
     // retained snapshot, so the rollback is undoable
-    val preRestore = graft.connector.KvCommands.snapshots(s"$root/rs/t")
+    val preRestore = graft.connector.KvCommands.snapshots(tableDir("rs", "t"))
       .dropRight(1).last
     Shell.execute(spark,
       s"RESTORE TABLE graft.rs.t VERSION AS OF $preRestore")

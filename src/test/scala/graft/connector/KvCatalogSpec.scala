@@ -263,14 +263,6 @@ class KvCatalogSpec extends AnyFunSuite {
     assert(zErr.getMessage.contains("key column") ||
       zErr.getMessage.contains("z-order dimension"), zErr.getMessage)
     assert(spark.table("graft.zo.t").columns.contains("a"))
-    // one converter at a time: a held maintenance lease refuses a second
-    val loc = dd.getString(dd.fieldIndex("location"))
-    val lease = KvMaintenance.acquire(loc).get
-    try {
-      val eLease = intercept[Exception](
-        spark.sql("OPTIMIZE graft.zo.t ZORDER BY (b, a)"))
-      assert(eLease.getMessage.contains("lease"), eLease.getMessage)
-    } finally KvMaintenance.release(lease)
     // derived artifacts key on the old layout: conversion refuses
     spark.sql("CREATE INDEX ia ON TABLE graft.zo.t (v)")
     val err = intercept[Exception](
@@ -280,68 +272,62 @@ class KvCatalogSpec extends AnyFunSuite {
     spark.sql("DROP TABLE graft.zo.t")
   }
 
+  /** The table at `dir` as a fresh process reads it: declaration, head
+    * manifest and rows. */
+  private def state(dir: String) = {
+    graft.store.SegmentFile.clearPlanningCache()
+    (GraftKvMeta.read(dir), graft.store.SegmentFile.readHead(dir),
+      KvCommands.table(spark, dir).select("k", "a", "b").orderBy("k")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
+  }
+
+  private def kvFiles(dir: String): Set[String] =
+    new java.io.File(dir).list().filter(_.endsWith(".kv")).toSet
+
   test("ZORDER conversion killed mid-publish: old table intact / flip finished") {
-    import graft.store.SegmentFile
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.zc")
-    spark.sql("CREATE TABLE graft.zc.t (k BIGINT, a BIGINT, b BIGINT) " +
-      "TBLPROPERTIES ('key'='k')")
-    spark.sql("INSERT INTO graft.zc.t SELECT id, id div 50, id % 50 FROM range(2000)")
-    val dd = spark.sql("DESCRIBE DETAIL graft.zc.t").head()
-    val dir = dd.getString(dd.fieldIndex("location"))
-    val truth = spark.sql("SELECT k, a, b FROM graft.zc.t ORDER BY k").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-
-    // the converter's exact build phase, stopped at a chosen point —
-    // the commit protocol's own pieces, no scheduling luck involved
-    def buildReplacement(): (Set[String], String) = {
-      val src = spark.read.format("graftkv").load(dir)
-      val tmp = new java.io.File(dir,
-        s".zconvert-${java.util.UUID.randomUUID().toString.take(8)}").getPath
-      KvCommands.createZOrderTable(src, tmp, Seq("a", "b"))
-      val files = SegmentFile.listSegments(tmp).map(_.file)
-      val meta = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(tmp, "_graft_meta.json"))
-      files.foreach { f =>
-        java.nio.file.Files.move(java.nio.file.Paths.get(tmp, f),
-          java.nio.file.Paths.get(dir, f))
-        java.nio.file.Files.move(
-          java.nio.file.Paths.get(tmp, f.stripSuffix(".kv") + ".kvmeta"),
-          java.nio.file.Paths.get(dir, f.stripSuffix(".kv") + ".kvmeta"))
-      }
-      KvCommands.dropTable(tmp)
-      (files.toSet, meta)
+    // the conversion is one write whose commit is the manifest CAS. A
+    // failure anywhere before it — in the dims' stats job, the range
+    // sampling job or the write job — leaves the old table: declaration,
+    // manifest and rows, and no stray segment. After it, the table is
+    // converted, and reading it writes nothing: there is no repair step.
+    val dir = java.nio.file.Files.createTempDirectory("zckill").toString + "/t"
+    val n = 2000L
+    KvCommands.createTable(spark.range(n).select(col("id").as("k"),
+      expr("id div 50").as("a"), (col("id") % 50).as("b")), dir, Seq("k"))
+    val before = state(dir)
+    val files = kvFiles(dir)
+    def convert(): Unit = {
+      val (v, read) = graft.store.SegmentFile.readHead(dir).get
+      KvCommands.relayout(KvCommands.tableAsOf(spark, dir, v)
+        .select(col("k"), KvCatalogSpec.failing(col("a")).as("a"), col("b")),
+        dir, Seq("a", "b"), graft.store.RowCodec.Binary, read.files)
     }
-
-    // ── killed BEFORE the manifest CAS (marker + stranded segments on
-    // disk, nothing committed): the old table governs, the next read
-    // sweeps the leftovers
-    val oldSet = SegmentFile.readManifest(dir).get
-    val (new1, meta1) = buildReplacement()
-    ZConvert.writeMarker(dir, new1, meta1)
-    val back = spark.sql("SELECT k, a, b FROM graft.zc.t ORDER BY k").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(back == truth, "pre-CAS crash must leave the old table intact")
-    assert(!spark.table("graft.zc.t").columns.contains("_z"))
-    assert(ZConvert.readMarker(dir).isEmpty, "abandoned marker must be swept")
-    assert(SegmentFile.readManifest(dir).get == oldSet)
-    new1.foreach(f => assert(!new java.io.File(dir, f).exists(),
-      s"stranded replacement segment survived: $f"))
-
-    // ── killed AFTER the CAS, before the meta flip: the commit point
-    // passed, so the next read FINISHES the conversion
-    val (new2, meta2) = buildReplacement()
-    ZConvert.writeMarker(dir, new2, meta2)
-    SegmentFile.commitManifest(dir)(_ => Some(new2))
-    val after = spark.sql("SELECT k, a, b FROM graft.zc.t ORDER BY k").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(after == truth, "post-CAS crash must finish with every row intact")
-    assert(spark.table("graft.zc.t").columns.contains("_z"),
-      "post-CAS repair must flip the table meta to the z layout")
-    assert(ZConvert.readMarker(dir).isEmpty)
-    // pre-conversion snapshots describe the OLD key layout: pruned, so
-    // time travel fails with "no snapshot" instead of a garbage decode
-    assert(SegmentFile.manifestVersions(dir).length == 1)
-    spark.sql("DROP TABLE graft.zc.t")
+    // kill points: every evaluation from the k-th on throws
+    val killed = Iterator.iterate(1L)(_ + n).map { k =>
+      KvCatalogSpec.calls.set(0L)
+      KvCatalogSpec.killAt.set(k)
+      try { convert(); false }
+      catch { case e: Exception if KvCatalogSpec.injected(e) => true }
+      finally KvCatalogSpec.killAt.set(Long.MaxValue)
+    }.takeWhile(identity).map { _ =>
+      assert(state(dir) == before, "a failure before the commit changed the table")
+      assert(kvFiles(dir) == files, "an aborted conversion left segments behind")
+    }.length
+    assert(killed >= 3, s"only $killed kill points fired before the commit")
+    // the last round ran to its commit: the converted table
+    val (meta, head, rows) = state(dir)
+    assert(meta.get.keys == Seq("_z", "a", "b") && meta.get.zorder.map(_.name) ==
+      Seq("a", "b"))
+    assert(rows == before._3)
+    assert(head.get._1 == before._2.get._1 + 1, "the conversion is one commit")
+    def listing() = new java.io.File(dir).listFiles().map(f =>
+      f.getName -> f.lastModified()).toSet
+    val published = listing()
+    assert(state(dir)._3 == rows && GraftKvMeta.read(dir) == meta)
+    assert(listing() == published, "reading the converted table wrote files")
+    assert(KvCommands.table(spark, dir)
+      .filter(col("a") === 3 && col("b") < 10).count() == 10L)
+    KvCommands.dropTable(dir)
   }
 
   test("SHOW TBLPROPERTIES reports the layout + persisted properties") {
@@ -359,187 +345,49 @@ class KvCatalogSpec extends AnyFunSuite {
     spark.sql("DROP TABLE graft.props.t")
   }
 
-  test("conversion crash fuzz: death at every protocol step repairs clean") {
-    // fault injection at each of the 7 checkpoints of convertToZOrder:
-    // whatever side of the manifest-CAS commit point the death lands
-    // on, the next READ leaves an intact, exact table — old layout
-    // before the CAS (and a fresh conversion then completes), new
-    // layout finished read-side after it. Every row is re-verified.
-    import graft.store.SegmentFile
-    for (step <- 1 to 7) {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"zcfuzz$step").toString + "/t"
-      val df = spark.range(500).select(col("id").as("k"),
-        expr("id div 25").as("a"), (col("id") % 25).as("b"))
-      KvCommands.createTable(df, dir, Seq("k"))
-      val truth = KvCommands.table(spark, dir).orderBy("k")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-      ZConvert.testCrashPoint = step
-      val died =
-        try { KvCommands.convertToZOrder(spark, dir, Seq("a", "b")); false }
-        catch {
-          case e: RuntimeException if e.getMessage.contains("injected") => true
-        } finally ZConvert.testCrashPoint = -1
-      assert(died, s"step $step: injected crash did not fire")
-      // the next read repairs (the crashed holder's lease was released
-      // by its unwinding — the post-expiry state a real crash reaches)
-      val m = GraftKvMeta.read(dir).get
-      val back = KvCommands.table(spark, dir)
-        .select("k", "a", "b").orderBy("k")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-      assert(back == truth, s"step $step: rows diverged after repair")
-      assert(ZConvert.readMarker(dir).isEmpty, s"step $step: marker survived")
-      // no disk leaks: before the commit point (steps ≤ 4) every .kv
-      // file in the directory is manifested — the marker-first
-      // protocol lets repair sweep segments the dead converter moved
-      // in from ANY crash point (pre-round-10, deaths between the
-      // move-in and the marker stranded them forever). After the
-      // commit (steps ≥ 5) the OLD set legitimately awaits VACUUM.
-      // The hidden scratch dir of a crashed build is swept too once a
-      // marker existed (step 1 dies before its marker — its scratch
-      // is dropTable's to sweep).
-      val manifested = SegmentFile.readManifest(dir).get
-      val onDisk = new java.io.File(dir).list().filter(_.endsWith(".kv")).toSet
-      if (step <= 4)
-        assert(onDisk == manifested,
-          s"step $step: stranded unmanifested segments ${onDisk.diff(manifested)}")
-      else assert(manifested.subsetOf(onDisk),
-        s"step $step: manifested segments missing ${manifested.diff(onDisk)}")
-      if (step >= 2)
-        assert(!new java.io.File(dir).listFiles().exists(f =>
-          f.isDirectory && f.getName.startsWith(".zconvert-")),
-          s"step $step: stranded scratch dir survived repair")
-      if (step <= 4) {
-        assert(m.keys == Seq("k"),
-          s"step $step: meta flipped before the commit point")
-        // recovery: a fresh conversion over the repaired table completes
-        assert(KvCommands.convertToZOrder(spark, dir, Seq("a", "b")) == 500L)
-      } else {
-        assert(m.keys.head == "_z",
-          s"step $step: post-commit flip was not finished read-side")
-        assert(SegmentFile.manifestVersions(dir).length == 1,
-          s"step $step: pre-conversion history survived")
-      }
-      // the (eventually-)converted table answers a box exactly
-      assert(KvCommands.table(spark, dir)
-        .filter(col("a") === 3 && col("b") < 10).count() == 10L,
-        s"step $step: box query wrong after conversion")
-      KvCommands.dropTable(dir)
-    }
-  }
-
   test("a commit racing the conversion ABORTS it — no rows lost either way") {
-    // an append lands between the conversion's source read and its
-    // manifest CAS: the CAS expectation (live == the set the rewrite
-    // read) fails, the conversion aborts loudly, and the table keeps
-    // BOTH its original rows and the concurrent append — the lost-write
-    // the old directory swap could not rule out
-    import graft.store.SegmentFile
+    // an append lands while the conversion's jobs run, between its read
+    // and its manifest CAS: the CAS expectation (live == the set the
+    // conversion read) fails, the conversion aborts loudly, and the
+    // table keeps BOTH its original rows and the concurrent append
     val dir = java.nio.file.Files
       .createTempDirectory("zcrace").toString + "/t"
     KvCommands.createTable(
       spark.range(400).select(col("id").as("k"),
         expr("id div 20").as("a"), (col("id") % 20).as("b")),
       dir, Seq("k"))
-    ZConvert.testCheckpointAction = step =>
-      if (step == 4) { // marker down, CAS next — the racing commit wins
-        KvCommands.append(
-          spark.range(400, 410).select(col("id").as("k"),
-            expr("id div 20").as("a"), (col("id") % 20).as("b")), dir)
-      }
-    val err =
-      try intercept[IllegalStateException](
-        KvCommands.convertToZOrder(spark, dir, Seq("a", "b")))
-      finally ZConvert.testCheckpointAction = null
+    val (v, read) = graft.store.SegmentFile.readHead(dir).get
+    // the append is a job of its own: it runs on a thread started here,
+    // outside the conversion's task (whose SQL execution it cannot nest in)
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    pool.submit(new Runnable { def run(): Unit = () }).get()
+    KvRewriteSpec.rival.set(() => pool.submit(new Runnable {
+      def run(): Unit = KvCommands.append(
+        spark.range(400, 410).select(col("id").as("k"),
+          expr("id div 20").as("a"), (col("id") % 20).as("b")), dir)
+    }).get(): Unit)
+    val fire = org.apache.spark.sql.functions.udf { (a: Long) =>
+      Option(KvRewriteSpec.rival.getAndSet(null)).foreach(_())
+      a
+    }.asNondeterministic()
+    val err = intercept[IllegalStateException](KvCommands.relayout(
+      KvCommands.tableAsOf(spark, dir, v)
+        .select(col("k"), fire(col("a")).as("a"), col("b")),
+      dir, Seq("a", "b"), graft.store.RowCodec.Binary, read.files))
+    pool.shutdown()
+    assert(KvRewriteSpec.rival.get() == null, "the rival commit never ran")
     assert(err.getMessage.contains("concurrent commit"), err.getMessage)
-    // nothing lost, nothing half-converted
-    assert(ZConvert.readMarker(dir).isEmpty, "aborted conversion left its marker")
-    val m = GraftKvMeta.read(dir).get
-    assert(m.keys == Seq("k"), "aborted conversion flipped the meta")
-    assert(KvCommands.table(spark, dir).count() == 410L)
+    // nothing lost, nothing half-converted: the append is the only
+    // commit since the read, and no conversion segment is left
+    val (m, head, rows) = state(dir)
+    assert(m.get.keys == Seq("k"), "aborted conversion changed the key layout")
+    assert(head.get._1 == v + 1)
+    assert(rows.length == 410)
+    assert(kvFiles(dir) == head.get._2.files)
     // and a clean retry over the merged table completes
     assert(KvCommands.convertToZOrder(spark, dir, Seq("a", "b")) == 410L)
     assert(KvCommands.table(spark, dir)
       .filter(col("a") === 20).count() == 10L) // the raced-in rows
-    KvCommands.dropTable(dir)
-  }
-
-  test("repair is LEASE-FENCED: never destructive while a holder is live") {
-    // a reader repairing between the converter's marker write and its
-    // CAS used to judge the converter dead by lease mtime AGE — a
-    // build longer than the lease term (or an IO hiccup reading the
-    // lease) made repair delete the converter's just-moved segments
-    // while the converter went on to commit a manifest naming them.
-    // Now repair must ACQUIRE the lease to destroy: a live holder
-    // blocks it outright.
-    val dir = java.nio.file.Files
-      .createTempDirectory("zclease").toString + "/t"
-    KvCommands.createTable(
-      spark.range(100).select(col("id").as("k"), (col("id") % 10).as("a")),
-      dir, Seq("k"))
-    val lease = KvMaintenance.acquire(dir).get
-    try {
-      // a mid-flight converter's state: marker down, replacement
-      // segment moved in, manifest still the old set
-      val stray = "zz-replacement.kv"
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, stray), "x")
-      ZConvert.writeMarker(dir, Set(stray), "{}")
-      GraftKvMeta.read(dir) // triggers repair — must refuse to destroy
-      assert(ZConvert.readMarker(dir).isDefined,
-        "repair swept a live converter's marker")
-      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, stray)),
-        "repair deleted a live converter's moved-in segment")
-    } finally KvMaintenance.release(lease)
-    // holder gone → the same read-side repair now sweeps the leftovers
-    GraftKvMeta.read(dir)
-    assert(ZConvert.readMarker(dir).isEmpty, "dead marker survived repair")
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir, "zz-replacement.kv")),
-      "dead converter's stranded segment survived repair")
-    assert(KvCommands.table(spark, dir).count() == 100L)
-    KvCommands.dropTable(dir)
-  }
-
-  test("post-CAS verify: a repair sweeping at the commit point rolls back") {
-    // the zombie-converter window: a repair (under a stolen lease)
-    // sweeps marker + replacement segments in the instant between the
-    // converter's stillHeld check and its CAS win. The converter must
-    // detect the sweep right after the CAS and roll the manifest back
-    // — never leave a committed manifest naming deleted files.
-    import graft.store.SegmentFile
-    val dir = java.nio.file.Files
-      .createTempDirectory("zcswept").toString + "/t"
-    KvCommands.createTable(
-      spark.range(300).select(col("id").as("k"),
-        expr("id div 30").as("a"), (col("id") % 30).as("b")),
-      dir, Seq("k"))
-    ZConvert.testCheckpointAction = step =>
-      if (step == 4) { // moved in + marker down, CAS next
-        val (swept, _) = ZConvert.readMarker(dir).get
-        swept.foreach { f =>
-          java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(dir, f))
-          java.nio.file.Files.deleteIfExists(
-            java.nio.file.Paths.get(dir, f.stripSuffix(".kv") + ".kvmeta"))
-        }
-        ZConvert.clearMarker(dir)
-      }
-    val err =
-      try intercept[IllegalStateException](
-        KvCommands.convertToZOrder(spark, dir, Seq("a", "b")))
-      finally ZConvert.testCheckpointAction = null
-    assert(err.getMessage.contains("rolled back"), err.getMessage)
-    // the manifest names only files that exist: the old table, intact
-    val m = GraftKvMeta.read(dir).get
-    assert(m.keys == Seq("k"), "swept conversion still flipped the meta")
-    val live = SegmentFile.readManifest(dir).get
-    assert(live.forall(f =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(dir, f))),
-      "committed manifest names deleted files")
-    assert(KvCommands.table(spark, dir).count() == 300L)
-    // and a clean retry completes
-    assert(KvCommands.convertToZOrder(spark, dir, Seq("a", "b")) == 300L)
-    assert(KvCommands.table(spark, dir)
-      .filter(col("a") === 3 && col("b") < 10).count() == 10L)
     KvCommands.dropTable(dir)
   }
 
@@ -576,4 +424,20 @@ class KvCatalogSpec extends AnyFunSuite {
     assert(spark.sql("DESCRIBE TABLE graft.dd.t").collect().nonEmpty)
     spark.sql("DROP TABLE graft.dd.t")
   }
+}
+
+object KvCatalogSpec {
+  /** Kill switch for the conversion's jobs: every evaluation from the
+    * `killAt`-th on throws. */
+  val calls = new java.util.concurrent.atomic.AtomicLong()
+  val killAt = new java.util.concurrent.atomic.AtomicLong(Long.MaxValue)
+  private val Killed = "injected conversion failure"
+  val failing = org.apache.spark.sql.functions.udf { (a: Long) =>
+    if (calls.incrementAndGet() >= killAt.get()) throw new RuntimeException(Killed)
+    a
+  }.asNondeterministic()
+
+  def injected(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains(Killed)))
 }

@@ -198,7 +198,7 @@ class KvColumnStatsSpec extends AnyFunSuite {
     w.write(codec.encodeKey(row), codec.encodeValue(row))
     w.close() // no sketches, but zone stats absent too — bounds also gone
     graft.store.SegmentFile.commitManifest(path)(s =>
-      Some(s + "segment-99999-000000-nosketch.kv"))
+      Some(s.copy(files = s.files + "segment-99999-000000-nosketch.kv")))
     withCbo(on = true) {
       val st = scanStats(KvCommands.table(spark, path).select("x"))
       val xs = st.attributeStats.find(_._1.name == "x").map(_._2)

@@ -40,7 +40,8 @@ class KvConcurrencySpec extends AnyFunSuite {
     val perThread = 40
     inParallel(threads) { t =>
       (0 until perThread).foreach { i =>
-        SegmentFile.commitManifest(dir)(base => Some(base + s"w$t-$i.kv"))
+        SegmentFile.commitManifest(dir)(base =>
+          Some(base.copy(files = base.files + s"w$t-$i.kv")))
       }
     }
     val live = SegmentFile.readManifest(dir).getOrElse(Set.empty)
@@ -65,16 +66,23 @@ class KvConcurrencySpec extends AnyFunSuite {
 
   test("manifest CAS: no-op transform on a versioned table publishes nothing") {
     val dir = Files.createTempDirectory("graft_cas_noop").toString
-    SegmentFile.writeManifest(dir, Seq("a.kv", "b.kv"))
+    val ab = SegmentFile.Manifest("h", Set("a.kv", "b.kv"))
+    SegmentFile.commitManifest(dir)(_ => Some(ab))
     val before = SegmentFile.manifestVersions(dir)
     // an epoch REPLAY repairing an already-swapped commit is a no-op:
     // it must not add a duplicate snapshot to the time-travel log
-    SegmentFile.commitManifest(dir)(base => Some(base ++ Set("a.kv")))
-    SegmentFile.writeManifest(dir, Seq("a.kv", "b.kv"))
+    SegmentFile.commitManifest(dir)(base =>
+      Some(base.copy(files = base.files ++ Set("a.kv"))))
+    SegmentFile.commitManifest(dir)(_ => Some(ab))
     assert(SegmentFile.manifestVersions(dir) == before)
     // an aborting transform publishes nothing either
     assert(SegmentFile.commitManifest(dir)(_ => None).isEmpty)
     assert(SegmentFile.manifestVersions(dir) == before)
+    // the header is half the manifest: changing only it is a commit
+    SegmentFile.commitManifest(dir)(base => Some(base.copy(header = "h2")))
+    assert(SegmentFile.manifestVersions(dir) == before :+ (before.last + 1))
+    assert(SegmentFile.readHead(dir).map(_._2) ==
+      Some(SegmentFile.Manifest("h2", Set("a.kv", "b.kv"))))
   }
 
   test("two concurrent batch appenders lose no rows") {
@@ -97,6 +105,60 @@ class KvConcurrencySpec extends AnyFunSuite {
     assert(got.count() === writers.toLong * batches * rowsPerBatch)
     assert(got.select(countDistinct("k")).as[Long].head() ===
       writers.toLong * batches * rowsPerBatch)
+  }
+
+  test("racing overwrites publish one writer's declaration with its segments") {
+    // two overwrites with different value types start at a barrier onto
+    // one seeded table: whichever commits last, the head's declaration
+    // is that writer's, so its values never decode as NULL
+    import org.apache.spark.sql.types.{DataType, StructType}
+    val str = spark.range(20).select(col("id").cast("int").as("k"),
+      concat(lit("s"), col("id")).as("v"))
+    val int = spark.range(20).select(col("id").cast("int").as("k"),
+      col("id").cast("int").as("v"))
+    (1 to 30).foreach { round =>
+      val path = Files.createTempDirectory("graft_ow2").toString + "/t"
+      KvCommands.createTable(str.limit(1), path, Seq("k"))
+      inParallel(2)(w => KvCommands.createTable(Seq(str, int)(w), path, Seq("k")))
+      val head = GraftKvMeta.read(path).get.schema("v").dataType
+      val written = SegmentFile.listSegments(path).map(m => DataType
+        .fromJson(m.schemaJson.get).asInstanceOf[StructType]("v").dataType).toSet
+      assert(written == Set(head), s"round $round: header $head, segments $written")
+      val t = KvCommands.table(spark, path)
+      assert(t.count() == 20 && t.filter(col("v").isNull).count() == 0,
+        s"round $round: values decode as NULL")
+      KvCommands.dropTable(path)
+    }
+  }
+
+  test("an ALTER racing an overwrite is kept with the overwrite's rows") {
+    // the ALTER commits while the overwrite's job runs (between its plan
+    // and its CAS): the overwrite re-applies the column it did not plan
+    // against, so the head has both the column and the overwrite's rows
+    import org.apache.spark.sql.connector.catalog.{Identifier, TableChange}
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
+    val cat = new GraftKvCatalog
+    cat.initialize("graft_race", new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("root", Files.createTempDirectory("graft_race").toString)))
+    val ident = Identifier.of(Array("db"), "t")
+    cat.createTable(ident, new StructType().add("k", LongType).add("v", StringType),
+      Array.empty, java.util.Map.of("key", "k"))
+    val path = cat.tableDir(ident)
+    KvCommands.append(spark.range(5).select(col("id").as("k"), lit("old").as("v")), path)
+    KvRewriteSpec.rival.set(() => {
+      cat.alterTable(ident, TableChange.addColumn(Array("w"), IntegerType)); ()
+    })
+    val fire = udf { (k: Long) =>
+      Option(KvRewriteSpec.rival.getAndSet(null)).foreach(_())
+      k
+    }.asNondeterministic()
+    KvCommands.createTable(spark.range(100, 103)
+      .select(fire(col("id")).as("k"), lit("new").as("v")), path, Seq("k"))
+    assert(KvRewriteSpec.rival.get() == null, "the ALTER never ran")
+    assert(GraftKvMeta.read(path).get.schema.fieldNames.toSeq == Seq("k", "v", "w"))
+    assert(KvCommands.table(spark, path).select("k", "v", "w").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.isNullAt(2))).toSet ==
+      Set((100L, "new", true), (101L, "new", true), (102L, "new", true)))
   }
 
   test("appenders racing a compactor lose no rows and make no duplicates") {

@@ -40,7 +40,8 @@ class KvConnectorSpec extends AnyFunSuite {
           GraftKvMeta.SegmentMaxBytesProp -> "65536"))
     } {
       val dir = Files.createTempDirectory("graftkv_meta_rt").toString
-      GraftKvMeta.write(dir, schema, Seq("a"), enc, z, p)
+      assert(SegmentFile.createManifest(dir, SegmentFile.Manifest(
+        GraftKvMeta.encode(KvTableMeta(schema, Seq("a"), enc, z, p)), Set.empty)))
       val m = GraftKvMeta.read(dir).get
       assert(m.schema == schema && m.keys == Seq("a") && m.encoding == enc,
         s"enc=$enc z=$z p=$p: $m")
@@ -48,10 +49,9 @@ class KvConnectorSpec extends AnyFunSuite {
       assert(m.props == p, s"props drift: ${m.props} vs $p")
     }
     // separator characters in a property would tear the header: refused
-    val bad = Files.createTempDirectory("graftkv_meta_bad").toString
     intercept[IllegalArgumentException](
-      GraftKvMeta.write(bad, schema, Seq("a"),
-        props = Map("x" -> "a|b")))
+      GraftKvMeta.encode(KvTableMeta(schema, Seq("a"),
+        graft.store.RowCodec.Binary, props = Map("x" -> "a|b"))))
   }
 
   test("segment.maxBytes persists as a table property; appends honor it") {

@@ -254,6 +254,22 @@ class KvTimeTravelSpec extends AnyFunSuite {
     spark.sql(s"DROP TABLE $t")
   }
 
+  test("a snapshot decodes with its own declaration across a type change") {
+    val path = Files.createTempDirectory("graftkv_tt_type").toString + "/t"
+    KvCommands.createTable(Seq((1, "a"), (2, "b")).toDF("k", "v"), path, Seq("k"))
+    val v1 = KvCommands.snapshots(path).last
+    KvCommands.createTable(Seq((1, 10), (2, 20)).toDF("k", "v"), path, Seq("k"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("k").collect().map(r => (r.getInt(0), r.get(1))).toSeq
+    assert(rows(KvCommands.table(spark, path)) == Seq((1, 10), (2, 20)))
+    assert(rows(KvCommands.tableAsOf(spark, path, v1)) == Seq((1, "a"), (2, "b")))
+    // RESTORE brings the declaration back with the files
+    KvCommands.restoreTable(path, v1)
+    assert(GraftKvMeta.read(path).get.schema("v").dataType ==
+      org.apache.spark.sql.types.StringType)
+    assert(rows(KvCommands.table(spark, path)) == Seq((1, "a"), (2, "b")))
+  }
+
   test("SHOW SNAPSHOTS lists the commit log; pure-SQL time travel") {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_tt.ss")
     spark.sql("CREATE TABLE graft_tt.ss.t (k BIGINT, v STRING) TBLPROPERTIES ('key'='k')")
@@ -484,8 +500,8 @@ class KvTimeTravelSpec extends AnyFunSuite {
     val strands = Seq(
       "._graft_segments.v3.tmp-ab12cd34",
       ".._graft_epoch-q-1.intent.tmp-ab12cd34",
-      ".._graft_zconvert.tmp-ab12cd34",
-      "._graft_meta.json.tmp-ab12cd34",
+      ".._graft_maint_lease.tmp-ab12cd34",
+      "._graft_vhead.tmp-ab12cd34",
       "._graft_stats.tmp-ab12cd34")
     def plant(): Unit = strands.foreach { n =>
       java.nio.file.Files.write(
@@ -493,7 +509,7 @@ class KvTimeTravelSpec extends AnyFunSuite {
     }
     def present(): Set[String] = SidecarFs.list(path).toSet
     // the recognizer must never claim live control/data files
-    Seq("_graft_meta.json", "_graft_segments.v1",
+    Seq("_graft_vhead", "_graft_segments.v1",
         "._graft_epoch-q-1.intent", "seg-0.kv").foreach { live =>
       assert(!SidecarFs.isTempArtifact(live), live)
     }

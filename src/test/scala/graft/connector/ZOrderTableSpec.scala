@@ -187,61 +187,69 @@ class ZOrderTableSpec extends AnyFunSuite {
   }
 
   test("snapshot reads never narrow with current z specs") {
-    // a retained snapshot could predate a spec change (defense-in-depth:
-    // today a re-create that changes the normalization retires the older
-    // snapshots, but the frozen view must never depend on the CURRENT
-    // meta's normalization), so z
-    // narrowing is off for snapshot scans — results still exact via
-    // residuals, pruning deliberately foregone
+    // every snapshot carries its own declaration, z specs included: a
+    // snapshot from before a re-create that changed the normalization
+    // z-prunes under ITS specs, never the current meta's — pruning kept,
+    // results exact
     val path = tmpTable()
     KvCommands.createZOrderTable(grid, path, Seq("a", "b"),
       maxSegBytes = Some(8192L))
     val v1 = KvCommands.snapshots(path).last
     val m = GraftKvMeta.read(path).get
+    KvCommands.createZOrderTable(
+      grid.select((col("a") + 5000).as("a"), col("b"), col("v")), path,
+      Seq("a", "b"), maxSegBytes = Some(8192L))
+    assert(GraftKvMeta.read(path).get.zorder != m.zorder)
     val box = Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.GreaterThanOrEqual("a", 10L),
       org.apache.spark.sql.sources.LessThanOrEqual("a", 19L),
       org.apache.spark.sql.sources.GreaterThanOrEqual("b", 30L),
       org.apache.spark.sql.sources.LessThanOrEqual("b", 39L))
-    val live = new GraftKvScan(path, m.schema, m.keys, m.schema, box, -1)
-      .planInputPartitions().length
     val snap = new GraftKvScan(path, m.schema, m.keys, m.schema, box, -1,
       snapshotVersion = Some(v1)).planInputPartitions().length
     val all = new GraftKvScan(path, m.schema, m.keys, m.schema,
-      Array.empty, -1).planInputPartitions().length
-    assert(live * 4 <= all, s"live scan should z-prune: $live of $all")
-    assert(snap == all, s"snapshot scan must not z-narrow: $snap of $all")
+      Array.empty, -1, snapshotVersion = Some(v1)).planInputPartitions().length
+    assert(snap * 4 <= all, s"snapshot scan should z-prune: $snap of $all")
     // and the snapshot's box answer stays exact
     val exp = grid.filter(col("a").between(10, 19) && col("b").between(30, 39))
       .select("a", "b", "v").collect().map(_.toSeq).toSet
     val got = KvCommands.tableAsOf(spark, path, v1)
       .filter(col("a").between(10, 19) && col("b").between(30, 39))
       .select("a", "b", "v").collect().map(_.toSeq).toSet
-    assert(got == exp)
+    assert(got == exp && got.nonEmpty)
   }
 
-  test("a re-create with a new normalization retires the older snapshots") {
+  test("a re-create with a new normalization keeps older snapshots exact") {
+    def boxOf(df: org.apache.spark.sql.DataFrame, lo: Long) =
+      df.filter(col("a").between(lo + 10, lo + 19) && col("b") < 5)
+        .select("a", "b", "v").collect().map(_.toSeq).toSet
     val path = tmpTable()
     KvCommands.createZOrderTable(grid, path, Seq("a", "b"))
-    KvCommands.append(grid.filter(col("a") === 0L).select(
-      col("a"), col("b"), lit(-1L).as("v")), path)
+    val upd = grid.filter(col("a") === 12L).select(
+      col("a"), col("b"), lit(-1L).as("v"))
+    KvCommands.append(upd, path)
     val old = KvCommands.snapshots(path).last
     val oldSpecs = GraftKvMeta.read(path).get.zorder
-    // a moved range changes dim a's minCode: live z-pruning under the
-    // new specs must never meet a restored old-spec segment
+    val truth = boxOf(grid.filter(col("a") =!= 12L).unionByName(upd), 0)
+    // a moved range changes dim a's minCode; the old snapshot keeps its
+    // own specs, so it answers a box exactly, and so does its RESTORE
     val wide = grid.select((col("a") + 5000).as("a"), col("b"), col("v"))
     KvCommands.createZOrderTable(wide, path, Seq("a", "b"))
     assert(GraftKvMeta.read(path).get.zorder != oldSpecs)
-    assert(KvCommands.snapshots(path).size == 1)
-    val e = intercept[IllegalArgumentException](
-      KvCommands.restoreTable(path, old))
-    assert(e.getMessage.contains("no snapshot"), e.getMessage)
-    val exp = wide.filter(col("a").between(5010, 5019) && col("b") < 5)
-      .collect().map(_.toSeq).toSet
-    val got = KvCommands.table(spark, path)
-      .filter(col("a").between(5010, 5019) && col("b") < 5)
-      .select("a", "b", "v").collect().map(_.toSeq).toSet
-    assert(got == exp)
+    assert(boxOf(KvCommands.table(spark, path), 5000) == boxOf(wide, 5000))
+    assert(boxOf(KvCommands.tableAsOf(spark, path, old), 0) == truth)
+    KvCommands.restoreTable(path, old)
+    assert(GraftKvMeta.read(path).get.zorder == oldSpecs)
+    assert(boxOf(KvCommands.table(spark, path), 0) == truth)
+    // the same after OPTIMIZE … ZORDER BY re-keys the table (dims swapped)
+    val pre = KvCommands.snapshots(path).last
+    KvCommands.convertToZOrder(spark, path, Seq("b", "a"))
+    assert(GraftKvMeta.read(path).get.keys == Seq("_z", "b", "a"))
+    assert(boxOf(KvCommands.table(spark, path), 0) == truth)
+    assert(boxOf(KvCommands.tableAsOf(spark, path, pre), 0) == truth)
+    KvCommands.restoreTable(path, pre)
+    assert(GraftKvMeta.read(path).get.keys == Seq("_z", "a", "b"))
+    assert(boxOf(KvCommands.table(spark, path), 0) == truth)
   }
 
   test("string dims cluster and filter correctly") {

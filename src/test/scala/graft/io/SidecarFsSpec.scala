@@ -170,18 +170,26 @@ class SidecarFsSpec extends AnyFunSuite {
     val dir = schemeTmp("kvmeta") + "/tbl"
     val schema = StructType(Seq(StructField("k", LongType),
       StructField("v", StringType)))
-    graft.connector.GraftKvMeta.write(dir, schema, Seq("k"),
-      props = Map(graft.connector.GraftKvMeta.SegmentCompressProp -> "lz4"))
+    def header(props: Map[String, String]) = graft.connector.GraftKvMeta.encode(
+      graft.connector.KvTableMeta(schema, Seq("k"), graft.store.RowCodec.Binary,
+        props = props))
+    assert(graft.store.SegmentFile.createManifest(dir, graft.store.SegmentFile
+      .Manifest(header(Map(graft.connector.GraftKvMeta.SegmentCompressProp -> "lz4")),
+        Set.empty)))
     val m = graft.connector.GraftKvMeta.read(dir).get
     assert(m.keys == Seq("k") && m.schema == schema &&
       m.props(graft.connector.GraftKvMeta.SegmentCompressProp) == "lz4")
-    // overwrite is atomic (tmp + rename over): second write wins, no
-    // tmp junk next to the meta
-    graft.connector.GraftKvMeta.write(dir, schema, Seq("k"))
+    // a second commit of the header is atomic (create-if-absent of the
+    // next version): it wins, and leaves no tmp junk next to the
+    // manifest versions
+    graft.store.SegmentFile.commitManifest(dir)(b =>
+      Some(b.copy(header = header(Map.empty))))
     assert(graft.connector.GraftKvMeta.read(dir).get.props.isEmpty)
     val ls = new java.io.File(new java.net.URI(dir)).list().toSeq
       .filterNot(_.endsWith(".crc"))
-    assert(ls == Seq("_graft_meta.json"), s"leftover files: $ls")
+    assert(ls.filter(_.startsWith("_graft_segments")).sorted ==
+      Seq("_graft_segments.v1", "_graft_segments.v2") &&
+      !ls.exists(graft.io.SidecarFs.isTempArtifact), s"leftover files: $ls")
   }
 
   test("kv table full lifecycle on a file: URI — create, load, upsert, " +

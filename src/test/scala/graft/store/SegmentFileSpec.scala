@@ -31,7 +31,8 @@ class SegmentFileSpec extends AnyFunSuite {
 
   test("snapshot manifests: monotonic numbering, count cap, age prune") {
     val dir = Files.createTempDirectory("segmanifest").toString
-    (1 to 70).foreach(i => SegmentFile.writeManifest(dir, Seq(s"s$i.kv")))
+    (1 to 70).foreach(i =>
+      SegmentFile.commitManifest(dir)(m => Some(m.copy(files = Set(s"s$i.kv")))))
     val vs = SegmentFile.manifestVersions(dir)
     // numbering never restarts; only the newest MaxRetainedManifests stay
     assert(vs.last == 70L && vs.length == SegmentFile.MaxRetainedManifests)

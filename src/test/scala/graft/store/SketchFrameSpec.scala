@@ -83,7 +83,7 @@ class SketchFrameSpec extends AnyFunSuite {
       Array(1L, 3L, Long.MaxValue, 0L), Array(0L, -1L, 7L, Long.MinValue))
     assert(qs.head.values.length > 100, "sketch too small to exercise the frame")
     w.close(ndvSketches = ndv, qsSketches = qs)
-    SegmentFile.commitManifest(dir)(_ => Some(Set("s0.kv")))
+    SegmentFile.commitManifest(dir)(m => Some(m.copy(files = Set("s0.kv"))))
     SegmentFile.clearPlanningCache()
     val v = SegmentFile.currentVersion(dir).get
     assertSketches(dir, "s0.kv", ndv, qs) // from the sidecar's frame
@@ -209,7 +209,7 @@ class SketchFrameSpec extends AnyFunSuite {
     (0 until 100).foreach(i =>
       w.write(OrderedCodec.encodeLong(i.toLong), Array[Byte](1)))
     w.close()
-    SegmentFile.commitManifest(dir)(_ => Some(Set("s0.kv")))
+    SegmentFile.commitManifest(dir)(m => Some(m.copy(files = Set("s0.kv"))))
     val meta = Paths.get(dir, "s0.kvmeta")
     val bytes = Files.readAllBytes(meta)
     java.nio.ByteBuffer.wrap(bytes).putInt(-13) // an older header
