@@ -81,13 +81,15 @@ object Bench {
       graft.store.RowCodec.Binary), names)
   }
 
-  /** A kv fixture left by an earlier run; a directory holding one in
-    * another layout is dropped, so the caller rebuilds it. */
+  /** Where the cached kv fixture `name` lives. The `_m2` suffix names
+    * the table layout (manifest versions carry the declaration): bump it
+    * when the layout changes, so a fixture an older build left is never
+    * opened. */
+  private def fixtureDir(name: String): String = s"$repoRoot/tmp/${name}_m2"
+
+  /** A kv fixture an earlier run published at `dir`. */
   private def fixtureExists(dir: String): Boolean =
-    graft.Tables.kvFixtureMeta(dir).isDefined || {
-      graft.connector.KvCommands.dropTable(dir)
-      false
-    }
+    graft.store.SegmentFile.currentVersion(dir).isDefined
 
   /** Publish hand-written segments as a fixture table's first version. */
   private def commitFixture(dir: String, meta: graft.connector.KvTableMeta,
@@ -510,7 +512,7 @@ object Bench {
       import org.apache.spark.sql.types.{LongType, StructField, StructType}
       import org.apache.spark.sql.functions.col
       val nSegs = 10000
-      val dir = s"$repoRoot/tmp/plan10k"
+      val dir = fixtureDir("plan10k")
       val schema = StructType(Seq(StructField("k", LongType, nullable = false),
         StructField("v", LongType, nullable = false)))
       // rebuild a leftover fixture the NDV and percentile probes cannot
@@ -619,7 +621,7 @@ object Bench {
     val plan100kJson = try {
       import org.apache.spark.sql.functions.col
       val nSegs = 100000
-      val dir = s"$repoRoot/tmp/plan100k"
+      val dir = fixtureDir("plan100k")
       buildPlanFixture(dir, nSegs)
       def planOnce(key: Long): Double = {
         val t0 = System.nanoTime()
@@ -653,7 +655,7 @@ object Bench {
     var skipscanSpeedup = -1.0
     val skipscanJson = try {
       import org.apache.spark.sql.functions.{col, pmod, lit}
-      val dir = s"$repoRoot/tmp/benchskipscan"
+      val dir = fixtureDir("benchskipscan")
       if (!fixtureExists(dir)) {
         graft.connector.KvCommands.createTable(
           spark.range(4000000L).select(
@@ -722,7 +724,7 @@ object Bench {
     val zScaleJson = try {
       import org.apache.spark.sql.types.{LongType, StructField, StructType}
       val nSegs = 1024
-      val dir = s"$repoRoot/tmp/zscale"
+      val dir = fixtureDir("zscale")
       val schema = StructType(Seq(
         StructField("_z", LongType, nullable = false),
         StructField("a", LongType, nullable = false),

@@ -76,12 +76,6 @@ object Tables {
   def registerAll(spark: SparkSession, dir: String): Unit =
     all.foreach(n => table(spark, dir, n).createOrReplaceTempView(n))
 
-  /** A cached kv fixture's declaration; None when the fixture is absent
-    * or was left in another table layout by an earlier build, so the
-    * caller drops and rebuilds it. */
-  def kvFixtureMeta(path: String): Option[graft.connector.KvTableMeta] =
-    scala.util.Try(graft.connector.GraftKvMeta.read(path)).toOption.flatten
-
   /** Tmp-cache hygiene for fingerprint-keyed fixture dirs (staged
     * corpus copies, retrieval indexes): when a NEW fingerprint is about
     * to be built, stale siblings `<prefix><otherFp>` under the same

@@ -38,7 +38,8 @@ private[connector] final class DerivedDefCache[T](
     if (hit != null && hit._1 == v &&
       (hit._2.isEmpty || SidecarFs.isDirectory(rootOf(base))))
       return hit._2
-    val defs = listAll(base).filter(versionOf(_) == v)
+    val defs = listAll(base)
+      .filter(d => SegmentFile.sameFiles(base, versionOf(d), v))
     cache.put(key, (v, defs))
     defs
   }

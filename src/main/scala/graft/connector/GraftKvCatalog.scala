@@ -53,9 +53,9 @@ class GraftKvCatalog extends TableCatalog with SupportsNamespaces {
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val d = (Seq(root) ++ namespace.toSeq).mkString("/")
     if (!SidecarFs.isDirectory(d)) throw new NoSuchNamespaceException(namespace)
-    // every commit writes the head hint, so it marks a table directory
-    listNames(d).filter(n => SidecarFs.exists(
-        SidecarFs.child(SidecarFs.child(d, n), "_graft_vhead")))
+    // a table directory is one with a published manifest version
+    listNames(d).filter(n => graft.store.SegmentFile
+        .currentVersion(SidecarFs.child(d, n)).isDefined)
       .map(n => Identifier.of(namespace, n))
       .toArray
   }

@@ -547,25 +547,40 @@ object KvCommands {
     * whose visible row differs between versions `fromV` and `toV`,
     * tagged 'added' / 'removed' / 'updated' (the old_ and new_ columns
     * carry both sides' values). Both sides are ordinary pruned snapshot
-    * scans; the
+    * scans, each decoded with its own snapshot's declaration; the
     * diff is ONE full-outer join on the primary key — each side
     * shuffles once on the key it is already sorted by, so the operator
-    * scales with the table, never with its commit history. */
+    * scales with the table, never with its commit history. The value
+    * columns are those of either snapshot: a column one side lacks
+    * (ALTER TABLE ADD or DROP COLUMN in between) reads NULL there, and
+    * one whose type changed compares by its string form. */
   def snapshotDiff(spark: SparkSession, path: String,
       fromV: Long, toV: Long): DataFrame = {
     import org.apache.spark.sql.functions._
-    val KvTableMeta(schema, keys, _, _, _) = GraftKvMeta.read(path).getOrElse(
-      throw new IllegalArgumentException(s"no graftkv table at $path"))
-    val vals = schema.fieldNames.toSeq.filterNot(keys.contains)
+    val from = GraftKvMeta.readAsOf(path, Some(fromV)).get
+    val to = GraftKvMeta.readAsOf(path, Some(toV)).get
+    val keys = to.keys
+    require(keys.forall(from.schema.fieldNames.contains),
+      s"snapshots $fromV and $toV of $path have different key columns")
+    def typeIn(m: KvTableMeta, c: String) =
+      m.schema.find(_.name == c).map(_.dataType)
+    val vals = (to.schema.fieldNames ++ from.schema.fieldNames).distinct
+      .filterNot(keys.contains).toSeq
     // internal columns are __-prefixed so a user value column named
     // e.g. "present" can't collide with the marker flags
-    def side(v: Long, tag: String) = tableAsOf(spark, path, v).select(
-      keys.map(col) ++ vals.map(c => col(c).as(s"${tag}_$c")) :+
+    def side(v: Long, m: KvTableMeta, other: KvTableMeta, tag: String) =
+      tableAsOf(spark, path, v).select(keys.map(col) ++ vals.map(c =>
+        (if (typeIn(m, c).isDefined) col(c)
+         else lit(null).cast(typeIn(other, c).get)).as(s"${tag}_$c")) :+
         lit(true).as(s"__${tag}_present"): _*)
-    val j = side(fromV, "old").join(side(toV, "new"), keys, "full_outer")
+    val j = side(fromV, from, to, "old")
+      .join(side(toV, to, from, "new"), keys, "full_outer")
     // null-safe: a value flipping to/from NULL is still a change
-    val valueChanged = vals.map(c => !(col(s"old_$c") <=> col(s"new_$c")))
-      .reduceOption(_ || _).getOrElse(lit(false))
+    val valueChanged = vals.map { c =>
+      val (o, n) = (col(s"old_$c"), col(s"new_$c"))
+      if (typeIn(from, c).forall(t => typeIn(to, c).forall(_ == t))) !(o <=> n)
+      else !(o.cast("string") <=> n.cast("string"))
+    }.reduceOption(_ || _).getOrElse(lit(false))
     j.withColumn("__change",
         when(col("__old_present").isNull, "added")
           .when(col("__new_present").isNull, "removed")

@@ -29,8 +29,10 @@ final case class KvIndexDef(name: String, cols: Seq[String],
   *    base manifest version past the watermark, which makes every
   *    index on the table invisible to the query rewrite (KvIndexRule
   *    checks `inSync` at plan time — an O(1) version probe against the
-  *    cached manifest head). A stale index can therefore never lose or
-  *    resurrect a row; it just stops accelerating until refreshed.
+  *    cached manifest head) unless the new version lists the
+  *    watermark's files, as a header-only ALTER TABLE does. A stale
+  *    index can therefore never lose or resurrect a row; it just stops
+  *    accelerating until refreshed.
   *  - REFRESH is INCREMENTAL: the change set between the watermark and
   *    the current version comes from the snapshot-diff CDC operator
   *    (one key-join of two retained snapshots — scales with the delta,
@@ -131,13 +133,15 @@ object KvIndex {
       SegmentFile.currentVersion(indexPath(base, d.name))
         .contains(d.dataVersion)
 
-  /** Is the index exactly as fresh as the base table — its own data
-    * unmoved since publish — and free of an in-flight/suspect refresh
+  /** Is the index exactly as fresh as the base table — the base's live
+    * files those of the watermark snapshot, its own data unmoved since
+    * publish — and free of an in-flight/suspect refresh
     * (intent marker)? The rewrite uses an index ONLY when this holds,
     * so index content is never trusted beyond the snapshot it provably
     * reflects. */
   def inSync(base: String, d: KvIndexDef): Boolean =
-    SegmentFile.currentVersion(base).contains(d.baseVersion) &&
+    SegmentFile.currentVersion(base)
+      .exists(SegmentFile.sameFiles(base, _, d.baseVersion)) &&
       dataCurrent(base, d) &&
       !KvMaintenance.markerExists(indexPath(base, d.name))
 

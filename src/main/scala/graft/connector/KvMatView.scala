@@ -157,11 +157,13 @@ object KvMatView {
       SegmentFile.currentVersion(mvPath(base, d.name))
         .contains(d.dataVersion)
 
-  /** In sync = watermark matches the base, the view's own data unmoved
+  /** In sync = the base's live files are the watermark snapshot's (a
+    * header-only ALTER TABLE keeps them), the view's own data unmoved
     * since publish, AND no in-flight/suspect refresh (intent marker) —
     * a mid-apply or zombie-touched view must never answer queries. */
   def inSync(base: String, d: KvMatViewDef): Boolean =
-    SegmentFile.currentVersion(base).contains(d.baseVersion) &&
+    SegmentFile.currentVersion(base)
+      .exists(SegmentFile.sameFiles(base, _, d.baseVersion)) &&
       dataCurrent(base, d) &&
       !KvMaintenance.markerExists(mvPath(base, d.name))
 

@@ -15,9 +15,12 @@ import org.apache.spark.sql.types.DecimalType
   */
 object KvOps {
 
-  /** KV fixture dir per scale factor (derived, cached across queries). */
+  /** KV fixture dir per scale factor (derived, cached across queries).
+    * The `_m2` suffix names the table layout (manifest versions carry
+    * the declaration): bump it when the layout changes, so a fixture an
+    * older build left is never opened. */
   private def kvRoot(sfDir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_kv/${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}"
+    s"${System.getProperty("java.io.tmpdir")}/graft_kv_m2/${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}"
 
   private val lock = new Object
 
@@ -47,7 +50,7 @@ object KvOps {
       compress: Option[String] = None): String = lock.synchronized {
     val path = s"${kvRoot(sfDir)}/$fixture"
     val marker = java.nio.file.Paths.get(path, "_fixture_format")
-    val current = graft.Tables.kvFixtureMeta(path)
+    val current = graft.connector.GraftKvMeta.read(path)
         .exists(m => m.keys == keys && m.encoding == encoding &&
           m.props.get(graft.connector.GraftKvMeta.SegmentCompressProp) ==
             compress) &&
@@ -168,7 +171,7 @@ object KvOps {
       val p = s"${kvRoot(d)}/orders_upsert"
       // rebuild when absent OR when built by a pre-snapshot code version
       // (kv19 reads the creation snapshot, so the commit log must exist)
-      if (graft.Tables.kvFixtureMeta(p).isEmpty ||
+      if (graft.connector.GraftKvMeta.read(p).isEmpty ||
         KvCommands.snapshots(p).size < 2) {
         KvCommands.dropTable(p)
         val o = Tables.table(s, d, "orders")
@@ -188,8 +191,7 @@ object KvOps {
   private def ordersDeleteKv(s: SparkSession, d: String): DataFrame = {
     val path = lock.synchronized {
       val p = s"${kvRoot(d)}/orders_delete"
-      if (graft.Tables.kvFixtureMeta(p).isEmpty) {
-        KvCommands.dropTable(p)
+      if (graft.connector.GraftKvMeta.read(p).isEmpty) {
         KvCommands.createTable(Tables.table(s, d, "orders"), p, Seq("o_orderkey"))
         KvCommands.delete(s, p, col("o_totalprice") < 100000.0)
       }
@@ -205,7 +207,7 @@ object KvOps {
     val path = lock.synchronized {
       val p = s"${kvRoot(d)}/orders_update"
       // snapshots < 2 = created but the update never committed: rebuild
-      if (graft.Tables.kvFixtureMeta(p).isEmpty ||
+      if (graft.connector.GraftKvMeta.read(p).isEmpty ||
         KvCommands.snapshots(p).size < 2) {
         KvCommands.dropTable(p)
         KvCommands.createTable(Tables.table(s, d, "orders"), p, Seq("o_orderkey"))
@@ -229,7 +231,7 @@ object KvOps {
   private def ordersZPath(s: SparkSession, d: String): String =
     lock.synchronized {
       val p = s"${kvRoot(d)}/orders_z"
-      if (!graft.Tables.kvFixtureMeta(p).exists(_.zorder.nonEmpty)) {
+      if (!graft.connector.GraftKvMeta.read(p).exists(_.zorder.nonEmpty)) {
         KvCommands.dropTable(p)
         KvCommands.createZOrderTable(Tables.table(s, d, "orders"), p,
           Seq("o_custkey", "o_orderkey"))
@@ -243,7 +245,7 @@ object KvOps {
   private def eventsZPath(s: SparkSession, d: String): String =
     lock.synchronized {
       val p = s"${kvRoot(d)}/events_z"
-      if (!graft.Tables.kvFixtureMeta(p).exists(_.zorder.nonEmpty)) {
+      if (!graft.connector.GraftKvMeta.read(p).exists(_.zorder.nonEmpty)) {
         KvCommands.dropTable(p)
         KvCommands.createZOrderTable(Tables.table(s, d, "events"), p,
           Seq("user_id", "event_type", "event_id"))
@@ -273,7 +275,7 @@ object KvOps {
       val cat = "graft_kvops_" + d.replaceAll("[^a-zA-Z0-9]", "_")
       val p = s"$root/db/orders_merge"
       // snapshots < 2 = created but the merge never committed: rebuild
-      if (graft.Tables.kvFixtureMeta(p).isEmpty ||
+      if (graft.connector.GraftKvMeta.read(p).isEmpty ||
         KvCommands.snapshots(p).size < 2) {
         KvCommands.dropTable(p)
         s.conf.set(s"spark.sql.catalog.$cat",

@@ -408,10 +408,10 @@ object PipelineOps {
       // additive length+mtime stamp this used before was collision-prone
       val fp = corpusFp(sfDir)
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_ir/" +
-        s"${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}/v3_$fp" // v3: + docterms
-      if (graft.Tables.kvFixtureMeta(s"$path/postings").isEmpty ||
-          graft.Tables.kvFixtureMeta(s"$path/positions").isEmpty ||
-          graft.Tables.kvFixtureMeta(s"$path/docterms").isEmpty ||
+        s"${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}/v4_$fp" // v4: manifest-header layout
+      if (graft.connector.GraftKvMeta.read(s"$path/postings").isEmpty ||
+          graft.connector.GraftKvMeta.read(s"$path/positions").isEmpty ||
+          graft.connector.GraftKvMeta.read(s"$path/docterms").isEmpty ||
           !new java.io.File(s"$path/stats/_SUCCESS").exists()) {
         graft.connector.KvCommands.dropTable(s"$path/postings")
         graft.connector.KvCommands.dropTable(s"$path/positions")
@@ -420,7 +420,7 @@ object PipelineOps {
         // indexes built from earlier corpus generations are dead — sweep
         // their fingerprint dirs so rounds don't accumulate tmp copies
         graft.Tables.sweepStaleSiblings(new java.io.File(path).getParentFile,
-          "v3_", s"v3_$fp")
+          "v4_", s"v4_$fp")
         graft.pipeline.Retrieval.buildIndex(t(s, sfDir, "documents"), path)
       }
       path
@@ -437,16 +437,16 @@ object PipelineOps {
     irLock.synchronized {
       val fp = corpusFp(sfDir)
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_ir/" +
-        s"${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}/del1_$fp"
+        s"${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}/del2_$fp"
       val marker = new java.io.File(s"$path/_DELETED")
-      if (graft.Tables.kvFixtureMeta(s"$path/postings").isEmpty ||
-          graft.Tables.kvFixtureMeta(s"$path/docterms").isEmpty ||
+      if (graft.connector.GraftKvMeta.read(s"$path/postings").isEmpty ||
+          graft.connector.GraftKvMeta.read(s"$path/docterms").isEmpty ||
           !marker.exists()) {
         Seq("postings", "positions", "doclen", "docterms").foreach(tbl =>
           graft.connector.KvCommands.dropTable(s"$path/$tbl"))
         marker.delete()
         graft.Tables.sweepStaleSiblings(new java.io.File(path).getParentFile,
-          "del1_", s"del1_$fp")
+          "del2_", s"del2_$fp")
         val corpus = t(s, sfDir, "documents")
         graft.pipeline.Retrieval.buildIndex(corpus, path)
         graft.pipeline.Retrieval.deleteFromIndex(s, path,

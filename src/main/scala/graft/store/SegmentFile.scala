@@ -957,6 +957,13 @@ object SegmentFile {
   def readManifestVersion(dir: String, v: Long): Option[Set[String]] =
     readVersion(dir, v).map(_.files)
 
+  /** Do snapshots `a` and `b` hold the same live files, and so the same
+    * rows? True across header-only commits (ALTER TABLE), which publish
+    * a new version without touching the file set. */
+  def sameFiles(dir: String, a: Long, b: Long): Boolean =
+    a == b || readVersion(dir, a).exists(ma =>
+      readVersion(dir, b).exists(_.files == ma.files))
+
   /** Snapshot `v`'s manifest, parsed once per version file: cached on
     * (dir, v, version-file identity) like the planning stats, so a warm
     * read costs one stat. None when the version does not exist. */

@@ -224,6 +224,53 @@ class KvIndexSpec extends AnyFunSuite {
     spark.sql(s"DROP TABLE $cat.db.t")
   }
 
+  test("ALTER TABLE keeps indexes and views in sync; the next REFRESH is incremental") {
+    val root = Files.createTempDirectory("graftkv_idx_alter").toString
+    val cat = s"gidxa${math.abs(root.hashCode() % 100000)}"
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftKvCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, v BIGINT) " +
+      "TBLPROPERTIES('key'='k')")
+    spark.sql(s"INSERT INTO $cat.db.t SELECT id, id % 50 FROM range(5000)")
+    val base = s"$root/db/t"
+    KvIndex.create(spark, base, "iv", Seq("v"))
+    KvMatView.create(spark, base, "mv", Seq("v"), Seq("k"))
+
+    // a header-only commit publishes a new version with the same files
+    val vBefore = graft.store.SegmentFile.currentVersion(base).get
+    spark.sql(s"ALTER TABLE $cat.db.t ADD COLUMN w INT")
+    assert(graft.store.SegmentFile.currentVersion(base).get > vBefore)
+    assert(KvIndex.inSync(base, KvIndex.get(base, "iv").get))
+    assert(KvMatView.inSync(base, KvMatView.get(base, "mv").get))
+    val q = spark.sql(s"SELECT k FROM $cat.db.t WHERE v = 7 ORDER BY k")
+    assert(usesIndex(q))
+    assert(q.collect().map(_.getLong(0)).toSeq == (7L until 5000L by 50L).toSeq)
+
+    // both refreshes diff from the pre-ALTER watermark: an incremental
+    // one appends to the derived table, a rebuild replaces its files
+    spark.sql(s"INSERT INTO $cat.db.t VALUES (9999999, 7, 1)")
+    def files(p: String) = graft.store.SegmentFile.readManifestVersion(p,
+      graft.store.SegmentFile.currentVersion(p).get).get
+    for ((p, refresh) <- Seq(
+        KvIndex.indexPath(base, "iv") -> (() => KvIndex.refresh(spark, base, "iv")),
+        KvMatView.mvPath(base, "mv") -> (() => KvMatView.refresh(spark, base, "mv")))) {
+      val before = files(p)
+      refresh()
+      val after = files(p)
+      assert(before.subsetOf(after) && after != before,
+        s"$p was rebuilt, not refreshed incrementally")
+    }
+    assert(KvIndex.inSync(base, KvIndex.get(base, "iv").get))
+    assert(KvMatView.inSync(base, KvMatView.get(base, "mv").get))
+    val after = spark.sql(s"SELECT k FROM $cat.db.t WHERE v = 7 ORDER BY k")
+    assert(usesIndex(after))
+    assert(after.collect().map(_.getLong(0)).toSeq ==
+      ((7L until 5000L by 50L) :+ 9999999L).toSeq)
+    val g7 = KvMatView.read(spark, base, "mv").where(col("v") === 7L).head()
+    assert(g7.getLong(1) == 101L)
+    spark.sql(s"DROP TABLE $cat.db.t")
+  }
+
   test("a VERSION AS OF snapshot read never uses the index") {
     val path = tmpDir("snap")
     mkBase(path)

@@ -270,6 +270,36 @@ class KvTimeTravelSpec extends AnyFunSuite {
     assert(rows(KvCommands.table(spark, path)) == Seq((1, "a"), (2, "b")))
   }
 
+  test("snapshotDiff decodes each side with its own declaration") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_tt.sd")
+    spark.sql("CREATE TABLE graft_tt.sd.t (k BIGINT, v STRING) TBLPROPERTIES ('key'='k')")
+    spark.sql("INSERT INTO graft_tt.sd.t VALUES (1, 'a'), (2, 'b')")
+    val path = spark.conf.get("spark.sql.catalog.graft_tt.root") + "/sd/t"
+    def diff(from: Long) =
+      KvCommands.snapshotDiff(spark, path, from, KvCommands.snapshots(path).last)
+        .orderBy("k").collect().map(_.toSeq).toSeq
+    val vBefore = KvCommands.snapshots(path).last
+    spark.sql("ALTER TABLE graft_tt.sd.t ADD COLUMN w INT")
+    assert(KvCommands.snapshots(path).last > vBefore)
+    // the older side lacks w: it reads NULL there, so the ALTER alone
+    // changes no row
+    assert(diff(vBefore).isEmpty)
+    spark.sql("INSERT INTO graft_tt.sd.t VALUES (2, 'b', 5), (3, 'c', NULL)")
+    // columns: k, change, old_v, new_v, old_w, new_w
+    assert(diff(vBefore) == Seq(
+      Seq(2L, "updated", "b", "b", null, 5),
+      Seq(3L, "added", null, "c", null, null)))
+
+    // across a type change the values compare by their string form
+    val p2 = Files.createTempDirectory("graftkv_tt_difftype").toString + "/t"
+    KvCommands.createTable(Seq((1L, "10"), (2L, "b")).toDF("k", "v"), p2, Seq("k"))
+    val s1 = KvCommands.snapshots(p2).last
+    KvCommands.createTable(Seq((1L, 10), (2L, 20)).toDF("k", "v"), p2, Seq("k"))
+    assert(KvCommands.snapshotDiff(spark, p2, s1, KvCommands.snapshots(p2).last)
+      .collect().map(_.toSeq).toSeq == Seq(Seq(2L, "updated", "b", 20)))
+    spark.sql("DROP TABLE graft_tt.sd.t")
+  }
+
   test("SHOW SNAPSHOTS lists the commit log; pure-SQL time travel") {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_tt.ss")
     spark.sql("CREATE TABLE graft_tt.ss.t (k BIGINT, v STRING) TBLPROPERTIES ('key'='k')")
