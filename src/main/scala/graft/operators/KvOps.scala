@@ -22,6 +22,12 @@ object KvOps {
   private def kvRoot(sfDir: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_kv_m2/${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}"
 
+  /** The directory of the cached KV fixture `table` at a scale factor.
+    * Tests open a fixture through this, never by spelling the root, so
+    * a layout-tag bump moves them with it. */
+  private[graft] def fixturePath(sfDir: String, table: String): String =
+    s"${kvRoot(sfDir)}/$table"
+
   private val lock = new Object
 
   /** Idempotently materialize a corpus table as a KV table. */
@@ -48,7 +54,7 @@ object KvOps {
       df: => DataFrame, keys: Seq[String],
       encoding: String = graft.store.RowCodec.Binary,
       compress: Option[String] = None): String = lock.synchronized {
-    val path = s"${kvRoot(sfDir)}/$fixture"
+    val path = fixturePath(sfDir, fixture)
     val marker = java.nio.file.Paths.get(path, "_fixture_format")
     val current = graft.connector.GraftKvMeta.read(path)
         .exists(m => m.keys == keys && m.encoding == encoding &&

@@ -274,8 +274,7 @@ class PlanShapeSpec extends AnyFunSuite {
   test("kv scan reports key ordering so partition-local sorts are elided") {
     // ensure fixture exists
     SparkEntry.queries("kv1_scan_count")(spark, sf).collect()
-    val kvPath = s"${System.getProperty("java.io.tmpdir")}/graft_kv/" +
-      sf.replaceAll("[^a-zA-Z0-9.]", "_") + "/lineitem"
+    val kvPath = KvOps.fixturePath(sf, "lineitem")
     val df = graft.connector.KvCommands.table(spark, kvPath)
       .select("l_orderkey", "l_linenumber", "l_quantity")
       .sortWithinPartitions("l_orderkey", "l_linenumber")
@@ -304,8 +303,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // 288-297, no Exchange for GROUP BY on the row-key prefix); here the
     // scan reports KeyGroupedPartitioning over the disjoint lead dim
     SparkEntry.queries("kv1_scan_count")(spark, sf).collect() // fixture
-    val kvPath = s"${System.getProperty("java.io.tmpdir")}/graft_kv/" +
-      sf.replaceAll("[^a-zA-Z0-9.]", "_") + "/lineitem"
+    val kvPath = KvOps.fixturePath(sf, "lineitem")
     val df = graft.connector.KvCommands.table(spark, kvPath)
       .groupBy("l_orderkey")
       .agg(org.apache.spark.sql.functions.sum("l_quantity").as("q"))
@@ -336,8 +334,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // key column rides the scan's reported ordering — WindowExec runs
     // directly on the scan output
     SparkEntry.queries("kv1_scan_count")(spark, sf).collect() // fixture
-    val kvPath = s"${System.getProperty("java.io.tmpdir")}/graft_kv/" +
-      sf.replaceAll("[^a-zA-Z0-9.]", "_") + "/lineitem"
+    val kvPath = KvOps.fixturePath(sf, "lineitem")
     import org.apache.spark.sql.functions.{col, sum}
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("l_orderkey").orderBy("l_linenumber")
@@ -408,8 +405,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // same kv table share partition values, so Spark plans the join with
     // no Exchange on either side
     SparkEntry.queries("kv1_scan_count")(spark, sf).collect() // fixture
-    val kvPath = s"${System.getProperty("java.io.tmpdir")}/graft_kv/" +
-      sf.replaceAll("[^a-zA-Z0-9.]", "_") + "/lineitem"
+    val kvPath = KvOps.fixturePath(sf, "lineitem")
     val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -505,9 +501,9 @@ class PlanShapeSpec extends AnyFunSuite {
     // materialize the kv fixture (idempotent), then inspect pruning directly
     val rows = SparkEntry.queries("kv2_point_lookup")(spark, sf).collect()
     assert(rows.nonEmpty)
-    val kvPath = s"${System.getProperty("java.io.tmpdir")}/graft_kv/" +
-      sf.replaceAll("[^a-zA-Z0-9.]", "_") + "/lineitem"
-    val graft.connector.KvTableMeta(schema, keys, _, _, _) = graft.connector.GraftKvMeta.read(kvPath).get
+    val kvPath = KvOps.fixturePath(sf, "lineitem")
+    val graft.connector.KvTableMeta(schema, keys, _, _, _) = graft.connector.GraftKvMeta.read(kvPath)
+      .getOrElse(fail(s"no kv fixture at $kvPath"))
     val all = new graft.connector.GraftKvScan(kvPath, schema, keys, schema,
       Array.empty, -1).planInputPartitions().length
     val pruned = new graft.connector.GraftKvScan(kvPath, schema, keys, schema,
