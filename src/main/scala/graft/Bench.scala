@@ -81,11 +81,11 @@ object Bench {
       graft.store.RowCodec.Binary), names)
   }
 
-  /** Where the cached kv fixture `name` lives. The `_m2` suffix names
-    * the table layout (manifest versions carry the declaration): bump it
-    * when the layout changes, so a fixture an older build left is never
-    * opened. */
-  private def fixtureDir(name: String): String = s"$repoRoot/tmp/${name}_m2"
+  /** Where the cached kv fixture `name` lives. The `_m3` suffix names
+    * the table layout (manifest versions carry the declaration, sidecars
+    * are format V15): bump it when the layout changes, so a fixture an
+    * older build left is never opened. */
+  private def fixtureDir(name: String): String = s"$repoRoot/tmp/${name}_m3"
 
   /** A kv fixture an earlier run published at `dir`. */
   private def fixtureExists(dir: String): Boolean =
@@ -1217,7 +1217,7 @@ object Bench {
       }
       val plainDir = s"$repoRoot/tmp/benchstore_plain"
       val zstdDir = s"$repoRoot/tmp/benchstore_zstd"
-      val plainBytes = write(plainDir, None)
+      val plainBytes = write(plainDir, Some("none"))
       val zstdBytes = write(zstdDir, Some("zstd"))
       val plainSec = scanSec(plainDir)
       val zstdSec = scanSec(zstdDir)

@@ -117,9 +117,11 @@ object GraftKvMeta {
 
   /** Per-table segment data-file block compression (none | lz4 | zstd):
     * persisted at CREATE so appends, DML, compaction and conversion all
-    * write the declared codec. Reads auto-detect per segment (the data
-    * file is self-describing — SegmentFile.Compression), so flipping
-    * the property later only affects segments written after the flip. */
+    * write the declared codec. Unset, every write uses
+    * SegmentFile.Compression.Default (zstd); `none` opts out. Reads
+    * auto-detect per segment (the data file is self-describing —
+    * SegmentFile.Compression), so flipping the property later only
+    * affects segments written after the flip. */
   val SegmentCompressProp = "segment.compress"
 
   /** External-mapping annotations from the reference's `MAPPED BY`
@@ -1764,8 +1766,10 @@ class GraftKvScan(path: String, schema: StructType, keys: Seq[String],
     val frac = sample.map(_._1).getOrElse(1.0)
     val rows = (math.max(segs.map(m => m.count - 2 * m.tombstones).sum, 0L)
       * frac).toLong
-    // rough decoded-size estimate so the planner can make broadcast calls
-    val bytes = (segs.map(_.sizeBytes).sum * frac).toLong
+    // decoded-size estimate so the planner can make broadcast calls: the
+    // record stream's length, not the (compressed) file's, or a table
+    // would read several times smaller than the rows a broadcast holds
+    val bytes = (segs.map(_.rawBytes).sum * frac).toLong
     // COLUMN statistics for the cost-based optimizer, only when the user
     // turned it on (spark.sql.cbo.enabled, default off — the default
     // planning path must not pay for stats it never reads): distinct
@@ -2759,7 +2763,7 @@ class GraftKvWriteBuilder(path: String, schema: StructType, keys: Seq[String],
 
   private def compress: String =
     tableProps.getOrElse(GraftKvMeta.SegmentCompressProp,
-      SegmentFile.Compression.None)
+      SegmentFile.Compression.Default)
 
   override def build(): Write = new Write with RequiresDistributionAndOrdering {
     // A z-clustered table's stream writes carry the LOGICAL schema (the
@@ -2973,7 +2977,7 @@ class GraftKvWriterFactory(path: String, schema: StructType, keys: Seq[String],
     maxSegBytes: Long = GraftKvDataWriter.DefaultMaxSegmentBytes,
     gen: Long = 0L, tombstone: Boolean = false,
     zoneMaxChars: Int = SegmentFile.StringZone.MaxChars,
-    compress: String = SegmentFile.Compression.None)
+    compress: String)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new GraftKvDataWriter(path, schema, keys, partitionId, taskId, encoding,
@@ -3028,7 +3032,7 @@ class GraftKvDataWriter(path: String, schema: StructType, keys: Seq[String],
     gen: Long = 0L, tombstone: Boolean = false,
     segSeqStart: Int = 0,
     zoneMaxChars: Int = SegmentFile.StringZone.MaxChars,
-    compress: String = SegmentFile.Compression.None)
+    compress: String)
     extends DataWriter[InternalRow] {
 
   SidecarFs.mkdirs(path)

@@ -119,7 +119,7 @@ private[connector] final class KvSortedChunkBuffer(path: String,
       .getOrElse(maxSegBytes)
   private val compress: String =
     tableProps.getOrElse(GraftKvMeta.SegmentCompressProp,
-      graft.store.SegmentFile.Compression.None)
+      graft.store.SegmentFile.Compression.Default)
   private[connector] val rows =
     new java.util.TreeMap[Array[Byte], InternalRow](
       new java.util.Comparator[Array[Byte]] {

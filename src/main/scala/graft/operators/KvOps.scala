@@ -16,11 +16,11 @@ import org.apache.spark.sql.types.DecimalType
 object KvOps {
 
   /** KV fixture dir per scale factor (derived, cached across queries).
-    * The `_m2` suffix names the table layout (manifest versions carry
-    * the declaration): bump it when the layout changes, so a fixture an
-    * older build left is never opened. */
+    * The `_m3` suffix names the table layout (manifest versions carry
+    * the declaration, sidecars are format V15): bump it when the layout
+    * changes, so a fixture an older build left is never opened. */
   private def kvRoot(sfDir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_kv_m2/${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}"
+    s"${System.getProperty("java.io.tmpdir")}/graft_kv_m3/${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}"
 
   /** The directory of the cached KV fixture `table` at a scale factor.
     * Tests open a fixture through this, never by spelling the root, so
@@ -42,7 +42,7 @@ object KvOps {
     * by an older writer would silently lack them — correctness gates
     * still pass via the scan fallback, but metadata-claim gates (kv41)
     * would read NULL where the current writer publishes a number. */
-  private val FixtureFormat = "v14" // round 10: decimal quantile summaries
+  private val FixtureFormat = "v15" // decoded record-stream size per segment
 
   /** Idempotently materialize `df` as a KV table. A cached fixture whose
     * declared keys or codec differ from the request (stale layout from

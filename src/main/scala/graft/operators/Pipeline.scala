@@ -408,7 +408,7 @@ object PipelineOps {
       // additive length+mtime stamp this used before was collision-prone
       val fp = corpusFp(sfDir)
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_ir/" +
-        s"${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}/v4_$fp" // v4: manifest-header layout
+        s"${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}/v5_$fp" // v5: sidecar format V15
       if (graft.connector.GraftKvMeta.read(s"$path/postings").isEmpty ||
           graft.connector.GraftKvMeta.read(s"$path/positions").isEmpty ||
           graft.connector.GraftKvMeta.read(s"$path/docterms").isEmpty ||
@@ -420,7 +420,7 @@ object PipelineOps {
         // indexes built from earlier corpus generations are dead — sweep
         // their fingerprint dirs so rounds don't accumulate tmp copies
         graft.Tables.sweepStaleSiblings(new java.io.File(path).getParentFile,
-          "v4_", s"v4_$fp")
+          "v5_", s"v5_$fp")
         graft.pipeline.Retrieval.buildIndex(t(s, sfDir, "documents"), path)
       }
       path
@@ -437,7 +437,7 @@ object PipelineOps {
     irLock.synchronized {
       val fp = corpusFp(sfDir)
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_ir/" +
-        s"${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}/del2_$fp"
+        s"${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}/del3_$fp"
       val marker = new java.io.File(s"$path/_DELETED")
       if (graft.connector.GraftKvMeta.read(s"$path/postings").isEmpty ||
           graft.connector.GraftKvMeta.read(s"$path/docterms").isEmpty ||
@@ -446,7 +446,7 @@ object PipelineOps {
           graft.connector.KvCommands.dropTable(s"$path/$tbl"))
         marker.delete()
         graft.Tables.sweepStaleSiblings(new java.io.File(path).getParentFile,
-          "del2_", s"del2_$fp")
+          "del3_", s"del3_$fp")
         val corpus = t(s, sfDir, "documents")
         graft.pipeline.Retrieval.buildIndex(corpus, path)
         graft.pipeline.Retrieval.deleteFromIndex(s, path,

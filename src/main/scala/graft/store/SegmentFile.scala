@@ -41,14 +41,21 @@ object SegmentFile {
     *    zstd-jni). zstd is the density choice, lz4 the speed choice.
     *
     * The per-table `segment.compress` property (none | lz4 | zstd)
-    * selects the codec at write time; reads auto-detect per segment, so
-    * a table may freely mix codecs across its history (compaction
-    * rewrites into whatever the property says NOW). */
+    * selects the codec at write time, and a table without it writes
+    * [[Default]] (zstd level 3, the codec of the sidecar's sketch frame);
+    * `none` is the opt-out. Reads auto-detect per segment, so a table
+    * may freely mix codecs across its history (compaction rewrites into
+    * whatever the property says NOW). */
   object Compression {
     val None = "none"
     val Lz4 = "lz4"
     val Zstd = "zstd"
     val Names: Seq[String] = Seq(None, Lz4, Zstd)
+
+    /** The codec of a table whose `segment.compress` is unset. Not
+      * persisted as a property: a table created without one keeps
+      * following this default. */
+    val Default: String = Zstd
 
     /** Negative (a key length never is), and not a sidecar format tag. */
     val Magic: Int = 0xCAFEC0DE // == -889929506
@@ -185,7 +192,9 @@ object SegmentFile {
     }
   }
 
-  /** Sidecar metadata: key range, count, size, per-dimension Bloom
+  /** Sidecar metadata: key range, count, sizes (`sizeBytes` is the data
+    * file on disk, `rawBytes` its decoded record stream — equal for an
+    * uncompressed segment), per-dimension Bloom
     * filters over non-leading key columns (prunes segments for point
     * filters that don't constrain the leading key — the range metadata
     * can't help there), and a sparse index of (key, byteOffset) every
@@ -194,7 +203,7 @@ object SegmentFile {
     * (reference point-get batching / seek hints,
     * HBaseSQLReaderRDD.scala:268-315, HBaseCustomFilter seek logic). */
   final case class Meta(file: String, minKey: Array[Byte], maxKey: Array[Byte],
-      count: Long, sizeBytes: Long,
+      count: Long, sizeBytes: Long, rawBytes: Long,
       blooms: IndexedSeq[Bloom] = IndexedSeq.empty,
       index: IndexedSeq[(Array[Byte], Long)] = IndexedSeq.empty,
       schemaJson: Option[String] = None,
@@ -259,7 +268,7 @@ object SegmentFile {
           b.length, 911L)
   }
 
-  /** The sidecar header: one format, V14, opening with this negative
+  /** The sidecar header: one format, V15, opening with this negative
     * int. The fields follow in this order, each for a reason:
     *
     *  - the segment's commit GENERATION, a per-table monotonically
@@ -273,7 +282,9 @@ object SegmentFile {
     *  - the writer's schema json: segments are self-describing, so ALTER
     *    TABLE on a populated table is metadata-only — old segments
     *    decode with their own layout;
-    *  - key range, row count, data-file size and the per-dimension
+    *  - key range, row count, data-file size, decoded record-stream
+    *    size (what planning estimates from: a compressed file is several
+    *    times smaller than the rows it holds) and the per-dimension
     *    Blooms;
     *  - VALUE-column zone maps (the parquet row-group-stats analog), each
     *    entry typed by a tag (see [[zoneTags]]) with an optional exact
@@ -299,7 +310,7 @@ object SegmentFile {
     * index: planning reads them with `withIndex = false` and stops
     * there, and the index load steps over the frame in O(1). A sidecar
     * with any other header fails to open. */
-  private val FormatV14 = -14
+  private val FormatV15 = -15
 
   /** One value-column zone entry: (column, type, min, max[, sum]) over
     * the segment's non-null values. Types are the fixed-width numerics
@@ -558,7 +569,9 @@ object SegmentFile {
     * makes min/max pruning and floor seeks sound. `nBlooms` is the number
     * of per-dimension Bloom filters the caller will feed via the
     * `bloomHashes` argument of write (one 64-bit hash per tracked
-    * dimension per record). */
+    * dimension per record). `compress` names the data file's codec;
+    * table writes pass the table's (Compression.Default when unset), and
+    * only direct callers of this layer get the plain default. */
   final class Writer(dir: String, name: String, indexEvery: Int = 256,
       nBlooms: Int = 0,
       cmp: (Array[Byte], Array[Byte]) => Int = OrderedCodec.compare,
@@ -636,7 +649,7 @@ object SegmentFile {
       if (blockBuf != null) { rec.flush(); flushBlock() }
       out.flush(); out.close()
       if (count == 0) { SidecarFs.deleteIfExists(seg); return null }
-      val m = Meta(s"$name.kv", minKey, lastKey, count, SidecarFs.size(seg),
+      val m = Meta(s"$name.kv", minKey, lastKey, count, SidecarFs.size(seg), bytes,
         bloomBuilders.map(_.result()).toIndexedSeq, index.result(),
         Option(schemaJson), zoneStats.filter(z => zoneMappable(z.dataType)),
         gen, tombstoneCount, nullCounts = nullCounts)
@@ -645,7 +658,7 @@ object SegmentFile {
       val mo = new DataOutputStream(new BufferedOutputStream(
         SidecarFs.create(metaPath(dir, name)), 1 << 16))
       def writeSidecar(): Unit = {
-        mo.writeInt(FormatV14)
+        mo.writeInt(FormatV15)
         writePlanningFields(mo, m)
         // the sketch frame: NDV registers, then quantile summaries, in
         // one zstd frame. Planning reads stop before it, the index load
@@ -671,7 +684,7 @@ object SegmentFile {
   }
 
   /** Open a sidecar positioned just past its header; any header other
-    * than [[FormatV14]] fails here, naming the file. */
+    * than [[FormatV15]] fails here, naming the file. */
   private def openSidecar(dir: String, name: String): DataInputStream = {
     val p = metaPath(dir, name)
     val in = new DataInputStream(new BufferedInputStream(
@@ -679,10 +692,10 @@ object SegmentFile {
     val header =
       try in.readInt()
       catch { case e: Throwable => in.close(); throw e }
-    if (header != FormatV14) {
+    if (header != FormatV15) {
       in.close()
       throw new IOException(
-        s"$p: sidecar header $header is not format V14 ($FormatV14)")
+        s"$p: sidecar header $header is not format V15 ($FormatV15)")
     }
     in
   }
@@ -702,7 +715,7 @@ object SegmentFile {
     }
     out.writeInt(m.minKey.length); out.write(m.minKey)
     out.writeInt(m.maxKey.length); out.write(m.maxKey)
-    out.writeLong(m.count); out.writeLong(m.sizeBytes)
+    out.writeLong(m.count); out.writeLong(m.sizeBytes); out.writeLong(m.rawBytes)
     out.writeInt(m.blooms.length)
     m.blooms.foreach { bl =>
       out.writeInt(bl.words.length); bl.words.foreach(out.writeLong)
@@ -738,7 +751,7 @@ object SegmentFile {
     }
     val min = new Array[Byte](in.readInt()); in.readFully(min)
     val max = new Array[Byte](in.readInt()); in.readFully(max)
-    val count = in.readLong(); val size = in.readLong()
+    val count = in.readLong(); val size = in.readLong(); val raw = in.readLong()
     val blooms = (0 until in.readInt()).map { _ =>
       val words = new Array[Long](in.readInt())
       var i = 0
@@ -759,7 +772,7 @@ object SegmentFile {
       (new String(nb, java.nio.charset.StandardCharsets.UTF_8),
         in.readLong())
     }
-    Meta(file, min, max, count, size, blooms, IndexedSeq.empty, schemaJson,
+    Meta(file, min, max, count, size, raw, blooms, IndexedSeq.empty, schemaJson,
       stats, gen, tombstones, nullCounts = nullCnts)
   }
 
@@ -1031,7 +1044,7 @@ object SegmentFile {
   // The pack layout marker. Any other marker (an older layout) reads as
   // absent and the read path rebuilds the pack from sidecars — packs are
   // derived caches, never authorities.
-  private val PackedStatsV6 = -105
+  private val PackedStatsV7 = -106
 
   private def statsPath(dir: String, v: Long): String =
     SidecarFs.child(dir, s"_graft_stats.v$v")
@@ -1064,7 +1077,7 @@ object SegmentFile {
     val out = new DataOutputStream(new BufferedOutputStream(
       SidecarFs.create(tmp, createParent = false), 1 << 16))
     try {
-      out.writeInt(PackedStatsV6)
+      out.writeInt(PackedStatsV7)
       out.writeInt(metas.length)
       metas.foreach(writePackedEntry(out, _))
     } finally out.close()
@@ -1081,7 +1094,7 @@ object SegmentFile {
       val in = new DataInputStream(new BufferedInputStream(
         SidecarFs.open(p), 1 << 16))
       try {
-        if (in.readInt() != PackedStatsV6) None
+        if (in.readInt() != PackedStatsV7) None
         else Some((0 until in.readInt()).map(_ => readPackedEntry(in)))
       } finally in.close()
     } catch { case _: Exception => None }

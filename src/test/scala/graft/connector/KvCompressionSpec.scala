@@ -8,12 +8,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Segment data-file block compression (`segment.compress` = lz4 |
-  * zstd): the self-describing frame format, logical-offset seeks, the
-  * persisted-property lifecycle (create → append → DML → compaction →
-  * conversion), and mixed-codec tables. The sidecar and every pruning /
-  * metadata-claim structure are codec-oblivious — all of that is pinned
-  * by asserting byte-identical query results against an uncompressed
-  * twin of the same data. */
+  * zstd, zstd when unset; `none` opts out): the self-describing frame
+  * format, logical-offset seeks, the persisted-property lifecycle
+  * (create → append → DML → compaction → conversion), mixed-codec
+  * tables, and the planner's size estimate, which counts decoded bytes.
+  * The sidecar and every pruning / metadata-claim structure are
+  * codec-oblivious — all of that is pinned by asserting byte-identical
+  * query results and statistics against an uncompressed twin of the
+  * same data. */
 class KvCompressionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -112,7 +114,8 @@ class KvCompressionSpec extends AnyFunSuite {
   test("zstd table: scans, filters, point gets equal the uncompressed twin") {
     val plain = tmpTable("kvcomp_plain")
     val comp = tmpTable("kvcomp_zstd")
-    KvCommands.createTable(corpus, plain, Seq("k"), maxSegBytes = Some(65536L))
+    KvCommands.createTable(corpus, plain, Seq("k"), maxSegBytes = Some(65536L),
+      compress = Some("none"))
     KvCommands.createTable(corpus, comp, Seq("k"), maxSegBytes = Some(65536L),
       compress = Some("zstd"))
     assertAllCompressed(comp)
@@ -181,7 +184,8 @@ class KvCompressionSpec extends AnyFunSuite {
   test("mixed-codec table: segments auto-detect per file") {
     val path = tmpTable("kvcomp_mixed")
     // uncompressed create, compressed append — reads must merge both
-    KvCommands.createTable(corpus.filter(col("k") < 10000), path, Seq("k"))
+    KvCommands.createTable(corpus.filter(col("k") < 10000), path, Seq("k"),
+      compress = Some("none"))
     spark.range(10000, 20000).select(col("id").as("k"),
       lit("late compressed").as("s"), (col("id") % 97).as("v"))
       .write.format("graftkv")
@@ -198,7 +202,80 @@ class KvCompressionSpec extends AnyFunSuite {
     // append's option governed THAT write but did not mutate the
     // table's persisted property
     assert(GraftKvMeta.read(path).get.props
+      .get(GraftKvMeta.SegmentCompressProp).contains("none"))
+  }
+
+  test("a table created without the property writes zstd frames and persists no codec") {
+    val path = tmpTable("kvcomp_default")
+    KvCommands.createTable(corpus, path, Seq("k"), maxSegBytes = Some(65536L))
+    assert(SegmentFile.Compression.Default == SegmentFile.Compression.Zstd)
+    assertAllCompressed(path)
+    assert(GraftKvMeta.read(path).get.props
       .get(GraftKvMeta.SegmentCompressProp).isEmpty)
+    // an un-restated append follows the default too
+    KvCommands.append(spark.range(20000, 20100).select(col("id").as("k"),
+      lit("appended row").as("s"), lit(7L).as("v")), path)
+    assertAllCompressed(path)
+    assert(KvCommands.table(spark, path).count() == 20100)
+  }
+
+  // ── planner statistics ─────────────────────────────────────────────────
+
+  private def twins(prefix: String): (String, String) = {
+    val plain = tmpTable(s"${prefix}_plain")
+    val comp = tmpTable(s"${prefix}_zstd")
+    KvCommands.createTable(corpus, plain, Seq("k"), maxSegBytes = Some(65536L),
+      compress = Some("none"))
+    KvCommands.createTable(corpus, comp, Seq("k"), maxSegBytes = Some(65536L),
+      compress = Some("zstd"))
+    (plain, comp)
+  }
+
+  private def stats(path: String) = {
+    val meta = GraftKvMeta.read(path).get
+    new GraftKvScan(path, meta.schema, meta.keys, meta.schema, Array.empty, -1)
+      .estimateStatistics()
+  }
+
+  test("the size estimate is decoded bytes: a zstd table equals its plain twin") {
+    val (plain, comp) = twins("kvcomp_est")
+    val (sp, sc) = (stats(plain), stats(comp))
+    assert(sc.sizeInBytes() == sp.sizeInBytes(),
+      s"zstd estimate ${sc.sizeInBytes()} vs plain ${sp.sizeInBytes()}")
+    assert(sc.numRows() == sp.numRows() && sp.numRows().getAsLong == 20000L)
+    // a plain segment's decoded size is its file size; the zstd files
+    // are materially smaller than what the estimate reports
+    assert(sp.sizeInBytes().getAsLong ==
+      SegmentFile.listSegments(plain).map(_.sizeBytes).sum)
+    assert(SegmentFile.listSegments(comp).map(_.sizeBytes).sum <
+      sc.sizeInBytes().getAsLong / 2)
+  }
+
+  test("a join does not broadcast a zstd table whose decoded size is over the threshold") {
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val (plain, comp) = twins("kvcomp_bcast")
+    val segs = SegmentFile.listSegments(comp)
+    val (onDisk, decoded) = (segs.map(_.sizeBytes).sum, segs.map(_.rawBytes).sum)
+    assert(onDisk < decoded / 2, s"on disk $onDisk vs decoded $decoded")
+    // the other side is larger than every threshold below, so only the
+    // kv side could be broadcast
+    val fact = spark.range(400000).select((col("id") % 20000).as("k"),
+      col("id").as("x"))
+    def broadcasts(path: String, threshold: Long): Boolean = {
+      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold.toString)
+      try fact.join(KvCommands.table(spark, path), Seq("k"))
+        .queryExecution.sparkPlan
+        .collect { case j: BroadcastHashJoinExec => j }.nonEmpty
+      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
+    val between = (onDisk + decoded) / 2
+    assert(!broadcasts(plain, between), "plain twin broadcast")
+    assert(!broadcasts(comp, between),
+      s"zstd table broadcast at threshold $between: its estimate is the " +
+        s"$onDisk bytes on disk, not the $decoded decoded")
+    // control: above the decoded size, both sides broadcast alike
+    assert(broadcasts(plain, decoded * 2) && broadcasts(comp, decoded * 2))
   }
 
   test("an unknown codec is rejected at plan time") {

@@ -16,7 +16,7 @@ class LeadIndexSpec extends AnyFunSuite {
 
   private def meta(i: Int, lo: Long, hi: Long): SegmentFile.Meta =
     SegmentFile.Meta(s"seg-$i.kv", OrderedCodec.encodeLong(lo),
-      OrderedCodec.encodeLong(hi), 1L, 1L)
+      OrderedCodec.encodeLong(hi), 1L, 1L, 1L)
 
   private val cmp = TriEval.comparator(LongType)
   private def decode(k: Array[Byte]): Any = OrderedCodec.decodeLong(k, 0)
